@@ -18,7 +18,13 @@ the canonical digest so silent result drift across rounds is
 diffable.
 
 Usage:  python local_oracle.py [round_number]
+        python local_oracle.py --only NAME [NAME ...]
         SPARK_GRAFT_ORACLE_SF=/root/testdata/sf0.01   # default, = driver
+
+``--only`` is the per-change gate: the same comparison for just the
+named entries (the ones a change touches), one JSON row per entry on
+stdout in the LOCAL_ORACLE row shape — diffable against a committed
+record — and no record file written. Exit 1 on any red row.
 """
 
 from __future__ import annotations
@@ -104,10 +110,11 @@ def check_registry() -> list[str]:
     return problems
 
 
-def run(sf_dir: str) -> dict:
+def run(sf_dir: str, names: list[str] | None = None) -> dict:
     spark = get_spark("local_oracle")
     out: dict[str, dict] = {}
-    for name in QUERIES:            # full registry, registration order
+    # full registry in registration order, or just the named entries
+    for name in names or QUERIES:
         q = QUERIES[name]
         row = {"rows_match": None, "schema_match": None,
                "hash_match": None, "spark_rows": None,
@@ -165,19 +172,35 @@ def run(sf_dir: str) -> dict:
     return out
 
 
+def _red(row: dict) -> bool:
+    """Neither oracle-green nor a hash-stable rows-only entry."""
+    return not row["hash_match"] and row["err"] != "no_oracle"
+
+
 def main() -> int:
     problems = check_registry()
     if problems:
         for p in problems:
             print(f"registry hygiene: {p}", file=sys.stderr)
         return 2
-    rnd = sys.argv[1] if len(sys.argv) > 1 else "0"
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
+    if sys.argv[1:2] == ["--only"]:
+        names = sys.argv[2:]
+        unknown = sorted(set(names) - set(QUERIES))
+        if not names or unknown:
+            print(f"--only needs registered query names; unknown: "
+                  f"{unknown}", file=sys.stderr)
+            return 2
+        results = run(sf_dir, names)
+        for name, row in results.items():
+            print(json.dumps({name: row}))
+        return 1 if any(_red(r) for r in results.values()) else 0
+    rnd = sys.argv[1] if len(sys.argv) > 1 else "0"
     results = run(sf_dir)
     n_ok = sum(1 for r in results.values() if r["hash_match"])
     n_rows_only = sum(1 for r in results.values()
                       if r["err"] == "no_oracle")
-    n_red = len(results) - n_ok - n_rows_only
+    n_red = sum(1 for r in results.values() if _red(r))
     path = f"LOCAL_ORACLE_r{int(rnd):02d}.json" if rnd != "0" \
         else "LOCAL_ORACLE.json"
     with open(path, "w") as fh:

@@ -156,18 +156,36 @@ def compact_parquet(spark: SparkSession, path: str,
     cur = table_io.current_version(path)
     if cur is None:
         raise ValueError(f"no table at {path}")
+    vdir = table_io.next_version_dir(path)
+    stats = compact_into(spark, cur, vdir, target_bytes, sort_by, force)
+    if not stats.get("skipped"):
+        table_io.publish_version(path, vdir)
+    return stats
+
+
+def compact_into(spark: SparkSession, src: str, dst: str,
+                 target_bytes: int = 128 * 1024 * 1024,
+                 sort_by: list[str] | None = None,
+                 force: bool = False) -> dict:
+    """The rewrite behind :func:`compact_parquet`: compact the table
+    directory ``src`` into the fresh directory ``dst`` (not-worth-it
+    partitions hardlinked) and return its stats; writes nothing and
+    returns ``skipped`` when no rewrite is worth it and not ``force``.
+    Publishing ``dst`` is the caller's — a versioned table that owns
+    several such directories (operators/dedup.py's signature table)
+    compacts them into its own staged version."""
+    from . import table_io
 
     # leaf partition dirs handle any partitioning depth (year=/month=…)
-    part_dirs = table_io.leaf_partition_dirs(cur)
+    part_dirs = table_io.leaf_partition_dirs(src)
     if part_dirs:
-        plans = {d: plan_compaction(os.path.join(cur, d), target_bytes)
+        plans = {d: plan_compaction(os.path.join(src, d), target_bytes)
                  for d in part_dirs}
         if not force and not any(p["worth_it"] for p in plans.values()):
             total = sum(p["total_bytes"] for p in plans.values())
             n = sum(p["n_files"] for p in plans.values())
             return {"before_files": n, "after_files": n, "bytes": total,
                     "partitions": len(part_dirs), "skipped": True}
-        vdir = table_io.next_version_dir(path)
         # ONE-JOB fast path: when every partition that NEEDS
         # compaction fits a single target file (the micro-append
         # accretion shape — thousands of dirs, each a pile of tiny
@@ -204,7 +222,7 @@ def compact_parquet(spark: SparkSession, path: str,
                      or len(part_cols) == 1)
         if worth and small == worth and safe and filter_ok:
             from pyspark.sql import functions as F
-            df = spark.read.parquet(cur)
+            df = spark.read.parquet(src)
             if len(small) < len(part_dirs):
                 df = df.filter(
                     F.col(part_cols[0]).cast("string").isin(vals))
@@ -216,20 +234,19 @@ def compact_parquet(spark: SparkSession, path: str,
                 # min/max locality
                 df = df.sortWithinPartitions(*part_cols, *sort_by)
             df.write.partitionBy(*part_cols).mode("overwrite") \
-                .parquet(vdir)
+                .parquet(dst)
             small_set = set(small)
             for d in part_dirs:
                 if d not in small_set:
-                    table_io.link_tree(os.path.join(cur, d),
-                                       os.path.join(vdir, d))
+                    table_io.link_tree(os.path.join(src, d),
+                                       os.path.join(dst, d))
             before = sum(p["n_files"] for p in plans.values())
             after = total = 0
-            for d in table_io.leaf_partition_dirs(vdir):
-                p_after = plan_compaction(os.path.join(vdir, d),
+            for d in table_io.leaf_partition_dirs(dst):
+                p_after = plan_compaction(os.path.join(dst, d),
                                           target_bytes)
                 after += p_after["n_files"]
                 total += p_after["total_bytes"]
-            table_io.publish_version(path, vdir)
             return {"before_files": before, "after_files": after,
                     "bytes": total, "partitions": len(part_dirs)}
         before = after = total = 0
@@ -237,27 +254,24 @@ def compact_parquet(spark: SparkSession, path: str,
             plan = plans[d]
             before += plan["n_files"]
             if plan["worth_it"] or force:
-                _rewrite_into(spark, os.path.join(cur, d),
-                              os.path.join(vdir, d),
+                _rewrite_into(spark, os.path.join(src, d),
+                              os.path.join(dst, d),
                               plan["n_target"], sort_by)
             else:
-                table_io.link_tree(os.path.join(cur, d),
-                                   os.path.join(vdir, d))
-            p_after = plan_compaction(os.path.join(vdir, d), target_bytes)
+                table_io.link_tree(os.path.join(src, d),
+                                   os.path.join(dst, d))
+            p_after = plan_compaction(os.path.join(dst, d), target_bytes)
             after += p_after["n_files"]
             total += p_after["total_bytes"]
-        table_io.publish_version(path, vdir)
         return {"before_files": before, "after_files": after,
                 "bytes": total, "partitions": len(part_dirs)}
 
-    plan = plan_compaction(cur, target_bytes)
+    plan = plan_compaction(src, target_bytes)
     if not plan["worth_it"] and not force:
         return {"before_files": plan["n_files"],
                 "after_files": plan["n_files"],
                 "bytes": plan["total_bytes"], "skipped": True}
-    vdir = table_io.next_version_dir(path)
-    _rewrite_into(spark, cur, vdir, plan["n_target"], sort_by)
-    table_io.publish_version(path, vdir)
-    after = plan_compaction(path, target_bytes)
+    _rewrite_into(spark, src, dst, plan["n_target"], sort_by)
+    after = plan_compaction(dst, target_bytes)
     return {"before_files": plan["n_files"], "after_files": after["n_files"],
             "bytes": after["total_bytes"]}

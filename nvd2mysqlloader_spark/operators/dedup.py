@@ -15,6 +15,10 @@ groupBy and the band-bucket self-join — no Python in the hot path.
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
+
 import numpy as np
 import pandas as pd
 
@@ -22,36 +26,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
+from . import table_io
+from ._lineage import cut_lineage
+
 _P = (1 << 31) - 1          # Mersenne prime modulus
-
-
-def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Cut the lineage so a DataFrame consumed by both sides of a
-    self-join (and again by a verify join-back) is computed ONCE.
-
-    Without this, AQE's broadcast conversion of the band/quarter
-    self-join defeats ReuseExchange and the whole upstream pipeline —
-    including the Arrow shingling UDF — re-executes per consumer
-    (measured 4× ArrowEvalPython in the candidate plan, ~5s of the
-    ~6s candidate step at sf0.1). ``localCheckpoint(eager=True)``
-    materializes to executor-local blocks immediately: with a LAZY
-    checkpoint the concurrent AQE subplans of the downstream join race
-    to be "first use" and each recomputes the upstream pipeline before
-    the blocks land (measured 2.3× the whole minhash_near_dup query:
-    5.6s lazy vs 2.4s eager at sf0.1). On a cluster the same role is
-    played by persisting the signature table (it is tiny: k longs per
-    doc, independent of document size), which is also the natural
-    incremental artifact at 100 TB — signatures are computed once per
-    new document, not per query. Routed through
-    ``_lineage.cut_lineage`` so a cluster with ``spark.checkpoint.dir``
-    set gets reliable checkpoints (executor-loss survival) from the
-    same call sites. ``eager=False`` fuses the materialization into
-    the caller's NEXT action — legal only when that action provably
-    computes every partition before any other consumer exists (see
-    _lineage.cut_lineage); the banded probe's bucket collects are
-    exactly that shape."""
-    from ._lineage import cut_lineage
-    return cut_lineage(df, eager=eager)
 
 
 def _perm_coeffs(num_perm: int, seed: int = 7) -> list[tuple[int, int]]:
@@ -119,16 +97,26 @@ def collect_band_keys(sigs: DataFrame, bands: int,
     including across geometry migrations, which change ``n_buckets``
     but never the band keys) then skips the per-probe bucket-collect
     job (r13 optimization, guide §5 driver round-trips). MUST be
-    computed at the probed table's meta ``bands`` and over the exact
-    batch signatures the probe receives — the same agreement contract
-    as ``new_sigs``/``num_perm`` (a mismatch changes the candidate
-    set); pass ``sigs`` LAZY-cut and this collect doubles as its
-    materializing action."""
+    computed at the probed table's meta ``bands`` — the returned list
+    carries the ``bands`` it was computed at and the probe raises on a
+    mismatch — and over the exact batch signatures the probe receives
+    (the same agreement contract as ``new_sigs``/``num_perm``); pass
+    ``sigs`` LAZY-cut and this collect doubles as its materializing
+    action."""
     rows = (sigs.select(
         id_col, _band_explode(bands).alias("band_idx", "band_hash"))
         .select(F.xxhash64("band_idx", "band_hash").alias("k"))
         .distinct().collect())
-    return sorted(r["k"] for r in rows)
+    return _BandKeys(sorted(r["k"] for r in rows), bands)
+
+
+class _BandKeys(list):
+    """:func:`collect_band_keys`' sorted keys, tagged with the band
+    count they were computed at."""
+
+    def __init__(self, keys, bands: int):
+        super().__init__(keys)
+        self.bands = bands
 
 
 def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
@@ -189,7 +177,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
         # equi-join on (band_idx, band_hash) — AQE picks broadcast at
         # small scale and a shuffle join with skew-split at 100 TB,
         # where a boilerplate mega-bucket would otherwise straggle.
-        banded = _materialize(sigs.select(
+        banded = cut_lineage(sigs.select(
             id_col, _band_explode(bands).alias("band_idx", "band_hash")))
     if bucket_cap is not None:
         # per-bucket size + min-id anchor: one partial-agg shuffle on
@@ -200,9 +188,9 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
         # materialized: three consumers (both self-join sides + the
         # star branch) would otherwise re-run the aggregate shuffle
         # and join per consumer (AQE defeats ReuseExchange here — see
-        # _materialize)
-        tagged = _materialize(banded.join(stats,
-                                          ["band_idx", "band_hash"]))
+        # operators/_lineage.py)
+        tagged = cut_lineage(banded.join(stats,
+                                         ["band_idx", "band_hash"]))
         small = tagged.filter(F.col("n") <= bucket_cap) \
                       .select(id_col, "band_idx", "band_hash")
         # over-cap buckets: star edges (anchor, member) — anchor is
@@ -251,7 +239,7 @@ def minhash_near_dups(shingled: DataFrame, id_col: str = "doc_id",
     # the signatures back for the estimate — measured ~3× faster than
     # carrying the 64-long signatures through the band self-join
     if sigs is None:
-        sigs = _materialize(
+        sigs = cut_lineage(
             minhash_signatures(shingled, id_col, shingles_col, num_perm))
     cand = lsh_candidate_pairs(sigs, id_col, bands)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
@@ -304,7 +292,7 @@ def simhash_near_dups(df: DataFrame, id_col: str, tokens_col: Column,
     ``bit_count(a XOR b)`` is the exact hamming distance; the quarter
     blocking keeps the self-join linear-ish instead of quadratic.
     """
-    fp = _materialize(
+    fp = cut_lineage(
         df.select(F.col(id_col), simhash64(tokens_col).alias("fp")))
     quarters = (fp.select(
         id_col, "fp",
@@ -312,8 +300,8 @@ def simhash_near_dups(df: DataFrame, id_col: str, tokens_col: Column,
             F.shiftright("fp", q * 16).bitwiseAND(F.lit(0xFFFF))
             for q in range(4)]))
         .alias("q_idx", "q_val")))
-    # one compute for both self-join sides (see _materialize)
-    quarters = _materialize(quarters)
+    # one compute for both self-join sides (see operators/_lineage.py)
+    quarters = cut_lineage(quarters)
     a, b = quarters.alias("a"), quarters.alias("b")
     ham = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
     return (a.join(b, (F.col("a.q_idx") == F.col("b.q_idx"))
@@ -359,7 +347,7 @@ def prefix_filter_candidate_pairs(shingled: DataFrame,
                     / F.lit(t_den)).cast("long")
     prefix = ranked.filter(
         F.col("rn") <= F.col("nsh") - alpha + F.lit(1))
-    prefix = _materialize(prefix.select("doc_id", "nsh", "shingle"))
+    prefix = cut_lineage(prefix.select("doc_id", "nsh", "shingle"))
     a, b = prefix.alias("a"), prefix.alias("b")
     len_ok = ((F.lit(t_den) * F.col("a.nsh")
                >= F.lit(t_num) * F.col("b.nsh"))
@@ -393,8 +381,8 @@ def minhash_near_dups_exact(shingled: DataFrame, id_col: str = "doc_id",
     SQL-replayable (VERDICT r11 ask #3). Verification still runs
     candidates-only; the union only widens the candidate set by the
     qualifying pairs banding happened to miss."""
-    shingled = _materialize(shingled)
-    sigs = _materialize(
+    shingled = cut_lineage(shingled)
+    sigs = cut_lineage(
         minhash_signatures(shingled, id_col, shingles_col, num_perm))
     cand = lsh_candidate_pairs(sigs, id_col, bands)
     if complete_ratio is not None:
@@ -461,7 +449,7 @@ def incremental_minhash_candidates(spark, sig_path: str,
     partition-prunes both scans to the batch's band buckets.
     """
     corpus_sigs = spark.read.parquet(sig_path)
-    new_sigs = _materialize(
+    new_sigs = cut_lineage(
         minhash_signatures(new_shingled, id_col, shingles_col, num_perm))
     # a probe num_perm differing from the table's would make band
     # hashes UNMATCHABLE (each side slices its own signature width) —
@@ -501,25 +489,39 @@ def incremental_minhash_candidates(spark, sig_path: str,
 # the probe reads only the partitions the batch can possibly collide
 # with, the same pattern as the inverted index's token-hash partition
 # dirs (operators/inverted_index.py) and the IVF list layout
-# (operators/similarity.py):
+# (operators/similarity.py). Each table version holds:
 #
-# * ``{path}/bands``  — (doc_id, band_idx, band_hash), partitioned by
-#   ``bucket = pmod(xxhash64(band_idx, band_hash), n_buckets)``. The
+# * ``bands/``  — (doc_id, band_idx, band_hash[, sig_fp]), partitioned
+#   by ``bucket = pmod(xxhash64(band_idx, band_hash), n_buckets)``. The
 #   probe touches only the buckets the NEW batch's band hashes fall
 #   in: expected fraction read ≈ 1 − exp(−batch·bands / n_buckets),
 #   so size n_buckets ≫ batch·bands and the candidate scan is a
 #   pruned lookup, not a corpus scan.
-# * ``{path}/sigs``   — (doc_id, sig), partitioned by
+# * ``sigs/``   — (doc_id, sig), partitioned by
 #   ``doc_bucket = pmod(xxhash64(doc_id), n_buckets)``. Signatures
 #   are stored ONCE per doc (not duplicated into every band row —
 #   that would multiply signature bytes by ``bands``); the estimate
 #   join fetches only the candidate old-ids' buckets, O(collisions)
 #   of them.
-# * ``{path}/meta.json`` — (num_perm, bands, n_buckets, keyed).
+# * ``meta.json`` — (num_perm, bands, n_buckets, keyed, sig_fp).
 #   The probe derives EVERY geometry parameter from meta, so a
 #   probe/table drift (the silent-empty-result failure mode the
 #   width check above guards against) is impossible by construction;
 #   appends that disagree with meta fail loudly.
+# * ``manifest.json`` — {sub: {leaf partition dir: {rows, files}}},
+#   the probe's dir discovery (no per-probe partition listing) and
+#   the maintenance policy's input.
+#
+# Table state is ``operators/table_io``'s, nothing of its own: every
+# mutation — first write, append, keyed retry, compaction, rebucket —
+# takes the writer lock beside the table, stages the NEXT version dir
+# (untouched subtables hardlinked in from the current one), writes its
+# data, meta and manifest there, and publishes with one atomic pointer
+# flip. Readers resolve the current version once and read meta,
+# manifest and both scans from that one dir, so a probe is
+# version-pinned, and a writer that dies before the flip leaves
+# nothing any reader can see (``cleanup_stale`` sweeps its staged dir
+# under the next writer's lock).
 #
 # ``batch_id`` keying (``keyed=True``): streaming gates append under
 # foreachBatch, which is AT-LEAST-ONCE — a retried batch must not
@@ -531,6 +533,7 @@ def incremental_minhash_candidates(spark, sig_path: str,
 
 
 N_SIG_BUCKETS = 64
+_SUBTABLES = ("bands", "sigs")
 
 
 def _read_sig_meta(path: str) -> dict:
@@ -538,286 +541,15 @@ def _read_sig_meta(path: str) -> dict:
     # metadata (a catalog property at scale) and a 1-row parquet
     # write/read costs two whole Spark jobs per append/probe
     # (measured 7.6 s for the write alone at sf0.1)
-    import json
     with open(path + "/meta.json") as f:
         return json.load(f)
-
-
-def _has_data_files(path: str) -> bool:
-    """Any committed parquet data file under ``path``? meta.json is
-    written BEFORE the data commits, so 'table exists' checks on the
-    meta alone would crash probes against a table whose first write
-    crashed mid-flight or committed zero rows (all-unsignable batch —
-    only _SUCCESS markers on disk)."""
-    import os
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith("_"):
-                return True
-    return False
-
-
-def _manifest_file(path: str) -> str:
-    return path + "/manifest.json"
-
-
-def _read_manifest(path: str) -> dict | None:
-    """{"bands": {rel_dir: rows}, "sigs": {rel_dir: rows}} or None
-    for a pre-manifest table (probes fall back to recursive partition
-    listing)."""
-    import json
-    import os
-    p = _manifest_file(path)
-    if not os.path.isfile(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-class StaleManifestError(RuntimeError):
-    """A writer's manifest replace was based on a snapshot another
-    writer has since superseded (epoch CAS failure). Under the POSIX
-    flock protocol this cannot fire — the lock serializes writers —
-    so it detects the degraded modes: flock unavailable, or an
-    out-of-band mutator. The failed writer's DATA is committed
-    (parquet landed, dirty marker present), so the repair is a
-    manifest rebuild, not a re-run."""
-
-
-def _manifest_epoch(man: dict | None) -> int:
-    return 0 if man is None else int(man.get("epoch", 0))
-
-
-def _write_manifest(path: str, man: dict,
-                    expect_epoch: int | None = None) -> None:
-    """Atomic manifest replace. With ``expect_epoch`` the replace is
-    a compare-and-swap on the monotonic manifest epoch: the on-disk
-    epoch is re-read immediately before the replace and must equal
-    the epoch the writer's snapshot was read at, else
-    :class:`StaleManifestError` — a lost update becomes a loud error
-    instead of a silent last-write-wins clobber. Detection, not
-    prevention (re-read→replace is not itself atomic); prevention is
-    the flock writer lock, under which the CAS can never fail."""
-    import json
-    import os
-    if expect_epoch is not None:
-        if _manifest_epoch(_read_manifest(path)) != expect_epoch:
-            raise StaleManifestError(
-                f"manifest at {path} moved past epoch {expect_epoch} "
-                "under this writer; rebuild the manifest to repair")
-        man = dict(man)
-        man["epoch"] = expect_epoch + 1
-    tmp = _manifest_file(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(man, f, sort_keys=True)
-    os.replace(tmp, _manifest_file(path))   # atomic vs readers
-
-
-def _dirty_file(path: str) -> str:
-    return path + "/manifest.dirty"
-
-
-def _mark_dirty(path: str, intent: dict) -> None:
-    """Write-ahead intent marker for the append protocol: lands
-    BEFORE the batch's parquet commits, cleared AFTER the manifest
-    replace. A writer crash inside that window leaves the marker, so
-    the next manifest consumer knows the manifest may miss committed
-    dirs and rebuilds from the filesystem instead of trusting it —
-    without the marker that committed data would be silently
-    invisible to every later probe (the manifest is the probe's SOLE
-    dir discovery on manifest-bearing tables). The rebuild repairs
-    the MANIFEST; the data state itself is kept probe-safe by the
-    sigs-before-bands write ordering (bands ⊆ sigs always holds, so
-    a torn commit leaves only unreferenced sidecar rows, never band
-    rows whose signatures are missing). For UNKEYED tables the
-    rebuild is the ONLY safe manifest repair: re-running the append
-    is not idempotent (mode=append duplicates the band/sig rows);
-    keyed tables may alternatively re-run the batch (dynamic
-    partition overwrite of its own partitions).
-
-    Returns a unique writer token recorded in the marker, so the
-    writer's own clear can be OWNER-CHECKED (see :func:`_clear_dirty`)
-    — where flock is unavailable, two racing writers share one marker
-    file (last mark wins via the atomic replace), and an
-    unconditional clear by the first finisher would delete the
-    survivor's only crash protection."""
-    import json
-    import os
-    import uuid
-    token = uuid.uuid4().hex
-    tmp = _dirty_file(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({**intent, "writer_token": token}, f)
-    os.replace(tmp, _dirty_file(path))
-    return token
-
-
-def _clear_dirty(path: str, owner_token: str | None = None) -> None:
-    """Remove the dirty marker. With ``owner_token`` the clear is
-    owner-checked: the marker is deleted only if it still carries
-    this writer's token — if another (possibly still LIVE) writer's
-    mark replaced ours, it is left alone and that writer clears its
-    own marker when it finishes (or a consumer heals if it crashed).
-    Unconditional (``None``) clearing is reserved for the
-    provably-dead-writer heal (lock acquired under real flock,
-    :func:`_resolve_manifest`) and explicit maintenance. Under the
-    blocking flock the owner check never fires (writers serialize,
-    each clears the marker it wrote) — it exists for the degraded
-    no-flock mode."""
-    import contextlib
-    import json
-    import os
-    if owner_token is not None:
-        try:
-            with open(_dirty_file(path)) as f:
-                if json.load(f).get("writer_token") != owner_token:
-                    return                  # someone else's marker
-        except (FileNotFoundError, ValueError):
-            return
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(_dirty_file(path))
-
-
-def _writer_lockfile(path: str) -> str:
-    return path + "/writer.lock"
-
-
-def _acquire_writer_lock(path: str):
-    """Exclusive append lock, held by the writer for the whole
-    marker→data→manifest→clear window. Its one job is making the
-    dirty marker UNAMBIGUOUS to concurrent readers: flock is released
-    by the OS on any process death, so `marker present + lock free`
-    MEANS crashed writer, and `marker present + lock held` means an
-    append is simply in flight (the on-disk manifest is then the
-    consistent pre-batch snapshot — see _resolve_manifest). Blocking
-    acquire also serializes two accidental concurrent writers instead
-    of letting them interleave appends. POSIX-only (the signature
-    table is a local/posix-fs artifact — the manifest is the local
-    analog of an Iceberg manifest list; an object-store deployment
-    uses a real catalog); returns None where flock is unavailable,
-    degrading to the pre-lock behavior."""
-    import os
-    try:
-        import fcntl
-    except ImportError:                      # non-POSIX: degrade
-        return None
-    fd = os.open(_writer_lockfile(path), os.O_CREAT | os.O_RDWR, 0o644)
-    fcntl.flock(fd, fcntl.LOCK_EX)
-    return fd
-
-
-def _release_writer_lock(fd) -> None:
-    import os
-    if fd is None or fd == -1:     # no lock taken / flock unavailable
-        return
-    import fcntl
-    fcntl.flock(fd, fcntl.LOCK_UN)
-    os.close(fd)
-
-
-def _try_writer_lock(path: str):
-    """Non-blocking exclusive acquire of the append lock: an fd when
-    no writer is running (caller must _release_writer_lock), None
-    when a writer currently holds it — or when flock is unavailable,
-    where the caller degrades to the lock-free behavior by treating
-    the acquire as... successful-but-unprotected (sentinel -1)."""
-    import os
-    try:
-        import fcntl
-    except ImportError:
-        return -1
-    fd = os.open(_writer_lockfile(path), os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    except OSError:
-        os.close(fd)
-        return None
-    return fd
-
-
-def _resolve_manifest(path: str) -> dict | None:
-    """Crash-aware manifest read — what every manifest CONSUMER
-    (probe, maintenance, rebucket) goes through. A present dirty
-    marker is disambiguated against the writer lock:
-
-    * marker + lock HELD ⇒ an append is in flight right now. The
-      on-disk manifest is the consistent PRE-batch snapshot (the
-      batch is not yet committed from this reader's point of view —
-      the gate's at-least-once semantics), so serve it as-is and
-      NEVER touch another writer's marker: clearing it here would
-      destroy the crash protection if that writer dies before its
-      manifest replace, and rebuilding would race its writes.
-    * marker + lock ACQUIRABLE ⇒ the writer died between its data
-      commit and its manifest replace; the manifest may silently
-      miss committed dirs. The heal — rebuild from the filesystem
-      (covers the orphaned batch and everything before it) and clear
-      the marker — runs WHILE HOLDING the lock, with the marker
-      re-checked under it: deciding from a momentary liveness PROBE
-      instead would race a writer that starts between the probe and
-      the clear, deleting the new writer's marker (the
-      check-then-act hole this structure exists to close).
-
-    Two degraded-consumer paths never mutate protocol state (ADVICE
-    r11 #1/#2): where flock is unavailable the lock cannot prove a
-    marked writer is dead, and on a read-only mount the heal cannot
-    write — both serve an IN-MEMORY filesystem rebuild (this reader
-    sees every committed dir) while leaving the marker and on-disk
-    manifest untouched, so a possibly-live writer's crash protection
-    is never destroyed and read-only probes still see committed data.
-    Marker-clearing stays reserved for the provably-dead-writer heal
-    (lock acquired under real flock) or explicit maintenance
-    (:func:`rebuild_signature_manifest`).
-
-    Returns None only for a genuinely pre-manifest table (no
-    manifest, no marker), where callers fall back to recursive
-    listing or a full rebuild."""
-    import os
-    if os.path.isfile(_dirty_file(path)):
-        try:
-            fd = _try_writer_lock(path)
-        except OSError:
-            # read-only mount: O_CREAT on writer.lock is refused, so
-            # neither the heal's write nor the clear could land anyway
-            return rebuild_signature_manifest(path, persist=False)
-        if fd is None:                   # live append in flight
-            return _read_manifest(path)
-        if fd == -1:
-            # flock unavailable: liveness is undecidable, so rebuild
-            # in memory (see committed dirs) but never clear what may
-            # be a LIVE writer's marker
-            return rebuild_signature_manifest(path, persist=False)
-        try:
-            if not os.path.isfile(_dirty_file(path)):
-                # the append finished (or another reader healed)
-                # between our marker sighting and the acquire
-                return _read_manifest(path)
-            # compute the rebuild ONCE (the leaf-dir walk is the
-            # expensive part — ~18 s at 5,120 dirs), then try to
-            # persist it; if the protocol files turn out unwritable
-            # (data readable, dir not), serve the already-computed
-            # manifest instead of repeating the identical walk
-            man = rebuild_signature_manifest(path, persist=False)
-            try:
-                man_p = dict(man)
-                man_p["epoch"] = _manifest_epoch(
-                    _read_manifest(path)) + 1
-                _write_manifest(path, man_p)
-                _clear_dirty(path)
-                return man_p
-            except OSError:
-                return man
-        finally:
-            _release_writer_lock(fd)
-    return _read_manifest(path)
 
 
 def _dir_rows(d: str) -> dict:
     """{"rows", "files"} of one leaf partition dir from parquet
     footers — driver-side metadata reads, no Spark job. File counts
-    feed the manifest-driven compaction policy
-    (:func:`maintain_signature_table`); row counts feed the growth
-    policy and observability."""
-    import os
+    feed the compaction policy (:func:`maintain_signature_table`);
+    row counts feed the growth policy and observability."""
     import pyarrow.parquet as pq
     rows = files = 0
     for f in sorted(os.listdir(d)):
@@ -837,44 +569,71 @@ def _man_files(v) -> int:
     return v.get("files", 1) if isinstance(v, dict) else 1
 
 
-def rebuild_signature_manifest(path: str, persist: bool = True) -> dict:
-    """Full filesystem rebuild of the banded table's dir manifest
-    (VERDICT r9 ask #4): rel leaf partition dir → row count for both
-    subtables, written atomically to ``{path}/manifest.json``.
-    ``persist=False`` computes the same manifest WITHOUT writing it —
-    the degraded-consumer path (read-only mount, or no flock to prove
-    a marked writer is dead) where this reader needs to see committed
-    dirs but must not mutate the table's crash-protocol state.
-
-    The manifest is the probe's DIR DISCOVERY: resolving the touched
-    buckets against it replaces the per-probe recursive partition
-    listing, whose fixed cost grows with n_buckets (measured 17.9 s
-    at 5,120 dirs on local FS — a metadata-catalog concern; the
-    manifest is the driver-side catalog stand-in, the local analog of
-    an Iceberg manifest list). Appends maintain it incrementally
-    (touched dirs only); this rebuild repairs a table written before
-    manifests existed or whose writer crashed between the data commit
-    and the manifest update. Dir-level (not file-level) on purpose:
-    compaction (operators/compaction.py) preserves the partition-dir
-    set and per-dir row counts exactly, so maintenance never
-    invalidates the manifest."""
-    import os
-
-    from . import table_io
+def _scan_manifest(vdir: str, subs=_SUBTABLES) -> dict:
+    """Manifest of one version dir from the filesystem: leaf partition
+    dir → {rows, files} per subtable (a leaf-dir walk plus footer
+    reads). Sub-table roots go through ``realpath``: tables compacted
+    by earlier builds hold them as nested version symlinks."""
     man = {}
-    for sub in ("bands", "sigs"):
-        root = os.path.realpath(os.path.join(path, sub))
-        dirs = {}
-        if os.path.isdir(root):
-            for d in table_io.leaf_partition_dirs(root):
-                dirs[d] = _dir_rows(os.path.join(root, d))
-        man[sub] = dirs
-    if persist:
-        # a rebuild is authoritative (it IS the filesystem), so it
-        # advances the epoch unconditionally rather than CAS-checking
-        man["epoch"] = _manifest_epoch(_read_manifest(path)) + 1
-        _write_manifest(path, man)
+    for sub in subs:
+        root = os.path.realpath(os.path.join(vdir, sub))
+        man[sub] = ({d: _dir_rows(os.path.join(root, d))
+                     for d in table_io.leaf_partition_dirs(root)}
+                    if os.path.isdir(root) else {})
     return man
+
+
+def _resolve_manifest(vdir: str) -> dict:
+    """The dir manifest of one resolved table version. Every version
+    this module publishes carries its ``manifest.json``; tables
+    written before manifests existed — or left by the in-place append
+    of earlier builds with a ``manifest.dirty`` marker (its writer
+    died between the data commit and the manifest update, so the
+    manifest may miss committed dirs) — are scanned instead. In
+    memory only: readers never write, and the next mutation publishes
+    a version with a complete manifest."""
+    p = vdir + "/manifest.json"
+    if os.path.isfile(p) and not os.path.exists(vdir + "/manifest.dirty"):
+        with open(p) as f:
+            man = json.load(f)
+        return {sub: man.get(sub, {}) for sub in _SUBTABLES}
+    return _scan_manifest(vdir)
+
+
+@contextlib.contextmanager
+def _locked_current(path: str):
+    """ONE signature-table mutation: holds the table's writer lock
+    (``table_io.writer_lock``, beside the table) from reading the
+    current version until the caller publishes, so appends, keyed
+    retries, compaction and rebucket serialize and none stages from a
+    version another has since superseded. Sweeps crash debris first;
+    yields the published version dir (None for a new table)."""
+    with table_io.writer_lock(path):
+        table_io.cleanup_stale(path)
+        yield table_io.current_version(path)
+
+
+def _stage(path: str, cur: str | None, carry=_SUBTABLES) -> str:
+    """Create the next (unpublished) version dir of ``path`` and
+    hardlink the ``carry`` subtables of ``cur`` into it — O(files)
+    link calls, no data copied (files are immutable: every mutation
+    writes new ones). Meta and manifest are always written fresh."""
+    vdir = table_io.next_version_dir(path)
+    os.makedirs(vdir)
+    for sub in carry if cur is not None else ():
+        src = os.path.realpath(os.path.join(cur, sub))
+        if os.path.isdir(src):
+            table_io.link_tree(src, os.path.join(vdir, sub))
+    return vdir
+
+
+def _publish(path: str, vdir: str, meta: dict, man: dict) -> None:
+    """Write meta and manifest into the staged ``vdir`` and flip the
+    table pointer to it."""
+    for name, obj in (("meta", meta), ("manifest", man)):
+        with open(f"{vdir}/{name}.json", "w") as f:
+            json.dump(obj, f, sort_keys=True)
+    table_io.publish_version(path, vdir)
 
 
 def write_banded_signature_table(shingled: DataFrame, path: str,
@@ -889,20 +648,15 @@ def write_banded_signature_table(shingled: DataFrame, path: str,
     retry idempotence (dynamic partition overwrite of the batch's own
     partitions).
 
-    MULTI-WRITER CONTRACT: concurrent appends to one table are
-    serialized by the blocking writer flock — both batches land, each
-    incremental manifest update reads the other's committed state,
-    and the final manifest equals a filesystem rebuild (pinned by
-    tests/test_dedup.py::test_concurrent_appends_serialize). Where
-    flock is unavailable the manifest replace is still epoch-CAS'd:
-    a writer whose snapshot another writer superseded raises
-    :class:`StaleManifestError` instead of silently losing the other
-    writer's update (its own data IS committed; the repair is
-    :func:`rebuild_signature_manifest`). Multi-HOST writers need a
-    real catalog — flock does not span NFS/object stores."""
-    import json
-    import os
-    spark = shingled.sparkSession
+    Each call publishes ONE new version of the whole table (see the
+    layout comment): concurrent appends — and an append racing
+    maintenance or a rebucket — serialize on the writer lock, each
+    staging from the version the previous one published, so no batch
+    is lost (pinned by tests/test_dedup.py::
+    test_concurrent_appends_serialize and
+    test_append_during_maintenance_is_kept). Multi-HOST writers need
+    a real catalog — flock does not span NFS/object stores."""
+    path = path.rstrip("/")
     keyed = batch_id is not None
     # sig_fp: an 8-byte xxhash64 fingerprint of the FULL signature
     # stored on every band row, so the capped probe's star collapse
@@ -914,40 +668,12 @@ def write_banded_signature_table(shingled: DataFrame, path: str,
     # schemas.
     got = {"num_perm": num_perm, "bands": bands,
            "n_buckets": n_buckets, "keyed": keyed, "sig_fp": True}
-    if os.path.isfile(path + "/meta.json"):
-        meta = _read_sig_meta(path)
-        if "sig_fp" not in meta:
-            got.pop("sig_fp")
-        if meta != got:
-            raise ValueError(
-                f"banded signature table at {path} has geometry {meta} "
-                f"but the write was called with {got}; a mismatched "
-                "append would make band hashes unmatchable")
-    else:
-        os.makedirs(path, exist_ok=True)
-        tmp = path + "/meta.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(got, f)
-        os.replace(tmp, path + "/meta.json")   # atomic vs readers
-
     # signatures computed ONCE for both writes (the sidecar and the
-    # band index derive from the same relation)
-    sigs = _materialize(
+    # band index derive from the same relation), before the lock
+    sigs = cut_lineage(
         minhash_signatures(shingled, id_col, shingles_col, num_perm))
-    band_cols = [F.col(id_col).alias("doc_id"),
-                 _band_explode(bands).alias("band_idx", "band_hash")]
-    if got.get("sig_fp", False):
-        band_cols.append(F.xxhash64("sig").alias("sig_fp"))
-    banded = sigs.select(*band_cols)
-    banded = banded.withColumn(
-        "bucket", F.pmod(F.xxhash64("band_idx", "band_hash"),
-                         F.lit(n_buckets)).cast("int"))
-    sidecar = sigs.select(
-        F.col(id_col).alias("doc_id"), "sig",
-        F.pmod(F.xxhash64(id_col), F.lit(n_buckets)).cast("int")
-        .alias("doc_bucket"))
 
-    def _write(df: DataFrame, sub: str, parts: list[str]) -> None:
+    def _write(df: DataFrame, out: str, parts: list[str]) -> None:
         # co-locate each partition dir's rows in ONE task before the
         # partitionBy write: without this every task writes a file
         # into every dir it touches (up to tasks x n_buckets tiny
@@ -963,89 +689,66 @@ def write_banded_signature_table(shingled: DataFrame, path: str,
                  .partitionBy("batch_id", *parts))
         else:
             w = df.write.mode("append").partitionBy(*parts)
-        w.parquet(path + sub)
+        w.parquet(out)
 
-    # write-ahead dirty marker: any crash from here until the manifest
-    # replace below leaves the marker, and the next manifest consumer
-    # rebuilds from the filesystem instead of trusting a manifest that
-    # may miss committed dirs. A marker already present means a
-    # PREVIOUS writer died mid-window — its committed dirs are
-    # invisible to the incremental update path, so this append must
-    # finish with a full rebuild (which walks the FS after our writes
-    # and therefore covers the orphan and this batch together).
-    # the append lock brackets the whole marker→data→manifest→
-    # clear window (see _acquire_writer_lock): concurrent readers
-    # can then tell an in-flight append from a crashed one, and
-    # accidental concurrent writers serialize instead of
-    # interleaving
-    _lock_fd = _acquire_writer_lock(path)
-    try:
-        stale_marker = os.path.isfile(_dirty_file(path))
-        token = _mark_dirty(path, {"batch_id": batch_id,
-                                   "keyed": keyed})
+    with _locked_current(path) as cur:
+        if cur is not None and os.path.isfile(cur + "/meta.json"):
+            meta = _read_sig_meta(cur)
+            if "sig_fp" not in meta:
+                got.pop("sig_fp")
+            if meta != got:
+                raise ValueError(
+                    f"banded signature table at {path} has geometry "
+                    f"{meta} but the write was called with {got}; a "
+                    "mismatched append would make band hashes "
+                    "unmatchable")
+            man = _resolve_manifest(cur)
+        else:
+            man = None                      # a new table
+        band_cols = [F.col(id_col).alias("doc_id"),
+                     _band_explode(bands).alias("band_idx", "band_hash")]
+        if got.get("sig_fp", False):
+            band_cols.append(F.xxhash64("sig").alias("sig_fp"))
+        banded = sigs.select(*band_cols).withColumn(
+            "bucket", F.pmod(F.xxhash64("band_idx", "band_hash"),
+                             F.lit(n_buckets)).cast("int"))
+        sidecar = sigs.select(
+            F.col(id_col).alias("doc_id"), "sig",
+            F.pmod(F.xxhash64(id_col), F.lit(n_buckets)).cast("int")
+            .alias("doc_bucket"))
 
-        # SIGS FIRST, bands second: the probe's correctness invariant is
-        # bands ⊆ sigs (every admitted band row must find its signature
-        # in the sidecar join — a band row with no sig silently drops,
-        # and on a legacy capped table an orphan could even be the
-        # over-cap group's sole min-id anchor, unflagging real near-dups)
-        # — so a crash between the two writes must only ever leave the
-        # HARMLESS torn state: sig rows no band group references yet
-        # (never probed, slightly wider sidecar dirs until the batch is
-        # re-run or the table rebuilt). The dirty-marker heal repairs the
-        # MANIFEST over whatever committed; this ordering is what makes
-        # the torn data state itself safe to serve.
-        _write(sidecar, "/sigs", ["doc_bucket"])
-        _write(banded, "/bands", ["bucket"])
+        vdir = _stage(path, cur)
+        # sigs first, bands second. Every published version must hold
+        # bands ⊆ sigs: a band row with no sig silently drops from the
+        # sidecar join, and on a legacy capped table it could even be
+        # an over-cap group's sole min-id anchor
+        _write(sidecar, vdir + "/sigs", ["doc_bucket"])
+        _write(banded, vdir + "/bands", ["bucket"])
 
-        # incremental manifest update — touched dirs only. ONE bounded
-        # job collects both subtables' touched bucket values (≤
-        # batch·bands + batch ints, off the already-materialized sigs);
-        # the row recounts are driver-side parquet-footer reads of just
-        # those dirs. The update is part of the single-writer append
-        # protocol; the dirty marker above makes the
-        # data-committed/manifest-stale crash window self-healing (the
-        # next consumer rebuilds — for UNKEYED tables that rebuild is the
-        # only safe repair, since re-running a mode=append batch
-        # duplicates its band/sig rows; keyed tables may also just re-run
-        # the batch, whose dynamic partition overwrite is idempotent).
-        man = None if stale_marker else _read_manifest(path)
         if man is None:
-            # LEGACY pre-manifest table (or crash-orphaned manifest): a
-            # targeted update seeded from an empty dict would cover only
-            # THIS batch's dirs, and the next probe — now manifest-driven
-            # — would silently skip the entire pre-existing corpus. Full
-            # rebuild instead: it walks the filesystem AFTER the writes,
-            # so old and new dirs are both covered (regression-pinned in
-            # tests/test_dedup.py::test_legacy_table_append_rebuilds_
-            # manifest).
-            rebuild_signature_manifest(path)
-            _clear_dirty(path, owner_token=token)
-            return
-        touched = (banded.select(F.lit("bands").alias("t"),
-                                 F.col("bucket").alias("b"))
-                   .unionAll(sidecar.select(F.lit("sigs").alias("t"),
-                                            F.col("doc_bucket").alias("b")))
-                   .distinct().collect())
-        pref = f"batch_id={batch_id}/" if keyed else ""
-        for r in touched:
-            col = "bucket" if r["t"] == "bands" else "doc_bucket"
-            rel = f"{pref}{col}={r['b']}"
-            d = os.path.join(os.path.realpath(path + "/" + r["t"]), rel)
-            if os.path.isdir(d):
-                man[r["t"]][rel] = _dir_rows(d)
-        # epoch CAS: under the flock this cannot fail (the lock
-        # serializes writers); where flock is unavailable it turns a
-        # stale writer's would-be lost update into StaleManifestError
-        # (data is committed + marker present, so the repair is a
-        # manifest rebuild, not a batch re-run). The clear is
-        # owner-checked for the same no-flock mode: if the CAS loser's
-        # mark replaced ours, the marker is ITS crash protection now
-        # and the winner must not delete it
-        _write_manifest(path, man, expect_epoch=_manifest_epoch(man))
-        _clear_dirty(path, owner_token=token)
-    finally:
-        _release_writer_lock(_lock_fd)
+            # a new table's manifest is just this batch's dirs: a scan
+            # of the staged version, no Spark job
+            man = _scan_manifest(vdir)
+        else:
+            # touched dirs only. ONE bounded job collects both
+            # subtables' touched bucket values (≤ batch·bands + batch
+            # ints, off the already-materialized sigs); the row
+            # recounts are driver-side parquet-footer reads of just
+            # those dirs in the staged version
+            touched = (banded.select(F.lit("bands").alias("t"),
+                                     F.col("bucket").alias("b"))
+                       .unionAll(sidecar.select(
+                           F.lit("sigs").alias("t"),
+                           F.col("doc_bucket").alias("b")))
+                       .distinct().collect())
+            pref = f"batch_id={batch_id}/" if keyed else ""
+            for r in touched:
+                col = "bucket" if r["t"] == "bands" else "doc_bucket"
+                rel = f"{pref}{col}={r['b']}"
+                d = os.path.join(vdir, r["t"], rel)
+                if os.path.isdir(d):
+                    man[r["t"]][rel] = _dir_rows(d)
+        _publish(path, vdir, got, man)
 
 
 def incremental_minhash_candidates_banded(
@@ -1126,9 +829,10 @@ def incremental_minhash_candidates_banded(
     touched-bucket IN-list driver-side (``key % n_buckets`` — Python
     ``%`` is pmod) instead of running the per-probe bucket-collect
     job; band keys are ``n_buckets``-independent, so one collect
-    serves probes across geometry migrations. Same agreement contract
-    as ``new_sigs``: the keys MUST be the batch's own at the table's
-    ``bands``, or the pruned scan silently misses buckets.
+    serves probes across geometry migrations. The keys MUST be the
+    batch's own, from :func:`collect_band_keys` at the table's
+    ``bands`` (checked against meta: a list without that band count
+    raises), or the pruned scan would silently miss buckets.
 
     ``new_sigs``: optional PRE-COMPUTED batch signatures — a
     materialized (``id_col``, sig) relation exactly as
@@ -1142,26 +846,26 @@ def incremental_minhash_candidates_banded(
     job per probe (r12 optimization; results are bit-identical
     because the signature relation is deterministic).
 
-    Snapshot semantics: against a VERSIONED table (any table that has
-    been rebucketed/compacted) the scans are version-pinned — dir
-    paths resolve through ``os.path.realpath`` into the current
-    version dir, so a returned DataFrame stays consistent across a
-    later publish for as long as that version is retained. A probe
-    created against a not-yet-versioned (plain-directory) table
-    re-binds through the first ``ensure_versioned`` rename: hold such
-    a result across a mutation only after materializing it
-    (``cut_lineage``/collect) — Spark's cache-by-path invalidation
-    will otherwise lazily recompute even a persisted plan against the
-    mutated table."""
-    import os
-
-    meta = _read_sig_meta(path)
+    Snapshot semantics: the probe resolves the table's current
+    version ONCE and reads meta, manifest and both scans from that
+    version dir, so a returned DataFrame is version-pinned: it stays
+    consistent across a later publish for as long as that version is
+    retained (``table_io.publish_version`` keeps the previous one)."""
+    cur = table_io.current_version(path) or path
+    meta = _read_sig_meta(cur)
     num_perm, bands = meta["num_perm"], meta["bands"]
     n_buckets = meta["n_buckets"]
     if max_batch_id_exclusive is not None and not meta["keyed"]:
         raise ValueError(
             f"table at {path} is not batch_id-keyed; "
             "max_batch_id_exclusive is meaningless")
+    if new_band_keys is not None and \
+            getattr(new_band_keys, "bands", None) != bands:
+        raise ValueError(
+            f"new_band_keys were collected at bands="
+            f"{getattr(new_band_keys, 'bands', None)} but the table at "
+            f"{path} has bands={bands}; collect them with "
+            "collect_band_keys(sigs, <the table's meta bands>)")
 
     def _empty() -> DataFrame:
         # id-typed, not hard-coded long: string-keyed tables must get
@@ -1174,12 +878,12 @@ def incremental_minhash_candidates_banded(
             T.StructField("old_id", idt),
             T.StructField("est_jaccard", T.DoubleType())]))
 
-    # meta lands before the data commits: a first write that crashed
-    # mid-flight, or whose batch had zero signable docs, leaves a
-    # table with meta but no parquet — an empty corpus, not an error
-    # (the retry-idempotent gate depends on the probe tolerating it)
-    if not (_has_data_files(path + "/bands")
-            and _has_data_files(path + "/sigs")):
+    man = _resolve_manifest(cur)
+    # a first write whose batch had zero signable docs publishes a
+    # table with meta but no data dirs — an empty corpus, not an
+    # error (the retry-idempotent gate depends on the probe
+    # tolerating it)
+    if not (man["bands"] and man["sigs"]):
         return _empty()
 
     def _epoch(df: DataFrame) -> DataFrame:
@@ -1188,29 +892,23 @@ def incremental_minhash_candidates_banded(
                 F.col("batch_id") < F.lit(max_batch_id_exclusive))
         return df
 
-    man = _resolve_manifest(path)
-
     def _pruned_scan(sub: str, col: str,
                      bucket_vals: list[int]) -> DataFrame | None:
-        """Scan of ``{path}/{sub}`` restricted to ``bucket_vals``.
+        """Scan of the version's ``sub`` restricted to ``bucket_vals``.
 
-        With a manifest, the touched dirs are resolved DRIVER-side
+        The touched dirs are resolved DRIVER-side from the manifest
         and passed as explicit paths (basePath keeps the partition
         columns), so Spark never lists the other n_buckets−touched
         dirs — the fixed per-probe listing cost that grows with
         n_buckets (17.9 s at 5,120 dirs on local FS) drops to a dict
         lookup. The partition IN-filter (and the epoch filter) stay
-        on the relation as belt-and-braces against a stale manifest
-        — and they keep the pinned plan shape: two partition-pruned
-        scans. None ⇒ no matching dirs (empty corpus slice).
-        Pre-manifest tables fall back to the recursive root read."""
+        on the relation and keep the pinned plan shape: two
+        partition-pruned scans. None ⇒ no matching dirs (empty corpus
+        slice)."""
         want = set(bucket_vals)
-        if man is None:
-            return _epoch(spark.read.parquet(path + "/" + sub)) \
-                .filter(F.col(col).isin(bucket_vals))
-        root = os.path.realpath(path + "/" + sub)
+        root = os.path.realpath(os.path.join(cur, sub))
         sel = []
-        for rel in man.get(sub, {}):
+        for rel in man[sub]:
             parts = dict(p.split("=", 1) for p in rel.split("/"))
             if int(parts[col]) not in want:
                 continue
@@ -1231,8 +929,8 @@ def incremental_minhash_candidates_banded(
         # of checkpoint-job + collect-job). With pre-collected band
         # keys the collect is skipped, so the cut must stay eager
         # (the next consumer is the probe join, whose concurrent AQE
-        # subplans would race a lazy checkpoint — see _materialize).
-        new_sigs = _materialize(
+        # subplans would race a lazy checkpoint — see _lineage.py).
+        new_sigs = cut_lineage(
             minhash_signatures(new_shingled, id_col, shingles_col,
                                num_perm),
             eager=new_band_keys is not None)
@@ -1326,7 +1024,7 @@ def incremental_minhash_candidates_banded(
         # costs one job instead of checkpoint-job + collect-job (r13
         # optimization; the estimate join below then reads the cached
         # blocks exactly as before)
-        cand = _materialize(cand, eager=False)
+        cand = cut_lineage(cand, eager=False)
     # candidate old-ids' doc buckets — O(collisions) distinct values.
     # The same bounded collect carries a free width check (ADVICE r12
     # #1): a ``new_sigs`` built at a different num_perm than the
@@ -1346,7 +1044,7 @@ def incremental_minhash_candidates_banded(
     if not doc_buckets:          # no collisions: empty probe result
         return _empty()
     sidecar = _pruned_scan("sigs", "doc_bucket", doc_buckets)
-    if sidecar is None:          # stale-manifest guard: no sig dirs
+    if sidecar is None:          # no sig dirs for the candidates
         return _empty()
     sidecar = sidecar.select(F.col("doc_id").alias("old_id"),
                              F.col("sig").alias("sig_old"))
@@ -1385,39 +1083,33 @@ def rebucket_signature_table(spark, path: str, n_buckets: int) -> dict:
     """Geometry migration for the banded signature table (VERDICT r9
     ask #3): rewrite BOTH subtables under a new ``n_buckets`` and
     publish data + ``meta.json`` + ``manifest.json`` together as ONE
-    atomic version flip of the whole table directory
-    (``operators.table_io``).
+    version of the whole table (see the layout comment).
 
     The production sizing policy (PLANS.md §Round-9) is n_buckets ∝
     corpus so the pruned probe's scanned bytes stay constant — but
     append geometry is frozen at first write (mismatches raise), so a
     live table grown 100× needs this migration. Shape:
 
-    * each subtable rewrites in ONE Spark job — read through the
-      current version, recompute the bucket column from the SAME
-      stored columns the writer hashed (``xxhash64(band_idx,
-      band_hash)`` / ``xxhash64(doc_id)``, types round-trip through
-      parquet so the hashes are identical), ``partitionBy`` write
-      into the staged version dir. Cost is one pass over the
-      signature state (k longs per doc × bands) — never the corpus
-      text. When the new geometry is a MULTIPLE of the old
-      (``n_new % n_old == 0`` — the production growth shape:
-      doubling as the corpus doubles), the rewrite is a NARROW map
-      with no shuffle at all: ``h mod n_new`` refines ``h mod
-      n_old``, so every old bucket dir splits locally into exactly
-      ``n_new/n_old`` new dirs and each task touches only its input
-      dirs' images (plan pinned shuffle-free in
+    * each subtable rewrites in ONE Spark job — read the current
+      version, recompute the bucket column from the SAME stored
+      columns the writer hashed (``xxhash64(band_idx, band_hash)`` /
+      ``xxhash64(doc_id)``, types round-trip through parquet so the
+      hashes are identical), ``partitionBy`` write into the staged
+      version dir. Cost is one pass over the signature state (k longs
+      per doc × bands) — never the corpus text. When the new geometry
+      is a MULTIPLE of the old (``n_new % n_old == 0`` — the
+      production growth shape: doubling as the corpus doubles), the
+      rewrite is a NARROW map with no shuffle at all: ``h mod n_new``
+      refines ``h mod n_old``, so every old bucket dir splits locally
+      into exactly ``n_new/n_old`` new dirs and each task touches only
+      its input dirs' images (plan pinned shuffle-free in
       tests/test_dedup.py). Non-multiple geometries co-locate with a
       ``repartition`` on the new bucket first — full shuffle of the
       signature state, still one job;
-    * ``meta.json`` (with the new n_buckets) and a rebuilt manifest
-      are written INSIDE the staged version dir, then
-      ``publish_version`` flips the table symlink: a prober resolves
-      geometry, manifest, and data through the same pointer, so it
-      sees the old geometry or the new, never a mix — the
-      probe/table drift the meta file exists to prevent cannot occur
-      mid-migration. A crash before the flip leaves the current
-      version untouched (``cleanup_stale`` sweeps the debris);
+    * a prober resolves geometry, manifest, and data through the same
+      version, so it sees the old geometry or the new, never a mix;
+      appends wait on the writer lock and land in the migrated
+      version;
     * probe-before == probe-after as an exact multiset, pinned by the
       ``signature_table_rebucket`` verdict query; the previous
       version is retained so an in-flight probe finishes its scan.
@@ -1425,26 +1117,22 @@ def rebucket_signature_table(spark, path: str, n_buckets: int) -> dict:
     Appends after the migration must pass the NEW n_buckets (or adopt
     it from meta); the loud geometry check is unchanged. Returns
     {n_buckets_old, n_buckets_new, bands_dirs, sigs_dirs}."""
-    import json
-    import os
-
-    from . import table_io
-
     path = path.rstrip("/")
-    meta = _read_sig_meta(path)
+    with _locked_current(path) as cur:
+        return _rebucket(spark, path, cur, _read_sig_meta(cur),
+                         _resolve_manifest(cur), n_buckets)
+
+
+def _rebucket(spark, path: str, cur: str, meta: dict, man: dict,
+              n_buckets: int) -> dict:
+    """:func:`rebucket_signature_table`'s body, run under the writer
+    lock the caller holds."""
     old_n = meta["n_buckets"]
-    man = _resolve_manifest(path)
     if n_buckets == old_n:
-        if man is None:
-            man = rebuild_signature_manifest(path)
         return {"n_buckets_old": old_n, "n_buckets_new": n_buckets,
                 "bands_dirs": len(man["bands"]),
                 "sigs_dirs": len(man["sigs"]), "skipped": True}
-    table_io.ensure_versioned(path)
-    table_io.cleanup_stale(path)
-    cur = table_io.current_version(path)
-    vdir = table_io.next_version_dir(path)
-    os.makedirs(vdir)
+    vdir = _stage(path, cur, carry=())
     keyed = meta["keyed"]
     # multiple-of-old geometry: h mod n_new determines h mod n_old,
     # so each old dir's rows land in exactly n_new/n_old new dirs —
@@ -1455,7 +1143,7 @@ def rebucket_signature_table(spark, path: str, n_buckets: int) -> dict:
     narrow = n_buckets % old_n == 0
 
     def _rewrite(sub: str, part_col: str, bucket_expr) -> None:
-        if not _has_data_files(cur + "/" + sub):
+        if not man[sub]:
             return
         df = (spark.read.parquet(os.path.realpath(cur + "/" + sub))
               .withColumn(part_col,
@@ -1469,10 +1157,8 @@ def rebucket_signature_table(spark, path: str, n_buckets: int) -> dict:
 
     _rewrite("bands", "bucket", F.xxhash64("band_idx", "band_hash"))
     _rewrite("sigs", "doc_bucket", F.xxhash64("doc_id"))
-    with open(vdir + "/meta.json", "w") as f:       # staged, unpublished
-        json.dump(dict(meta, n_buckets=n_buckets), f)
-    man = rebuild_signature_manifest(vdir)
-    table_io.publish_version(path, vdir)
+    man = _scan_manifest(vdir)
+    _publish(path, vdir, dict(meta, n_buckets=n_buckets), man)
     return {"n_buckets_old": old_n, "n_buckets_new": n_buckets,
             "narrow": narrow,
             "bands_dirs": len(man["bands"]),
@@ -1495,54 +1181,59 @@ def maintain_signature_table(spark, path: str,
     * **growth**: when the band index averages more than
       ``target_rows_per_bucket`` rows per bucket, double n_buckets
       until back under target (always a power-of-two multiple of the
-      current geometry, so :func:`rebucket_signature_table` takes its
-      NARROW shuffle-free split path). Constant rows-per-bucket is
-      what keeps the pruned probe's scanned bytes flat as the corpus
-      grows — touched dirs ≤ batch·bands regardless of n_buckets,
-      rows/dir held ≈ constant by this policy.
+      current geometry, so the rebucket takes its NARROW shuffle-free
+      split path). Constant rows-per-bucket is what keeps the pruned
+      probe's scanned bytes flat as the corpus grows — touched dirs ≤
+      batch·bands regardless of n_buckets, rows/dir held ≈ constant
+      by this policy.
     * **small files**: when any subtable dir accretes more than
       ``max_files_per_dir`` files (micro-append accretion — ~one
-      file per touched dir per append), compact that subtable
-      (``operators.compaction.compact_parquet``: per-dir layout
-      preserved, atomic version publish, probe-invariant — pinned by
-      the ``signature_table_maintenance`` verdict query). Skipped
-      when a rebucket already ran: the rebucket rewrite IS a
-      compaction (one file set per fresh dir).
+      file per touched dir per append), compact that subtable with
+      ``operators.compaction.compact_into`` (per-dir layout
+      preserved, probe-invariant — pinned by the
+      ``signature_table_maintenance`` verdict query). Skipped when a
+      rebucket already ran: the rebucket rewrite IS a compaction (one
+      file set per fresh dir).
 
-    Returns {rebucketed, n_buckets, compacted, bands_rows,
-    rows_per_bucket} — callers log it; a no-op maintenance pass
-    costs only the manifest read. Crash-safe by composition: both
-    actions publish atomically and the manifest travels with each
-    publish."""
-    meta = _read_sig_meta(path)
-    man = _resolve_manifest(path) or rebuild_signature_manifest(path)
-    bands_rows = sum(_man_rows(v) for v in man["bands"].values())
-    n = meta["n_buckets"]
-    rpb = bands_rows / max(n, 1)
-    target_n = n
-    while bands_rows / max(target_n, 1) > target_rows_per_bucket:
-        target_n *= 2
-    rebucketed = False
-    if target_n != n:
-        stats = rebucket_signature_table(spark, path, target_n)
-        assert stats["narrow"], stats     # power-of-two multiple
-        n, rebucketed = target_n, True
-        man = _read_manifest(path)
-    compacted = []
-    if not rebucketed:
-        from .compaction import compact_parquet
-        for sub in ("bands", "sigs"):
-            if any(_man_files(v) > max_files_per_dir
-                   for v in man[sub].values()):
-                compact_parquet(spark, path + "/" + sub,
-                                target_bytes=compact_target_bytes,
-                                force=True)
-                compacted.append(sub)
+    Either action publishes ONE version of the whole table, under the
+    same writer lock appends take, so an append arriving mid-pass
+    waits and lands in the maintained version instead of being
+    dropped by it. Returns {rebucketed, n_buckets, compacted,
+    bands_rows, rows_per_bucket} — callers log it; a no-op pass costs
+    only the lock and the manifest read."""
+    from .compaction import compact_into
+
+    path = path.rstrip("/")
+    with _locked_current(path) as cur:
+        meta = _read_sig_meta(cur)
+        man = _resolve_manifest(cur)
+        bands_rows = sum(_man_rows(v) for v in man["bands"].values())
+        n = meta["n_buckets"]
+        rpb = bands_rows / max(n, 1)
+        target_n = n
+        while bands_rows / max(target_n, 1) > target_rows_per_bucket:
+            target_n *= 2
+        compacted = []
+        if target_n != n:
+            stats = _rebucket(spark, path, cur, meta, man, target_n)
+            assert stats["narrow"], stats     # power-of-two multiple
+        else:
+            compacted = [sub for sub in _SUBTABLES
+                         if any(_man_files(v) > max_files_per_dir
+                                for v in man[sub].values())]
         if compacted:
+            vdir = _stage(path, cur, carry=[s for s in _SUBTABLES
+                                            if s not in compacted])
+            for sub in compacted:
+                compact_into(spark, os.path.realpath(cur + "/" + sub),
+                             vdir + "/" + sub,
+                             target_bytes=compact_target_bytes,
+                             force=True)
             # dir set and per-dir rows are compaction-invariant, but
-            # file counts changed — refresh them
-            rebuild_signature_manifest(path)
-    return {"rebucketed": rebucketed, "n_buckets": n,
+            # file counts changed — rescan the compacted subtables
+            man = dict(man, **_scan_manifest(vdir, compacted))
+            _publish(path, vdir, meta, man)
+    return {"rebucketed": target_n != n, "n_buckets": target_n,
             "compacted": compacted, "bands_rows": bands_rows,
             "rows_per_bucket": round(rpb, 1)}
 

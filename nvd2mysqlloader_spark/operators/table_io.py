@@ -28,8 +28,9 @@ This module gives every managed table the shape real table formats
 Crash safety: a writer that dies before ``publish_version`` leaves the
 current pointer untouched (readers never saw the partial version);
 ``cleanup_stale`` removes the orphaned newer-than-current directories
-on the next write. Single concurrent writer per table is assumed
-(same as the reference's single loader process).
+on the next write. One writer per table at a time (same as the
+reference's single loader process): a table with concurrent writers
+serializes them with ``writer_lock``.
 
 On an object store the same protocol is a manifest write + pointer
 CAS; the directory/symlink form is the local[–] stand-in with
@@ -38,12 +39,32 @@ identical visibility semantics.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import os
 import re
 import shutil
 
 _V_RE = re.compile(r"\.__v(\d+)$")
 _V_SUFFIX = ".__v"
+
+
+@contextlib.contextmanager
+def writer_lock(path: str):
+    """Exclusive writer lock of one table: a blocking flock on
+    ``<table>.lock`` BESIDE the table, never inside a version dir (a
+    publish replaces those). Concurrent writers — threads or
+    processes, each with its own open file — serialize on it; the OS
+    drops the lock when its holder dies, so a crashed writer never
+    wedges the table. Readers never take it."""
+    path = path.rstrip("/")
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    fd = os.open(path + ".lock", os.O_CREAT | os.O_RDWR, 0o644)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        os.close(fd)                     # closing releases the flock
 
 
 def versions(path: str) -> list[tuple[int, str]]:

@@ -164,6 +164,11 @@ def multiset_diff_count(a, b, alias: str, one_way: bool = False):
     exchange of each input instead of two, and one plan branch
     instead of two for AQE to materialize)."""
     cols = list(a.columns)
+    clash = {"__sgn", "__d"} & set(cols)
+    if clash:
+        raise ValueError(
+            f"multiset_diff_count inputs may not carry its internal "
+            f"columns {sorted(clash)}")
     tagged = (a.select(*cols, F.lit(1).alias("__sgn"))
               .unionAll(b.select(*cols, F.lit(-1).alias("__sgn"))))
     per_val = tagged.groupBy(*cols).agg(F.sum("__sgn").alias("__d"))
@@ -174,12 +179,16 @@ def multiset_diff_count(a, b, alias: str, one_way: bool = False):
 
 
 def fresh_copy(path: str, prefix: str) -> tuple[str, float]:
-    """Per-call private copy of a cached artifact for queries that
-    MUTATE it (compaction, rebucket): a driver-side copytree — tens
-    of MB at bench scale, orders cheaper than re-deriving the
-    artifact from corpus text through shingle/minhash jobs. Returns
-    (copy_path, copy_sec)."""
+    """Per-call private copy of a cached versioned table for queries
+    that MUTATE it (compaction, rebucket): a zero-copy
+    ``table_io.clone`` — hardlinks of the current version, published
+    as the copy's own version 1, so the copy is versioned like any
+    table its query mutates and the pristine files are never written
+    (every mutation writes new files into a new version). Orders
+    cheaper than re-deriving the artifact from corpus text through
+    shingle/minhash jobs. Returns (copy_path, copy_sec)."""
+    from ..operators import table_io
     dst = _tmp_root(prefix + "_") + "/index"
     t0 = _time.perf_counter()
-    _shutil.copytree(path, dst, symlinks=True)
+    table_io.clone(path, dst)
     return dst, _time.perf_counter() - t0

@@ -166,7 +166,7 @@ def stream_minhash_dedup_gate(spark: SparkSession,
         dedup_gate_batch(spark, batch_df, batch_id, sig_tbl, pair_tbl)
 
     # the gate's internal lineage cuts (localCheckpoint inside
-    # minhash_near_dups/_materialize) stay pinned for the session once
+    # minhash_near_dups/cut_lineage) stay pinned for the session once
     # the micro-batch ends — reclaim them after the drain exactly the
     # way bench.hygiene_sweep does between entries (shared primitive,
     # operators/_lineage.reclaim_new_rdds; everything the gate

@@ -214,7 +214,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The inverted index is materialized ONCE for both self-join sides:
     # AQE's broadcast conversion re-plans each side independently, so
     # ReuseExchange never fires and the Arrow shingle pipeline would
-    # otherwise run per side (see operators.dedup._materialize).
+    # otherwise run per side (see operators._lineage).
     ex = (docs
           .repartition(spark.sparkContext.defaultParallelism)
           .select("doc_id", shingle3_udf()("text").alias("s"))
@@ -349,7 +349,7 @@ def winnow_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df cap and per-doc set size as window counts: two narrow shuffles
     # (fp, then doc_id), no extra scans of the fingerprint pipeline.
     # Materialized once for both self-join sides (AQE broadcast defeats
-    # ReuseExchange; see operators.dedup._materialize).
+    # ReuseExchange; see operators._lineage).
     rare = (ex
             .withColumn("d", F.count(F.lit(1)).over(Window.partitionBy("fp")))
             .filter(F.col("d") <= _FP_DF_CAP)

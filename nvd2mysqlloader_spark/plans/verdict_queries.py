@@ -1044,7 +1044,8 @@ def signature_table_maintenance(spark: SparkSession,
     # after the 16→64 growth migration (r13 optimization,
     # value-identity pinned in tests/test_dedup.py)
     batch_sigs = cut_lineage(minhash_signatures(batch), eager=False)
-    band_keys = collect_band_keys(batch_sigs, 16)
+    band_keys = collect_band_keys(batch_sigs,
+                                  _read_sig_meta(path)["bands"])
 
     def probe():
         # cut_lineage, not persist: probe results are HELD ACROSS
@@ -1184,7 +1185,7 @@ def probe_admission_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from ..functions.text import shingle3_udf
-    from ..operators.dedup import (collect_band_keys,
+    from ..operators.dedup import (_read_sig_meta, collect_band_keys,
                                    incremental_minhash_candidates_banded,
                                    minhash_signatures,
                                    write_banded_signature_table)
@@ -1228,7 +1229,8 @@ def probe_admission_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cap never enters the banding, so the collected keys
     # replace both probes' touched-bucket jobs (r13 optimization)
     batch_sigs = cut_lineage(minhash_signatures(batch), eager=False)
-    band_keys = collect_band_keys(batch_sigs, 16)
+    band_keys = collect_band_keys(batch_sigs,
+                                  _read_sig_meta(path)["bands"])
     unc = incremental_minhash_candidates_banded(
         spark, path, batch, new_sigs=batch_sigs,
         new_band_keys=band_keys) \
@@ -1312,7 +1314,7 @@ def probe_admission_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def signature_table_rebucket(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    from ..operators.dedup import (_read_manifest, _read_sig_meta,
+    from ..operators.dedup import (_read_sig_meta, _resolve_manifest,
                                    collect_band_keys,
                                    incremental_minhash_candidates_banded,
                                    minhash_signatures,
@@ -1367,18 +1369,16 @@ def signature_table_rebucket(spark: SparkSession,
     # including across the 16→48 migration — band keys are
     # n_buckets-independent (r13 optimization)
     batch_sigs = cut_lineage(minhash_signatures(batch), eager=False)
-    band_keys = collect_band_keys(batch_sigs, 16)
+    band_keys = collect_band_keys(batch_sigs,
+                                  _read_sig_meta(path)["bands"])
 
     def probe():
-        # cut_lineage, not persist: a probe result HELD ACROSS a
-        # table mutation must be materialized with its lineage
-        # truncated — the next write's cache-by-path invalidation
-        # would otherwise lazily RECOMPUTE a persisted plan
-        # through the flipped version pointer (probes created
-        # against a not-yet-versioned table re-bind through the
-        # first ensure_versioned rename) and silently change the
-        # snapshot. Post-migration probes are version-pinned via
-        # realpath and don't need this.
+        # cut_lineage, not persist: a probe result HELD ACROSS two
+        # table mutations (the migration, then the append) must not
+        # depend on files of a version the second publish prunes
+        # (table_io keeps current + previous), and the next write's
+        # cache-by-path invalidation would lazily RECOMPUTE a
+        # persisted plan
         return cut_lineage(
             incremental_minhash_candidates_banded(
                 spark, path, batch, new_sigs=batch_sigs,
@@ -1395,7 +1395,7 @@ def signature_table_rebucket(spark: SparkSession,
                    probe_sec=_t_probe,
                    rebucket_sec=_time.perf_counter() - _t0)
     meta_ok = _read_sig_meta(path)["n_buckets"] == 48
-    man = _read_manifest(path)
+    man = _resolve_manifest(path)
     layout_ok = (stats["n_buckets_old"] == 16
                  and 16 < len(man["bands"]) <= 48)
     after = probe()

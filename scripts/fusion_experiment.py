@@ -25,7 +25,7 @@ lazy-cache DAG is 29x WORSE, not better. Each of the 8 lazy caches
 feeds both a broadcast-subquery normalizer and the main path; AQE
 plans those consumers as independent subplans that race to be the
 cache's first use, so the uncached upstream recomputes per consumer
-per iteration — the exact failure mode operators/_materialize
+per iteration — the exact failure mode operators/_lineage.cut_lineage
 documents for lazy localCheckpoint, compounding geometrically over
 the mutual recursion. The per-half-step EAGER checkpoint is
 load-bearing, not overhead: it is what makes each half-step compute

@@ -383,9 +383,8 @@ def test_banded_write_geometry_mismatch_fails_loudly(
 
 def test_banded_probe_tolerates_meta_only_table(spark, shingled,
                                                 tmp_path):
-    """meta.json lands before the data commits: a first write whose
-    batch had zero signable docs (or that crashed mid-flight) leaves
-    a table with meta but no parquet. The probe must treat that as an
+    """A first write whose batch had zero signable docs publishes a
+    table with meta but no data dirs. The probe must treat that as an
     EMPTY corpus, not crash — the retry-idempotent gate depends on
     it."""
     from nvd2mysqlloader_spark.operators.dedup import (
@@ -985,33 +984,31 @@ def test_persisted_histogram_sketch_quantiles(spark, tmp_path):
 
 def test_manifest_maintained_and_probe_fallback_identical(
         spark, banded_split, tmp_path):
-    """Appends maintain {path}/manifest.json incrementally; it must
-    equal a from-scratch filesystem rebuild, and the manifest-pruned
-    probe must return exactly what the pre-manifest fallback (root
-    listing + partition filter) returns."""
+    """Appends maintain the version's manifest.json incrementally; it
+    must equal a from-scratch filesystem scan, and the manifest-pruned
+    probe must return exactly what a pre-manifest table (manifest
+    scanned from the filesystem) returns."""
     import os
 
+    from nvd2mysqlloader_spark.operators import table_io
     from nvd2mysqlloader_spark.operators.dedup import (
-        _read_manifest, incremental_minhash_candidates_banded,
-        rebuild_signature_manifest)
+        _resolve_manifest, _scan_manifest,
+        incremental_minhash_candidates_banded)
     _old, new, path = banded_split
-    man = _read_manifest(path)
-    assert man is not None and man["bands"] and man["sigs"]
+    cur = table_io.current_version(path)
+    man = _resolve_manifest(cur)
+    assert man["bands"] and man["sigs"]
     with_man = sorted(map(tuple, incremental_minhash_candidates_banded(
         spark, path, new).collect()))
-    # rebuild must be a no-op on a consistently-maintained table
-    # (data keys; the rebuild advances the monotonic epoch by design)
-    rb = rebuild_signature_manifest(path)
-    assert {k: rb[k] for k in ("bands", "sigs")} == \
-        {k: man[k] for k in ("bands", "sigs")}
-    # pre-manifest table (fallback path): same relation
-    os.rename(path + "/manifest.json", path + "/manifest.json.bak")
+    assert _scan_manifest(cur) == man
+    # pre-manifest table (scanned in memory): same relation
+    os.rename(cur + "/manifest.json", cur + "/manifest.json.bak")
     try:
         without = sorted(map(
             tuple, incremental_minhash_candidates_banded(
                 spark, path, new).collect()))
     finally:
-        os.rename(path + "/manifest.json.bak", path + "/manifest.json")
+        os.rename(cur + "/manifest.json.bak", cur + "/manifest.json")
     assert with_man == without and with_man
 
 
@@ -1075,7 +1072,7 @@ def test_rebucket_preserves_probe_and_updates_geometry(
     the manifest reflects the new layout, and appends at the NEW
     geometry succeed while the old geometry now fails loudly."""
     from nvd2mysqlloader_spark.operators.dedup import (
-        _read_manifest, _read_sig_meta,
+        _read_sig_meta, _resolve_manifest,
         incremental_minhash_candidates_banded, rebucket_signature_table,
         write_banded_signature_table)
     old, new, path = banded_split          # written at n_buckets=64
@@ -1086,7 +1083,7 @@ def test_rebucket_preserves_probe_and_updates_geometry(
     assert stats["n_buckets_old"] == 64
     assert stats["n_buckets_new"] == 48
     assert _read_sig_meta(path)["n_buckets"] == 48
-    man = _read_manifest(path)
+    man = _resolve_manifest(path)
     assert man and len(man["bands"]) <= 48 and len(man["sigs"]) <= 48
     after = sorted(map(tuple, incremental_minhash_candidates_banded(
         spark, path, new).collect()))
@@ -1186,7 +1183,7 @@ def test_maintain_signature_table_policy(spark, shingled, tmp_path):
     triggers subtable compaction (file counts drop, probe invariant),
     and a healthy table is a no-op."""
     from nvd2mysqlloader_spark.operators.dedup import (
-        _man_files, _read_manifest, _read_sig_meta,
+        _man_files, _read_sig_meta, _resolve_manifest,
         incremental_minhash_candidates_banded, maintain_signature_table,
         write_banded_signature_table)
     old = shingled.filter(F.col("doc_id") % 5 != 0)
@@ -1222,7 +1219,7 @@ def test_maintain_signature_table_policy(spark, shingled, tmp_path):
                                       max_files_per_dir=2)
     assert stats2["rebucketed"] is False
     assert stats2["compacted"]
-    man = _read_manifest(path)
+    man = _resolve_manifest(path)
     assert all(_man_files(v) <= 2 for sub in ("bands", "sigs")
                for v in man[sub].values())
     assert sorted(map(tuple, incremental_minhash_candidates_banded(
@@ -1244,7 +1241,7 @@ def test_legacy_table_append_rebuilds_manifest(spark, shingled,
     import os
 
     from nvd2mysqlloader_spark.operators.dedup import (
-        _read_manifest, incremental_minhash_candidates_banded,
+        incremental_minhash_candidates_banded,
         write_banded_signature_table)
     old = shingled.filter(F.col("doc_id") % 5 != 0)
     new = shingled.filter(F.col("doc_id") % 5 == 0)
@@ -1257,8 +1254,7 @@ def test_legacy_table_append_rebuilds_manifest(spark, shingled,
     os.remove(path + "/manifest.json")
     write_banded_signature_table(
         old.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1), path)
-    man = _read_manifest(path)
-    assert man is not None
+    assert os.path.isfile(path + "/manifest.json")
     got = sorted(map(tuple, incremental_minhash_candidates_banded(
         spark, path, new).collect()))
     # the probe must see candidates from BOTH slices — i.e. at least
@@ -1327,95 +1323,151 @@ def _sh3(df):
                " i, 3)))").alias("s"))
 
 
+def _legacy_crashed_append(spark, path, doc_id, text):
+    """Leave the state the in-place append of earlier builds left when
+    its writer died between the data commit and the manifest update:
+    the batch's rows committed in the published dir, a manifest.json
+    (with the old epoch field) that does not count them, and the
+    manifest.dirty marker beside it."""
+    import json
+
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table
+    with open(path + "/manifest.json") as f:
+        stale = json.load(f)
+    df = spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
+    write_banded_signature_table(_sh3(df), path, n_buckets=16)
+    with open(path + "/manifest.json", "w") as f:
+        json.dump(dict(stale, epoch=7), f)
+    with open(path + "/manifest.dirty", "w") as f:
+        json.dump({"batch_id": None, "keyed": False,
+                   "writer_token": "dead"}, f)
+
+
+def _tree(path):
+    """(name → inode, size, mtime) of every entry under the table's
+    current version and beside the table — a write anywhere shows."""
+    import os
+    root = os.path.realpath(path)
+    out = {}
+    for base in (root, os.path.dirname(root)):
+        for d, dirs, files in os.walk(base):
+            for n in dirs + files:
+                st = os.lstat(os.path.join(d, n))
+                out[os.path.join(d, n)] = (st.st_ino, st.st_size,
+                                           st.st_mtime_ns)
+    return out
+
+
+def _probe_hits(spark, path, doc_id, text):
+    from nvd2mysqlloader_spark.operators.dedup import \
+        incremental_minhash_candidates_banded
+    probe = spark.createDataFrame([(doc_id, text)],
+                                  "doc_id long, text string")
+    return {r["old_id"] for r in incremental_minhash_candidates_banded(
+        spark, path, _sh3(probe)).collect() if r["est_jaccard"] == 1.0}
+
+
+_BATCH1 = [(i, f"first batch doc {i} alpha beta gamma delta epsilon")
+           for i in range(4)]
+_TARGET = "second batch target unique payload words here now ok yes"
+
+
 def test_dirty_marker_heals_crashed_manifest_update(spark, tmp_path):
-    """A writer that commits its parquet but dies before the manifest
-    replace leaves committed dirs the manifest misses; the dirty
-    marker written ahead of the data commit makes the next probe
-    rebuild the manifest from the filesystem instead of silently
+    """A table left by the in-place append of earlier builds whose
+    writer died between its data commit and its manifest update (the
+    manifest.dirty marker present, the manifest missing the batch):
+    the probe must SEE the committed batch — a marked manifest is
+    rebuilt from the filesystem, in memory — instead of silently
     skipping that data."""
     import os
 
-    from nvd2mysqlloader_spark.operators import dedup
-    from nvd2mysqlloader_spark.operators.dedup import (
-        _read_manifest, incremental_minhash_candidates_banded,
-        write_banded_signature_table)
-
-    batch1 = spark.createDataFrame(
-        [(i, f"first batch doc {i} alpha beta gamma delta epsilon")
-         for i in range(8)], "doc_id long, text string")
-    target = "second batch target unique payload words here now ok yes"
-    batch2 = spark.createDataFrame(
-        [(100, target)], "doc_id long, text string")
-    probe = spark.createDataFrame(
-        [(900, target)], "doc_id long, text string")
-
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table
     path = str(tmp_path / "crashy")
-    write_banded_signature_table(_sh3(batch1), path, n_buckets=16)
-    man_before = _read_manifest(path)
-
-    # crash between the data commit and the manifest replace
-    real = dedup._write_manifest
-    dedup._write_manifest = lambda *a, **k: (_ for _ in ()).throw(
-        OSError("simulated crash"))
-    try:
-        import pytest as _pytest
-        with _pytest.raises(OSError):
-            write_banded_signature_table(_sh3(batch2), path,
-                                         n_buckets=16)
-    finally:
-        dedup._write_manifest = real
-
-    assert os.path.isfile(path + "/manifest.dirty")
-    assert _read_manifest(path) == man_before  # stale on disk
-
-    # probe must SEE batch2 despite the stale manifest
-    got = incremental_minhash_candidates_banded(
-        spark, path, _sh3(probe)).collect()
-    assert any(r["old_id"] == 100 and r["est_jaccard"] == 1.0
-               for r in got), "committed data invisible to probe"
-    # ...and the consumer repaired the table state as it went
-    assert not os.path.isfile(path + "/manifest.dirty")
-    man_after = _read_manifest(path)
-    assert sum(v["rows"] for v in man_after["sigs"].values()) == 9
+    write_banded_signature_table(
+        _sh3(spark.createDataFrame(_BATCH1, "doc_id long, text string")),
+        path, n_buckets=16)
+    _legacy_crashed_append(spark, path, 100, _TARGET)
+    assert 100 in _probe_hits(spark, path, 900, _TARGET), \
+        "committed data invisible to probe"
+    assert os.path.isfile(path + "/manifest.dirty")   # readers never write
 
 
 def test_dirty_marker_next_append_full_rebuilds(spark, tmp_path):
-    """An append that finds a PREVIOUS writer's dirty marker must
-    finish with a full manifest rebuild (covering the orphaned batch
-    and itself), not an incremental update seeded from the stale
-    manifest."""
+    """An append to a table carrying an earlier build's dirty marker
+    must publish a manifest covering the orphaned batch and itself —
+    a full filesystem rebuild, not an update seeded from the stale
+    manifest — and neither the marker nor the old epoch field."""
+    import json
     import os
 
-    from nvd2mysqlloader_spark.operators import dedup
+    from nvd2mysqlloader_spark.operators import table_io
     from nvd2mysqlloader_spark.operators.dedup import (
-        _read_manifest, write_banded_signature_table)
+        _scan_manifest, write_banded_signature_table)
 
     def mk(i, text):
-        return spark.createDataFrame([(i, text)],
-                                     "doc_id long, text string")
+        return _sh3(spark.createDataFrame([(i, text)],
+                                          "doc_id long, text string"))
 
     path = str(tmp_path / "crashy2")
     write_banded_signature_table(
-        _sh3(mk(1, "one two three four five six seven")), path,
-        n_buckets=16)
-    real = dedup._write_manifest
-    dedup._write_manifest = lambda *a, **k: (_ for _ in ()).throw(
-        OSError("simulated crash"))
-    try:
-        import pytest as _pytest
-        with _pytest.raises(OSError):
-            write_banded_signature_table(
-                _sh3(mk(2, "orphan doc aaa bbb ccc ddd eee fff")),
-                path, n_buckets=16)
-    finally:
-        dedup._write_manifest = real
-    # third append completes normally: full rebuild covers the orphan
+        mk(1, "one two three four five six seven"), path, n_buckets=16)
+    _legacy_crashed_append(spark, path, 2,
+                           "orphan doc aaa bbb ccc ddd eee fff")
     write_banded_signature_table(
-        _sh3(mk(3, "third doc ggg hhh iii jjj kkk lll")), path,
-        n_buckets=16)
-    assert not os.path.isfile(path + "/manifest.dirty")
-    man = _read_manifest(path)
+        mk(3, "third doc ggg hhh iii jjj kkk lll"), path, n_buckets=16)
+    cur = table_io.current_version(path)
+    assert not os.path.exists(cur + "/manifest.dirty")
+    with open(cur + "/manifest.json") as f:
+        man = json.load(f)
+    assert "epoch" not in man
     assert sum(v["rows"] for v in man["sigs"].values()) == 3
+    assert man == _scan_manifest(cur)
+
+
+def test_crashed_append_leaves_table_unchanged(spark, tmp_path,
+                                               monkeypatch):
+    """A writer that dies after staging and writing its version but
+    before the publish leaves the published version — and every
+    probe — unchanged; the next append sweeps the staged debris and
+    lands."""
+    import os
+
+    import pytest as _pytest
+
+    from nvd2mysqlloader_spark.operators import table_io
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table
+
+    def mk(i, text):
+        return _sh3(spark.createDataFrame([(i, text)],
+                                          "doc_id long, text string"))
+
+    path = str(tmp_path / "crash")
+    write_banded_signature_table(
+        _sh3(spark.createDataFrame(_BATCH1, "doc_id long, text string")),
+        path, n_buckets=16)
+    published = os.readlink(path)
+    want = _probe_hits(spark, path, 900, _BATCH1[2][1])
+
+    def crash(*a, **k):
+        raise OSError("simulated crash")
+    monkeypatch.setattr(table_io, "publish_version", crash)
+    with _pytest.raises(OSError):
+        write_banded_signature_table(mk(100, _TARGET), path, n_buckets=16)
+    monkeypatch.undo()
+
+    assert os.readlink(path) == published
+    assert len(table_io.versions(path)) == 2     # the staged debris
+    assert _probe_hits(spark, path, 900, _BATCH1[2][1]) == want
+    assert not _probe_hits(spark, path, 901, _TARGET)
+
+    write_banded_signature_table(mk(200, _TARGET), path, n_buckets=16)
+    assert _probe_hits(spark, path, 901, _TARGET) == {200}
+    ids = sorted(r.doc_id for r in spark.read.parquet(path + "/sigs")
+                 .select("doc_id").collect())
+    assert ids == [0, 1, 2, 3, 200]
 
 
 def test_capped_probe_distinct_sig_member_not_hidden(spark, tmp_path):
@@ -1504,198 +1556,136 @@ def test_legacy_meta_table_appends_and_caps_without_sig_fp(
     assert cap[0]["est_jaccard"] == 1.0
 
 
-def test_live_append_marker_not_cleared_by_reader(spark, tmp_path):
-    """A concurrent reader that finds the dirty marker while the
-    WRITER LOCK is held must treat the append as in flight: serve the
-    on-disk manifest (the consistent pre-batch snapshot) and leave
-    the marker alone — clearing it would destroy the crash protection
-    if the writer later dies before its manifest replace. Once the
-    lock is free, the marker means a crashed writer and the reader
-    heals (rebuild + clear)."""
-    import fcntl
-    import os
+def test_probe_during_live_append_serves_published_version(
+        spark, tmp_path, monkeypatch):
+    """A probe running while an append is in flight — its version
+    staged and written, the writer lock held, the publish not yet
+    done — serves the published version and leaves the writer's
+    staged dir alone; once the writer publishes, the next probe sees
+    the batch."""
+    import threading
 
-    from nvd2mysqlloader_spark.operators.dedup import (
-        _dirty_file, _mark_dirty, _read_manifest, _resolve_manifest,
-        _writer_lockfile, incremental_minhash_candidates_banded,
-        write_banded_signature_table)
+    from nvd2mysqlloader_spark.operators import table_io
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table
 
-    batch1 = spark.createDataFrame(
-        [(i, f"first batch doc {i} alpha beta gamma delta epsilon")
-         for i in range(6)], "doc_id long, text string")
-    probe = spark.createDataFrame(
-        [(900, "first batch doc 3 alpha beta gamma delta epsilon")],
-        "doc_id long, text string")
-    path = str(tmp_path / "livelock")
-    write_banded_signature_table(_sh3(batch1), path, n_buckets=16)
-    man_before = _read_manifest(path)
+    path = str(tmp_path / "live")
+    write_banded_signature_table(
+        _sh3(spark.createDataFrame(_BATCH1, "doc_id long, text string")),
+        path, n_buckets=16)
+    staged, go, errs = threading.Event(), threading.Event(), []
+    real_publish = table_io.publish_version
 
-    # simulate an in-flight append: marker present, lock HELD
-    fd = os.open(_writer_lockfile(path), os.O_CREAT | os.O_RDWR, 0o644)
-    fcntl.flock(fd, fcntl.LOCK_EX)
-    try:
-        _mark_dirty(path, {"batch_id": None, "keyed": False})
-        got = _resolve_manifest(path)
-        assert got == man_before            # pre-batch snapshot served
-        assert os.path.isfile(_dirty_file(path))   # marker untouched
-        # the probe keeps working against the snapshot
-        res = incremental_minhash_candidates_banded(
-            spark, path, _sh3(probe)).collect()
-        assert any(r["old_id"] == 3 for r in res)
-        assert os.path.isfile(_dirty_file(path))
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
+    def held_publish(p, vdir, keep=2):
+        staged.set()
+        go.wait(300)
+        real_publish(p, vdir, keep)
+    monkeypatch.setattr(table_io, "publish_version", held_publish)
 
-    # lock released without a manifest replace = crashed writer:
-    # the next consumer heals (data keys unchanged, epoch advanced)
-    got = _resolve_manifest(path)
-    assert {k: got[k] for k in ("bands", "sigs")} == \
-        {k: man_before[k] for k in ("bands", "sigs")}
-    assert not os.path.isfile(_dirty_file(path))
-
-
-def _crash_append(spark, path, doc_id, text):
-    """Commit a batch's parquet but die before the manifest replace,
-    leaving the dirty marker + a stale manifest (shared fixture for
-    the degraded-consumer tests)."""
-    from nvd2mysqlloader_spark.operators import dedup
-    from nvd2mysqlloader_spark.operators.dedup import (
-        write_banded_signature_table)
-    df = spark.createDataFrame([(doc_id, text)],
-                               "doc_id long, text string")
-    real = dedup._write_manifest
-    dedup._write_manifest = lambda *a, **k: (_ for _ in ()).throw(
-        OSError("simulated crash"))
-    try:
-        import pytest as _pytest
-        with _pytest.raises(OSError):
+    def appender():
+        try:
+            df = spark.createDataFrame([(100, _TARGET)],
+                                       "doc_id long, text string")
             write_banded_signature_table(_sh3(df), path, n_buckets=16)
+        except Exception as e:          # surfaced to the main thread
+            errs.append(e)
+        finally:
+            staged.set()
+
+    t = threading.Thread(target=appender)
+    t.start()
+    try:
+        assert staged.wait(300)
+        vdir = table_io.versions(path)[-1][1]
+        before = _tree(vdir)
+        assert not _probe_hits(spark, path, 900, _TARGET)
+        assert 2 in _probe_hits(spark, path, 901, _BATCH1[2][1])
+        assert _tree(vdir) == before
     finally:
-        dedup._write_manifest = real
+        go.set()
+        t.join(300)
+    assert not errs, errs
+    assert _probe_hits(spark, path, 900, _TARGET) == {100}
 
 
 def test_resolve_manifest_no_fcntl_never_clears_marker(
         spark, tmp_path, monkeypatch):
-    """ADVICE r11 #1: where flock is unavailable (_try_writer_lock's
-    -1 sentinel) a marked writer's liveness is undecidable, so the
-    consumer must serve an IN-MEMORY rebuild — seeing every committed
-    dir — while leaving the marker and the on-disk manifest alone: a
-    heal here could destroy a LIVE writer's crash protection."""
-    import os
+    """Readers take no lock: with flock unavailable (``fcntl.flock``
+    raising) the manifest of a dirty-marked table from an earlier
+    build still resolves to every committed dir, the probe sees the
+    orphaned batch, and nothing on disk changes — marker and stale
+    manifest are left for the next writer."""
+    import fcntl
 
-    from nvd2mysqlloader_spark.operators import dedup
+    from nvd2mysqlloader_spark.operators import table_io
     from nvd2mysqlloader_spark.operators.dedup import (
-        _dirty_file, _read_manifest, _resolve_manifest,
-        write_banded_signature_table)
+        _resolve_manifest, write_banded_signature_table)
 
-    batch1 = spark.createDataFrame(
-        [(i, f"first batch doc {i} alpha beta gamma delta epsilon")
-         for i in range(4)], "doc_id long, text string")
     path = str(tmp_path / "nofcntl")
-    write_banded_signature_table(_sh3(batch1), path, n_buckets=16)
-    man_stale = _read_manifest(path)
-    _crash_append(spark, path, 100,
-                  "orphan doc aaa bbb ccc ddd eee fff ggg")
+    write_banded_signature_table(
+        _sh3(spark.createDataFrame(_BATCH1, "doc_id long, text string")),
+        path, n_buckets=16)
+    _legacy_crashed_append(spark, path, 100, _TARGET)
+    before = _tree(path)
 
-    monkeypatch.setattr(dedup, "_try_writer_lock", lambda p: -1)
-    got = _resolve_manifest(path)
-    # sees the orphaned batch's committed sig rows (5 = 4 + 1)...
+    def no_flock(*a, **k):
+        raise OSError(38, "Function not implemented")
+    monkeypatch.setattr(fcntl, "flock", no_flock)
+    got = _resolve_manifest(table_io.current_version(path))
     assert sum(v["rows"] for v in got["sigs"].values()) == 5
-    # ...but mutates NO protocol state
-    assert os.path.isfile(_dirty_file(path))
-    assert _read_manifest(path) == man_stale
+    assert 100 in _probe_hits(spark, path, 900, _TARGET)
+    assert _tree(path) == before
 
 
 def test_resolve_manifest_readonly_mount_serves_committed_data(
-        spark, tmp_path, monkeypatch):
-    """ADVICE r11 #2: a probe against a read-only table mount (the
-    lock open with O_CREAT raises OSError) must degrade to an
-    in-memory rebuild instead of raising — read-only consumers still
-    see committed data, and nothing on disk changes."""
+        spark, tmp_path):
+    """A probe against a read-only table (every dir of the version and
+    the dir beside it mode 0555) serves committed data — including a
+    dirty-marked batch of an earlier build — and changes nothing on
+    disk (checked by inode/size/mtime, so the check holds for a user
+    the mode does not stop)."""
     import os
 
-    from nvd2mysqlloader_spark.operators import dedup
+    from nvd2mysqlloader_spark.operators import table_io
     from nvd2mysqlloader_spark.operators.dedup import (
-        _dirty_file, _read_manifest, _resolve_manifest,
-        incremental_minhash_candidates_banded,
-        write_banded_signature_table)
+        _resolve_manifest, write_banded_signature_table)
 
-    batch1 = spark.createDataFrame(
-        [(i, f"first batch doc {i} alpha beta gamma delta epsilon")
-         for i in range(4)], "doc_id long, text string")
-    target = "read only target unique payload words here now ok yes"
     path = str(tmp_path / "romount")
-    write_banded_signature_table(_sh3(batch1), path, n_buckets=16)
-    man_stale = _read_manifest(path)
-    _crash_append(spark, path, 100, target)
-
-    def ro_lock(p):
-        raise OSError(30, "Read-only file system")
-    monkeypatch.setattr(dedup, "_try_writer_lock", ro_lock)
-
-    got = _resolve_manifest(path)
-    assert sum(v["rows"] for v in got["sigs"].values()) == 5
-    assert os.path.isfile(_dirty_file(path))
-    assert _read_manifest(path) == man_stale
-
-    # the full probe path works end-to-end on the degraded consumer
-    probe = spark.createDataFrame([(900, target)],
-                                  "doc_id long, text string")
-    res = incremental_minhash_candidates_banded(
-        spark, path, _sh3(probe)).collect()
-    assert any(r["old_id"] == 100 and r["est_jaccard"] == 1.0
-               for r in res)
-    assert os.path.isfile(_dirty_file(path))
-
-
-def test_resolve_manifest_heal_write_failure_degrades(
-        spark, tmp_path, monkeypatch):
-    """If the provably-dead-writer heal acquires the real lock but the
-    manifest WRITE then fails (protocol files unwritable), the
-    consumer falls back to the in-memory rebuild instead of raising,
-    and the marker survives for a consumer that CAN write."""
-    import os
-
-    from nvd2mysqlloader_spark.operators import dedup
-    from nvd2mysqlloader_spark.operators.dedup import (
-        _dirty_file, _resolve_manifest, write_banded_signature_table)
-
-    batch1 = spark.createDataFrame(
-        [(i, f"first batch doc {i} alpha beta gamma delta epsilon")
-         for i in range(4)], "doc_id long, text string")
-    path = str(tmp_path / "healfail")
-    write_banded_signature_table(_sh3(batch1), path, n_buckets=16)
-    _crash_append(spark, path, 100,
-                  "orphan doc aaa bbb ccc ddd eee fff ggg")
-
-    def no_write(*a, **k):
-        raise OSError(30, "Read-only file system")
-    monkeypatch.setattr(dedup, "_write_manifest", no_write)
-    got = _resolve_manifest(path)
-    assert sum(v["rows"] for v in got["sigs"].values()) == 5
-    assert os.path.isfile(_dirty_file(path))
-    monkeypatch.undo()
-
-    # a later writable consumer completes the heal
-    got2 = _resolve_manifest(path)
-    assert sum(v["rows"] for v in got2["sigs"].values()) == 5
-    assert not os.path.isfile(_dirty_file(path))
+    write_banded_signature_table(
+        _sh3(spark.createDataFrame(_BATCH1, "doc_id long, text string")),
+        path, n_buckets=16)
+    _legacy_crashed_append(spark, path, 100, _TARGET)
+    cur = table_io.current_version(path)
+    dirs = [os.path.dirname(cur)] + [d for d, _, _ in os.walk(cur)]
+    before = _tree(path)
+    for d in dirs:
+        os.chmod(d, 0o555)
+    try:
+        got = _resolve_manifest(cur)
+        assert sum(v["rows"] for v in got["sigs"].values()) == 5
+        assert 100 in _probe_hits(spark, path, 900, _TARGET)
+    finally:
+        for d in dirs:
+            os.chmod(d, 0o755)
+    assert _tree(path) == before
 
 
 def test_concurrent_appends_serialize(spark, tmp_path):
-    """VERDICT r11 ask #5: two LIVE writers racing the same table must
-    serialize on the blocking writer flock — both batches land, each
-    incremental manifest update reads the other's committed state,
-    and the final manifest equals a from-scratch filesystem rebuild.
-    Two threads, each with its own lock fd (flock conflicts are per
-    open-file-description, so same-process threads contend exactly
-    like two processes would)."""
+    """VERDICT r11 ask #5: LIVE writers racing the same table must
+    serialize on the blocking writer flock — every batch lands, each
+    stages from the version the previous one published (a writer
+    staging from a superseded version would drop the other's batch),
+    and the final manifest equals a from-scratch filesystem scan. Six
+    threads, more than the cores, each with its own lock fd (flock
+    conflicts are per open-file-description, so same-process threads
+    contend exactly like processes would)."""
+    import sys
     import threading
 
+    from nvd2mysqlloader_spark.operators import table_io
     from nvd2mysqlloader_spark.operators.dedup import (
-        _read_manifest, incremental_minhash_candidates_banded,
-        rebuild_signature_manifest, write_banded_signature_table)
+        _resolve_manifest, _scan_manifest,
+        write_banded_signature_table)
 
     path = str(tmp_path / "race")
     seed = spark.createDataFrame(
@@ -1703,8 +1693,8 @@ def test_concurrent_appends_serialize(spark, tmp_path):
         "doc_id long, text string")
     write_banded_signature_table(_sh3(seed), path, n_buckets=16)
 
-    texts = {1: "first racer unique payload aaa bbb ccc ddd eee",
-             2: "second racer unique payload vvv www xxx yyy zzz"}
+    texts = {i: " ".join(f"racer{i}word{j}" for j in range(8))
+             for i in range(1, 7)}
     errs = []
 
     def appender(i):
@@ -1716,169 +1706,158 @@ def test_concurrent_appends_serialize(spark, tmp_path):
             errs.append(e)
 
     threads = [threading.Thread(target=appender, args=(i,))
-               for i in (1, 2)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=300)
+               for i in texts]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
     assert not errs, errs
     assert not any(t.is_alive() for t in threads), "writer deadlock"
 
-    man = _read_manifest(path)
-    assert sum(v["rows"] for v in man["sigs"].values()) == 3
-    # the maintained manifest equals a filesystem rebuild exactly
-    rb = rebuild_signature_manifest(path, persist=False)
-    assert {k: man[k] for k in ("bands", "sigs")} == rb
-    # both racers' docs are probe-visible
+    cur = table_io.current_version(path)
+    assert cur.endswith(f".__v{1 + len(texts)}")   # one version each
+    man = _resolve_manifest(cur)
+    assert sum(v["rows"] for v in man["sigs"].values()) == 1 + len(texts)
+    # the maintained manifest equals a filesystem scan exactly
+    assert man == _scan_manifest(cur)
+    # every racer's doc is probe-visible
     for i, text in texts.items():
-        probe = spark.createDataFrame([(900 + i, text)],
-                                      "doc_id long, text string")
-        res = incremental_minhash_candidates_banded(
-            spark, path, _sh3(probe)).collect()
-        assert any(r["old_id"] == i and r["est_jaccard"] == 1.0
-                   for r in res), f"racer {i}'s batch invisible"
+        assert i in _probe_hits(spark, path, 900 + i, text), \
+            f"racer {i}'s batch invisible"
 
 
-def test_manifest_epoch_cas_detects_stale_writer(
-        spark, tmp_path, monkeypatch):
-    """The stretch contract: where flock cannot serialize writers
-    (the -1 sentinel), a writer whose manifest snapshot another
-    writer superseded must raise StaleManifestError at replace time —
-    never silently last-write-wins away the other writer's update.
-    Its own DATA is committed, so a manifest rebuild repairs."""
-    import pytest
+@pytest.mark.parametrize("mutation", ["rebucket", "compaction"])
+def test_append_during_maintenance_is_kept(spark, tmp_path, monkeypatch,
+                                           mutation):
+    """An append that starts while a rebucket, or
+    maintain_signature_table's compaction, has read its input but not
+    yet published must not be dropped by that publish: after both
+    finish, the published table holds the appended doc and a probe
+    finds it. The append starts from a hook on the maintenance's
+    publish, which goes on once the append has either finished or
+    blocked on the table's writer lock; it is issued at the geometry
+    the maintenance publishes (a writer that follows the migration)."""
+    import fcntl
+    import threading
 
-    from nvd2mysqlloader_spark.operators import dedup
+    from nvd2mysqlloader_spark.operators import table_io
     from nvd2mysqlloader_spark.operators.dedup import (
-        StaleManifestError, _manifest_epoch, _read_manifest,
-        rebuild_signature_manifest, write_banded_signature_table)
+        maintain_signature_table, rebucket_signature_table,
+        write_banded_signature_table)
 
-    path = str(tmp_path / "cas")
-    seed = spark.createDataFrame(
-        [(0, "seed doc alpha beta gamma delta epsilon zeta eta")],
-        "doc_id long, text string")
-    write_banded_signature_table(_sh3(seed), path, n_buckets=16)
-    epoch0 = _manifest_epoch(_read_manifest(path))
+    path = str(tmp_path / "maint_race")
+    for k in range(2):              # two files per touched dir
+        rows = [(i, t) for i, t in _BATCH1 if i % 2 == k]
+        write_banded_signature_table(
+            _sh3(spark.createDataFrame(rows, "doc_id long, text string")),
+            path, n_buckets=8)
+    late = "late arrival unique payload qqq rrr sss ttt uuu"
+    settled, errs, appender = threading.Event(), [], {}
+    real_flock, real_publish = fcntl.flock, table_io.publish_version
 
-    # no flock: writers can interleave; simulate B committing between
-    # A's manifest read and A's replace by having A's CAS'd write hit
-    # a manifest whose epoch B already advanced
-    monkeypatch.setattr(dedup, "_try_writer_lock", lambda p: -1)
-    monkeypatch.setattr(dedup, "_acquire_writer_lock", lambda p: -1)
-    real_write = dedup._write_manifest
-    fired = {}
+    def flock(fd, op):
+        if threading.get_ident() == appender.get("id") \
+                and op == fcntl.LOCK_EX:
+            try:
+                return real_flock(fd, op | fcntl.LOCK_NB)
+            except BlockingIOError:
+                settled.set()       # waiting for the maintenance
+        return real_flock(fd, op)
 
-    def interpose(p, man, expect_epoch=None):
-        if expect_epoch is not None and "bumped" not in fired:
-            fired["bumped"] = True
-            cur = dedup._read_manifest(p)
-            cur["epoch"] = cur.get("epoch", 0) + 1   # writer B wins
-            real_write(p, cur)
-        real_write(p, man, expect_epoch=expect_epoch)
-    monkeypatch.setattr(dedup, "_write_manifest", interpose)
+    def append():
+        appender["id"] = threading.get_ident()
+        try:
+            df = spark.createDataFrame([(500, late)],
+                                       "doc_id long, text string")
+            write_banded_signature_table(
+                _sh3(df), path,
+                n_buckets=16 if mutation == "rebucket" else 8)
+        except Exception as e:      # surfaced to the main thread
+            errs.append(e)
+        finally:
+            settled.set()
 
-    df = spark.createDataFrame(
-        [(1, "stale writer unique payload aaa bbb ccc ddd eee")],
-        "doc_id long, text string")
-    with pytest.raises(StaleManifestError):
-        write_banded_signature_table(_sh3(df), path, n_buckets=16)
+    def publish(p, vdir, keep=2):
+        if "thread" not in appender:
+            appender["thread"] = threading.Thread(target=append)
+            appender["thread"].start()
+            assert settled.wait(300)
+        return real_publish(p, vdir, keep)
+
+    monkeypatch.setattr(fcntl, "flock", flock)
+    monkeypatch.setattr(table_io, "publish_version", publish)
+    if mutation == "rebucket":
+        rebucket_signature_table(spark, path, 16)
+    else:
+        stats = maintain_signature_table(
+            spark, path, target_rows_per_bucket=10 ** 9,
+            max_files_per_dir=1)
+        assert stats["compacted"]
+    appender["thread"].join(300)
     monkeypatch.undo()
+    assert not errs, errs
+    for sub in ("bands", "sigs"):
+        ids = {r.doc_id for r in spark.read.parquet(f"{path}/{sub}")
+               .select("doc_id").distinct().collect()}
+        assert ids == {0, 1, 2, 3, 500}, (sub, ids)
+    assert _probe_hits(spark, path, 900, late) == {500}
 
-    # the loser's data IS committed; the prescribed repair covers it
-    man = rebuild_signature_manifest(path)
-    assert sum(v["rows"] for v in man["sigs"].values()) == 2
-    assert _manifest_epoch(man) > epoch0
 
-
-def test_degraded_writer_clear_is_owner_checked(
-        spark, tmp_path, monkeypatch):
-    """Round-12 review finding: where flock is unavailable, two
-    racing writers share ONE dirty-marker file (last mark wins), so
-    the first finisher's clear must be OWNER-CHECKED — an
-    unconditional clear would delete the still-running writer's only
-    crash protection, making its committed data silently invisible
-    if it then crashes before its manifest replace. Simulated by
-    planting a second writer's mark right after the first writer's
-    manifest replace (inside its commit window): the marker must
-    SURVIVE the first writer's clear."""
+def test_every_mutation_publishes_one_whole_table_version(spark,
+                                                          tmp_path):
+    """First write, append, keyed write and retry, compaction and
+    rebucket each publish exactly one version of the WHOLE table dir:
+    the table path is a symlink to ``path.__vN`` with N one higher
+    than before, no version dir holds a symlink, a nested version dir
+    or a lock, and no manifest carries an epoch."""
+    import json
     import os
 
-    from nvd2mysqlloader_spark.operators import dedup
+    from nvd2mysqlloader_spark.operators import table_io
     from nvd2mysqlloader_spark.operators.dedup import (
-        _dirty_file, write_banded_signature_table)
+        maintain_signature_table, rebucket_signature_table,
+        write_banded_signature_table)
 
-    path = str(tmp_path / "ownerclear")
-    seed = spark.createDataFrame(
-        [(0, "seed doc alpha beta gamma delta epsilon zeta")],
-        "doc_id long, text string")
-    write_banded_signature_table(_sh3(seed), path, n_buckets=16)
+    def check(path, n):
+        assert os.path.islink(path)
+        assert os.readlink(path) == os.path.basename(path) + f".__v{n}"
+        for _n, vdir in table_io.versions(path):
+            for d, dirs, files in os.walk(vdir):
+                for name in dirs + files:
+                    assert not os.path.islink(os.path.join(d, name))
+                    assert ".__v" not in name and name not in (
+                        "manifest.dirty", "writer.lock"), (d, name)
+            with open(vdir + "/manifest.json") as f:
+                assert "epoch" not in json.load(f)
 
-    monkeypatch.setattr(dedup, "_acquire_writer_lock", lambda p: None)
-    real_write_manifest = dedup._write_manifest
+    def docs(ids):
+        return _sh3(spark.createDataFrame(
+            [(i, t) for i, t in _BATCH1 if i in ids],
+            "doc_id long, text string"))
 
-    def write_then_foreign_mark(p, man, expect_epoch=None):
-        real_write_manifest(p, man, expect_epoch=expect_epoch)
-        # a second degraded writer marks while writer 1 is between
-        # its manifest replace and its clear
-        dedup._mark_dirty(path, {"batch_id": None, "keyed": False})
+    path = str(tmp_path / "t")
+    write_banded_signature_table(docs({0, 1}), path, n_buckets=8)
+    check(path, 1)
+    write_banded_signature_table(docs({2, 3}), path, n_buckets=8)
+    check(path, 2)
+    stats = maintain_signature_table(spark, path,
+                                     target_rows_per_bucket=10 ** 9,
+                                     max_files_per_dir=1)
+    assert stats["compacted"]
+    check(path, 3)
+    rebucket_signature_table(spark, path, 16)
+    check(path, 4)
 
-    monkeypatch.setattr(dedup, "_write_manifest",
-                        write_then_foreign_mark)
-    batch2 = spark.createDataFrame(
-        [(1, "second writer doc aaa bbb ccc ddd eee fff")],
-        "doc_id long, text string")
-    write_banded_signature_table(_sh3(batch2), path, n_buckets=16)
-    # the foreign (possibly-live) writer's marker survived the clear
-    assert os.path.isfile(_dirty_file(path))
-    monkeypatch.undo()
-
-    # ...and under the REAL lock the owner check never fires: a
-    # normal append still clears its own marker
-    batch3 = spark.createDataFrame(
-        [(2, "third writer doc ggg hhh iii jjj kkk lll")],
-        "doc_id long, text string")
-    write_banded_signature_table(_sh3(batch3), path, n_buckets=16)
-    assert not os.path.isfile(_dirty_file(path))
-
-
-def test_heal_write_failure_walks_filesystem_once(
-        spark, tmp_path, monkeypatch):
-    """Round-12 review finding: the heal's unwritable-protocol-files
-    fallback must not repeat the full leaf-dir walk (the expensive
-    part — ~18 s at 5,120 dirs): the rebuild is computed ONCE and
-    served whether or not the persist lands."""
-    import os
-
-    from nvd2mysqlloader_spark.operators import dedup
-    from nvd2mysqlloader_spark.operators.dedup import (
-        _dirty_file, _resolve_manifest, write_banded_signature_table)
-
-    batch1 = spark.createDataFrame(
-        [(i, f"first batch doc {i} alpha beta gamma delta epsilon")
-         for i in range(4)], "doc_id long, text string")
-    path = str(tmp_path / "healonce")
-    write_banded_signature_table(_sh3(batch1), path, n_buckets=16)
-    _crash_append(spark, path, 100,
-                  "orphan doc aaa bbb ccc ddd eee fff ggg")
-
-    calls = {"n": 0}
-    real_rebuild = dedup.rebuild_signature_manifest
-
-    def counting_rebuild(p, persist=True):
-        calls["n"] += 1
-        return real_rebuild(p, persist=persist)
-
-    monkeypatch.setattr(dedup, "rebuild_signature_manifest",
-                        counting_rebuild)
-
-    def no_write(*a, **k):
-        raise OSError(30, "Read-only file system")
-    monkeypatch.setattr(dedup, "_write_manifest", no_write)
-
-    got = _resolve_manifest(path)
-    assert sum(v["rows"] for v in got["sigs"].values()) == 5
-    assert os.path.isfile(_dirty_file(path))    # marker survives
-    assert calls["n"] == 1, f"walked {calls['n']} times"
+    keyed = str(tmp_path / "k")
+    write_banded_signature_table(docs({0, 1}), keyed, batch_id=0)
+    check(keyed, 1)
+    write_banded_signature_table(docs({0, 1}), keyed, batch_id=0)
+    check(keyed, 2)
 
 
 def test_lsh_candidate_pairs_shared_banded_identical(spark):
@@ -1942,3 +1921,35 @@ def test_probe_band_keys_identical_across_geometries(
     assert _probe(new_band_keys=keys) == want
     rebucket_signature_table(spark, path, 48)   # keys survive migration
     assert _probe(new_band_keys=keys) == _probe() == want
+
+
+def test_probe_rejects_band_keys_of_another_band_count(spark, shingled,
+                                                       tmp_path):
+    """ADVICE r13 #1: band keys collected at a band count other than
+    the probed table's meta ``bands`` would prune the wrong buckets
+    silently — the probe must raise instead, also for a plain list
+    that does not say its band count; keys collected at the meta's
+    count give exactly the collect-per-probe result."""
+    from nvd2mysqlloader_spark.operators.dedup import (
+        _read_sig_meta, collect_band_keys,
+        incremental_minhash_candidates_banded, minhash_signatures,
+        write_banded_signature_table)
+
+    old = shingled.filter(F.col("doc_id") % 5 != 0)
+    new = shingled.filter(F.col("doc_id") % 5 == 0)
+    path = str(tmp_path / "bands8")
+    write_banded_signature_table(old, path, bands=8)
+    sigs = minhash_signatures(new).localCheckpoint(eager=True)
+
+    def _probe(**kw):
+        return sorted(map(tuple, incremental_minhash_candidates_banded(
+            spark, path, new, new_sigs=sigs, **kw).collect()))
+
+    with pytest.raises(ValueError, match="bands"):
+        _probe(new_band_keys=collect_band_keys(sigs, 16))
+    with pytest.raises(ValueError, match="bands"):
+        _probe(new_band_keys=list(collect_band_keys(sigs, 8)))
+    keys = collect_band_keys(sigs, _read_sig_meta(path)["bands"])
+    want = _probe()
+    assert want, "fixture produced no collisions — vacuous"
+    assert _probe(new_band_keys=keys) == want

@@ -128,9 +128,12 @@ def test_phantom_edge_endpoints_tolerated_by_both_variants(spark):
 def test_reliable_checkpoint_path(tmp_path):
     """With spark.checkpoint.dir configured, the SAME iterative loops
     run on reliable checkpoint() (the 100 TB conf's executor-loss
-    story) and produce identical results. Isolated in a subprocess:
-    a checkpoint dir cannot be unset on a live SparkContext and must
-    not leak into the rest of the suite."""
+    story) and produce identical results, and ``cut_lineage(eager=
+    False)`` there computes its upstream ONCE (ADVICE r13 #3: a lazy
+    reliable checkpoint writes its files in a second job that
+    recomputes the upstream, so that branch stays eager). Isolated in
+    a subprocess: a checkpoint dir cannot be unset on a live
+    SparkContext and must not leak into the rest of the suite."""
     import subprocess
     import sys
     code = f"""
@@ -150,6 +153,17 @@ for fn in (connected_components, connected_components_alternating):
 import os
 found = any(fns for _, _, fns in os.walk("{tmp_path}/cp"))
 assert found, "no reliable checkpoint files were written"
+from pyspark.sql import functions as F, types as T
+from nvd2mysqlloader_spark.operators._lineage import cut_lineage
+calls = spark.sparkContext.accumulator(0)
+@F.udf(T.LongType())
+def counted(x):
+    calls.add(1)
+    return x
+cut = cut_lineage(spark.range(50, numPartitions=2)
+                  .select(counted("id").alias("id")), eager=False)
+assert cut.count() == 50 and cut.count() == 50
+assert calls.value == 50, f"upstream ran {{calls.value // 50}} times"
 print("RELIABLE_OK")
 """
     out = subprocess.run([sys.executable, "-c", code],

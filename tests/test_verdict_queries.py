@@ -144,3 +144,17 @@ def test_multiset_diff_count_matches_exceptall(spark):
             == want_both(x, y)
         assert multiset_diff_count(x, y, "d", one_way=True) \
             .collect()[0]["d"] == want_one(x, y)
+
+
+def test_multiset_diff_count_rejects_internal_column_names(spark):
+    """ADVICE r13 #4: an input already carrying the helper's internal
+    ``__sgn`` or ``__d`` column would be counted wrong (or fail deep in
+    the plan); it must be rejected up front."""
+    import pytest
+
+    from nvd2mysqlloader_spark.plans._helpers import multiset_diff_count
+
+    for col in ("__sgn", "__d"):
+        x = spark.createDataFrame([(1, 1)], f"k long, {col} long")
+        with pytest.raises(ValueError, match=col):
+            multiset_diff_count(x, x, "d")
