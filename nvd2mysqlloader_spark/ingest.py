@@ -26,9 +26,12 @@ CLI:  python -m nvd2mysqlloader_spark.ingest --landing DIR --warehouse DIR
 from __future__ import annotations
 
 import argparse
+import os
 import sys
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.flatten import flatten_cve
@@ -42,7 +45,6 @@ def fresh_feeds(spark: SparkSession, landing: str, warehouse: str) -> DataFrame:
     """Feeds whose remote .meta is newer than the stored high-water
     mark — the incremental gate (nvd2mysqlloader.py:67-99). Missing
     state ⇒ everything is fresh (the sentinel-date semantics, :89)."""
-    import os
     meta = parse_meta(spark, f"{landing}/*.meta")
     if not os.path.exists(f"{warehouse}/update_history"):
         return meta                  # no history yet: load everything
@@ -65,7 +67,10 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
                maintain: bool = False,
                include_children_cpes: bool = False) -> dict:
     """One incremental batch. Returns counts (the reference's tally
-    delta report, nvd2mysqlloader.py:562-573).
+    delta report, nvd2mysqlloader.py:562-573): ``feeds`` loaded,
+    ``rejected`` (the names of fresh feeds that did not parse — they
+    get no audit row, so the next run retries them), ``cves`` in the
+    batch and the tally before and after.
 
     ``maintain=True`` runs the table-maintenance pass after the load:
     small-file compaction of both warehouse tables (each incremental
@@ -83,17 +88,17 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
     ingested batches — reload (fresh warehouse or bumped .meta marks)
     to re-extract old feeds."""
     def tally(path: str) -> int:            # count(distinct cve_id), ref :494
-        import os
         if not os.path.exists(path):        # avoid noisy first-load probes
             return 0
         try:
             return (spark.read.parquet(path)
                     .select(F.count_distinct("cve_id")).first()[0])
-        except Exception:
+        except AnalysisException:           # an empty table: no schema
             return 0
 
     silver_path = f"{warehouse}/nvd"
     bronze_path = f"{warehouse}/nvd_json"
+    _check_bronze_layout(bronze_path)
     before = tally(silver_path)
 
     # every exit path (empty batch, write failure, success) drops the
@@ -105,10 +110,19 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
         names = [r.download_name
                  for r in fresh.select("download_name").collect()]
         if not names:
-            return {"feeds": 0, "cves": 0, "tally_before": before,
-                    "tally_after": before, "added": 0}
+            return {"feeds": 0, "rejected": [], "cves": 0,
+                    "tally_before": before, "tally_after": before, "added": 0}
 
         paths = [f"{landing}/{n}.json" for n in names]
+        # feeds that do not parse, observed on the scan that fills the
+        # cache below (PERMISSIVE mode turns each into one row with
+        # _corrupt_record set): no second parse, no extra job
+        parsed = Observation("ingest_feeds")
+        feed = (read_feed(spark, paths)
+                .withColumn("__file", F.input_file_name())
+                .observe(parsed, F.collect_set(F.when(
+                    F.col("_corrupt_record").isNotNull(),
+                    F.col("__file"))).alias("rejected")))
         # cache the exploded items: silver and bronze both consume
         # them, and multiLine JSON parsing is the most expensive stage.
         # Repartition BY CVE ID first: a multiLine feed is one
@@ -121,11 +135,11 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
         # duty: it balances the skew AND already satisfies both
         # last_writer_wins windows' partitionBy(cve_id) distribution,
         # so Catalyst inserts no further exchange for the dedups.
-        items = (explode_items(read_feed(spark, paths))
+        items = (explode_items(feed)
                  .repartition(spark.sparkContext.defaultParallelism,
                               F.col("cve.cve.CVE_data_meta.ID"))
                  .cache())
-        return _ingest_batch(spark, warehouse, fresh, items, names,
+        return _ingest_batch(spark, warehouse, fresh, items, names, parsed,
                              silver_path, bronze_path, before, tally,
                              maintain, include_children_cpes)
     finally:
@@ -134,7 +148,7 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
             items.unpersist()
 
 
-def _ingest_batch(spark, warehouse, fresh, items, names,
+def _ingest_batch(spark, warehouse, fresh, items, names, parsed,
                   silver_path, bronze_path, before, tally, maintain,
                   include_children_cpes=False):
     # modified/recent feeds overlap yearly ones by design — dedup the
@@ -167,30 +181,38 @@ def _ingest_batch(spark, warehouse, fresh, items, names,
     # touched years instead of the whole raw-JSON table
     bronze = (last_writer_wins(bronze_src, ["cve_id"], ["__lmd"])
               .drop("__lmd")
-              .withColumn("feed_year", _bronze_feed_year()))
+              .withColumn("feed_year", F.coalesce(
+                  F.substring("cve_id", 5, 4).try_cast("int"),
+                  F.lit(0))))
 
     # batch row count observed on the write pass itself — no separate
     # count() action re-running the whole flatten (ref's cvecount loop,
     # :448-453, for free)
-    from pyspark.sql import Observation
     obs = Observation("ingest_metrics")
     silver = silver.observe(obs, F.count(F.lit(1)).alias("n_cves"))
     write_upsert_parquet(silver_path, silver, ["cve_id"],
                          partition_by=["published_year"])
     n_cves = obs.get["n_cves"]
-    _migrate_legacy_bronze(spark, bronze_path)
+    # the silver write filled the items cache: the scan's observation
+    rejected = sorted(os.path.basename(unquote(f))[:-len(".json")]
+                      for f in parsed.get["rejected"])
     write_upsert_parquet(bronze_path, bronze, ["cve_id"],
                          partition_by=["feed_year"])
 
-    # audit append — one row per ingested feed (ref :441-447)
+    # audit append — one row per feed that parsed (ref :441-447). A
+    # rejected feed gets none, so the high-water mark stays where it
+    # was and the next run retries the feed
+    if rejected:
+        fresh = fresh.filter(~F.col("download_name").isin(rejected))
     audit = (fresh.withColumn("downloadedDate",
                               F.date_format(F.current_timestamp(),
                                             "yyyy-MM-dd'T'HH:mm:ss"))
              .select(*[f.name for f in UPDATE_HISTORY_SCHEMA.fields]))
     audit.write.mode("append").parquet(f"{warehouse}/update_history")
 
-    stats = {"feeds": len(names), "cves": n_cves, "tally_before": before,
-             "tally_after": tally(silver_path)}
+    stats = {"feeds": len(names) - len(rejected),
+             "rejected": rejected, "cves": n_cves,
+             "tally_before": before, "tally_after": tally(silver_path)}
     stats["added"] = stats["tally_after"] - before
     if maintain:
         from .operators.compaction import compact_parquet
@@ -201,51 +223,29 @@ def _ingest_batch(spark, warehouse, fresh, items, names,
     return stats
 
 
-def _bronze_feed_year(col: str = "cve_id"):
-    """feed_year derivation shared by ingest and migration: the CVE
-    id's own year ("CVE-2024-0001" → 2024), 0 for malformed ids."""
-    return F.coalesce(F.substring(col, 5, 4).try_cast("int"), F.lit(0))
-
-
-def _migrate_legacy_bronze(spark: SparkSession, bronze_path: str) -> bool:
-    """One-time in-place migration of a pre-``feed_year`` bronze table
-    (written before bronze was partitioned): derive the partition
-    column for every existing row from its cve_id and rewrite the
-    table partitioned, via the same atomic-publish upsert (the whole
-    re-derived table is the update batch, so the evolve-schema full
-    rewrite replaces every row — no NULL-partition stragglers).
-    Without this, the partition-selective merge/delete would crash on
-    the missing column and brick an upgraded deployment. Returns True
-    when a migration ran."""
-    import os
-
-    from pyspark.errors import AnalysisException
+def _check_bronze_layout(bronze_path: str) -> None:
+    """Raise ValueError naming the path unless the published bronze
+    version is partitioned by ``feed_year``, the one layout ingest
+    writes; an earlier build's unpartitioned bronze is refused before
+    anything is published, not converted. A driver-side listdir, plus
+    one parquet footer when no ``feed_year=`` dir exists (a version
+    whose every row was purged is one schema-only file that still
+    carries the column), no Spark job."""
+    import pyarrow.parquet as pq
 
     from .operators import table_io
 
-    if not os.path.exists(bronze_path):
-        return False
-    # read the PINNED current version dir, not the table symlink: the
-    # rewrite below migrates a legacy plain dir (rename + symlink) and
-    # publishes a new version while this plan executes, and version
-    # dirs are immutable — so the lazy read stays valid for the whole
-    # job with no driver-side materialization (a localCheckpoint here
-    # would copy the entire bronze table once per migration)
-    table_io.ensure_versioned(bronze_path)
-    table_io.cleanup_stale(bronze_path)
     cur = table_io.current_version(bronze_path)
-    if cur is None:
-        return False
-    try:
-        existing = spark.read.parquet(cur)
-    except AnalysisException:
-        return False
-    if "feed_year" in existing.columns:
-        return False
-    migrated = existing.withColumn("feed_year", _bronze_feed_year())
-    write_upsert_parquet(bronze_path, migrated, ["cve_id"],
-                         partition_by=["feed_year"], evolve_schema=True)
-    return True
+    names = sorted(n for n in os.listdir(cur) if n[0] not in "_.") \
+        if cur else []
+    if not names or any(n.startswith("feed_year=") for n in names) or (
+            names[0].endswith(".parquet") and "feed_year" in
+            pq.read_schema(os.path.join(cur, names[0])).names):
+        return
+    raise ValueError(
+        f"bronze table at {bronze_path} has no feed_year= partition "
+        "dirs: an earlier layout, which ingest no longer reads; "
+        "rebuild it from the landing feeds")
 
 
 def purge_rejected(spark: SparkSession, warehouse: str) -> int:
@@ -260,15 +260,13 @@ def purge_rejected(spark: SparkSession, warehouse: str) -> int:
     each table, never the whole table.
     Returns the number of CVEs purged. Idempotent: a second run finds
     nothing and publishes nothing."""
-    import os
-
-    from .operators.upsert import write_delete_parquet
-
     from .operators._lineage import cut_lineage
+    from .operators.upsert import write_delete_parquet
 
     silver_path = f"{warehouse}/nvd"
     if not os.path.exists(silver_path):
         return 0
+    _check_bronze_layout(f"{warehouse}/nvd_json")
     # MATERIALIZE the id set before any delete: a lazy plan would
     # re-scan silver for the later pass and find nothing after the
     # first publish
@@ -283,9 +281,6 @@ def purge_rejected(spark: SparkSession, warehouse: str) -> int:
     # the retry rediscovers the ids and finishes bronze+silver. The
     # reverse order would strand the withdrawn CVEs' raw JSON in
     # bronze forever (silver purged → nothing to rediscover).
-    # a legacy (pre-feed_year) bronze is migrated before the
-    # partition-selective delete would touch the missing column
-    _migrate_legacy_bronze(spark, f"{warehouse}/nvd_json")
     write_delete_parquet(f"{warehouse}/nvd_json", rejected, ["cve_id"],
                          partition_by=["feed_year"])
     return write_delete_parquet(silver_path, rejected, ["cve_id"],

@@ -414,84 +414,17 @@ def minhash_near_dups_exact(shingled: DataFrame, id_col: str = "doc_id",
 # A full-corpus self-join per batch is O(corpus) every time; the
 # production shape is a PERSISTED signature table (k longs per doc,
 # independent of document size) maintained incrementally: each new
-# batch computes signatures for ITS documents only, probes the banded
+# batch computes signatures for ITS documents only, probes the
 # signature table for candidates, and appends its own signatures. Work
 # per batch is O(batch + collisions), never O(corpus).
-
-
-def write_signature_table(shingled: DataFrame, path: str,
-                          id_col: str = "doc_id",
-                          shingles_col: str = "s", num_perm: int = 64,
-                          mode: str = "append") -> None:
-    """Compute and persist MinHash signatures for a batch of documents.
-
-    The table layout is (id, sig array<long>); banding happens at probe
-    time so the band count can be retuned without rebuilding."""
-    sigs = minhash_signatures(shingled, id_col, shingles_col, num_perm)
-    sigs.write.mode(mode).parquet(path)
-
-
-def incremental_minhash_candidates(spark, sig_path: str,
-                                   new_shingled: DataFrame,
-                                   id_col: str = "doc_id",
-                                   shingles_col: str = "s",
-                                   num_perm: int = 64, bands: int = 16,
-                                   threshold: float = 0.5) -> DataFrame:
-    """Near-dup candidates of a NEW batch against the persisted corpus.
-
-    (new_id, old_id, est_jaccard) for every banded collision with
-    estimated Jaccard >= threshold. The corpus side is read from the
-    signature table (never re-shingled, never re-hashed); the new
-    side's bands broadcast into the probe, so the corpus scan is the
-    only O(corpus) step. This is the UNPARTITIONED mode; the 100 TB
-    operating mode is :func:`write_banded_signature_table` +
-    :func:`incremental_minhash_candidates_banded`, whose probe
-    partition-prunes both scans to the batch's band buckets.
-    """
-    corpus_sigs = spark.read.parquet(sig_path)
-    new_sigs = cut_lineage(
-        minhash_signatures(new_shingled, id_col, shingles_col, num_perm))
-    # a probe num_perm differing from the table's would make band
-    # hashes UNMATCHABLE (each side slices its own signature width) —
-    # the probe would silently return ~nothing. Fail loudly instead;
-    # the check reads one corpus row (the table is append-only with a
-    # fixed width by the write_signature_table contract).
-    first = corpus_sigs.select(F.size("sig").alias("n")).first()
-    if first is not None and first["n"] != num_perm:
-        raise ValueError(
-            f"signature table at {sig_path} has num_perm={first['n']} "
-            f"but the probe was called with num_perm={num_perm}; "
-            "matching widths are required for band compatibility")
-
-    def banded(sigs: DataFrame, label: str) -> DataFrame:
-        return sigs.select(
-            F.col(id_col).alias(label),
-            F.col("sig").alias(f"sig_{label}"),
-            _band_explode(bands).alias("band_idx", "band_hash"))
-
-    probe = (banded(corpus_sigs, "old_id")
-             .join(F.broadcast(banded(new_sigs, "new_id")),
-                   ["band_idx", "band_hash"])
-             .filter(F.col("new_id") != F.col("old_id"))
-             .select("new_id", "old_id", "sig_new_id", "sig_old_id")
-             .dropDuplicates(["new_id", "old_id"]))
-    est = (F.size(F.filter(F.zip_with("sig_new_id", "sig_old_id",
-                                      lambda x, y: x == y),
-                           lambda v: v)).cast("double") / num_perm)
-    return (probe.select("new_id", "old_id", est.alias("est_jaccard"))
-            .filter(F.col("est_jaccard") >= threshold))
-
-
-# ---------------------------------------------------------------------------
-# Band-PARTITIONED signature table — the pruned 100 TB operating mode
-# (r8 verdict ask #1). The unpartitioned probe above scans the whole
-# signature table per batch; here the persisted state is laid out so
-# the probe reads only the partitions the batch can possibly collide
-# with, the same pattern as the inverted index's token-hash partition
-# dirs (operators/inverted_index.py) and the IVF list layout
+#
+# The table is BAND-PARTITIONED (r8 verdict ask #1) so the probe reads
+# only the partitions the batch can possibly collide with, never the
+# whole table — the same pattern as the inverted index's token-hash
+# partition dirs (operators/inverted_index.py) and the IVF list layout
 # (operators/similarity.py). Each table version holds:
 #
-# * ``bands/``  — (doc_id, band_idx, band_hash[, sig_fp]), partitioned
+# * ``bands/``  — (doc_id, band_idx, band_hash, sig_fp), partitioned
 #   by ``bucket = pmod(xxhash64(band_idx, band_hash), n_buckets)``. The
 #   probe touches only the buckets the NEW batch's band hashes fall
 #   in: expected fraction read ≈ 1 − exp(−batch·bands / n_buckets),
@@ -505,9 +438,9 @@ def incremental_minhash_candidates(spark, sig_path: str,
 #   of them.
 # * ``meta.json`` — (num_perm, bands, n_buckets, keyed, sig_fp).
 #   The probe derives EVERY geometry parameter from meta, so a
-#   probe/table drift (the silent-empty-result failure mode the
-#   width check above guards against) is impossible by construction;
-#   appends that disagree with meta fail loudly.
+#   probe/table drift (band hashes sliced at different widths would
+#   silently match nothing) is impossible by construction; appends
+#   that disagree with meta fail loudly.
 # * ``manifest.json`` — {sub: {leaf partition dir: {rows, files}}},
 #   the probe's dir discovery (no per-probe partition listing) and
 #   the maintenance policy's input.
@@ -521,7 +454,9 @@ def incremental_minhash_candidates(spark, sig_path: str,
 # manifest and both scans from that one dir, so a probe is
 # version-pinned, and a writer that dies before the flip leaves
 # nothing any reader can see (``cleanup_stale`` sweeps its staged dir
-# under the next writer's lock).
+# under the next writer's lock). This is the one layout read: a table
+# in any other (an earlier build's) is refused with a ValueError
+# naming its path, never read in a degraded mode or converted.
 #
 # ``batch_id`` keying (``keyed=True``): streaming gates append under
 # foreachBatch, which is AT-LEAST-ONCE — a retried batch must not
@@ -536,13 +471,20 @@ N_SIG_BUCKETS = 64
 _SUBTABLES = ("bands", "sigs")
 
 
-def _read_sig_meta(path: str) -> dict:
+def _read_json(path: str) -> dict | None:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def _read_sig_meta(path: str) -> dict | None:
     # plain JSON, not a parquet relation: geometry is DRIVER-side
     # metadata (a catalog property at scale) and a 1-row parquet
     # write/read costs two whole Spark jobs per append/probe
     # (measured 7.6 s for the write alone at sf0.1)
-    with open(path + "/meta.json") as f:
-        return json.load(f)
+    return _read_json(path + "/meta.json")
 
 
 def _dir_rows(d: str) -> dict:
@@ -559,45 +501,51 @@ def _dir_rows(d: str) -> dict:
     return {"rows": rows, "files": files}
 
 
-def _man_rows(v) -> int:
-    """Manifest value → row count; accepts the pre-r10.5 bare-int
-    form so tables written by earlier builds keep working."""
-    return v["rows"] if isinstance(v, dict) else int(v)
-
-
-def _man_files(v) -> int:
-    return v.get("files", 1) if isinstance(v, dict) else 1
-
-
 def _scan_manifest(vdir: str, subs=_SUBTABLES) -> dict:
-    """Manifest of one version dir from the filesystem: leaf partition
-    dir → {rows, files} per subtable (a leaf-dir walk plus footer
-    reads). Sub-table roots go through ``realpath``: tables compacted
-    by earlier builds hold them as nested version symlinks."""
+    """Manifest of one staged version dir from the filesystem: leaf
+    partition dir → {rows, files} per subtable (a leaf-dir walk plus
+    footer reads)."""
     man = {}
     for sub in subs:
-        root = os.path.realpath(os.path.join(vdir, sub))
+        root = os.path.join(vdir, sub)
         man[sub] = ({d: _dir_rows(os.path.join(root, d))
                      for d in table_io.leaf_partition_dirs(root)}
                     if os.path.isdir(root) else {})
     return man
 
 
-def _resolve_manifest(vdir: str) -> dict:
-    """The dir manifest of one resolved table version. Every version
-    this module publishes carries its ``manifest.json``; tables
-    written before manifests existed — or left by the in-place append
-    of earlier builds with a ``manifest.dirty`` marker (its writer
-    died between the data commit and the manifest update, so the
-    manifest may miss committed dirs) — are scanned instead. In
-    memory only: readers never write, and the next mutation publishes
-    a version with a complete manifest."""
-    p = vdir + "/manifest.json"
-    if os.path.isfile(p) and not os.path.exists(vdir + "/manifest.dirty"):
-        with open(p) as f:
-            man = json.load(f)
-        return {sub: man.get(sub, {}) for sub in _SUBTABLES}
-    return _scan_manifest(vdir)
+def _published(path: str) -> tuple[str, dict, dict] | None:
+    """(version dir, meta, manifest) of the published version of the
+    signature table at ``path``; None when nothing is there. The
+    format check of every probe and mutation, a few stats and two
+    small JSON reads: a table in any layout but the one this module
+    writes (an earlier build's) raises a ValueError naming the path
+    before anything is read or written."""
+    if not os.path.lexists(path):
+        return None
+    cur = table_io.current_version(path) if os.path.islink(path) else None
+    meta = cur and _read_sig_meta(cur)
+    man = cur and _read_json(cur + "/manifest.json")
+    why = ("is not a table_io version" if cur is None
+           else "has no meta.json" if meta is None
+           else "has no manifest.json" if man is None
+           else "has no sig_fp band column" if not meta.get("sig_fp")
+           else "carries a manifest.dirty marker"
+           if os.path.exists(cur + "/manifest.dirty")
+           else "holds a subtable as a symlink"
+           if any(os.path.islink(os.path.join(cur, sub))
+                  for sub in _SUBTABLES)
+           else "has manifest entries that are not {rows, files}"
+           if not all(isinstance(v, dict) and {"rows", "files"} <= v.keys()
+                      for sub in _SUBTABLES
+                      for v in man.get(sub, {}).values())
+           else None)
+    if why:
+        raise ValueError(
+            f"signature table at {path} {why}: an earlier layout, "
+            "which is not read; rebuild the table with "
+            "write_banded_signature_table")
+    return cur, meta, {sub: man.get(sub, {}) for sub in _SUBTABLES}
 
 
 @contextlib.contextmanager
@@ -606,11 +554,13 @@ def _locked_current(path: str):
     (``table_io.writer_lock``, beside the table) from reading the
     current version until the caller publishes, so appends, keyed
     retries, compaction and rebucket serialize and none stages from a
-    version another has since superseded. Sweeps crash debris first;
-    yields the published version dir (None for a new table)."""
+    version another has since superseded. Checks the format, then
+    sweeps crash debris; yields :func:`_published`'s (version dir,
+    meta, manifest), None for a new table."""
     with table_io.writer_lock(path):
+        state = _published(path)
         table_io.cleanup_stale(path)
-        yield table_io.current_version(path)
+        yield state
 
 
 def _stage(path: str, cur: str | None, carry=_SUBTABLES) -> str:
@@ -621,7 +571,7 @@ def _stage(path: str, cur: str | None, carry=_SUBTABLES) -> str:
     vdir = table_io.next_version_dir(path)
     os.makedirs(vdir)
     for sub in carry if cur is not None else ():
-        src = os.path.realpath(os.path.join(cur, sub))
+        src = os.path.join(cur, sub)
         if os.path.isdir(src):
             table_io.link_tree(src, os.path.join(vdir, sub))
     return vdir
@@ -661,11 +611,7 @@ def write_banded_signature_table(shingled: DataFrame, path: str,
     # sig_fp: an 8-byte xxhash64 fingerprint of the FULL signature
     # stored on every band row, so the capped probe's star collapse
     # can admit one anchor per DISTINCT signature inside an over-cap
-    # band-hash group (instead of a single min-id anchor that could
-    # hide a genuinely different near-dup) without joining the sigs
-    # sidecar. New tables always carry it; appends to a pre-fp table
-    # stay in the legacy schema so a subtable never mixes parquet
-    # schemas.
+    # band-hash group without joining the sigs sidecar
     got = {"num_perm": num_perm, "bands": bands,
            "n_buckets": n_buckets, "keyed": keyed, "sig_fp": True}
     # signatures computed ONCE for both writes (the sidecar and the
@@ -691,25 +637,18 @@ def write_banded_signature_table(shingled: DataFrame, path: str,
             w = df.write.mode("append").partitionBy(*parts)
         w.parquet(out)
 
-    with _locked_current(path) as cur:
-        if cur is not None and os.path.isfile(cur + "/meta.json"):
-            meta = _read_sig_meta(cur)
-            if "sig_fp" not in meta:
-                got.pop("sig_fp")
-            if meta != got:
-                raise ValueError(
-                    f"banded signature table at {path} has geometry "
-                    f"{meta} but the write was called with {got}; a "
-                    "mismatched append would make band hashes "
-                    "unmatchable")
-            man = _resolve_manifest(cur)
-        else:
-            man = None                      # a new table
-        band_cols = [F.col(id_col).alias("doc_id"),
-                     _band_explode(bands).alias("band_idx", "band_hash")]
-        if got.get("sig_fp", False):
-            band_cols.append(F.xxhash64("sig").alias("sig_fp"))
-        banded = sigs.select(*band_cols).withColumn(
+    with _locked_current(path) as state:
+        cur, meta, man = state or (None, None, None)
+        if meta is not None and meta != got:
+            raise ValueError(
+                f"banded signature table at {path} has geometry "
+                f"{meta} but the write was called with {got}; a "
+                "mismatched append would make band hashes "
+                "unmatchable")
+        banded = sigs.select(
+            F.col(id_col).alias("doc_id"),
+            _band_explode(bands).alias("band_idx", "band_hash"),
+            F.xxhash64("sig").alias("sig_fp")).withColumn(
             "bucket", F.pmod(F.xxhash64("band_idx", "band_hash"),
                              F.lit(n_buckets)).cast("int"))
         sidecar = sigs.select(
@@ -720,8 +659,7 @@ def write_banded_signature_table(shingled: DataFrame, path: str,
         vdir = _stage(path, cur)
         # sigs first, bands second. Every published version must hold
         # bands ⊆ sigs: a band row with no sig silently drops from the
-        # sidecar join, and on a legacy capped table it could even be
-        # an over-cap group's sole min-id anchor
+        # sidecar join
         _write(sidecar, vdir + "/sigs", ["doc_bucket"])
         _write(banded, vdir + "/bands", ["bucket"])
 
@@ -756,7 +694,6 @@ def incremental_minhash_candidates_banded(
         id_col: str = "doc_id", shingles_col: str = "s",
         threshold: float = 0.5,
         max_batch_id_exclusive: int | None = None,
-        materialize: bool = True,
         max_candidates_per_new: int | None = None,
         new_sigs: DataFrame | None = None,
         new_band_keys: list[int] | None = None) -> DataFrame:
@@ -776,11 +713,6 @@ def incremental_minhash_candidates_banded(
     strictly before it (partition-level), which makes a foreachBatch
     retry's probe independent of whether the failed attempt already
     appended this batch's own signatures.
-
-    ``materialize=False`` skips the lineage cut on the candidate
-    relation so the RETURNED plan shows both pruned parquet scans —
-    for plan inspection/tests only (the default cut computes the
-    candidates once instead of once per consumer).
 
     ``max_candidates_per_new`` is the probe-side ADMISSION CAP
     (VERDICT r9 ask #1), the probe's analog of
@@ -817,10 +749,7 @@ def incremental_minhash_candidates_banded(
     DISTINCT signatures inside one band-hash group), or whose
     similarity lives purely in position-level partial sig matches
     inside bands it shares with a different-sig crowd, can be
-    missed; tables written before the ``sig_fp`` band column existed
-    degrade further to a single min-id anchor per over-cap group,
-    which additionally assumes over-cap groups are near-identical
-    clusters. Use the capped mode to feed the gate; leave it None
+    missed. Use the capped mode to feed the gate; leave it None
     when every pairwise estimate matters.
 
     ``new_band_keys``: optional PRE-COLLECTED distinct
@@ -851,8 +780,10 @@ def incremental_minhash_candidates_banded(
     version dir, so a returned DataFrame is version-pinned: it stays
     consistent across a later publish for as long as that version is
     retained (``table_io.publish_version`` keeps the previous one)."""
-    cur = table_io.current_version(path) or path
-    meta = _read_sig_meta(cur)
+    state = _published(path.rstrip("/"))
+    if state is None:
+        raise ValueError(f"no signature table at {path}")
+    cur, meta, man = state
     num_perm, bands = meta["num_perm"], meta["bands"]
     n_buckets = meta["n_buckets"]
     if max_batch_id_exclusive is not None and not meta["keyed"]:
@@ -878,7 +809,6 @@ def incremental_minhash_candidates_banded(
             T.StructField("old_id", idt),
             T.StructField("est_jaccard", T.DoubleType())]))
 
-    man = _resolve_manifest(cur)
     # a first write whose batch had zero signable docs publishes a
     # table with meta but no data dirs — an empty corpus, not an
     # error (the retry-idempotent gate depends on the probe
@@ -906,7 +836,7 @@ def incremental_minhash_candidates_banded(
         partition-pruned scans. None ⇒ no matching dirs (empty corpus
         slice)."""
         want = set(bucket_vals)
-        root = os.path.realpath(os.path.join(cur, sub))
+        root = os.path.join(cur, sub)
         sel = []
         for rel in man[sub]:
             parts = dict(p.split("=", 1) for p in rel.split("/"))
@@ -968,63 +898,40 @@ def incremental_minhash_candidates_banded(
         # corpus-side star collapse BEFORE the join: over-cap
         # band-hash groups are reduced to ≤ cap REPRESENTATIVE rows —
         # one min-id anchor per DISTINCT stored signature (sig_fp),
-        # largest signature subgroups first — instead of a single
-        # min-id anchor. Sig-identical boilerplate still collapses to
-        # one row (the common case the cap exists for), but a member
-        # whose signature genuinely differs from the crowd's keeps its
-        # own anchor, so it can't be hidden behind a sub-threshold
-        # crowd anchor (ADVICE r10 #2); the emission bound is
-        # unchanged (each group contributes ≤ cap rows either way). A
-        # group never straddles buckets (bucket = hash(band_idx,
-        # band_hash)), so the windows over the PRUNED rows see exact
-        # group sizes; one extra shuffle over pruned rows, capped mode
-        # only. RESIDUAL (caller-facing contract): the collapse is
-        # exact at signature granularity (up to 64-bit sig_fp
-        # collisions between distinct signatures in one over-cap
-        # group, ~n²·2⁻⁶⁵) — a near-dup whose only
-        # overlap with the batch is POSITION-level partial sig matches
-        # inside bands it shares with a different-sig crowd can still
-        # be missed; pre-fp legacy tables (meta lacks sig_fp) fall
-        # back to the single min-id anchor, which additionally assumes
-        # over-cap groups are near-identical clusters.
+        # largest signature subgroups first. Sig-identical boilerplate
+        # collapses to one row, while a member whose signature differs
+        # from the crowd's keeps its own anchor (ADVICE r10 #2; the
+        # residual is in the docstring). A group never straddles
+        # buckets (bucket = hash(band_idx, band_hash)), so the windows
+        # over the PRUNED rows see exact group sizes; one extra
+        # shuffle over pruned rows, capped mode only.
         from pyspark.sql import Window
         wb = Window.partitionBy("band_idx", "band_hash")
         cap = F.lit(max_candidates_per_new)
-        if meta.get("sig_fp", False):
-            wsig = Window.partitionBy("band_idx", "band_hash",
-                                      "sig_fp")
-            wrank = wb.orderBy(F.desc("_sn"), "_sa")
-            corpus_bands = (corpus_bands
-                            .withColumn("_n", F.count(F.lit(1)).over(wb))
-                            .withColumn("_sa", F.min("doc_id").over(wsig))
-                            .withColumn("_sn",
-                                        F.count(F.lit(1)).over(wsig))
-                            .withColumn("_sr", F.dense_rank().over(wrank))
-                            .filter((F.col("_n") <= cap)
-                                    | ((F.col("doc_id") == F.col("_sa"))
-                                       & (F.col("_sr") <= cap)))
-                            .drop("_n", "_sa", "_sn", "_sr"))
-        else:
-            corpus_bands = (corpus_bands
-                            .withColumn("_n", F.count(F.lit(1)).over(wb))
-                            .withColumn("_a", F.min("doc_id").over(wb))
-                            .filter((F.col("_n") <= cap)
-                                    | (F.col("doc_id") == F.col("_a")))
-                            .drop("_n", "_a"))
+        wsig = Window.partitionBy("band_idx", "band_hash", "sig_fp")
+        wrank = wb.orderBy(F.desc("_sn"), "_sa")
+        corpus_bands = (corpus_bands
+                        .withColumn("_n", F.count(F.lit(1)).over(wb))
+                        .withColumn("_sa", F.min("doc_id").over(wsig))
+                        .withColumn("_sn", F.count(F.lit(1)).over(wsig))
+                        .withColumn("_sr", F.dense_rank().over(wrank))
+                        .filter((F.col("_n") <= cap)
+                                | ((F.col("doc_id") == F.col("_sa"))
+                                   & (F.col("_sr") <= cap)))
+                        .drop("_n", "_sa", "_sn", "_sr"))
     cand = (corpus_bands
             .join(F.broadcast(new_banded.drop("bucket")),
                   ["band_idx", "band_hash"])
             .filter(F.col("new_id") != F.col("doc_id"))
             .select("new_id", F.col("doc_id").alias("old_id"), "sig_new")
             .dropDuplicates(["new_id", "old_id"]))
-    if materialize:
-        # LAZY cut: the doc-bucket collect right below is the
-        # materializing action (it computes every candidate partition
-        # before any other consumer exists), so the candidate relation
-        # costs one job instead of checkpoint-job + collect-job (r13
-        # optimization; the estimate join below then reads the cached
-        # blocks exactly as before)
-        cand = cut_lineage(cand, eager=False)
+    # LAZY cut: the doc-bucket collect right below is the
+    # materializing action (it computes every candidate partition
+    # before any other consumer exists), so the candidate relation
+    # costs one job instead of checkpoint-job + collect-job (r13
+    # optimization; the estimate join below then reads the cached
+    # blocks exactly as before)
+    cand = cut_lineage(cand, eager=False)
     # candidate old-ids' doc buckets — O(collisions) distinct values.
     # The same bounded collect carries a free width check (ADVICE r12
     # #1): a ``new_sigs`` built at a different num_perm than the
@@ -1118,9 +1025,10 @@ def rebucket_signature_table(spark, path: str, n_buckets: int) -> dict:
     it from meta); the loud geometry check is unchanged. Returns
     {n_buckets_old, n_buckets_new, bands_dirs, sigs_dirs}."""
     path = path.rstrip("/")
-    with _locked_current(path) as cur:
-        return _rebucket(spark, path, cur, _read_sig_meta(cur),
-                         _resolve_manifest(cur), n_buckets)
+    with _locked_current(path) as state:
+        if state is None:
+            raise ValueError(f"no signature table at {path}")
+        return _rebucket(spark, path, *state, n_buckets)
 
 
 def _rebucket(spark, path: str, cur: str, meta: dict, man: dict,
@@ -1145,7 +1053,7 @@ def _rebucket(spark, path: str, cur: str, meta: dict, man: dict,
     def _rewrite(sub: str, part_col: str, bucket_expr) -> None:
         if not man[sub]:
             return
-        df = (spark.read.parquet(os.path.realpath(cur + "/" + sub))
+        df = (spark.read.parquet(cur + "/" + sub)
               .withColumn(part_col,
                           F.pmod(bucket_expr,
                                  F.lit(n_buckets)).cast("int")))
@@ -1204,10 +1112,11 @@ def maintain_signature_table(spark, path: str,
     from .compaction import compact_into
 
     path = path.rstrip("/")
-    with _locked_current(path) as cur:
-        meta = _read_sig_meta(cur)
-        man = _resolve_manifest(cur)
-        bands_rows = sum(_man_rows(v) for v in man["bands"].values())
+    with _locked_current(path) as state:
+        if state is None:
+            raise ValueError(f"no signature table at {path}")
+        cur, meta, man = state
+        bands_rows = sum(v["rows"] for v in man["bands"].values())
         n = meta["n_buckets"]
         rpb = bands_rows / max(n, 1)
         target_n = n
@@ -1219,13 +1128,13 @@ def maintain_signature_table(spark, path: str,
             assert stats["narrow"], stats     # power-of-two multiple
         else:
             compacted = [sub for sub in _SUBTABLES
-                         if any(_man_files(v) > max_files_per_dir
+                         if any(v["files"] > max_files_per_dir
                                 for v in man[sub].values())]
         if compacted:
             vdir = _stage(path, cur, carry=[s for s in _SUBTABLES
                                             if s not in compacted])
             for sub in compacted:
-                compact_into(spark, os.path.realpath(cur + "/" + sub),
+                compact_into(spark, cur + "/" + sub,
                              vdir + "/" + sub,
                              target_bytes=compact_target_bytes,
                              force=True)

@@ -631,7 +631,7 @@ def semantic_dedup(corpus: DataFrame, k: int = 8, threshold: float = 0.9,
 # ---------------------------------------------------------------------------
 # Persisted IVF / PQ indexes — build-once/query-many (VERDICT r5 #2),
 # completing the persisted-index story LSH (write_ann_signature_table)
-# and MinHash (dedup.write_signature_table) already have. At 100 TB
+# and MinHash (dedup.write_banded_signature_table) already have. At 100 TB
 # you train centroids/codebooks once, encode each corpus batch as it
 # arrives (append-only), and every query batch probes the persisted
 # index — no per-query re-derivation of anything corpus-sized.
@@ -685,7 +685,7 @@ def write_ivf_index(corpus: DataFrame, path: str,
     First call trains/accepts centroids and creates both; later calls
     APPEND the new batch's vectors to their lists using the PERSISTED
     centroids (append-only incremental contract, mirror of
-    dedup.write_signature_table). Passing ``centroids`` that differ
+    dedup.write_banded_signature_table). Passing ``centroids`` that differ
     from the persisted ones raises — mixed-centroid lists would make
     probes silently miss neighbors. Returns the centroid matrix in
     effect."""

@@ -217,8 +217,9 @@ def table_changes(spark, path: str, keys: list[str]):
     current one: (keys..., change ∈ insert|delete|update) — the
     versioned layout's analog of Delta's CDF, derived rather than
     stored. Rows are compared on the columns common to both versions
-    (an evolve_schema rewrite adds/drops columns; value changes in
-    shared columns still surface as updates). Plan shape: two
+    (the upsert never changes a table's columns, but a version written
+    by other means may; value changes in shared columns still surface
+    as updates). Plan shape: two
     anti-joins + one exceptAll/semi-join, all hash-partitioned on the
     key — three key-shuffles over exactly two table scans, no
     driver-side diffing.

@@ -3,7 +3,7 @@
 The reference probes + INSERTs/REPLACEs one row at a time with a commit
 per row (~6 MySQL round-trips per CVE, nvd2mysqlloader.py:448-486).
 Spark-first equivalent: dedup the incoming batch last-writer-wins, then
-MERGE. Without Delta on the classpath, MERGE over parquet is emulated as
+MERGE, emulated over parquet as
 ``target ANTI-JOIN updates  UNION  updates`` — one shuffle on the key,
 one atomic directory overwrite, idempotent under task retries (key-based,
 so re-execution cannot duplicate — SURVEY.md §7.4.5).
@@ -58,20 +58,14 @@ def last_writer_wins(df: DataFrame, keys: Sequence[str],
 
 def merge_upsert(target: DataFrame, updates: DataFrame,
                  keys: Sequence[str],
-                 evolve_schema: bool = False,
                  order_col: str | None = None) -> DataFrame:
     """MERGE emulation: matched → take update row, not-matched → keep
     target row; updates themselves deduped upstream.
 
     Equivalent to ``MERGE INTO target USING updates ON keys WHEN MATCHED
     THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` (SURVEY.md §2 #10).
-
-    ``evolve_schema=True`` is the ADD-COLUMN evolution path (Delta's
-    mergeSchema): columns present on only one side survive the merge
-    and backfill NULL on the other — a new feature column added to the
-    update batch appears on carried-over target rows as NULL, and a
-    column the batch dropped keeps its target values. Default is
-    strict: mismatched schemas fail fast.
+    Both sides must carry the same columns: mismatched schemas fail
+    fast.
 
     ``order_col``: CONDITIONAL update — on a key match, keep whichever
     row has the greater ``order_col`` (the update wins ties). Needed
@@ -82,12 +76,11 @@ def merge_upsert(target: DataFrame, updates: DataFrame,
     """
     if order_col is not None:
         tagged = (target.withColumn("__src", F.lit(0))
-                  .unionByName(updates.withColumn("__src", F.lit(1)),
-                               allowMissingColumns=evolve_schema))
+                  .unionByName(updates.withColumn("__src", F.lit(1))))
         return last_writer_wins(tagged, keys,
                                 [order_col, "__src"]).drop("__src")
     keep = target.join(updates.select(*keys), on=list(keys), how="left_anti")
-    return keep.unionByName(updates, allowMissingColumns=evolve_schema)
+    return keep.unionByName(updates)
 
 
 def _sized_for_write(df: DataFrame) -> DataFrame:
@@ -95,19 +88,19 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
     §6): the merge output otherwise lands one file per shuffle
     partition — tiny files at bench scale, and at 100 TB a per-version
     file count fixed by the shuffle-partition config instead of data
-    size. Outputs estimated LARGER than one advisory partition take
-    the AQE ``REBALANCE`` hint (splits sized to
-    advisoryPartitionSizeInBytes, skew split too) so the version's
-    file count tracks its bytes at every scale; outputs that FIT in
-    one advisory partition ``coalesce(1)`` instead — the same single
-    output file the rebalance would produce at that size, without the
-    extra exchange the r12 rebalance charged to every bench-scale
-    version write (VERDICT r12 ask #5). The estimate is catalyst's
-    optimized-plan sizeInBytes — driver-side, no job; an OVER-estimate
-    (including the unknown-stats default of Long.Max) errs toward the
-    rebalance, i.e. the scale-correct behavior, and parquet
-    compression only shrinks the real output below the estimate, so
-    the coalesce branch can never under-split a big write."""
+    size. Outputs estimated at no more than HALF one advisory
+    partition ``coalesce(1)`` — the single file a rebalance would
+    produce at that size, without the exchange the r12 rebalance
+    charged to every bench-scale version write (VERDICT r12 ask #5);
+    larger ones take the AQE ``REBALANCE`` hint (splits sized to
+    advisoryPartitionSizeInBytes) so file count tracks bytes at every
+    scale. The estimate is catalyst's optimized-plan sizeInBytes —
+    driver-side, no job. It is not a bound: an under-estimate (an
+    overrated filter, a column wider than its type's default size)
+    can still send more than one advisory partition through the one
+    coalesced task; the factor-of-two margin absorbs moderate errors,
+    and an over-estimate (or unknown stats) errs toward the
+    rebalance."""
     spark = df.sparkSession
     try:
         est = int(df._jdf.queryExecution().optimizedPlan()
@@ -119,116 +112,17 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
                 "64m")))
     except Exception:          # stats/conf unavailable: scale-correct
         return df.hint("rebalance")
-    if est <= advisory:
+    if 2 * est <= advisory:
         return df.coalesce(1)
     return df.hint("rebalance")
-
-
-def delta_available() -> bool:
-    """True when the Delta Lake python bindings + jar are importable in
-    this session's environment (they are NOT in the test container —
-    the versioned-parquet emulation is the tested default)."""
-    try:
-        import delta.tables  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def write_upsert_delta(target_path: str, updates: DataFrame,
-                       keys: Sequence[str],
-                       partition_by: Sequence[str] | None = None,
-                       evolve_schema: bool = False,
-                       order_col: str | None = None) -> None:
-    """Native Delta Lake MERGE — the standard-table-format passthrough
-    for ``write_upsert_parquet(format="delta")``.
-
-    Same contract as the emulation: matched → update (conditionally on
-    ``order_col`` so a stale batch cannot overwrite a fresher row),
-    not-matched → insert; first write creates the table with the given
-    partitioning. Plain key equality (``=``) matches the emulation's
-    anti-join arm — and MySQL REPLACE-over-UNIQUE-key parity, where
-    NULL keys never match and every NULL-key batch row inserts (use
-    ``write_delete_parquet`` — null-safe by design — to remove
-    NULL-keyed rows). KNOWN divergence for NULL keys under
-    ``order_col``: the emulation's ranking window groups NULL keys
-    into one partition (SQL GROUP BY semantics — one winner), while
-    Delta's ``=`` match inserts every NULL-keyed batch row; if your
-    pipeline can produce NULL keys, quarantine them upstream before
-    an order_col merge; ``evolve_schema`` maps to Delta's
-    ``schema.autoMerge``. Partition-selective rewrite, snapshot
-    isolation, time travel, and VACUUM come from the format itself —
-    this is exactly the pointer-swap protocol operators.table_io
-    implements locally (table_io.py:72-165), provided by an ecosystem
-    reader's native format instead.
-    """
-    from delta.tables import DeltaTable   # import-gated: needs delta-spark
-
-    spark = updates.sparkSession
-    if not DeltaTable.isDeltaTable(spark, target_path):
-        # refuse to clobber a NON-Delta table that already has content
-        # (e.g. a warehouse built by the versioned-parquet emulation
-        # before delta-spark was installed): the first-write overwrite
-        # below would silently drop every previously merged row.
-        # Migrate explicitly (CONVERT TO DELTA / rewrite) first.
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(target_path)
-        fs = jpath.getFileSystem(hconf)
-        if fs.exists(jpath) and fs.listStatus(jpath):
-            raise ValueError(
-                f"write_upsert_delta: {target_path!r} exists and is not "
-                "a Delta table — refusing to overwrite; convert the "
-                "existing table to Delta (or point at a fresh path)")
-        w = updates.write.format("delta").mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(target_path)
-        return
-    automerge_key = "spark.databricks.delta.schema.autoMerge.enabled"
-    prev = spark.conf.get(automerge_key, None)
-    if evolve_schema:
-        spark.conf.set(automerge_key, "true")
-    try:
-        t = DeltaTable.forPath(spark, target_path)
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        m = t.alias("t").merge(updates.alias("s"), cond)
-        if order_col is not None:
-            m = m.whenMatchedUpdateAll(
-                condition=f"s.`{order_col}` >= t.`{order_col}`")
-        else:
-            m = m.whenMatchedUpdateAll()
-        m.whenNotMatchedInsertAll().execute()
-    finally:
-        # session conf restored: one evolving merge must not silently
-        # relax every later strict merge in the session
-        if evolve_schema:
-            if prev is None:
-                spark.conf.unset(automerge_key)
-            else:
-                spark.conf.set(automerge_key, prev)
 
 
 def write_upsert_parquet(target_path: str, updates: DataFrame,
                          keys: Sequence[str],
                          partition_by: Sequence[str] | None = None,
-                         evolve_schema: bool = False,
-                         order_col: str | None = None,
-                         format: str = "parquet",
-                         strict_format: bool = False) -> None:
+                         order_col: str | None = None) -> None:
     """Apply ``merge_upsert`` against a parquet table on disk, with
     atomic visibility.
-
-    ``format="delta"`` routes to :func:`write_upsert_delta` (native
-    MERGE) when the Delta bindings are on the classpath — at a real
-    100 TB deployment a reader ecosystem expects a standard table
-    format, and SURVEY §4.2 maps this operator to "built-in with
-    Delta". Without the bindings (this container) the call falls back
-    to the versioned-parquet emulation below with a warning — same
-    row-level semantics, locally-scoped snapshot protocol — unless
-    ``strict_format=True``, which raises instead: a deployment whose
-    readers require the Delta layout must fail at write time, not
-    when a downstream ``spark.read.format("delta")`` breaks later.
 
     One atomic publish per batch replaces the reference's per-row
     commits (nvd2mysqlloader.py:460-482). The table uses the versioned
@@ -237,9 +131,8 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
     then a single atomic pointer flip publishes it — a concurrent
     reader sees the complete old table or the complete new one, never
     a partially-overwritten directory, and a crashed writer leaves the
-    current version untouched. On a real deployment this whole
-    function is a Delta/Iceberg MERGE; the protocol here is the same
-    shape (immutable data files + pointer swap) on a local FS.
+    current version untouched. This is the shape of a Delta/Iceberg
+    MERGE (immutable data files + pointer swap) on a local FS.
 
     ``partition_by`` lays the table out for partition pruning (the
     silver warehouse partitions by published year — the replacement for
@@ -255,42 +148,12 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
     (published year of a CVE), so an updated key cannot migrate
     between partitions.
 
-    ``evolve_schema=True`` allows the batch to add/drop columns (see
-    ``merge_upsert``). When the schema actually changes, the merge
-    reads the WHOLE target and rewrites every partition into the new
-    version — partition-selective hardlink carryover would leave old
-    partitions' files without the new column, forcing every reader
-    through mergeSchema. Evolution is rare; paying one full rewrite
-    keeps every version self-consistent (what a table format's
-    metadata would otherwise track per-file).
+    A partition-selective upsert whose batch differs from the table in
+    a data column's name or type raises ValueError before staging.
     """
     import os
 
     from . import table_io
-
-    if format == "delta":
-        if delta_available():
-            return write_upsert_delta(target_path, updates, keys,
-                                      partition_by, evolve_schema,
-                                      order_col)
-        # the fallback writes the SAME row-level result in a different
-        # physical layout — a reader doing spark.read.format('delta')
-        # would fail later, far from this call. A deployment that
-        # REQUIRES the Delta format must fail fast here, not at read
-        # time: strict_format=True raises instead of degrading.
-        if strict_format:
-            raise RuntimeError(
-                "write_upsert_parquet: format='delta' with "
-                "strict_format=True, but delta-spark is not importable "
-                "in this session — install delta-spark (and its jar on "
-                "the classpath) or drop strict_format to accept the "
-                "versioned-parquet MERGE emulation")
-        import warnings
-        warnings.warn("write_upsert_parquet: format='delta' requested "
-                      "but delta-spark is not importable — falling back "
-                      "to the versioned-parquet MERGE emulation")
-    elif format != "parquet":
-        raise ValueError(f"unsupported upsert sink format: {format!r}")
 
     spark = updates.sparkSession
     target_path = target_path.rstrip("/")
@@ -300,8 +163,7 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
     vdir = table_io.next_version_dir(target_path)
 
     if partition_by:
-        merged, affected = None, []
-        full_rewrite = False
+        merged = updates
         target_all = None
         if cur is not None:
             try:
@@ -316,31 +178,27 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
                 #                    publish a table missing all prior
                 #                    rows
         if target_all is not None:
-            # compare (name, type) pairs, not names: a type change
-            # (int -> long, decimal widening) through the selective
-            # path would publish a version whose files mix schemas —
-            # hardlink-carried partitions keep the old type while
-            # merged ones take the new
-            def _sig(df):
-                return {(f.name, f.dataType.simpleString())
-                        for f in df.schema.fields}
-            full_rewrite = (evolve_schema and
-                            _sig(target_all) != _sig(updates))
-            if full_rewrite:
-                merged = merge_upsert(target_all, updates, keys,
-                                      evolve_schema=True,
-                                      order_col=order_col)
-            else:
-                affected = [tuple(r) for r in
-                            updates.select(*partition_by)
-                            .distinct().collect()]
-                if not affected:        # empty batch against an existing
-                    return              # table: nothing to merge or publish
-                merged = merge_upsert(
-                    target_all.filter(_affected_pred(partition_by, affected)),
-                    updates, keys, order_col=order_col)
-        if merged is None:
-            merged = updates
+            # (name, type) pairs, not names: carried partitions keep
+            # their files, so a type change (int -> long) would publish
+            # a version whose files mix schemas; partition columns live
+            # in dir names and read back as one type
+            def cols(df):
+                return sorted((f.name, f.dataType.simpleString())
+                              for f in df.schema.fields
+                              if f.name not in partition_by)
+            if cols(target_all) != cols(updates):
+                raise ValueError(
+                    f"upsert into {target_path}: the batch's columns "
+                    f"{cols(updates)} differ from the table's "
+                    f"{cols(target_all)}")
+            affected = [tuple(r) for r in
+                        updates.select(*partition_by)
+                        .distinct().collect()]
+            if not affected:        # empty batch against an existing
+                return              # table: nothing to merge or publish
+            merged = merge_upsert(
+                target_all.filter(_affected_pred(partition_by, affected)),
+                updates, keys, order_col=order_col)
         # cluster rows by the partition key before the partitioned
         # write: one file per partition instead of (shuffle-partitions
         # × partitions) tiny files — the small-file explosion is a real
@@ -350,7 +208,7 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
         # barrier needed.
         out = merged.repartition(*[F.col(c) for c in partition_by])
         out.write.mode("overwrite").partitionBy(*partition_by).parquet(vdir)
-        if cur is not None and not full_rewrite:
+        if cur is not None:
             # carry untouched partitions into the new version by
             # hardlink: same inodes, zero data movement. "Touched" is
             # whatever directories the write itself produced — reusing
@@ -371,7 +229,7 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
         except AnalysisException:  # missing/empty target dir ONLY
             target = None
         if target is not None:
-            merged = merge_upsert(target, updates, keys, evolve_schema,
+            merged = merge_upsert(target, updates, keys,
                                   order_col=order_col)
     # size-conditional output exchange before the unpartitioned write
     # (guide §6, VERDICT r12 ask #5) — see _sized_for_write

@@ -61,8 +61,7 @@ from .registry import query
         "recomputes every count from the slice definitions alone. "
         "At 100 TB the derivation cost is two scans of the touched "
         "versions — the price of a log-free format; Delta/Iceberg "
-        "trade storage for avoiding it (the Delta passthrough is the "
-        "engine's native-CDF path)."
+        "trade storage for avoiding it (a stored change log)."
     ),
 )
 def change_feed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1314,7 +1314,7 @@ def probe_admission_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def signature_table_rebucket(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    from ..operators.dedup import (_read_sig_meta, _resolve_manifest,
+    from ..operators.dedup import (_published, _read_sig_meta,
                                    collect_band_keys,
                                    incremental_minhash_candidates_banded,
                                    minhash_signatures,
@@ -1395,7 +1395,7 @@ def signature_table_rebucket(spark: SparkSession,
                    probe_sec=_t_probe,
                    rebucket_sec=_time.perf_counter() - _t0)
     meta_ok = _read_sig_meta(path)["n_buckets"] == 48
-    man = _resolve_manifest(path)
+    man = _published(path)[2]
     layout_ok = (stats["n_buckets_old"] == 16
                  and 16 < len(man["bands"]) <= 48)
     after = probe()

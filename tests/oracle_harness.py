@@ -4,6 +4,7 @@ column names, and an order-insensitive value hash."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import math
 
@@ -119,3 +120,100 @@ def compare(spark, sf_dir: str, fn, oracle: str) -> tuple[bool, str]:
                  for a, b in zip(ls, ld) if a != b][:3]
         return False, "value-hash mismatch\n" + "\n".join(diffs)
     return True, "ok"
+
+
+@contextlib.contextmanager
+def executed_plans(spark):
+    """Yield a list that, when the block exits, holds the physical plan
+    description of every SQL execution started inside it, in start
+    order — including executions a query runs internally (checkpoints,
+    driver-side collects). Read from the SQL status store after the
+    listener bus drains, so each plan is the final adaptive plan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id() -> int:
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).head().executionId() \
+            if n else -1
+
+    first = last_id() + 1
+    plans: list[str] = []
+    yield plans
+    for i in range(first, last_id() + 1):
+        e = store.execution(i)
+        if e.isDefined():
+            plans.append(e.get().physicalPlanDescription())
+
+
+# queries whose plans legitimately contain a BroadcastNestedLoopJoin:
+# every one is a 1-row scalar side (global total / threshold / corpus
+# stats) broadcast into the fact — O(n), not quadratic. Anything NEW
+# appearing here must be reviewed: an equi-join that degenerates to
+# BNLJ is the classic 100 TB cliff.
+SCALAR_BNLJ_OK = {
+    "incremental_gate", "bm25_search", "cosine_topk", "token_pmi_pairs",
+    "bigram_lm_scores", "rich_inactive_customers", "important_part_stock",
+    "tfidf_top_terms",
+    # deliberate tiny-side replication: the 5-row dim cross-joined with
+    # the salt range (5 x 16 = 80 rows) in operators.scale.salted_join
+    "salted_skew_rollup",
+    # 1-row grand-total scalar broadcast into the per-key rollup
+    "heavy_hitter_keys",
+    # embed the cosine_topk exact-truth plan (its reviewed 5-row-query
+    # broadcast non-equi join) as the verdict's comparison side
+    "ann_lsh_recall_verdict", "ann_ivf_recall_verdict",
+    "ann_pq_recall_verdict",
+    # 1-row scalar broadcasts: exact-tally anchor, max-tokens
+    # normalizer, query-by-example vector
+    "hll_mergeable_tally", "mixture_temperature_weights",
+    "rrf_hybrid_search",
+    # 3-row quantile side broadcast into the per-group cumulative walk
+    "histogram_quantile_sketch",
+    # 1-row doc-stats x 1-row pack-stats verdict assembly
+    "bfd_packing_verdict",
+    # 1-row corpus-totals scalar broadcast into the ≤4096-row model
+    "dsir_importance_weights", "dsir_resample",
+    # fixed 10-row sample side broadcast non-equi pair join (45 pairs
+    # by construction — bounded by _NV, not by the corpus)
+    "jl_projection_distortion",
+    # 1-row corpus-total scalar broadcast into the ≤ k·|sources| model
+    "source_drift_kl",
+    # r7 verdict rows: 1-row aggregate crossJoin assembly (the
+    # bfd_packing_verdict shape); simhash additionally carries the
+    # DECLARED quadratic all-pairs hamming twin (fp longs only — the
+    # oracle-twin role cosine_near_dup plays for the ANN family;
+    # blocking is the scale path it verifies)
+    "simhash_recall_verdict", "semantic_dedup_verdict",
+    "bpe_pack_verdict",
+    "ann_topk_lsh_indexed", "ann_topk_ivf_indexed", "ann_topk_pq_indexed",
+    # r7 mining family: 1-row user-count scalar into the support
+    # filter; 1-row metric aggregates assembled into the verdict row
+    "association_rules", "retrieval_eval_metrics",
+    # 1-row anchor/diff aggregates assembled into the verdict row
+    "bm25_search_indexed",
+    # 1-row reference-size scalar broadcast into the rank mapping
+    "quantile_normalize_scores",
+    # iterative graph scores, seen once the lint reads the plans inside
+    # their per-iteration checkpoints: a 1-row global aggregate
+    # (PageRank's dangling mass, HITS's Σraw normalizer) crossJoined as
+    # a broadcast into the |V|-row score vector (operators/graph.py);
+    # textrank_keywords runs that PageRank over its co-occurrence graph
+    "pagerank_scores", "pagerank_weighted_scores", "hits_scores",
+    "cve2cpe_authority_scores", "textrank_keywords",
+}
+
+
+def join_lint(name: str, plans: list[str]) -> list[str]:
+    """Plan lint over every plan a query executed: no CartesianProduct
+    anywhere; BroadcastNestedLoopJoin only where a 1-row scalar side
+    makes it linear (``SCALAR_BNLJ_OK``). Returns the offending node
+    names (empty = clean)."""
+    text = "\n".join(plans)
+    bad = []
+    if "CartesianProduct" in text:
+        bad.append("CartesianProduct")
+    if "BroadcastNestedLoopJoin" in text and name not in SCALAR_BNLJ_OK:
+        bad.append("BroadcastNestedLoopJoin")
+    return bad

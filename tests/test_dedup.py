@@ -4,6 +4,11 @@ engine-specific hashes): recall / agreement bounds vs exact plans."""
 
 from __future__ import annotations
 
+import json
+import os
+import re
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -232,72 +237,6 @@ def test_approx_quantiles_bounded(spark):
         (True, True, True)
 
 
-def test_incremental_minhash_matches_full_corpus(spark, tmp_path):
-    """Incremental mode (new batch probes the persisted signature
-    table) finds exactly the full-corpus LSH pairs that involve a new
-    document — without re-shingling or re-hashing the corpus."""
-    from nvd2mysqlloader_spark.operators.dedup import (
-        incremental_minhash_candidates, minhash_near_dups,
-        write_signature_table)
-    from nvd2mysqlloader_spark.plans.sketch_queries import _shingled
-
-    sh = _shingled(spark, SF_ORACLE).cache()
-    old = sh.filter(F.col("doc_id") % 5 != 0)
-    new = sh.filter(F.col("doc_id") % 5 == 0)
-
-    sig_path = str(tmp_path / "sigs")
-    write_signature_table(old, sig_path, mode="overwrite")
-
-    got = {(r.new_id, r.old_id): r.est_jaccard
-           for r in incremental_minhash_candidates(
-               spark, sig_path, new).collect()}
-
-    full = minhash_near_dups(sh, threshold=0.5).collect()
-    want = {}
-    for r in full:
-        a_new, b_new = r.id_a % 5 == 0, r.id_b % 5 == 0
-        if a_new and not b_new:
-            want[(r.id_a, r.id_b)] = r.est_jaccard
-        elif b_new and not a_new:
-            want[(r.id_b, r.id_a)] = r.est_jaccard
-    assert set(got) == set(want)
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-12
-    sh.unpersist()
-
-
-def test_incremental_probe_plan_never_reshingles_corpus(spark, tmp_path):
-    """Plan pin for the minhash_incremental_dedup operating mode: the
-    probe's physical plan reads the CORPUS side from the persisted
-    signature parquet — exactly one parquet scan, zero Python/Arrow
-    eval nodes (the new batch's shingling+hashing was materialized
-    before the probe; the corpus is never re-shingled or re-hashed)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from nvd2mysqlloader_spark.operators.dedup import (
-        incremental_minhash_candidates, write_signature_table)
-    from nvd2mysqlloader_spark.plans.sketch_queries import _shingled
-
-    sh = _shingled(spark, SF_ORACLE)
-    old = sh.filter(F.col("doc_id") % 5 != 0)
-    new = sh.filter(F.col("doc_id") % 5 == 0)
-    sig_path = str(tmp_path / "sigs")
-    write_signature_table(old, sig_path, mode="overwrite")
-
-    probe = incremental_minhash_candidates(spark, sig_path, new)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        probe.explain("formatted")
-    plan = buf.getvalue()
-    # node-detail headers "(N) Scan parquet" — one per physical scan
-    # (the tree section repeats each node, so count headers not text)
-    import re
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
-    assert "ArrowEvalPython" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
 # ---------------------------------------------------------------------------
 # Band-PARTITIONED signature table (r8 verdict ask #1) — the pruned
 # 100 TB operating mode behind minhash_incremental_dedup and the
@@ -317,55 +256,83 @@ def banded_split(spark, shingled, tmp_path):
     return old, new, path
 
 
-def test_banded_probe_equals_unbanded_probe(spark, banded_split,
-                                            tmp_path):
-    """The pruned probe returns EXACTLY the unpartitioned probe's
-    relation — partitioning is a layout change, never a semantics
-    change."""
-    from nvd2mysqlloader_spark.operators.dedup import (
-        incremental_minhash_candidates,
-        incremental_minhash_candidates_banded, write_signature_table)
-    old, new, path = banded_split
-    plain = str(tmp_path / "plain")
-    write_signature_table(old, plain, mode="overwrite")
-    want = sorted(map(tuple, incremental_minhash_candidates(
-        spark, plain, new).collect()))
-    got = sorted(map(tuple, incremental_minhash_candidates_banded(
-        spark, path, new).collect()))
+def test_incremental_minhash_matches_full_corpus(spark, shingled,
+                                                banded_split):
+    """The banded probe of a new batch against the persisted signature
+    table finds exactly the full-corpus ``minhash_near_dups`` pairs
+    between a new and an old document, with the same estimates —
+    partitioning is a layout change, never a semantics change, and the
+    corpus is never re-shingled."""
+    from nvd2mysqlloader_spark.operators.dedup import \
+        incremental_minhash_candidates_banded
+    _old, new, path = banded_split
+    got = {(r.new_id, r.old_id): r.est_jaccard
+           for r in incremental_minhash_candidates_banded(
+               spark, path, new).collect()}
+    want = {}
+    for r in minhash_near_dups(shingled, threshold=0.5).collect():
+        a_new, b_new = r.id_a % 5 == 0, r.id_b % 5 == 0
+        if a_new and not b_new:
+            want[(r.id_a, r.id_b)] = r.est_jaccard
+        elif b_new and not a_new:
+            want[(r.id_b, r.id_a)] = r.est_jaccard
     assert want, "fixture produced no cross-batch collisions — vacuous"
-    assert got == want
+    assert set(got) == set(want)
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-12
+
+
+def _probe_table_plans(spark, banded_split):
+    """The plans of every SQL execution a probe of ``banded_split``'s
+    table ran that read the table (the other executions sign the new
+    batch)."""
+    from nvd2mysqlloader_spark.operators.dedup import \
+        incremental_minhash_candidates_banded
+
+    from .oracle_harness import executed_plans
+    _old, new, path = banded_split
+    with executed_plans(spark) as plans:
+        got = incremental_minhash_candidates_banded(
+            spark, path, new).collect()
+    assert got, "fixture produced no collisions — vacuous"
+    return [p for p in plans if "/bands" in p or "/sigs" in p]
+
+
+def test_incremental_probe_plan_never_reshingles_corpus(spark,
+                                                        banded_split):
+    """Plan pin for the minhash_incremental_dedup operating mode, read
+    from the plans the probe executed: every plan that reads the
+    signature table reads the corpus side from it alone — no scan of
+    the source documents, zero Python/Arrow eval nodes (the corpus is
+    never re-shingled or re-hashed)."""
+    table = _probe_table_plans(spark, banded_split)
+    assert table
+    for p in table:
+        assert "documents.parquet" not in p, p
+        assert "ArrowEvalPython" not in p, p
+        assert "BatchEvalPython" not in p, p
 
 
 def test_banded_probe_plan_partition_prunes_both_scans(
         spark, banded_split):
-    """Plan pin for the pruned probe (r8 verdict ask #1): exactly TWO
-    parquet scans — the band index and the signature sidecar — and
-    BOTH carry partition filters (the batch's touched band buckets /
-    the candidates' doc buckets), with zero Python eval nodes. The
-    corpus is never fully read, re-shingled, or re-hashed."""
-    import io
+    """Plan pin for the pruned probe (r8 verdict ask #1), read from the
+    plans the probe executed: exactly TWO scans of the signature table
+    — the band index and the signature sidecar — and BOTH carry
+    partition filters (the batch's touched band buckets / the
+    candidates' doc buckets). The corpus is never fully read."""
     import re
-    from contextlib import redirect_stdout
-
-    from nvd2mysqlloader_spark.operators.dedup import \
-        incremental_minhash_candidates_banded
-    _old, new, path = banded_split
-    probe = incremental_minhash_candidates_banded(
-        spark, path, new, materialize=False)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        probe.explain("formatted")
-    plan = buf.getvalue()
-    scans = re.findall(r"\(\d+\) Scan parquet", plan)
-    assert len(scans) == 2, plan
-    pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert len(pfs) == 2, plan
-    assert any("bucket" in p and ("INSET" in p or " IN " in p)
-               for p in pfs), plan
+    table = _probe_table_plans(spark, banded_split)
+    scans = [d for p in table
+             for d in re.split(r"\n\(\d+\) ", p)
+             if d.startswith("Scan parquet")]
+    assert len(scans) == 2, table
+    pfs = [m for d in scans
+           for m in re.findall(r"PartitionFilters: \[([^\]]*)\]", d)]
+    assert len(pfs) == 2, scans
+    assert any("bucket" in p and "doc_bucket" not in p
+               and ("INSET" in p or " IN " in p) for p in pfs), pfs
     assert any("doc_bucket" in p and ("INSET" in p or " IN " in p)
-               for p in pfs), plan
-    assert "ArrowEvalPython" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
+               for p in pfs), pfs
 
 
 def test_banded_write_geometry_mismatch_fails_loudly(
@@ -982,36 +949,6 @@ def test_persisted_histogram_sketch_quantiles(spark, tmp_path):
     assert est <= 2.0 < est + 1.0 / 16      # percentile_disc(0.5) == 2.0
 
 
-def test_manifest_maintained_and_probe_fallback_identical(
-        spark, banded_split, tmp_path):
-    """Appends maintain the version's manifest.json incrementally; it
-    must equal a from-scratch filesystem scan, and the manifest-pruned
-    probe must return exactly what a pre-manifest table (manifest
-    scanned from the filesystem) returns."""
-    import os
-
-    from nvd2mysqlloader_spark.operators import table_io
-    from nvd2mysqlloader_spark.operators.dedup import (
-        _resolve_manifest, _scan_manifest,
-        incremental_minhash_candidates_banded)
-    _old, new, path = banded_split
-    cur = table_io.current_version(path)
-    man = _resolve_manifest(cur)
-    assert man["bands"] and man["sigs"]
-    with_man = sorted(map(tuple, incremental_minhash_candidates_banded(
-        spark, path, new).collect()))
-    assert _scan_manifest(cur) == man
-    # pre-manifest table (scanned in memory): same relation
-    os.rename(cur + "/manifest.json", cur + "/manifest.json.bak")
-    try:
-        without = sorted(map(
-            tuple, incremental_minhash_candidates_banded(
-                spark, path, new).collect()))
-    finally:
-        os.rename(cur + "/manifest.json.bak", cur + "/manifest.json")
-    assert with_man == without and with_man
-
-
 def test_probe_admission_cap_planted_cluster(spark, tmp_path):
     """max_candidates_per_new on the banded probe: a planted
     boilerplate cluster of 30 identical corpus docs collapses to its
@@ -1072,9 +1009,8 @@ def test_rebucket_preserves_probe_and_updates_geometry(
     the manifest reflects the new layout, and appends at the NEW
     geometry succeed while the old geometry now fails loudly."""
     from nvd2mysqlloader_spark.operators.dedup import (
-        _read_sig_meta, _resolve_manifest,
-        incremental_minhash_candidates_banded, rebucket_signature_table,
-        write_banded_signature_table)
+        _published, _read_sig_meta, incremental_minhash_candidates_banded,
+        rebucket_signature_table, write_banded_signature_table)
     old, new, path = banded_split          # written at n_buckets=64
 
     before = sorted(map(tuple, incremental_minhash_candidates_banded(
@@ -1083,7 +1019,7 @@ def test_rebucket_preserves_probe_and_updates_geometry(
     assert stats["n_buckets_old"] == 64
     assert stats["n_buckets_new"] == 48
     assert _read_sig_meta(path)["n_buckets"] == 48
-    man = _resolve_manifest(path)
+    man = _published(path)[2]
     assert man and len(man["bands"]) <= 48 and len(man["sigs"]) <= 48
     after = sorted(map(tuple, incremental_minhash_candidates_banded(
         spark, path, new).collect()))
@@ -1183,9 +1119,8 @@ def test_maintain_signature_table_policy(spark, shingled, tmp_path):
     triggers subtable compaction (file counts drop, probe invariant),
     and a healthy table is a no-op."""
     from nvd2mysqlloader_spark.operators.dedup import (
-        _man_files, _read_sig_meta, _resolve_manifest,
-        incremental_minhash_candidates_banded, maintain_signature_table,
-        write_banded_signature_table)
+        _published, _read_sig_meta, incremental_minhash_candidates_banded,
+        maintain_signature_table, write_banded_signature_table)
     old = shingled.filter(F.col("doc_id") % 5 != 0)
     new = shingled.filter(F.col("doc_id") % 5 == 0)
     path = str(tmp_path / "maint")
@@ -1219,8 +1154,8 @@ def test_maintain_signature_table_policy(spark, shingled, tmp_path):
                                       max_files_per_dir=2)
     assert stats2["rebucketed"] is False
     assert stats2["compacted"]
-    man = _resolve_manifest(path)
-    assert all(_man_files(v) <= 2 for sub in ("bands", "sigs")
+    man = _published(path)[2]
+    assert all(v["files"] <= 2 for sub in ("bands", "sigs")
                for v in man[sub].values())
     assert sorted(map(tuple, incremental_minhash_candidates_banded(
         spark, path, old.limit(10)).collect())) == grown
@@ -1230,45 +1165,6 @@ def test_maintain_signature_table_policy(spark, shingled, tmp_path):
                                       target_rows_per_bucket=10**9,
                                       max_files_per_dir=64)
     assert stats3["rebucketed"] is False and not stats3["compacted"]
-
-
-def test_legacy_table_append_rebuilds_manifest(spark, shingled,
-                                               tmp_path):
-    """Appending to a PRE-MANIFEST table (or one whose manifest was
-    lost) must produce a manifest covering the WHOLE table, not just
-    the new batch's dirs — a partial manifest would make every later
-    probe silently skip the pre-existing corpus."""
-    import os
-
-    from nvd2mysqlloader_spark.operators.dedup import (
-        incremental_minhash_candidates_banded,
-        write_banded_signature_table)
-    old = shingled.filter(F.col("doc_id") % 5 != 0)
-    new = shingled.filter(F.col("doc_id") % 5 == 0)
-    path = str(tmp_path / "legacy")
-    write_banded_signature_table(
-        old.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0), path)
-    want = sorted(map(tuple, incremental_minhash_candidates_banded(
-        spark, path, new).collect()))
-    # simulate a pre-manifest table, then append the second slice
-    os.remove(path + "/manifest.json")
-    write_banded_signature_table(
-        old.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1), path)
-    assert os.path.isfile(path + "/manifest.json")
-    got = sorted(map(tuple, incremental_minhash_candidates_banded(
-        spark, path, new).collect()))
-    # the probe must see candidates from BOTH slices — i.e. at least
-    # everything the first slice alone produced, plus the full-table
-    # result must match a from-scratch two-slice table
-    assert set(want) <= set(got)
-    fresh = str(tmp_path / "fresh")
-    for k in range(2):
-        write_banded_signature_table(
-            old.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == k),
-            fresh)
-    assert got == sorted(map(
-        tuple, incremental_minhash_candidates_banded(
-            spark, fresh, new).collect()))
 
 
 def test_probe_cap_keeps_true_dup_behind_low_id_crowd(spark, tmp_path):
@@ -1323,27 +1219,6 @@ def _sh3(df):
                " i, 3)))").alias("s"))
 
 
-def _legacy_crashed_append(spark, path, doc_id, text):
-    """Leave the state the in-place append of earlier builds left when
-    its writer died between the data commit and the manifest update:
-    the batch's rows committed in the published dir, a manifest.json
-    (with the old epoch field) that does not count them, and the
-    manifest.dirty marker beside it."""
-    import json
-
-    from nvd2mysqlloader_spark.operators.dedup import \
-        write_banded_signature_table
-    with open(path + "/manifest.json") as f:
-        stale = json.load(f)
-    df = spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
-    write_banded_signature_table(_sh3(df), path, n_buckets=16)
-    with open(path + "/manifest.json", "w") as f:
-        json.dump(dict(stale, epoch=7), f)
-    with open(path + "/manifest.dirty", "w") as f:
-        json.dump({"batch_id": None, "keyed": False,
-                   "writer_token": "dead"}, f)
-
-
 def _tree(path):
     """(name → inode, size, mtime) of every entry under the table's
     current version and beside the table — a write anywhere shows."""
@@ -1371,59 +1246,6 @@ def _probe_hits(spark, path, doc_id, text):
 _BATCH1 = [(i, f"first batch doc {i} alpha beta gamma delta epsilon")
            for i in range(4)]
 _TARGET = "second batch target unique payload words here now ok yes"
-
-
-def test_dirty_marker_heals_crashed_manifest_update(spark, tmp_path):
-    """A table left by the in-place append of earlier builds whose
-    writer died between its data commit and its manifest update (the
-    manifest.dirty marker present, the manifest missing the batch):
-    the probe must SEE the committed batch — a marked manifest is
-    rebuilt from the filesystem, in memory — instead of silently
-    skipping that data."""
-    import os
-
-    from nvd2mysqlloader_spark.operators.dedup import \
-        write_banded_signature_table
-    path = str(tmp_path / "crashy")
-    write_banded_signature_table(
-        _sh3(spark.createDataFrame(_BATCH1, "doc_id long, text string")),
-        path, n_buckets=16)
-    _legacy_crashed_append(spark, path, 100, _TARGET)
-    assert 100 in _probe_hits(spark, path, 900, _TARGET), \
-        "committed data invisible to probe"
-    assert os.path.isfile(path + "/manifest.dirty")   # readers never write
-
-
-def test_dirty_marker_next_append_full_rebuilds(spark, tmp_path):
-    """An append to a table carrying an earlier build's dirty marker
-    must publish a manifest covering the orphaned batch and itself —
-    a full filesystem rebuild, not an update seeded from the stale
-    manifest — and neither the marker nor the old epoch field."""
-    import json
-    import os
-
-    from nvd2mysqlloader_spark.operators import table_io
-    from nvd2mysqlloader_spark.operators.dedup import (
-        _scan_manifest, write_banded_signature_table)
-
-    def mk(i, text):
-        return _sh3(spark.createDataFrame([(i, text)],
-                                          "doc_id long, text string"))
-
-    path = str(tmp_path / "crashy2")
-    write_banded_signature_table(
-        mk(1, "one two three four five six seven"), path, n_buckets=16)
-    _legacy_crashed_append(spark, path, 2,
-                           "orphan doc aaa bbb ccc ddd eee fff")
-    write_banded_signature_table(
-        mk(3, "third doc ggg hhh iii jjj kkk lll"), path, n_buckets=16)
-    cur = table_io.current_version(path)
-    assert not os.path.exists(cur + "/manifest.dirty")
-    with open(cur + "/manifest.json") as f:
-        man = json.load(f)
-    assert "epoch" not in man
-    assert sum(v["rows"] for v in man["sigs"].values()) == 3
-    assert man == _scan_manifest(cur)
 
 
 def test_crashed_append_leaves_table_unchanged(spark, tmp_path,
@@ -1521,41 +1343,6 @@ def test_capped_probe_distinct_sig_member_not_hidden(spark, tmp_path):
     assert len(cap) <= 4
 
 
-def test_legacy_meta_table_appends_and_caps_without_sig_fp(
-        spark, tmp_path):
-    """A table whose meta predates the sig_fp band column keeps
-    working: appends stay in the legacy schema (no mixed parquet
-    schemas) and the capped probe falls back to the single min-id
-    anchor."""
-    import json
-    import os
-
-    from nvd2mysqlloader_spark.operators.dedup import (
-        incremental_minhash_candidates_banded,
-        write_banded_signature_table)
-
-    path = str(tmp_path / "legacy")
-    os.makedirs(path)
-    with open(path + "/meta.json", "w") as f:
-        json.dump({"num_perm": 64, "bands": 16, "n_buckets": 16,
-                   "keyed": False}, f)
-
-    boiler = ("legacy shared template words one two three four five "
-              "six seven eight nine ten eleven twelve thirteen")
-    corpus = spark.createDataFrame(
-        [(i, boiler) for i in range(10)], "doc_id long, text string")
-    write_banded_signature_table(_sh3(corpus), path, n_buckets=16)
-    bands = spark.read.parquet(path + "/bands")
-    assert "sig_fp" not in bands.columns       # legacy schema kept
-
-    probe = spark.createDataFrame([(900, boiler)],
-                                  "doc_id long, text string")
-    cap = incremental_minhash_candidates_banded(
-        spark, path, _sh3(probe), max_candidates_per_new=3).collect()
-    assert [r["old_id"] for r in cap] == [0]   # min-id anchor only
-    assert cap[0]["est_jaccard"] == 1.0
-
-
 def test_probe_during_live_append_serves_published_version(
         spark, tmp_path, monkeypatch):
     """A probe running while an append is in flight — its version
@@ -1608,65 +1395,107 @@ def test_probe_during_live_append_serves_published_version(
     assert _probe_hits(spark, path, 900, _TARGET) == {100}
 
 
-def test_resolve_manifest_no_fcntl_never_clears_marker(
-        spark, tmp_path, monkeypatch):
-    """Readers take no lock: with flock unavailable (``fcntl.flock``
-    raising) the manifest of a dirty-marked table from an earlier
-    build still resolves to every committed dir, the probe sees the
-    orphaned batch, and nothing on disk changes — marker and stale
-    manifest are left for the next writer."""
-    import fcntl
-
-    from nvd2mysqlloader_spark.operators import table_io
-    from nvd2mysqlloader_spark.operators.dedup import (
-        _resolve_manifest, write_banded_signature_table)
-
-    path = str(tmp_path / "nofcntl")
-    write_banded_signature_table(
-        _sh3(spark.createDataFrame(_BATCH1, "doc_id long, text string")),
-        path, n_buckets=16)
-    _legacy_crashed_append(spark, path, 100, _TARGET)
-    before = _tree(path)
-
-    def no_flock(*a, **k):
-        raise OSError(38, "Function not implemented")
-    monkeypatch.setattr(fcntl, "flock", no_flock)
-    got = _resolve_manifest(table_io.current_version(path))
-    assert sum(v["rows"] for v in got["sigs"].values()) == 5
-    assert 100 in _probe_hits(spark, path, 900, _TARGET)
-    assert _tree(path) == before
-
-
 def test_resolve_manifest_readonly_mount_serves_committed_data(
-        spark, tmp_path):
-    """A probe against a read-only table (every dir of the version and
-    the dir beside it mode 0555) serves committed data — including a
-    dirty-marked batch of an earlier build — and changes nothing on
-    disk (checked by inode/size/mtime, so the check holds for a user
-    the mode does not stop)."""
+        spark, tmp_path, monkeypatch):
+    """A probe takes no lock and writes nothing: against a table whose
+    version dirs and the dir beside them are mode 0555, with
+    ``fcntl.flock`` raising, it serves every committed batch and
+    leaves the tree as it was (checked by inode/size/mtime, so the
+    check holds for a user the mode does not stop)."""
+    import fcntl
     import os
 
     from nvd2mysqlloader_spark.operators import table_io
-    from nvd2mysqlloader_spark.operators.dedup import (
-        _resolve_manifest, write_banded_signature_table)
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table
 
     path = str(tmp_path / "romount")
     write_banded_signature_table(
         _sh3(spark.createDataFrame(_BATCH1, "doc_id long, text string")),
         path, n_buckets=16)
-    _legacy_crashed_append(spark, path, 100, _TARGET)
-    cur = table_io.current_version(path)
-    dirs = [os.path.dirname(cur)] + [d for d, _, _ in os.walk(cur)]
+    write_banded_signature_table(
+        _sh3(spark.createDataFrame([(100, _TARGET)],
+                                   "doc_id long, text string")),
+        path, n_buckets=16)
+    dirs = [os.path.dirname(path)] + [
+        d for _, vdir in table_io.versions(path)
+        for d, _, _ in os.walk(vdir)]
     before = _tree(path)
+
+    def no_flock(*a, **k):
+        raise OSError(38, "Function not implemented")
     for d in dirs:
         os.chmod(d, 0o555)
+    monkeypatch.setattr(fcntl, "flock", no_flock)
     try:
-        got = _resolve_manifest(cur)
-        assert sum(v["rows"] for v in got["sigs"].values()) == 5
-        assert 100 in _probe_hits(spark, path, 900, _TARGET)
+        assert _probe_hits(spark, path, 900, _TARGET) == {100}
+        assert 2 in _probe_hits(spark, path, 901, _BATCH1[2][1])
     finally:
+        monkeypatch.undo()
         for d in dirs:
             os.chmod(d, 0o755)
+    assert _tree(path) == before
+
+
+def _plain_dir(path, cur):
+    os.unlink(path)
+    shutil.copytree(cur, path)
+
+
+def _edit_json(f, edit):
+    with open(f) as fh:
+        obj = json.load(fh)
+    with open(f, "w") as fh:
+        json.dump(edit(obj), fh)
+
+
+def _no_sig_fp(path, cur):
+    _edit_json(cur + "/meta.json",
+               lambda m: {k: v for k, v in m.items() if k != "sig_fp"})
+
+
+def _no_manifest(path, cur):
+    os.remove(cur + "/manifest.json")
+
+
+def _dirty_marker(path, cur):
+    with open(cur + "/manifest.dirty", "w") as fh:
+        json.dump({"writer_token": "dead"}, fh)
+
+
+def _bare_int_manifest(path, cur):
+    _edit_json(cur + "/manifest.json",
+               lambda man: {sub: {d: v["rows"] for d, v in dirs.items()}
+                            for sub, dirs in man.items()})
+
+
+def _nested_symlink(path, cur):
+    os.rename(cur + "/bands", cur + ".bands")
+    os.symlink("../" + os.path.basename(cur) + ".bands", cur + "/bands")
+
+
+@pytest.mark.parametrize("layout", [
+    _plain_dir, _no_sig_fp, _no_manifest, _dirty_marker,
+    _bare_int_manifest, _nested_symlink], ids=lambda f: f.__name__[1:])
+def test_earlier_layout_fails_loudly(spark, tmp_path, layout):
+    """Each signature-table layout an earlier build wrote — a plain
+    directory, meta without sig_fp, a missing manifest, a
+    manifest.dirty marker, bare-int manifest values, a subtable held
+    as a symlink — is refused by the probe and by an append with a
+    ValueError naming the path, and neither touches the tree."""
+    from nvd2mysqlloader_spark.operators import table_io
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table
+
+    path = str(tmp_path / "old")
+    batch = _sh3(spark.createDataFrame(_BATCH1, "doc_id long, text string"))
+    write_banded_signature_table(batch, path, n_buckets=16)
+    layout(path, table_io.current_version(path))
+    before = _tree(path)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        _probe_hits(spark, path, 900, _BATCH1[2][1])
+    with pytest.raises(ValueError, match=re.escape(path)):
+        write_banded_signature_table(batch, path, n_buckets=16)
     assert _tree(path) == before
 
 
@@ -1684,8 +1513,7 @@ def test_concurrent_appends_serialize(spark, tmp_path):
 
     from nvd2mysqlloader_spark.operators import table_io
     from nvd2mysqlloader_spark.operators.dedup import (
-        _resolve_manifest, _scan_manifest,
-        write_banded_signature_table)
+        _published, _scan_manifest, write_banded_signature_table)
 
     path = str(tmp_path / "race")
     seed = spark.createDataFrame(
@@ -1721,7 +1549,7 @@ def test_concurrent_appends_serialize(spark, tmp_path):
 
     cur = table_io.current_version(path)
     assert cur.endswith(f".__v{1 + len(texts)}")   # one version each
-    man = _resolve_manifest(cur)
+    man = _published(path)[2]
     assert sum(v["rows"] for v in man["sigs"].values()) == 1 + len(texts)
     # the maintained manifest equals a filesystem scan exactly
     assert man == _scan_manifest(cur)

@@ -264,100 +264,63 @@ def test_purge_rejected_removes_from_silver_and_bronze(spark, tmp_path):
     assert purge_rejected(spark, str(tmp_path / "none")) == 0
 
 
-def test_legacy_bronze_without_feed_year_is_migrated(spark, tmp_path):
-    """Review r6 #1: a warehouse written before bronze gained the
-    feed_year partition column must not brick ingest or purge — the
-    legacy table is migrated in place (feed_year derived from each
-    row's own cve_id, so old rows land in their real year partitions,
-    not a NULL partition), then normal partition-selective merges and
-    deletes proceed."""
-    from nvd2mysqlloader_spark.ingest import purge_rejected, run_ingest
-    from nvd2mysqlloader_spark.operators.upsert import write_upsert_parquet
-
-    wh = str(tmp_path / "wh")
-    bronze_path = f"{wh}/nvd_json"
-    # legacy layout: unpartitioned, (cve_id, cve_item) only — exactly
-    # what the pre-round-6 ingest wrote
-    legacy = spark.createDataFrame(
-        [("CVE-2020-0009", '{"legacy": true}'),
-         ("CVE-2021-0009",
-          '{"cve": {"description": {"description_data": '
-          '[{"value": "** REJECT ** withdrawn."}]}}}')],
-        ["cve_id", "cve_item"])
-    write_upsert_parquet(bronze_path, legacy, ["cve_id"])
-
-    stats = run_ingest(spark, DATA, wh)          # must not crash
-    assert stats["cves"] == 6
-    bronze = spark.read.parquet(bronze_path)
-    assert "feed_year" in bronze.columns
-    # legacy rows survived the migration, in their cve_id-derived
-    # partitions, alongside the fresh batch
-    got = {r.cve_id: r.feed_year for r in bronze.collect()}
-    assert got["CVE-2020-0009"] == 2020
-    assert got["CVE-2021-0009"] == 2021
-    assert len(got) == 2 + 6
-    # partition layout is real: year dirs on disk
-    import glob
-    assert glob.glob(f"{bronze_path}/*/feed_year=2020") or \
-        glob.glob(f"{bronze_path}/feed_year=2020")
-
-    # purge on the migrated table also works end-to-end — but note
-    # the legacy reject row has no silver counterpart, so build the
-    # reject in silver via a real ingest instead: just assert purge
-    # runs cleanly (0 matches is fine) on the migrated layout
-    assert purge_rejected(spark, wh) == 0
-
-
-def test_purge_on_legacy_warehouse_migrates_bronze(spark, tmp_path):
-    """purge_rejected called directly against a legacy warehouse (no
-    ingest in between) migrates bronze itself before the
-    partition-selective delete."""
-    import json
-
-    from nvd2mysqlloader_spark.ingest import purge_rejected, run_ingest
-    from nvd2mysqlloader_spark.operators.upsert import write_upsert_parquet
-
+def test_corrupt_feed_is_rejected_and_retried(spark, tmp_path):
+    """A fresh feed that does not parse (a truncated download) is
+    reported rejected and gets no audit row, so the high-water mark
+    does not pass it: the run loads the good feed, and once the file
+    is fixed the next run loads the rejected one."""
     landing = tmp_path / "landing"
-    landing.mkdir()
-
-    def item(cve_id, summary, year):
-        return {"cve": {"CVE_data_meta": {"ID": cve_id},
-                        "description": {"description_data": [
-                            {"lang": "en", "value": summary}]}},
-                "publishedDate": f"{year}-01-02T00:00Z",
-                "lastModifiedDate": f"{year}-06-01T00:00Z"}
-
-    feed = {"CVE_Items": [
-        item("CVE-2020-0001", "real bug.", 2020),
-        item("CVE-2020-0002",
-             "** REJECT ** DO NOT USE THIS CANDIDATE NUMBER.", 2020),
-    ]}
-    (landing / "nvdcve-1.1-2020.json").write_text(json.dumps(feed))
-    (landing / "nvdcve-1.1-2020.meta").write_text(
-        "lastModifiedDate:2021-06-01T00:00:00-04:00\r\nsha256:ab\r\n")
+    shutil.copytree(DATA, landing)
+    feed = landing / "nvdcve-1.1-modified.json"
+    good = feed.read_text()
+    feed.write_text(good[:len(good) * 2 // 3])
     wh = str(tmp_path / "wh")
-    run_ingest(spark, str(landing), wh)
 
-    # regress bronze to the legacy layout: strip feed_year, rewrite
-    # unpartitioned (simulates a warehouse from the old code)
+    stats = run_ingest(spark, str(landing), wh)
+    assert stats["feeds"] == 1
+    assert stats["rejected"] == ["nvdcve-1.1-modified"]
+    assert stats["cves"] == 5
+    hist = {r.download_name for r in
+            spark.read.parquet(f"{wh}/update_history").collect()}
+    assert hist == {"nvdcve-1.1-2024"}
+
+    feed.write_text(good)
+    stats = run_ingest(spark, str(landing), wh)
+    assert stats["feeds"] == 1 and stats["rejected"] == []
+    nvd = {r.cve_id: float(r.score) for r in
+           spark.read.parquet(f"{wh}/nvd").collect()}
+    assert "CVE-2024-9999" in nvd
+    assert nvd["CVE-2024-0002"] == 5.0       # the modified feed's update
+    assert run_ingest(spark, str(landing), wh)["feeds"] == 0
+
+
+def test_legacy_bronze_without_feed_year_fails_loudly(spark, tmp_path):
+    """A bronze table an earlier build wrote unpartitioned (no
+    feed_year= dirs) is refused by ingest and by purge with a
+    ValueError naming it, before anything is published: the warehouse
+    tree is unchanged."""
+    import re
+
+    from nvd2mysqlloader_spark.ingest import purge_rejected
+    from nvd2mysqlloader_spark.operators import table_io
+
+    wh = str(tmp_path / "wh")
+    run_ingest(spark, DATA, wh)
     bronze_path = f"{wh}/nvd_json"
-    legacy_rows = (spark.read.parquet(bronze_path)
-                   .select("cve_id", "cve_item").collect())
-    import glob as _glob
-    import shutil as _sh
-    os.unlink(bronze_path)               # the table path is a symlink
-    for d in _glob.glob(bronze_path + ".__v*"):
-        _sh.rmtree(d)
-    write_upsert_parquet(
-        bronze_path,
-        spark.createDataFrame(legacy_rows, ["cve_id", "cve_item"]),
-        ["cve_id"])
-    assert "feed_year" not in spark.read.parquet(bronze_path).columns
+    vdir = table_io.next_version_dir(bronze_path)
+    (table_io.read_version(spark, bronze_path)
+     .select("cve_id", "cve_item").write.parquet(vdir))
+    table_io.publish_version(bronze_path, vdir)
 
-    assert purge_rejected(spark, wh) == 1
-    bronze = spark.read.parquet(bronze_path)
-    assert "feed_year" in bronze.columns
-    assert {r.cve_id for r in bronze.collect()} == {"CVE-2020-0001"}
+    def tree():
+        return sorted((d, tuple(sorted(fs)))
+                      for d, _, fs in os.walk(wh, followlinks=True))
+    before = tree()
+    for run in (lambda: run_ingest(spark, DATA, wh),
+                lambda: purge_rejected(spark, wh)):
+        with pytest.raises(ValueError, match=re.escape(bronze_path)):
+            run()
+    assert tree() == before
 
 
 def test_ingest_repartition_feeds_both_dedups_without_reshuffle(

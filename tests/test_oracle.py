@@ -1,6 +1,8 @@
 """Every SQL-expressible query must hash-match its DuckDB oracle —
 the local twin of the driver's CORRECTNESS gate (run at sf0.001 for
-speed; the driver re-runs at sf0.01)."""
+speed; the driver re-runs at sf0.01). The same runs lint every plan
+the query executed, checkpoints included (``join_lint``); the
+rows-only entries get the lint alone."""
 
 from __future__ import annotations
 
@@ -9,16 +11,30 @@ import pytest
 from nvd2mysqlloader_spark.plans import QUERIES
 
 from .conftest import SF_ORACLE
-from .oracle_harness import compare
+from .oracle_harness import compare, executed_plans, join_lint
 
 ORACLE_QUERIES = sorted(n for n, q in QUERIES.items() if q.oracle is not None)
+ROWS_ONLY_QUERIES = sorted(n for n, q in QUERIES.items() if q.oracle is None)
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_match(spark, name):
     q = QUERIES[name]
-    ok, msg = compare(spark, SF_ORACLE, q.fn, q.oracle)
+    with executed_plans(spark) as plans:
+        ok, msg = compare(spark, SF_ORACLE, q.fn, q.oracle)
     assert ok, f"{name}: {msg}"
+    assert plans, f"{name}: no SQL execution recorded"
+    bad = join_lint(name, plans)
+    assert not bad, f"{name}: unexpected non-equi join plans: {bad}"
+
+
+@pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
+def test_rows_only_join_lint(spark, name):
+    with executed_plans(spark) as plans:
+        QUERIES[name].fn(spark, SF_ORACLE).collect()
+    assert plans, f"{name}: no SQL execution recorded"
+    bad = join_lint(name, plans)
+    assert not bad, f"{name}: unexpected non-equi join plans: {bad}"
 
 
 def test_registry_nonempty():

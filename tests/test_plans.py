@@ -436,79 +436,6 @@ def test_registry_oracle_coverage_stays_high():
         f"/{len(QUERIES)}; rows-only: {sorted(rows_only)}")
 
 
-# queries whose plan legitimately contains a BroadcastNestedLoopJoin:
-# every one is a 1-row scalar side (global total / threshold / corpus
-# stats) broadcast into the fact — O(n), not quadratic. Anything NEW
-# appearing here must be reviewed: an equi-join that degenerates to
-# BNLJ is the classic 100 TB cliff.
-_SCALAR_BNLJ_OK = {
-    "incremental_gate", "bm25_search", "cosine_topk", "token_pmi_pairs",
-    "bigram_lm_scores", "rich_inactive_customers", "important_part_stock",
-    "tfidf_top_terms",
-    # deliberate tiny-side replication: the 5-row dim cross-joined with
-    # the salt range (5 x 16 = 80 rows) in operators.scale.salted_join
-    "salted_skew_rollup",
-    # 1-row grand-total scalar broadcast into the per-key rollup
-    "heavy_hitter_keys",
-    # embed the cosine_topk exact-truth plan (its reviewed 5-row-query
-    # broadcast non-equi join) as the verdict's comparison side
-    "ann_lsh_recall_verdict", "ann_ivf_recall_verdict",
-    "ann_pq_recall_verdict",
-    # 1-row scalar broadcasts: exact-tally anchor, max-tokens
-    # normalizer, query-by-example vector
-    "hll_mergeable_tally", "mixture_temperature_weights",
-    "rrf_hybrid_search",
-    # 3-row quantile side broadcast into the per-group cumulative walk
-    "histogram_quantile_sketch",
-    # 1-row doc-stats x 1-row pack-stats verdict assembly
-    "bfd_packing_verdict",
-    # 1-row corpus-totals scalar broadcast into the ≤4096-row model
-    "dsir_importance_weights", "dsir_resample",
-    # fixed 10-row sample side broadcast non-equi pair join (45 pairs
-    # by construction — bounded by _NV, not by the corpus)
-    "jl_projection_distortion",
-    # 1-row corpus-total scalar broadcast into the ≤ k·|sources| model
-    "source_drift_kl",
-    # r7 verdict rows: 1-row aggregate crossJoin assembly (the
-    # bfd_packing_verdict shape); simhash additionally carries the
-    # DECLARED quadratic all-pairs hamming twin (fp longs only — the
-    # oracle-twin role cosine_near_dup plays for the ANN family;
-    # blocking is the scale path it verifies)
-    "simhash_recall_verdict", "semantic_dedup_verdict",
-    "bpe_pack_verdict",
-    "ann_topk_lsh_indexed", "ann_topk_ivf_indexed", "ann_topk_pq_indexed",
-    # r7 mining family: 1-row user-count scalar into the support
-    # filter; 1-row metric aggregates assembled into the verdict row
-    "association_rules", "retrieval_eval_metrics",
-    # 1-row anchor/diff aggregates assembled into the verdict row
-    "bm25_search_indexed",
-    # 1-row reference-size scalar broadcast into the rank mapping
-    "quantile_normalize_scores",
-}
-
-
-def test_no_unexpected_nested_loop_or_cartesian_joins(spark):
-    """Plan lint across the whole registered surface: no
-    CartesianProduct anywhere; BroadcastNestedLoopJoin only where a
-    1-row scalar side makes it linear (whitelist above). Streaming
-    drains are excluded (their fn executes the stream; the result is a
-    memory-sink scan with no join planning to lint)."""
-    offenders = {}
-    for name, q in QUERIES.items():
-        if name.startswith("stream_"):
-            continue
-        df = q.fn(spark, SF_ORACLE)
-        p = df._jdf.queryExecution().executedPlan().toString()
-        bad = []
-        if "CartesianProduct" in p:
-            bad.append("CartesianProduct")
-        if "BroadcastNestedLoopJoin" in p and name not in _SCALAR_BNLJ_OK:
-            bad.append("BroadcastNestedLoopJoin")
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"unexpected non-equi join plans: {offenders}"
-
-
 def test_gap_filled_hourly_single_scan_broadcast_fill(spark):
     # the rollup is checkpointed once (ExistingRDD) and feeds both the
     # bounds->calendar branch and the fill join; the joins broadcast

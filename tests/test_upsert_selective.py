@@ -204,33 +204,48 @@ def test_time_travel_reads_previous_version(spark, tmp_path):
         assert "not retained" in str(e)
 
 
-def test_schema_evolution_add_column(spark, tmp_path):
-    """evolve_schema: an update batch carrying a NEW column merges in;
-    carried-over rows backfill NULL; every file of the new version has
-    the evolved schema (no mergeSchema needed at read time)."""
-    path = str(tmp_path / "evo")
+def _typed_table(spark, path):
     base = spark.createDataFrame(
-        [("CVE-2020-1", 2020, "a"), ("CVE-2021-1", 2021, "b")],
-        ["cve_id", "published_year", "summary"])
+        [("CVE-2020-1", 2020, 1), ("CVE-2021-1", 2021, 2)],
+        "cve_id string, published_year int, score int")
     write_upsert_parquet(path, base, ["cve_id"],
                          partition_by=["published_year"])
-    upd = spark.createDataFrame(
-        [("CVE-2021-1", 2021, "b2", 9.8)],
-        ["cve_id", "published_year", "summary", "score_v4"])
-    write_upsert_parquet(path, upd, ["cve_id"],
-                         partition_by=["published_year"],
-                         evolve_schema=True)
-    out = spark.read.parquet(path)
-    assert set(out.columns) == {"cve_id", "published_year", "summary",
-                                "score_v4"}
-    got = {r.cve_id: (r.summary, r.score_v4) for r in out.collect()}
-    assert got == {"CVE-2020-1": ("a", None), "CVE-2021-1": ("b2", 9.8)}
-    # strict default still fails fast on mismatched schemas
-    import pytest
-    from pyspark.errors import AnalysisException
-    with pytest.raises(AnalysisException):
-        write_upsert_parquet(path, base, ["cve_id"],
+
+
+def _refused_before_staging(spark, path, batch):
+    from nvd2mysqlloader_spark.operators import table_io
+    published = os.readlink(path)
+    with pytest.raises(ValueError, match="differ from the table"):
+        write_upsert_parquet(path, batch, ["cve_id"],
                              partition_by=["published_year"])
+    assert os.readlink(path) == published
+    assert len(table_io.versions(path)) == 1
+    got = {r.cve_id: r.score for r in spark.read.parquet(path).collect()}
+    assert got == {"CVE-2020-1": 1, "CVE-2021-1": 2}
+
+
+def test_schema_evolution_add_column(spark, tmp_path):
+    """An update batch carrying a NEW column is refused by the
+    partition-selective upsert before anything is staged: the table
+    keeps its one schema and its published version."""
+    path = str(tmp_path / "evo")
+    _typed_table(spark, path)
+    _refused_before_staging(spark, path, spark.createDataFrame(
+        [("CVE-2021-1", 2021, 3, 9.8)],
+        "cve_id string, published_year int, score int, v4 double"))
+
+
+def test_selective_upsert_rejects_type_change_before_staging(spark,
+                                                             tmp_path):
+    """A batch whose column type differs from the table's (int table,
+    long batch) raises before staging: without the check it published
+    int32 carried partitions beside an int64 merged one, and every
+    later read of the table failed."""
+    path = str(tmp_path / "typed")
+    _typed_table(spark, path)
+    _refused_before_staging(spark, path, spark.createDataFrame(
+        [("CVE-2021-1", 2021, 3)],
+        "cve_id string, published_year int, score long"))
 
 
 def test_table_changes_between_versions(spark, tmp_path):
@@ -506,70 +521,6 @@ def test_interrupted_migration_is_repaired_not_deleted(spark, tmp_path):
     assert spark.read.parquet(path).count() == 3
 
 
-def test_delta_passthrough_falls_back_without_bindings(spark, tmp_path):
-    """format='delta' without delta-spark on the classpath warns and
-    runs the versioned-parquet emulation — same merged rows."""
-    import warnings
-
-    from nvd2mysqlloader_spark.operators.upsert import delta_available
-
-    if delta_available():          # environment-dependent: only the
-        pytest.skip("delta present: fallback path not reachable")
-    path = str(tmp_path / "t")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    df2 = spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"])
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        write_upsert_parquet(path, df1, ["k"], format="delta")
-        write_upsert_parquet(path, df2, ["k"], format="delta")
-    assert any("falling back" in str(c.message) for c in caught)
-    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
-
-    with pytest.raises(ValueError, match="unsupported"):
-        write_upsert_parquet(path, df2, ["k"], format="orc")
-
-
-def test_delta_strict_format_fails_fast_without_bindings(spark, tmp_path):
-    """strict_format=True: a deployment that REQUIRES the Delta layout
-    must fail at write time, not when a downstream format('delta') read
-    breaks far from the cause — and it must fail BEFORE writing
-    anything (no half-published non-Delta layout)."""
-    import os
-
-    from nvd2mysqlloader_spark.operators.upsert import delta_available
-
-    if delta_available():
-        pytest.skip("delta present: strict failure path not reachable")
-    path = str(tmp_path / "t_strict")
-    df = spark.createDataFrame([(1, "a")], ["k", "v"])
-    with pytest.raises(RuntimeError, match="strict_format"):
-        write_upsert_parquet(path, df, ["k"], format="delta",
-                             strict_format=True)
-    assert not os.path.exists(path)
-
-
-def test_delta_native_merge(spark, tmp_path):
-    """Native Delta MERGE path — import-gated: runs only where
-    delta-spark + the Delta jar are installed (skipped in this
-    container; the emulation above is the tested default)."""
-    pytest.importorskip("delta.tables")
-    from nvd2mysqlloader_spark.operators.upsert import write_upsert_delta
-
-    path = str(tmp_path / "dt")
-    df1 = spark.createDataFrame([(1, "a", 10), (2, "b", 10)],
-                                ["k", "v", "ord"])
-    df2 = spark.createDataFrame([(2, "B", 20), (2, "stale", 5),
-                                 (3, "c", 20)], ["k", "v", "ord"])
-    write_upsert_delta(path, df1, ["k"])
-    from nvd2mysqlloader_spark.operators.upsert import last_writer_wins
-    batch = last_writer_wins(df2, ["k"], ["ord"])
-    write_upsert_delta(path, batch, ["k"], order_col="ord")
-    got = {(r.k, r.v) for r in
-           spark.read.format("delta").load(path).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
-
-
 def test_delete_rows_partition_selective(spark, tmp_path):
     """write_delete_parquet: the MERGE family's DELETE arm (GDPR /
     takedown removal). Partition-selective: only partitions containing
@@ -741,6 +692,37 @@ def test_sized_for_write_picks_exchange_by_estimated_bytes(spark):
             .explainString(spark._jvm.org.apache.spark.sql.execution
                            .ExplainMode.fromString("extended"))
         assert "REBALANCE" in big or "RebalancePartitions" in big, big
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def test_sized_for_write_rebalances_between_half_and_full_advisory(
+        spark):
+    """The coalesce branch keeps a factor-of-two margin under the
+    advisory size (the estimate is not a bound): an output estimated
+    between half and the whole advisory partition takes the
+    rebalance, and one at no more than half still coalesces."""
+    from nvd2mysqlloader_spark.operators.upsert import _sized_for_write
+
+    df = spark.range(1000).selectExpr("id", "id * 2 as v")
+    est = int(df._jdf.queryExecution().optimizedPlan().stats()
+              .sizeInBytes())
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    mode = (spark._jvm.org.apache.spark.sql.execution.ExplainMode
+            .fromString("extended"))
+    prev = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, f"{est * 3 // 2}b")
+        plan = _sized_for_write(df)._jdf.queryExecution() \
+            .explainString(mode)
+        assert "REBALANCE" in plan or "RebalancePartitions" in plan, plan
+        spark.conf.set(key, f"{est * 2}b")
+        plan = _sized_for_write(df)._jdf.queryExecution() \
+            .explainString(mode)
+        assert "rebalance" not in plan.lower(), plan
     finally:
         if prev is None:
             spark.conf.unset(key)
