@@ -6,15 +6,19 @@ HTTP .meta → freshness gate → download zip → unzip → json.loads →
 row-at-a-time INSERT/REPLACE with per-row commits. Here:
 
   landing dir (pre-downloaded feed JSON + .meta sidecars)
-      │ parse_meta ─ anti-join vs update_history high-water-mark  (gate, #15/#16)
+      │ .meta sidecars vs update_history high-water mark,
+      │   read on the driver (no Spark job)                       (gate, #15/#16)
       │ read_feed(all fresh feeds at once) ─ explode ─ flatten    (#5,#6,#19-23)
       │ last_writer_wins dedup (modified/recent overlap years)    (#34)
-      │ merge_upsert into silver parquet  +  bronze raw copy      (#10,#11)
+      │ merge_upsert into silver parquet  +  bronze raw copy:     (#10,#11)
+      │   a withdrawn ('** REJECT **') winner is a delete
       └ append update_history audit rows                          (#9)
 
 One atomic write per table per run replaces ~6 MySQL round-trips per
-CVE. The download/unzip edge (network) stays a thin driver-side helper
-(``fetch.py``) exactly as the reference keeps it outside the data plane.
+CVE, and the tally before and after is the pinned versions' parquet
+footer row counts. The download/unzip edge (network) stays a thin
+driver-side helper (``fetch.py``) exactly as the reference keeps it
+outside the data plane.
 
 At scale: silver is partitioned by ``year(published)`` — the partition-
 pruning replacement for the reference's ``dates`` index (:400); feeds
@@ -30,37 +34,75 @@ import os
 import sys
 from urllib.parse import unquote
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from .operators import table_io
+from .operators.compaction import list_data_files
 from .operators.flatten import flatten_cve
 from .operators.upsert import last_writer_wins, write_upsert_parquet
 from .schemas import UPDATE_HISTORY_SCHEMA
 from .sources.cve_feed import explode_items, read_feed
-from .sources.meta_file import parse_meta
+from .sources.meta_file import read_meta
+
+# a .meta sidecar's row: update_history without the download stamp
+META_SCHEMA = T.StructType([f for f in UPDATE_HISTORY_SCHEMA.fields
+                            if f.name != "downloadedDate"])
+META_ARROW = to_arrow_schema(META_SCHEMA)
+# NVD withdraws a CVE by rewriting its summary with this prefix
+REJECT_PREFIX = "** REJECT **"
 
 
 def fresh_feeds(spark: SparkSession, landing: str, warehouse: str) -> DataFrame:
     """Feeds whose remote .meta is newer than the stored high-water
     mark — the incremental gate (nvd2mysqlloader.py:67-99). Missing
-    state ⇒ everything is fresh (the sentinel-date semantics, :89)."""
-    meta = parse_meta(spark, f"{landing}/*.meta")
-    if not os.path.exists(f"{warehouse}/update_history"):
-        return meta                  # no history yet: load everything
-    # deliberately NO blanket except here: a corrupt/unreadable
-    # update_history must raise, not silently degrade to "reload
-    # everything" — the idempotent upsert would make that safe but it
-    # masks real state corruption the operator needs to see (same
-    # genus as round 4's silent-except purge)
-    hist = spark.read.parquet(f"{warehouse}/update_history")
-    hwm = (hist.groupBy("download_name")
-           .agg(F.max_by("lastModifiedDate", "downloadedDate")
-                .alias("stored_lmd")))
-    return (meta.join(hwm, "download_name", "left")
-            .filter((F.col("stored_lmd").isNull())
-                    | (F.col("lastModifiedDate") > F.col("stored_lmd")))
-            .drop("stored_lmd"))
+    state ⇒ everything is fresh (the sentinel-date semantics, :89).
+
+    Runs on the driver, no Spark job: the sidecars are a few lines
+    each, and the high-water mark per feed is ``max_by(lastModifiedDate,
+    downloadedDate)`` over ``update_history`` read with pyarrow. A feed
+    is fresh when it has no mark or its ``lastModifiedDate`` is greater
+    as a string. Returns a local DataFrame of ``META_SCHEMA`` rows."""
+    meta = read_meta(landing)
+    hist = f"{warehouse}/update_history"
+    if os.path.exists(hist):
+        # deliberately NO blanket except here: a corrupt/unreadable
+        # update_history must raise, not silently degrade to "reload
+        # everything" — the idempotent upsert would make that safe but
+        # it masks real state corruption the operator needs to see
+        # (same genus as round 4's silent-except purge)
+        cols = pq.read_table(hist, columns=[
+            "download_name", "lastModifiedDate", "downloadedDate"]).to_pydict()
+        best: dict[str, tuple[str, str | None]] = {}
+        for name, lmd, dl in zip(cols["download_name"],
+                                 cols["lastModifiedDate"],
+                                 cols["downloadedDate"]):
+            if dl is not None and (name not in best or dl > best[name][0]):
+                best[name] = (dl, lmd)
+        stored = {name: lmd for name, (_dl, lmd) in best.items()}
+        meta = [m for m in meta if stored.get(m["download_name"]) is None
+                or (m["lastModifiedDate"] is not None
+                    and m["lastModifiedDate"] > stored[m["download_name"]])]
+    # from an Arrow table, not a row list: a LocalRelation, so neither
+    # collecting the names nor the audit append's scan runs a job for it
+    return spark.createDataFrame(pa.Table.from_pylist(meta, META_ARROW))
+
+
+def _withdrawn(summary: Column) -> Column:
+    """True for a summary NVD marks withdrawn; never null."""
+    return F.coalesce(summary.startswith(REJECT_PREFIX), F.lit(False))
+
+
+def _footer_rows(path: str) -> int:
+    """Rows of the table's published version, summed from its parquet
+    footers on the driver (no Spark job); 0 when unpublished."""
+    cur = table_io.current_version(path)
+    return sum(pq.read_metadata(f).num_rows
+               for f, _size in (list_data_files(cur) if cur else []))
 
 
 def run_ingest(spark: SparkSession, landing: str, warehouse: str,
@@ -70,7 +112,14 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
     delta report, nvd2mysqlloader.py:562-573): ``feeds`` loaded,
     ``rejected`` (the names of fresh feeds that did not parse — they
     get no audit row, so the next run retries them), ``cves`` in the
-    batch and the tally before and after.
+    batch, ``withdrawn`` (the batch's CVEs whose winning record NVD
+    withdrew: deleted from both tables, or never added) and the tally
+    before and after.
+
+    Each table gets one merge and one publish: a withdrawn record
+    that wins last-writer-wins is the merge's delete. The tally is the
+    published silver version's footer row count, which equals
+    ``count(distinct cve_id)`` because the merge keeps one row per key.
 
     ``maintain=True`` runs the table-maintenance pass after the load:
     small-file compaction of both warehouse tables (each incremental
@@ -87,74 +136,61 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
     Flipping the flag on an EXISTING warehouse only affects newly
     ingested batches — reload (fresh warehouse or bumped .meta marks)
     to re-extract old feeds."""
-    def tally(path: str) -> int:            # count(distinct cve_id), ref :494
-        if not os.path.exists(path):        # avoid noisy first-load probes
-            return 0
-        try:
-            return (spark.read.parquet(path)
-                    .select(F.count_distinct("cve_id")).first()[0])
-        except AnalysisException:           # an empty table: no schema
-            return 0
-
     silver_path = f"{warehouse}/nvd"
     bronze_path = f"{warehouse}/nvd_json"
     _check_bronze_layout(bronze_path)
-    before = tally(silver_path)
+    before = _footer_rows(silver_path)      # count(distinct cve_id), ref :494
 
-    # every exit path (empty batch, write failure, success) drops the
-    # cached blocks via the try/finally — a long-lived scheduler
-    # session must not accumulate pinned storage across runs
-    fresh = fresh_feeds(spark, landing, warehouse).cache()
-    items = None
+    fresh = fresh_feeds(spark, landing, warehouse)
+    names = [r.download_name for r in fresh.collect()]
+    if not names:
+        return {"feeds": 0, "rejected": [], "cves": 0, "withdrawn": 0,
+                "tally_before": before, "tally_after": before, "added": 0}
+    paths = [f"{landing}/{n}.json" for n in names]
+    # feeds that do not parse, observed on the scan that fills the
+    # cache below (PERMISSIVE mode turns each into one row with
+    # _corrupt_record set): no second parse, no extra job
+    parsed = Observation("ingest_feeds")
+    feed = (read_feed(spark, paths)
+            .withColumn("__file", F.input_file_name())
+            .observe(parsed, F.collect_set(F.when(
+                F.col("_corrupt_record").isNotNull(),
+                F.col("__file"))).alias("rejected")))
+    # cache the exploded items: silver and bronze both consume
+    # them, and multiLine JSON parsing is the most expensive stage.
+    # Repartition BY CVE ID first: a multiLine feed is one
+    # unsplittable file = one scan partition, so without this the
+    # largest feed's entire downstream (flatten, to_json, both
+    # dedup shuffles' map sides) runs in a single straggler task —
+    # bisected in scripts/stress_ingest_parallelism.py (ramped-25
+    # 58.2 s vs equal-25 10.0 s on identical bytes). Hashing on
+    # cve_id (not round-robin) makes the one exchange do double
+    # duty: it balances the skew AND already satisfies both
+    # last_writer_wins windows' partitionBy(cve_id) distribution,
+    # so Catalyst inserts no further exchange for the dedups.
+    items = (explode_items(feed)
+             .repartition(spark.sparkContext.defaultParallelism,
+                          F.col("cve.cve.CVE_data_meta.ID"))
+             .cache())
+    # every exit path (write failure, success) drops the cached blocks
+    # via the try/finally — a long-lived scheduler session must not
+    # accumulate pinned storage across runs
     try:
-        names = [r.download_name
-                 for r in fresh.select("download_name").collect()]
-        if not names:
-            return {"feeds": 0, "rejected": [], "cves": 0,
-                    "tally_before": before, "tally_after": before, "added": 0}
-
-        paths = [f"{landing}/{n}.json" for n in names]
-        # feeds that do not parse, observed on the scan that fills the
-        # cache below (PERMISSIVE mode turns each into one row with
-        # _corrupt_record set): no second parse, no extra job
-        parsed = Observation("ingest_feeds")
-        feed = (read_feed(spark, paths)
-                .withColumn("__file", F.input_file_name())
-                .observe(parsed, F.collect_set(F.when(
-                    F.col("_corrupt_record").isNotNull(),
-                    F.col("__file"))).alias("rejected")))
-        # cache the exploded items: silver and bronze both consume
-        # them, and multiLine JSON parsing is the most expensive stage.
-        # Repartition BY CVE ID first: a multiLine feed is one
-        # unsplittable file = one scan partition, so without this the
-        # largest feed's entire downstream (flatten, to_json, both
-        # dedup shuffles' map sides) runs in a single straggler task —
-        # bisected in scripts/stress_ingest_parallelism.py (ramped-25
-        # 58.2 s vs equal-25 10.0 s on identical bytes). Hashing on
-        # cve_id (not round-robin) makes the one exchange do double
-        # duty: it balances the skew AND already satisfies both
-        # last_writer_wins windows' partitionBy(cve_id) distribution,
-        # so Catalyst inserts no further exchange for the dedups.
-        items = (explode_items(feed)
-                 .repartition(spark.sparkContext.defaultParallelism,
-                              F.col("cve.cve.CVE_data_meta.ID"))
-                 .cache())
         return _ingest_batch(spark, warehouse, fresh, items, names, parsed,
-                             silver_path, bronze_path, before, tally,
+                             silver_path, bronze_path, before,
                              maintain, include_children_cpes)
     finally:
-        fresh.unpersist()
-        if items is not None:
-            items.unpersist()
+        items.unpersist()
 
 
 def _ingest_batch(spark, warehouse, fresh, items, names, parsed,
-                  silver_path, bronze_path, before, tally, maintain,
+                  silver_path, bronze_path, before, maintain,
                   include_children_cpes=False):
     # modified/recent feeds overlap yearly ones by design — dedup the
     # batch last-writer-wins on (lastModifiedDate, cve_id) before MERGE.
     # published_year partitions the silver table: Catalyst partition
-    # pruning replaces the reference's `dates` index (:400)
+    # pruning replaces the reference's `dates` index (:400). A winner
+    # NVD withdrew carries __withdrawn: the merge deletes its key
     silver = last_writer_wins(
         flatten_cve(items, include_children_cpes=include_children_cpes),
         ["cve_id"], ["last_modified_datetime"]
@@ -166,14 +202,20 @@ def _ingest_batch(spark, warehouse, fresh, items, names, parsed,
         # and one undated CVE would abort the whole batch
         F.coalesce(F.substring("published_datetime", 1, 4)
                    .try_cast("int"),
-                   F.lit(0)))
+                   F.lit(0))
+    ).withColumn("__withdrawn", _withdrawn(F.col("summary")))
     # bronze dedups independently on the raw record's own
     # lastModifiedDate — joining back to silver would recompute the
-    # whole flatten pipeline a second time
+    # whole flatten pipeline a second time. Its flag is the silver
+    # flag over the raw description_data (flatten's summary
+    # expression), so both tables delete the same winners
     bronze_src = items.select(
         F.col("cve.cve.CVE_data_meta.ID").alias("cve_id"),
         F.to_json(F.col("cve")).alias("cve_item"),
-        F.col("cve.lastModifiedDate").alias("__lmd"))
+        F.col("cve.lastModifiedDate").alias("__lmd"),
+        _withdrawn(F.array_join(F.transform(
+            F.col("cve.cve.description.description_data"),
+            lambda x: x["value"]), "")).alias("__withdrawn"))
     # bronze partitions by the CVE id's own year ("CVE-2024-0001" →
     # 2024 — the NVD yearly-feed partitioning itself): derived from
     # the immutable key, so an updated record can never migrate
@@ -189,15 +231,18 @@ def _ingest_batch(spark, warehouse, fresh, items, names, parsed,
     # count() action re-running the whole flatten (ref's cvecount loop,
     # :448-453, for free)
     obs = Observation("ingest_metrics")
-    silver = silver.observe(obs, F.count(F.lit(1)).alias("n_cves"))
+    silver = silver.observe(obs, F.count(F.lit(1)).alias("n_cves"),
+                            F.count_if("__withdrawn").alias("withdrawn"))
     write_upsert_parquet(silver_path, silver, ["cve_id"],
-                         partition_by=["published_year"])
-    n_cves = obs.get["n_cves"]
+                         partition_by=["published_year"],
+                         delete_flag="__withdrawn")
+    n_cves, withdrawn = obs.get["n_cves"], obs.get["withdrawn"]
     # the silver write filled the items cache: the scan's observation
     rejected = sorted(os.path.basename(unquote(f))[:-len(".json")]
                       for f in parsed.get["rejected"])
     write_upsert_parquet(bronze_path, bronze, ["cve_id"],
-                         partition_by=["feed_year"])
+                         partition_by=["feed_year"],
+                         delete_flag="__withdrawn")
 
     # audit append — one row per feed that parsed (ref :441-447). A
     # rejected feed gets none, so the high-water mark stays where it
@@ -211,8 +256,9 @@ def _ingest_batch(spark, warehouse, fresh, items, names, parsed,
     audit.write.mode("append").parquet(f"{warehouse}/update_history")
 
     stats = {"feeds": len(names) - len(rejected),
-             "rejected": rejected, "cves": n_cves,
-             "tally_before": before, "tally_after": tally(silver_path)}
+             "rejected": rejected, "cves": n_cves, "withdrawn": withdrawn,
+             "tally_before": before,
+             "tally_after": _footer_rows(silver_path)}
     stats["added"] = stats["tally_after"] - before
     if maintain:
         from .operators.compaction import compact_parquet
@@ -231,10 +277,6 @@ def _check_bronze_layout(bronze_path: str) -> None:
     one parquet footer when no ``feed_year=`` dir exists (a version
     whose every row was purged is one schema-only file that still
     carries the column), no Spark job."""
-    import pyarrow.parquet as pq
-
-    from .operators import table_io
-
     cur = table_io.current_version(bronze_path)
     names = sorted(n for n in os.listdir(cur) if n[0] not in "_.") \
         if cur else []
@@ -249,15 +291,17 @@ def _check_bronze_layout(bronze_path: str) -> None:
 
 
 def purge_rejected(spark: SparkSession, warehouse: str) -> int:
-    """Remove withdrawn CVEs from the warehouse — NVD marks them with
-    a summary beginning ``** REJECT **``; the reference loads and keeps
-    them forever (no delete path exists in its REPLACE-only loop,
-    nvd2mysqlloader.py:448-486). One partition-pruned scan finds the
-    rejected ids; ``write_delete_parquet`` removes them from silver
-    (partition-selective on published_year) and bronze (partition-
-    selective on feed_year — the CVE id's own year) with atomic
-    snapshot publishes: a one-CVE purge rewrites one partition of
-    each table, never the whole table.
+    """Repair a warehouse that holds withdrawn CVEs — NVD marks them
+    with a summary beginning ``** REJECT **``; the reference loads and
+    keeps them forever (no delete path exists in its REPLACE-only
+    loop, nvd2mysqlloader.py:448-486). ``run_ingest`` deletes a
+    withdrawn record in the merge that brings it, so only a warehouse
+    loaded by an earlier build (or written around ``run_ingest``) has
+    any to find. The scan filters on ``summary``, not a partition
+    column, so it reads all of silver; ``write_delete_parquet`` then
+    removes the ids from silver (partition-selective on
+    published_year) and bronze (partition-selective on feed_year — the
+    CVE id's own year) with atomic snapshot publishes.
     Returns the number of CVEs purged. Idempotent: a second run finds
     nothing and publishes nothing."""
     from .operators._lineage import cut_lineage
@@ -272,7 +316,7 @@ def purge_rejected(spark: SparkSession, warehouse: str) -> int:
     # first publish
     rejected = cut_lineage(
         spark.read.parquet(silver_path)
-        .filter(F.col("summary").startswith("** REJECT **"))
+        .filter(F.col("summary").startswith(REJECT_PREFIX))
         .select("cve_id"))
     if rejected.isEmpty():
         return 0
@@ -297,8 +341,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="extract depth-2 children CPEs the reference "
                          "drops (match-and-exceed; default is parity)")
     ap.add_argument("--purge-rejected", action="store_true",
-                    help="after the load, delete withdrawn "
-                         "('** REJECT **') CVEs from silver and bronze")
+                    help="after the load, scan all of silver for withdrawn "
+                         "('** REJECT **') CVEs an earlier build loaded and "
+                         "delete them from silver and bronze (the load "
+                         "itself never keeps one)")
     args = ap.parse_args(argv)
 
     from .session import get_spark
@@ -309,7 +355,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.purge_rejected:
         n_purged = purge_rejected(spark, args.warehouse)
         print(f"rejected CVEs purged: {n_purged}")
-    print(f"feeds loaded: {stats['feeds']}  cves in batch: {stats['cves']}")
+    print(f"feeds loaded: {stats['feeds']}  cves in batch: {stats['cves']}"
+          f"  withdrawn: {stats['withdrawn']}")
     print(f"tally before: {stats['tally_before']}  after: {stats['tally_after']}"
           f"  added: {stats['added']}")
     return 0

@@ -58,7 +58,8 @@ def last_writer_wins(df: DataFrame, keys: Sequence[str],
 
 def merge_upsert(target: DataFrame, updates: DataFrame,
                  keys: Sequence[str],
-                 order_col: str | None = None) -> DataFrame:
+                 order_col: str | None = None,
+                 delete_flag: str | None = None) -> DataFrame:
     """MERGE emulation: matched → take update row, not-matched → keep
     target row; updates themselves deduped upstream.
 
@@ -66,6 +67,12 @@ def merge_upsert(target: DataFrame, updates: DataFrame,
     THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` (SURVEY.md §2 #10).
     Both sides must carry the same columns: mismatched schemas fail
     fast.
+
+    ``delete_flag``: the ``WHEN MATCHED AND <flag> THEN DELETE`` arm —
+    the name of a boolean column of ``updates`` (not of ``target``). An
+    update row whose flag is true removes its key from the target and
+    is not written itself; a null flag is false. The column is not
+    part of the result.
 
     ``order_col``: CONDITIONAL update — on a key match, keep whichever
     row has the greater ``order_col`` (the update wins ties). Needed
@@ -75,12 +82,24 @@ def merge_upsert(target: DataFrame, updates: DataFrame,
     key-partitioned exchange (ranking window instead of anti-join).
     """
     if order_col is not None:
+        # the flag rides through the ranking (null on target rows), so
+        # a stale flagged update loses to a fresher target row
         tagged = (target.withColumn("__src", F.lit(0))
-                  .unionByName(updates.withColumn("__src", F.lit(1))))
-        return last_writer_wins(tagged, keys,
-                                [order_col, "__src"]).drop("__src")
+                  .unionByName(updates.withColumn("__src", F.lit(1)),
+                               allowMissingColumns=delete_flag is not None))
+        return _live(last_writer_wins(tagged, keys, [order_col, "__src"])
+                     .drop("__src"), delete_flag)
     keep = target.join(updates.select(*keys), on=list(keys), how="left_anti")
-    return keep.unionByName(updates)
+    return keep.unionByName(_live(updates, delete_flag))
+
+
+def _live(df: DataFrame, delete_flag: str | None) -> DataFrame:
+    """``df`` without the rows ``delete_flag`` marks, and without the
+    flag column."""
+    if delete_flag is None:
+        return df
+    return (df.filter(~F.coalesce(F.col(delete_flag), F.lit(False)))
+            .drop(delete_flag))
 
 
 def _sized_for_write(df: DataFrame) -> DataFrame:
@@ -120,7 +139,8 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
 def write_upsert_parquet(target_path: str, updates: DataFrame,
                          keys: Sequence[str],
                          partition_by: Sequence[str] | None = None,
-                         order_col: str | None = None) -> None:
+                         order_col: str | None = None,
+                         delete_flag: str | None = None) -> None:
     """Apply ``merge_upsert`` against a parquet table on disk, with
     atomic visibility.
 
@@ -148,6 +168,11 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
     (published year of a CVE), so an updated key cannot migrate
     between partitions.
 
+    ``delete_flag`` is ``merge_upsert``'s delete arm: a flagged update
+    row removes its key and is not written, in the same publish. Its
+    partition still counts as affected, and a partition the deletes
+    empty is left out of the new version.
+
     A partition-selective upsert whose batch differs from the table in
     a data column's name or type raises ValueError before staging.
     """
@@ -163,8 +188,9 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
     vdir = table_io.next_version_dir(target_path)
 
     if partition_by:
-        merged = updates
+        merged = _live(updates, delete_flag)
         target_all = None
+        affected_dirs: set[str] = set()
         if cur is not None:
             try:
                 # version-pinned read: the merge job executes while a
@@ -185,20 +211,27 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
             def cols(df):
                 return sorted((f.name, f.dataType.simpleString())
                               for f in df.schema.fields
-                              if f.name not in partition_by)
+                              if f.name not in (*partition_by, delete_flag))
             if cols(target_all) != cols(updates):
                 raise ValueError(
                     f"upsert into {target_path}: the batch's columns "
                     f"{cols(updates)} differ from the table's "
                     f"{cols(target_all)}")
-            affected = [tuple(r) for r in
-                        updates.select(*partition_by)
-                        .distinct().collect()]
-            if not affected:        # empty batch against an existing
+            # each value tuple with its string form as the partitioned
+            # write renders it (Spark's own cast, session time zone)
+            n = len(partition_by)
+            rows = (updates.select(*partition_by).distinct()
+                    .select(*partition_by,
+                            *[F.col(c).cast("string") for c in partition_by])
+                    .collect())
+            if not rows:            # empty batch against an existing
                 return              # table: nothing to merge or publish
+            affected = [tuple(r)[:n] for r in rows]
+            affected_dirs = {_partition_dir(spark, partition_by, tuple(r)[n:])
+                             for r in rows}
             merged = merge_upsert(
                 target_all.filter(_affected_pred(partition_by, affected)),
-                updates, keys, order_col=order_col)
+                updates, keys, order_col=order_col, delete_flag=delete_flag)
         # cluster rows by the partition key before the partitioned
         # write: one file per partition instead of (shuffle-partitions
         # × partitions) tiny files — the small-file explosion is a real
@@ -211,18 +244,20 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
         if cur is not None:
             # carry untouched partitions into the new version by
             # hardlink: same inodes, zero data movement. "Touched" is
-            # whatever directories the write itself produced — reusing
-            # Spark's own partition-path escaping (nulls, special
-            # chars) instead of reconstructing dir names by hand.
+            # whatever directories the write itself produced, plus the
+            # affected ones it did not (the deletes emptied them: they
+            # must stay gone, not resurrect via hardlink)
             written = set(table_io.leaf_partition_dirs(vdir))
             for rel in table_io.leaf_partition_dirs(cur):
-                if rel not in written:
+                if rel not in written and rel not in affected_dirs:
                     table_io.link_tree(os.path.join(cur, rel),
                                        os.path.join(vdir, rel))
+        if delete_flag is not None:
+            _ensure_readable(spark, vdir, merged)
         table_io.publish_version(target_path, vdir)
         return
 
-    merged = updates
+    merged = _live(updates, delete_flag)
     if cur is not None:
         try:
             target = spark.read.parquet(cur)   # version-pinned (see above)
@@ -230,11 +265,24 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
             target = None
         if target is not None:
             merged = merge_upsert(target, updates, keys,
-                                  order_col=order_col)
+                                  order_col=order_col,
+                                  delete_flag=delete_flag)
     # size-conditional output exchange before the unpartitioned write
     # (guide §6, VERDICT r12 ask #5) — see _sized_for_write
     _sized_for_write(merged).write.mode("overwrite").parquet(vdir)
     table_io.publish_version(target_path, vdir)
+
+
+def _partition_dir(spark, partition_by: Sequence[str],
+                   strs: tuple) -> str:
+    """Relative leaf dir a partitioned write gives the value tuple
+    whose string forms are ``strs`` (Spark's own escaping; a null or
+    empty value is ``__HIVE_DEFAULT_PARTITION__``)."""
+    import os
+    utils = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+             .ExternalCatalogUtils)
+    return os.path.join(*[utils.getPartitionPathString(c, v)
+                          for c, v in zip(partition_by, strs)])
 
 
 def _affected_pred(partition_by: Sequence[str],

@@ -4,8 +4,8 @@ Tuned for the test harness (local[N], single JVM) while keeping every
 setting cluster-valid: AQE on (runtime re-planning, skew-join splitting,
 partition coalescing), shuffle partitions sized to cores locally (on a
 real cluster AQE coalesces from a higher initial number), UTC session
-timezone so timestamp semantics match the DuckDB oracle, and Arrow
-enabled for the Pandas-UDF slow path.
+timezone so timestamp semantics match the DuckDB oracle, Arrow
+enabled for the Pandas-UDF slow path, and zstd parquet files.
 """
 
 from __future__ import annotations
@@ -50,6 +50,10 @@ def get_spark(app_name: str = "nvd2mysqlloader_spark",
         # are noise there, not signal
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # zstd, not the snappy default: smaller files, and every table
+        # keeps its previous version on disk beside the current one
+        # (table_io.publish_version), so each byte is paid for twice
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

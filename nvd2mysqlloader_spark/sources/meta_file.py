@@ -9,50 +9,44 @@ docstring example ``64310FE…`` would lose its leading 6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import glob
+import os
 
 META_KEYS = ("lastModifiedDate", "size", "zipSize", "gzSize", "sha256")
+_SIZE_KEYS = ("size", "zipSize", "gzSize")
 
 
 def parse_meta_text(text: str) -> dict[str, str]:
-    """Pure-Python twin of :func:`parse_meta` for task-side use (the
-    nvdfeed custom data source reads the sidecar inside its file
-    task): value after the FIRST colon, CR stripped — same semantics,
-    one file's worth."""
+    """One sidecar's ``key -> value``: value after the FIRST colon, CR
+    stripped; the first line naming a key wins."""
     out: dict[str, str] = {}
     for line in text.splitlines():
         line = line.rstrip("\r")
         if ":" in line:
             k, v = line.split(":", 1)
             if k:
-                out[k] = v
+                out.setdefault(k, v)
     return out
 
 
-def parse_meta(spark: SparkSession, path: str) -> DataFrame:
-    """Read ``*.meta`` files (glob ok) → one row per file:
-    (download_name, lastModifiedDate, size, zipSize, gzSize, sha256).
-
-    ``download_name`` is the file stem, mirroring the reference's feed
-    naming (nvdcve-1.1-<year>); sizes cast to long.
-    """
-    lines = (spark.read.text(path)
-             .withColumn("file", F.input_file_name())
-             .withColumn("value", F.regexp_replace("value", "\r$", "")))
-    kv = lines.select(
-        F.regexp_extract("file", r"([^/]+)\.meta$", 1).alias("download_name"),
-        F.regexp_extract("value", r"^([^:]+):", 1).alias("key"),
-        F.regexp_extract("value", r"^[^:]+:(.*)$", 1).alias("val"),
-    ).filter(F.col("key") != "")
-    pivoted = (kv.groupBy("download_name")
-               .pivot("key", list(META_KEYS))
-               .agg(F.first("val")))
-    return pivoted.select(
-        "download_name",
-        F.col("lastModifiedDate"),
-        F.col("size").cast("long").alias("size"),
-        F.col("zipSize").cast("long").alias("zipSize"),
-        F.col("gzSize").cast("long").alias("gzSize"),
-        F.col("sha256"),
-    )
+def read_meta(landing: str) -> list[dict]:
+    """Every ``*.meta`` sidecar in ``landing`` (hidden ``.``/``_``
+    files skipped, as a Spark file scan skips them) → one dict per
+    file, sorted by name: ``download_name`` (the file stem, mirroring
+    the reference's feed naming nvdcve-1.1-<year>) plus ``META_KEYS``,
+    a missing key ``None`` and the sizes as ints. Driver-side: a
+    refresh's gate reads a few dozen short files."""
+    out = []
+    for path in sorted(glob.glob(os.path.join(glob.escape(landing),
+                                              "*.meta"))):
+        name = os.path.basename(path)
+        if name[0] in "._":
+            continue
+        with open(path, encoding="utf-8") as fh:
+            kv = parse_meta_text(fh.read())
+        row = {"download_name": name[:-len(".meta")]}
+        for k in META_KEYS:
+            v = kv.get(k)
+            row[k] = int(v) if v is not None and k in _SIZE_KEYS else v
+        out.append(row)
+    return out

@@ -14,7 +14,9 @@ plus the delete/maintenance paths it lacks):
    batch: multiLine JSON scan → explode → flatten (zero row-UDFs) →
    last-writer-wins dedup → MERGE into silver (partitioned by
    published_year) + bronze (partitioned by feed_year) + audit
-   append. Tally parity asserted: tally_after == total unique CVEs.
+   append. The planted '** REJECT **' rows (1/50 of one feed) are the
+   merge's deletes: tally_after == total unique CVEs − rejects, and
+   neither table holds one.
 2. **incremental no-op** — same landing dir, unchanged .meta marks:
    the high-water-mark gate (ingest.fresh_feeds) must load ZERO
    feeds; this is the every-2-hours cron case (reference README) and
@@ -22,8 +24,9 @@ plus the delete/maintenance paths it lacks):
 3. **incremental delta** — ONE feed's .meta is bumped and its file
    regrown by +2,000 CVEs: exactly one feed re-ingests; the merge
    touches only the partitions the delta lands in.
-4. **purge_rejected** — the planted '** REJECT **' rows (1/50 of one
-   feed) are deleted partition-selectively from silver+bronze.
+4. **purge_rejected** — the repair for warehouses an earlier build
+   loaded: it scans all of silver, finds nothing here and publishes
+   nothing.
 5. **maintenance** — compact_parquet over both tables; files per
    partition before/after recorded (micro-append accretion is the
    shape streaming gates produce; the cold load here writes few
@@ -117,16 +120,24 @@ def main() -> None:
         spark = get_spark("stress_full_corpus")
         spark.range(1000).selectExpr("sum(id)").collect()   # warm JVM
 
-        # 1. cold load
+        # 1. cold load; the planted rejects (1/REJECT_EVERY of feed
+        # 2002) are withdrawn records, deleted by the load's merge
+        rejects = -(-counts[2002] // REJECT_EVERY)
         t0 = time.perf_counter()
         stats = run_ingest(spark, landing, wh)
         cold = time.perf_counter() - t0
         assert stats["feeds"] == len(counts), stats
         assert stats["cves"] == n_total, stats
-        assert stats["tally_after"] == n_total, stats   # tally parity
+        assert stats["withdrawn"] == rejects, (stats, rejects)
+        assert stats["tally_after"] == n_total - rejects, stats  # parity
+        for table, col in (("nvd", "summary"), ("nvd_json", "cve_item")):
+            left = (spark.read.parquet(f"{wh}/{table}")
+                    .filter(F.col(col).contains("** REJECT **")).count())
+            assert left == 0, (table, left)
         report["cold_ingest_sec"] = round(cold, 1)
         report["cold_cves_per_sec"] = round(n_total / cold)
-        report["tally_parity"] = stats["tally_after"] == n_total
+        report["tally_parity"] = stats["tally_after"] == n_total - rejects
+        report["withdrawn"] = stats["withdrawn"]
 
         # 2. incremental no-op (high-water-mark gate)
         t0 = time.perf_counter()
@@ -147,16 +158,15 @@ def main() -> None:
         report["delta_ingest_sec"] = round(delta, 1)
         report["delta_added"] = stats["added"]
 
-        # 4. purge the planted rejects (1/REJECT_EVERY of feed 2002)
-        expected_rejects = -(-counts[2002] // REJECT_EVERY)
+        # 4. the repair purge: the load kept no reject, so it finds none
         t0 = time.perf_counter()
         purged = purge_rejected(spark, wh)
         report["purge_sec"] = round(time.perf_counter() - t0, 1)
         report["purged"] = purged
-        assert purged == expected_rejects, (purged, expected_rejects)
+        assert purged == 0, purged
         tally = (spark.read.parquet(f"{wh}/nvd")
                  .select(F.count_distinct("cve_id")).first()[0])
-        assert tally == n_total + DELTA_EXTRA - purged, tally
+        assert tally == n_total + DELTA_EXTRA - rejects, tally
         report["final_tally"] = tally
 
         # 5. maintenance: files-per-partition before/after compaction

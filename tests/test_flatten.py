@@ -17,7 +17,7 @@ from nvd2mysqlloader_spark.operators.flatten import (extract_cve2cpe,
 from nvd2mysqlloader_spark.operators.upsert import (last_writer_wins,
                                                     merge_upsert)
 from nvd2mysqlloader_spark.sources.cve_feed import explode_items, read_feed
-from nvd2mysqlloader_spark.sources.meta_file import parse_meta
+from nvd2mysqlloader_spark.sources.meta_file import read_meta
 
 DATA = os.path.join(os.path.dirname(__file__), "data")
 
@@ -128,15 +128,14 @@ def test_upsert_idempotent(spark):
             and twice.exceptAll(once).count() == 0)
 
 
-def test_meta_parse(spark):
-    meta = parse_meta(spark, f"{DATA}/*.meta").orderBy("download_name")
-    rows = meta.collect()
-    assert [r.download_name for r in rows] == ["nvdcve-1.1-2024", "nvdcve-1.1-modified"]
+def test_meta_parse():
+    rows = read_meta(DATA)
+    assert [r["download_name"] for r in rows] == ["nvdcve-1.1-2024", "nvdcve-1.1-modified"]
     r = rows[0]
     # leading '6' preserved — the reference's lstrip('sha256:') bug is NOT replicated
-    assert r.sha256.startswith("64310FE")
-    assert (r.size, r.zipSize, r.gzSize) == (32169411, 1840270, 1840126)
-    assert r.lastModifiedDate == "2024-06-01T03:00:00-04:00"
+    assert r["sha256"].startswith("64310FE")
+    assert (r["size"], r["zipSize"], r["gzSize"]) == (32169411, 1840270, 1840126)
+    assert r["lastModifiedDate"] == "2024-06-01T03:00:00-04:00"
 
 
 def test_cvss_v3_extension(silver):

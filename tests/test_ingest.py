@@ -221,47 +221,109 @@ def test_corrupt_update_history_raises_not_full_reload(spark, warehouse,
     assert fresh.count() == 2
 
 
+def _item(cve_id, summary, published, modified):
+    return {"cve": {"CVE_data_meta": {"ID": cve_id},
+                    "description": {"description_data": [
+                        {"lang": "en", "value": summary}]}},
+            "publishedDate": published, "lastModifiedDate": modified}
+
+
+def _land(landing, name, items, meta_stamp):
+    import json
+    (landing / f"{name}.json").write_text(json.dumps({"CVE_Items": items}))
+    (landing / f"{name}.meta").write_text(
+        f"lastModifiedDate:{meta_stamp}\r\nsha256:ab\r\n")
+
+
 def test_purge_rejected_removes_from_silver_and_bronze(spark, tmp_path):
     """NVD withdraws CVEs with a '** REJECT **' summary; the reference
-    keeps them forever (REPLACE-only, no delete path). purge_rejected
-    removes them from BOTH warehouse tables via the versioned delete
-    (silver partition-selective), idempotently."""
-    import json
-
+    keeps them forever (REPLACE-only, no delete path). A withdrawn
+    record in a feed never lands in either table; purge_rejected
+    repairs a silver that holds one (as an earlier build left it),
+    removing it from BOTH tables via the versioned delete, and is
+    idempotent."""
     from nvd2mysqlloader_spark.ingest import purge_rejected
+    from nvd2mysqlloader_spark.operators.upsert import write_upsert_parquet
 
     landing = tmp_path / "landing"
     landing.mkdir()
-
-    def item(cve_id, summary, year):
-        return {"cve": {"CVE_data_meta": {"ID": cve_id},
-                        "description": {"description_data": [
-                            {"lang": "en", "value": summary}]}},
-                "publishedDate": f"{year}-01-02T00:00Z",
-                "lastModifiedDate": f"{year}-06-01T00:00Z"}
-
-    feed = {"CVE_Items": [
-        item("CVE-2020-0001", "real bug.", 2020),
-        item("CVE-2020-0002",
-             "** REJECT ** DO NOT USE THIS CANDIDATE NUMBER.", 2020),
-        item("CVE-2021-0001", "another real bug.", 2021),
-    ]}
-    (landing / "nvdcve-1.1-2020.json").write_text(json.dumps(feed))
-    (landing / "nvdcve-1.1-2020.meta").write_text(
-        "lastModifiedDate:2021-06-01T00:00:00-04:00\r\nsha256:ab\r\n")
+    _land(landing, "nvdcve-1.1-2020", [
+        _item("CVE-2020-0001", "real bug.", "2020-01-02T00:00Z",
+              "2020-06-01T00:00Z"),
+        _item("CVE-2020-0002",
+              "** REJECT ** DO NOT USE THIS CANDIDATE NUMBER.",
+              "2020-01-02T00:00Z", "2020-06-01T00:00Z"),
+        _item("CVE-2021-0001", "another real bug.", "2021-01-02T00:00Z",
+              "2021-06-01T00:00Z"),
+    ], "2021-06-01T00:00:00-04:00")
 
     wh = str(tmp_path / "wh")
-    run_ingest(spark, str(landing), wh)
+
+    def ids(table):
+        return {r.cve_id for r in
+                spark.read.parquet(f"{wh}/{table}").collect()}
+
+    stats = run_ingest(spark, str(landing), wh)
+    assert stats["withdrawn"] == 1 and stats["tally_after"] == 2
+    assert ids("nvd") == ids("nvd_json") == {"CVE-2020-0001",
+                                             "CVE-2021-0001"}
+
+    # plant a withdrawn row the way an earlier build loaded one: the
+    # upsert without its delete arm
+    planted = (spark.read.parquet(f"{wh}/nvd")
+               .filter(F.col("cve_id") == "CVE-2020-0001")
+               .withColumn("summary", F.lit("** REJECT ** withdrawn.")))
+    write_upsert_parquet(f"{wh}/nvd", planted, ["cve_id"],
+                         partition_by=["published_year"])
     assert purge_rejected(spark, wh) == 1
-    silver = {r.cve_id for r in
-              spark.read.parquet(f"{wh}/nvd").collect()}
-    bronze = {r.cve_id for r in
-              spark.read.parquet(f"{wh}/nvd_json").collect()}
-    assert silver == bronze == {"CVE-2020-0001", "CVE-2021-0001"}
+    assert ids("nvd") == ids("nvd_json") == {"CVE-2021-0001"}
     # idempotent: second run finds nothing
     assert purge_rejected(spark, wh) == 0
     # no warehouse at all: 0, no crash
     assert purge_rejected(spark, str(tmp_path / "none")) == 0
+
+
+def test_refresh_withdrawing_a_loaded_cve_deletes_it_in_one_publish(
+        spark, tmp_path):
+    """A refresh whose feed withdraws a loaded CVE removes it from
+    silver and bronze in exactly one new version of each; the returned
+    tallies are count(distinct cve_id) of silver before and after, and
+    a purge afterwards finds nothing and publishes nothing."""
+    from nvd2mysqlloader_spark.ingest import purge_rejected
+    from nvd2mysqlloader_spark.operators import table_io
+
+    landing = tmp_path / "landing"
+    shutil.copytree(DATA, landing)
+    wh = str(tmp_path / "wh")
+    run_ingest(spark, str(landing), wh)
+    tables = (f"{wh}/nvd", f"{wh}/nvd_json")
+
+    def state():
+        return {t: table_io.versions(t)[-1][0] for t in tables}
+
+    def tally():
+        return (spark.read.parquet(f"{wh}/nvd")
+                .select(F.count_distinct("cve_id")).first()[0])
+
+    v0, n0 = state(), tally()
+    _land(landing, "nvdcve-1.1-modified", [
+        _item("CVE-2024-0003", "** REJECT ** DO NOT USE THIS CANDIDATE "
+              "NUMBER.", "2024-03-03T00:00Z", "2024-08-01T00:00Z"),
+    ], "2024-08-01T03:00:00-04:00")
+    stats = run_ingest(spark, str(landing), wh)
+    v1 = state()
+    assert {t: v1[t] - v0[t] for t in tables} == {t: 1 for t in tables}
+    assert (stats["tally_before"], stats["tally_after"]) == (n0, tally())
+    assert (stats["tally_after"], stats["added"]) == (n0 - 1, -1)
+    assert stats["withdrawn"] == 1 and stats["cves"] == 1
+    for t in tables:
+        got = {r.cve_id for r in spark.read.parquet(t).collect()}
+        assert "CVE-2024-0003" not in got and len(got) == n0 - 1, t
+
+    current = {t: table_io.current_version(t) for t in tables}
+    assert purge_rejected(spark, wh) == 0
+    assert {t: table_io.current_version(t) for t in tables} == current
+    assert state() == v1
 
 
 def test_corrupt_feed_is_rejected_and_retried(spark, tmp_path):

@@ -133,32 +133,37 @@ def test_guess_history_candidates_and_audit(spark, warehouse):
 def test_views_survive_a_publish(spark, tmp_path):
     """Views read the published versions (``table_io.read_version``),
     so a query planned before a publish still runs after it, over the
-    version it was planned on: the tally planned before a purge
-    returns the pre-purge count instead of failing on files the purge
-    replaced."""
+    version it was planned on: the tally planned before a refresh that
+    withdraws a CVE returns the earlier count instead of failing on
+    files the refresh replaced."""
     import json
 
-    from nvd2mysqlloader_spark.ingest import purge_rejected
-
-    def item(cve_id, summary):
+    def item(cve_id, summary, modified):
         return {"cve": {"CVE_data_meta": {"ID": cve_id},
                         "description": {"description_data": [
                             {"lang": "en", "value": summary}]}},
                 "publishedDate": "2020-01-02T00:00Z",
-                "lastModifiedDate": "2020-06-01T00:00Z"}
+                "lastModifiedDate": modified}
+
+    def land(items, meta_stamp):
+        (landing / "nvdcve-1.1-2020.json").write_text(
+            json.dumps({"CVE_Items": items}))
+        (landing / "nvdcve-1.1-2020.meta").write_text(
+            f"lastModifiedDate:{meta_stamp}\r\nsha256:ab\r\n")
 
     landing = tmp_path / "landing"
     landing.mkdir()
-    (landing / "nvdcve-1.1-2020.json").write_text(json.dumps(
-        {"CVE_Items": [item("CVE-2020-0001", "real bug."),
-                       item("CVE-2020-0002", "** REJECT ** withdrawn.")]}))
-    (landing / "nvdcve-1.1-2020.meta").write_text(
-        "lastModifiedDate:2021-06-01T00:00:00-04:00\r\nsha256:ab\r\n")
+    land([item("CVE-2020-0001", "real bug.", "2020-06-01T00:00Z"),
+          item("CVE-2020-0002", "another bug.", "2020-06-01T00:00Z")],
+         "2021-06-01T00:00:00-04:00")
     wh = str(tmp_path / "wh")
     run_ingest(spark, str(landing), wh)
     register_nvd_views(spark, wh)
     stale = cve_tally(spark)
-    assert purge_rejected(spark, wh) == 1
+    # a bumped .meta brings the withdrawal: the refresh publishes
+    land([item("CVE-2020-0002", "** REJECT ** withdrawn.",
+               "2020-07-01T00:00Z")], "2021-07-01T00:00:00-04:00")
+    assert run_ingest(spark, str(landing), wh)["withdrawn"] == 1
     assert stale.first().n_cves == 2
     register_nvd_views(spark, wh)
     assert cve_tally(spark).first().n_cves == 1

@@ -370,6 +370,55 @@ def test_conditional_merge_rejects_stale_batch(spark, tmp_path):
         "cve_id = 'CVE-2020-1'").first().summary == "tie-update"
 
 
+def test_delete_arm_removes_keys_and_empties_partitions(spark, tmp_path):
+    """The merge's delete arm: a flagged update row removes its key and
+    is not written, in the one publish of the upsert. A partition the
+    deletes empty is gone from the new version (not carried over by
+    hardlink), a table every row of which is deleted still reads with
+    its schema, and under ``order_col`` a stale flagged row loses to a
+    fresher stored one."""
+    from nvd2mysqlloader_spark.operators import table_io
+
+    path = str(tmp_path / "del")
+    cols = ["cve_id", "published_year", "summary", "last_modified"]
+    base = spark.createDataFrame(
+        [("CVE-2020-1", 2020, "a", "2024-01-01"),
+         ("CVE-2020-2", 2020, "b", "2024-06-01"),
+         ("CVE-2021-1", 2021, "c", "2024-01-01")], cols)
+    write_upsert_parquet(path, base, ["cve_id"],
+                         partition_by=["published_year"])
+
+    def upsert(rows, **kw):
+        batch = spark.createDataFrame(rows, cols + ["gone"])
+        write_upsert_parquet(path, batch, ["cve_id"],
+                             partition_by=["published_year"],
+                             delete_flag="gone", **kw)
+
+    def table():
+        return {r.cve_id: r.summary for r in spark.read.parquet(path).collect()}
+
+    v = table_io.versions(path)[-1][0]
+    upsert([("CVE-2021-1", 2021, "x", "2024-07-01", True),
+            ("CVE-2020-1", 2020, "a2", "2024-07-01", False),
+            ("CVE-2022-1", 2022, "y", "2024-07-01", True),
+            ("CVE-2022-2", 2022, "z", "2024-07-01", None)])
+    assert table_io.versions(path)[-1][0] == v + 1
+    assert table() == {"CVE-2020-1": "a2", "CVE-2020-2": "b",
+                       "CVE-2022-2": "z"}
+    assert "published_year=2021" not in os.listdir(path)
+    assert "gone" not in spark.read.parquet(path).columns
+
+    upsert([("CVE-2020-2", 2020, "stale", "2024-01-01", True)],
+           order_col="last_modified")
+    assert table()["CVE-2020-2"] == "b"
+
+    upsert([(k, y, "", "2025-01-01", True)
+            for k, y in (("CVE-2020-1", 2020), ("CVE-2020-2", 2020),
+                         ("CVE-2022-2", 2022))])
+    assert table() == {}
+    assert set(spark.read.parquet(path).columns) == set(cols)
+
+
 def test_vacuum_never_deletes_published_version(spark, tmp_path):
     """vacuum with unpublished crash debris present must clean the
     debris and keep the published version (regression: the newest-N
