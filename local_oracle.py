@@ -33,7 +33,13 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# UDF-backed entries unpickle package functions in Python workers,
+# which inherit PYTHONPATH, not this process's sys.path: name the repo
+# there before get_spark starts the JVM, so any working directory works
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 from nvd2mysqlloader_spark.plans import QUERIES            # noqa: E402
 from nvd2mysqlloader_spark.plans.registry import (         # noqa: E402
@@ -83,7 +89,6 @@ def check_registry() -> list[str]:
     missing = set(oracle_map()) - set(spark_queries())
     if missing:
         problems.append(f"oracle entries without a query: {sorted(missing)}")
-    repo = os.path.dirname(os.path.abspath(__file__))
     for name, q in QUERIES.items():
         if q.oracle is not None:
             continue
@@ -95,7 +100,7 @@ def check_registry() -> list[str]:
                 "oracle")
             continue
         fpath, _, func = pin.partition("::")
-        full = os.path.join(repo, fpath)
+        full = os.path.join(ROOT, fpath)
         if not os.path.exists(full):
             problems.append(f"{name}: pinned file {fpath} missing")
         else:

@@ -20,6 +20,14 @@ footer row counts. The download/unzip edge (network) stays a thin
 driver-side helper (``fetch.py``) exactly as the reference keeps it
 outside the data plane.
 
+The scheduled refresh (the reference polling ``modified``/``recent``)
+is this CLI run on a schedule; there is no other refresh path. The
+gate is exactly-once because the fetch lands each feed's JSON before
+its ``.meta``: the sidecar is the commit marker, so a mark never
+describes bytes that have not landed, and an in-place rewrite of a
+feed is seen by its newer mark. A fresh sidecar with no JSON beside it
+is reported rejected and retried, like a feed that does not parse.
+
 At scale: silver is partitioned by ``year(published)`` — the partition-
 pruning replacement for the reference's ``dates`` index (:400); feeds
 parallelize by file; the MERGE shuffles once on cve_id.
@@ -110,11 +118,11 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
                include_children_cpes: bool = False) -> dict:
     """One incremental batch. Returns counts (the reference's tally
     delta report, nvd2mysqlloader.py:562-573): ``feeds`` loaded,
-    ``rejected`` (the names of fresh feeds that did not parse — they
-    get no audit row, so the next run retries them), ``cves`` in the
-    batch, ``withdrawn`` (the batch's CVEs whose winning record NVD
-    withdrew: deleted from both tables, or never added) and the tally
-    before and after.
+    ``rejected`` (the names of fresh feeds that did not parse or whose
+    JSON is absent — they get no audit row, so the next run retries
+    them), ``cves`` in the batch, ``withdrawn`` (the batch's CVEs whose
+    winning record NVD withdrew: deleted from both tables, or never
+    added) and the tally before and after.
 
     Each table gets one merge and one publish: a withdrawn record
     that wins last-writer-wins is the merge's delete. The tally is the
@@ -143,10 +151,14 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
 
     fresh = fresh_feeds(spark, landing, warehouse)
     names = [r.download_name for r in fresh.collect()]
-    if not names:
-        return {"feeds": 0, "rejected": [], "cves": 0, "withdrawn": 0,
+    # a fresh sidecar whose feed has not landed (its fetch failed after
+    # the .meta, or another tool landed it) is rejected, not read: one
+    # missing path would fail the whole scan
+    missing = [n for n in names if not os.path.isfile(f"{landing}/{n}.json")]
+    paths = [f"{landing}/{n}.json" for n in names if n not in missing]
+    if not paths:
+        return {"feeds": 0, "rejected": missing, "cves": 0, "withdrawn": 0,
                 "tally_before": before, "tally_after": before, "added": 0}
-    paths = [f"{landing}/{n}.json" for n in names]
     # feeds that do not parse, observed on the scan that fills the
     # cache below (PERMISSIVE mode turns each into one row with
     # _corrupt_record set): no second parse, no extra job
@@ -176,14 +188,14 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
     # via the try/finally — a long-lived scheduler session must not
     # accumulate pinned storage across runs
     try:
-        return _ingest_batch(spark, warehouse, fresh, items, names, parsed,
-                             silver_path, bronze_path, before,
+        return _ingest_batch(spark, warehouse, fresh, items, names, missing,
+                             parsed, silver_path, bronze_path, before,
                              maintain, include_children_cpes)
     finally:
         items.unpersist()
 
 
-def _ingest_batch(spark, warehouse, fresh, items, names, parsed,
+def _ingest_batch(spark, warehouse, fresh, items, names, missing, parsed,
                   silver_path, bronze_path, before, maintain,
                   include_children_cpes=False):
     # modified/recent feeds overlap yearly ones by design — dedup the
@@ -238,8 +250,8 @@ def _ingest_batch(spark, warehouse, fresh, items, names, parsed,
                          delete_flag="__withdrawn")
     n_cves, withdrawn = obs.get["n_cves"], obs.get["withdrawn"]
     # the silver write filled the items cache: the scan's observation
-    rejected = sorted(os.path.basename(unquote(f))[:-len(".json")]
-                      for f in parsed.get["rejected"])
+    rejected = sorted(missing + [os.path.basename(unquote(f))[:-len(".json")]
+                                 for f in parsed.get["rejected"]])
     write_upsert_parquet(bronze_path, bronze, ["cve_id"],
                          partition_by=["feed_year"],
                          delete_flag="__withdrawn")

@@ -42,20 +42,40 @@ def test_reload_is_noop(spark, warehouse):
 
 
 def test_gate_admits_newer_meta(spark, warehouse, tmp_path):
-    run_ingest(spark, DATA, warehouse)
-    # re-deliver 'modified' with a NEWER lastModifiedDate → only it loads
-    landing2 = tmp_path / "landing2"
-    landing2.mkdir()
-    for f in os.listdir(DATA):
-        shutil.copy(os.path.join(DATA, f), landing2 / f)
-    meta = (landing2 / "nvdcve-1.1-modified.meta").read_text()
-    (landing2 / "nvdcve-1.1-modified.meta").write_text(
+    """NVD rewrites the modified feed in place under the same name: a
+    newer .meta mark in the SAME landing dir reloads only that feed,
+    its rewritten record reaches silver and bronze, and the run after
+    finds nothing fresh."""
+    landing = tmp_path / "landing"
+    shutil.copytree(DATA, landing)
+    run_ingest(spark, str(landing), warehouse)
+    feed = landing / "nvdcve-1.1-modified.json"
+    feed.write_text(feed.read_text()
+                    .replace("Impact assessed.", "Impact reassessed.")
+                    .replace("2024-06-20T12:00Z", "2024-07-20T12:00Z"))
+    meta = (landing / "nvdcve-1.1-modified.meta").read_text()
+    (landing / "nvdcve-1.1-modified.meta").write_text(
         meta.replace("2024-07-01T03:00:00-04:00", "2024-08-01T03:00:00-04:00"))
-    fresh = fresh_feeds(spark, str(landing2), warehouse)
+    fresh = fresh_feeds(spark, str(landing), warehouse)
     assert [r.download_name for r in fresh.collect()] == ["nvdcve-1.1-modified"]
-    stats = run_ingest(spark, str(landing2), warehouse)
+    stats = run_ingest(spark, str(landing), warehouse)
     assert stats["feeds"] == 1
     assert stats["added"] == 0           # same CVEs, upsert replaces
+
+    r = (spark.read.parquet(f"{warehouse}/nvd")
+         .filter(F.col("cve_id") == "CVE-2024-0002").first())
+    assert (r.summary, r.last_modified_datetime) == \
+        ("Impact reassessed.", "2024-07-20T12:00Z")
+    [raw] = (spark.read.parquet(f"{warehouse}/nvd_json")
+             .filter(F.col("cve_id") == "CVE-2024-0002")
+             .select(F.get_json_object("cve_item",
+                                       "$.cve.description.description_data[0].value")
+                     .alias("summary"),
+                     F.get_json_object("cve_item", "$.lastModifiedDate")
+                     .alias("lmd"))
+             .collect())
+    assert (raw.summary, raw.lmd) == ("Impact reassessed.", "2024-07-20T12:00Z")
+    assert run_ingest(spark, str(landing), warehouse)["feeds"] == 0
 
 
 def test_download_feed_recorded_responses(tmp_path):
@@ -168,9 +188,13 @@ def test_ingest_maintain_compacts_accreted_files(spark, tmp_path):
 
 
 def test_download_feed_raises_on_http_error(tmp_path):
-    """A 404/503 body must never be persisted as a .meta/.zip file."""
+    """A 404/503 body must never be persisted as a .meta/.zip file, and
+    a fetch that fails after its .meta was served lands nothing: the
+    .meta is the commit marker, so a new mark beside the old feed would
+    load the old bytes under it and never load the new ones."""
     import http.server
     import threading
+    import zipfile
 
     import pytest
     import requests
@@ -184,6 +208,13 @@ def test_download_feed_raises_on_http_error(tmp_path):
         def __init__(self, *a, **kw):
             super().__init__(*a, directory=str(docroot), **kw)
 
+        def do_GET(self):
+            if self.path.endswith(".zip") and not (docroot /
+                                                   self.path[1:]).exists():
+                self.send_error(503)
+            else:
+                super().do_GET()
+
         def log_message(self, *a):
             pass
 
@@ -195,6 +226,30 @@ def test_download_feed_raises_on_http_error(tmp_path):
         with pytest.raises(requests.HTTPError):
             download_feed("2024", str(landing), base_url=base)
         assert not (landing / "nvdcve-1.1-2024.meta").exists()
+
+        # the .meta is served, the zip request fails: into an empty
+        # landing dir and into one holding the previous fetch
+        (docroot / "nvdcve-1.1-2024.meta").write_bytes(
+            b"lastModifiedDate:2024-08-01T03:00:00-04:00\r\n")
+        old = tmp_path / "old"
+        old.mkdir()
+        shutil.copy(f"{DATA}/nvdcve-1.1-2024.json", old)
+        shutil.copy(f"{DATA}/nvdcve-1.1-2024.meta", old)
+
+        def snapshot(d):
+            return {p.name: p.read_bytes() for p in d.iterdir()}
+        for d in (landing, old):
+            before = snapshot(d)
+            with pytest.raises(requests.HTTPError):
+                download_feed("2024", str(d), base_url=base)
+            assert snapshot(d) == before, d
+        # a zip that does not open leaves no partial .json behind
+        (docroot / "nvdcve-1.1-2024.json.zip").write_bytes(b"PK\x03\x04torn")
+        for d in (landing, old):
+            before = snapshot(d)
+            with pytest.raises(zipfile.BadZipFile):
+                download_feed("2024", str(d), base_url=base)
+            assert snapshot(d) == before, d
     finally:
         srv.shutdown()
         srv.server_close()
@@ -219,6 +274,15 @@ def test_corrupt_update_history_raises_not_full_reload(spark, warehouse,
     # still means "load everything"
     fresh = fresh_feeds(spark, DATA, str(tmp_path / "empty_wh"))
     assert fresh.count() == 2
+
+    # a sidecar that does not decode stops the run in the gate, before
+    # anything is written
+    landing = tmp_path / "landing"
+    shutil.copytree(DATA, landing)
+    (landing / "nvdcve-1.1-recent.meta").write_bytes(b"\xff\xfe\x80")
+    with pytest.raises(UnicodeDecodeError):
+        run_ingest(spark, str(landing), str(tmp_path / "empty_wh"))
+    assert not os.path.exists(tmp_path / "empty_wh")
 
 
 def _item(cve_id, summary, published, modified):
@@ -327,33 +391,38 @@ def test_refresh_withdrawing_a_loaded_cve_deletes_it_in_one_publish(
 
 
 def test_corrupt_feed_is_rejected_and_retried(spark, tmp_path):
-    """A fresh feed that does not parse (a truncated download) is
-    reported rejected and gets no audit row, so the high-water mark
-    does not pass it: the run loads the good feed, and once the file
-    is fixed the next run loads the rejected one."""
+    """A fresh feed that does not parse (a truncated download), or
+    whose .meta has no .json beside it (its fetch failed after the
+    sidecar, or another tool landed it), is reported rejected and gets
+    no audit row, so the high-water mark does not pass it: the run
+    loads the good feed, and once the file is fixed the next run loads
+    the rejected one."""
     landing = tmp_path / "landing"
     shutil.copytree(DATA, landing)
     feed = landing / "nvdcve-1.1-modified.json"
     good = feed.read_text()
-    feed.write_text(good[:len(good) * 2 // 3])
-    wh = str(tmp_path / "wh")
+    for n, break_feed in enumerate((
+            lambda: feed.write_text(good[:len(good) * 2 // 3]),
+            feed.unlink)):
+        break_feed()
+        wh = str(tmp_path / f"wh{n}")
 
-    stats = run_ingest(spark, str(landing), wh)
-    assert stats["feeds"] == 1
-    assert stats["rejected"] == ["nvdcve-1.1-modified"]
-    assert stats["cves"] == 5
-    hist = {r.download_name for r in
-            spark.read.parquet(f"{wh}/update_history").collect()}
-    assert hist == {"nvdcve-1.1-2024"}
+        stats = run_ingest(spark, str(landing), wh)
+        assert stats["feeds"] == 1
+        assert stats["rejected"] == ["nvdcve-1.1-modified"]
+        assert stats["cves"] == 5
+        hist = {r.download_name for r in
+                spark.read.parquet(f"{wh}/update_history").collect()}
+        assert hist == {"nvdcve-1.1-2024"}
 
-    feed.write_text(good)
-    stats = run_ingest(spark, str(landing), wh)
-    assert stats["feeds"] == 1 and stats["rejected"] == []
-    nvd = {r.cve_id: float(r.score) for r in
-           spark.read.parquet(f"{wh}/nvd").collect()}
-    assert "CVE-2024-9999" in nvd
-    assert nvd["CVE-2024-0002"] == 5.0       # the modified feed's update
-    assert run_ingest(spark, str(landing), wh)["feeds"] == 0
+        feed.write_text(good)
+        stats = run_ingest(spark, str(landing), wh)
+        assert stats["feeds"] == 1 and stats["rejected"] == []
+        nvd = {r.cve_id: float(r.score) for r in
+               spark.read.parquet(f"{wh}/nvd").collect()}
+        assert "CVE-2024-9999" in nvd
+        assert nvd["CVE-2024-0002"] == 5.0   # the modified feed's update
+        assert run_ingest(spark, str(landing), wh)["feeds"] == 0
 
 
 def test_legacy_bronze_without_feed_year_fails_loudly(spark, tmp_path):

@@ -1,24 +1,22 @@
 """Streaming semantics tests: batch↔stream agreement for windowed
-aggregates, exactly-once file ingest with checkpoint, dedup-within-
-watermark — driven synchronously with availableNow + memory sinks."""
+aggregates, joins and keyed state, dedup-within-watermark — driven
+synchronously with availableNow + memory sinks. Feed ingest is not a
+stream: the scheduled refresh is ``run_ingest`` on a schedule, gated
+on the ``.meta`` high-water mark (tests/test_ingest.py)."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from nvd2mysqlloader_spark.plans import QUERIES
-from nvd2mysqlloader_spark.streaming.ingest import stream_ingest_available_now
 from nvd2mysqlloader_spark.streaming.windows import (
     stream_dedup_within_watermark, stream_session_aggregates,
     stream_tumbling_counts)
 
 from .conftest import SF_ORACLE
-
-DATA = os.path.join(os.path.dirname(__file__), "data")
 
 
 @pytest.fixture(scope="module")
@@ -80,29 +78,6 @@ def test_stream_dedup_within_watermark(spark, events_parquet, tmp_path):
     out = _run_stream(spark, stream_dedup_within_watermark(stream),
                       "dedup_out", mode="append")
     assert out.count() == ev.count()
-
-
-def test_stream_ingest_exactly_once(spark, tmp_path):
-    warehouse = str(tmp_path / "wh")
-    ckpt = str(tmp_path / "ckpt")
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    shutil.copy(f"{DATA}/nvdcve-1.1-2024.json", landing)
-
-    stream_ingest_available_now(spark, landing, warehouse, ckpt)
-    assert spark.read.parquet(f"{warehouse}/nvd").count() == 5
-
-    # second drain with no new files: checkpoint ⇒ no reprocessing
-    stream_ingest_available_now(spark, landing, warehouse, ckpt)
-    assert spark.read.parquet(f"{warehouse}/nvd").count() == 5
-
-    # drop the modified feed in → only it is processed; upsert applies
-    shutil.copy(f"{DATA}/nvdcve-1.1-modified.json", landing)
-    stream_ingest_available_now(spark, landing, warehouse, ckpt)
-    nvd = spark.read.parquet(f"{warehouse}/nvd")
-    assert nvd.count() == 6
-    r = nvd.filter(F.col("cve_id") == "CVE-2024-0002").first()
-    assert float(r.score) == 5.0         # late update won through the stream
 
 
 def test_stateful_running_stats(spark, events_parquet, tmp_path):
