@@ -161,13 +161,12 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
                 "tally_before": before, "tally_after": before, "added": 0}
     # feeds that do not parse, observed on the scan that fills the
     # cache below (PERMISSIVE mode turns each into one row with
-    # _corrupt_record set): no second parse, no extra job
+    # _corrupt_record set): no second parse unless the batch is empty
     parsed = Observation("ingest_feeds")
-    feed = (read_feed(spark, paths)
-            .withColumn("__file", F.input_file_name())
-            .observe(parsed, F.collect_set(F.when(
-                F.col("_corrupt_record").isNotNull(),
-                F.col("__file"))).alias("rejected")))
+    scan = read_feed(spark, paths).withColumn("__file", F.input_file_name())
+    feed = scan.observe(parsed, F.collect_set(F.when(
+        F.col("_corrupt_record").isNotNull(), F.col("__file")))
+        .alias("rejected"))
     # cache the exploded items: silver and bronze both consume
     # them, and multiLine JSON parsing is the most expensive stage.
     # Repartition BY CVE ID first: a multiLine feed is one
@@ -189,14 +188,14 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
     # accumulate pinned storage across runs
     try:
         return _ingest_batch(spark, warehouse, fresh, items, names, missing,
-                             parsed, silver_path, bronze_path, before,
+                             scan, parsed, silver_path, bronze_path, before,
                              maintain, include_children_cpes)
     finally:
         items.unpersist()
 
 
-def _ingest_batch(spark, warehouse, fresh, items, names, missing, parsed,
-                  silver_path, bronze_path, before, maintain,
+def _ingest_batch(spark, warehouse, fresh, items, names, missing, scan,
+                  parsed, silver_path, bronze_path, before, maintain,
                   include_children_cpes=False):
     # modified/recent feeds overlap yearly ones by design — dedup the
     # batch last-writer-wins on (lastModifiedDate, cve_id) before MERGE.
@@ -245,16 +244,30 @@ def _ingest_batch(spark, warehouse, fresh, items, names, missing, parsed,
     obs = Observation("ingest_metrics")
     silver = silver.observe(obs, F.count(F.lit(1)).alias("n_cves"),
                             F.count_if("__withdrawn").alias("withdrawn"))
+    cur = table_io.current_version(silver_path)
     write_upsert_parquet(silver_path, silver, ["cve_id"],
                          partition_by=["published_year"],
                          delete_flag="__withdrawn")
-    n_cves, withdrawn = obs.get["n_cves"], obs.get["withdrawn"]
-    # the silver write filled the items cache: the scan's observation
+    if table_io.current_version(silver_path) == cur:
+        # an empty batch against an existing table publishes nothing,
+        # and AQE, once the cached items prove empty, replaces the whole
+        # plan, so neither observation is filled: nothing to merge, and
+        # one scan of the feeds names those that did not parse (it reads
+        # CVE_Items too: Spark refuses a JSON scan of only the
+        # corrupt-record column)
+        n_cves = withdrawn = 0
+        files = [r[0] for r in scan.filter(
+            F.col("_corrupt_record").isNotNull()
+            & F.col("CVE_Items").isNull()).select("__file").collect()]
+    else:
+        n_cves, withdrawn = obs.get["n_cves"], obs.get["withdrawn"]
+        # the silver write filled the items cache: the scan's observation
+        files = parsed.get["rejected"]
+        write_upsert_parquet(bronze_path, bronze, ["cve_id"],
+                             partition_by=["feed_year"],
+                             delete_flag="__withdrawn")
     rejected = sorted(missing + [os.path.basename(unquote(f))[:-len(".json")]
-                                 for f in parsed.get["rejected"]])
-    write_upsert_parquet(bronze_path, bronze, ["cve_id"],
-                         partition_by=["feed_year"],
-                         delete_flag="__withdrawn")
+                                 for f in files])
 
     # audit append — one row per feed that parsed (ref :441-447). A
     # rejected feed gets none, so the high-water mark stays where it

@@ -542,7 +542,8 @@ def semantic_dedup(corpus: DataFrame, k: int = 8, threshold: float = 0.9,
     cluster Arrow matmul prefilter (margin-padded, provably lossless
     like cosine_candidate_pairs) → exact-fold rescore of candidates
     (ids broadcast into two corpus scans, no vector shuffle) →
-    min-label connected components over the id-only pair edges.
+    alternating (large-star/small-star) connected components over the
+    id-only pair edges.
 
     The emitted pair relation is EXACT: {(a,b) in the same cluster :
     cosine(a,b) >= threshold} — the "semantic" approximation relative

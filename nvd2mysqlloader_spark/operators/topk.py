@@ -1,21 +1,19 @@
-"""Top-1 / top-K per key — the reference's only sort pattern.
+"""Top-1 per key — the reference's only sort pattern.
 
 Reference: ``SELECT lastModifiedDate FROM update_history WHERE
 download_name=%s ORDER BY downloadedDate DESC LIMIT 1``
 (nvd2mysqlloader.py:72) — a point-filtered top-1. Generalized here to
-all keys at once as a ranking window (SURVEY.md §2 #16, #31).
+all keys at once (SURVEY.md §2 #16, #31).
 
-Scale: ``row_number`` over ``partitionBy(key)`` is a single hash
-shuffle with map-side partial sort; AQE splits skewed keys. For top-1
-specifically ``max_by`` aggregates with a partial (map-side combine) —
-cheaper than a full window sort at 100 TB — so top-1 uses that form.
+Scale: ``max_by`` aggregates with a partial (map-side combine) —
+cheaper than a ``row_number`` window's full sort at 100 TB.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -32,12 +30,3 @@ def top1_per_key(df: DataFrame, keys: Sequence[str], order_col: str,
     aggs = [F.max(order_col).alias(order_col)] + [
         F.max_by(c, tie).alias(c) for c in payload]
     return df.groupBy(*keys).agg(*aggs)
-
-
-def topk_per_key(df: DataFrame, keys: Sequence[str],
-                 order_by: Sequence[Column], k: int) -> DataFrame:
-    """Top-K rows per key (ranking window). ``order_by`` must be a
-    total order for determinism."""
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (df.withColumn("rk", F.row_number().over(w))
-              .filter(F.col("rk") <= k))

@@ -17,11 +17,16 @@ dynamic partition pruning limits the rewrite to touched partitions.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
+from functools import reduce
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import table_io
 
 
 def last_writer_wins(df: DataFrame, keys: Sequence[str],
@@ -174,130 +179,36 @@ def write_upsert_parquet(target_path: str, updates: DataFrame,
     empty is left out of the new version.
 
     A partition-selective upsert whose batch differs from the table in
-    a data column's name or type raises ValueError before staging.
+    a data column's name or type raises ValueError before staging, and
+    so does one into a table with a partition dir the partitioned
+    write would not render for its value (see ``_rewrite``). An empty
+    batch against an existing table publishes nothing.
     """
-    import os
-
-    from . import table_io
-
-    spark = updates.sparkSession
-    target_path = target_path.rstrip("/")
-    table_io.ensure_versioned(target_path)
-    table_io.cleanup_stale(target_path)
-    cur = table_io.current_version(target_path)
-    vdir = table_io.next_version_dir(target_path)
-
-    if partition_by:
-        merged = _live(updates, delete_flag)
-        target_all = None
-        affected_dirs: set[str] = set()
-        if cur is not None:
-            try:
-                # version-pinned read: the merge job executes while a
-                # publish may land; reading `cur` (not the symlink)
-                # keeps the file list valid for this version's lifetime
-                target_all = spark.read.parquet(cur)
-            except AnalysisException:  # missing/empty target dir ONLY —
-                target_all = None  # any other error must propagate: a
-                #                    transient read failure silently
-                #                    degrading to updates-only would
-                #                    publish a table missing all prior
-                #                    rows
-        if target_all is not None:
-            # (name, type) pairs, not names: carried partitions keep
-            # their files, so a type change (int -> long) would publish
-            # a version whose files mix schemas; partition columns live
-            # in dir names and read back as one type
-            def cols(df):
-                return sorted((f.name, f.dataType.simpleString())
-                              for f in df.schema.fields
-                              if f.name not in (*partition_by, delete_flag))
-            if cols(target_all) != cols(updates):
-                raise ValueError(
-                    f"upsert into {target_path}: the batch's columns "
-                    f"{cols(updates)} differ from the table's "
-                    f"{cols(target_all)}")
-            # each value tuple with its string form as the partitioned
-            # write renders it (Spark's own cast, session time zone)
-            n = len(partition_by)
-            rows = (updates.select(*partition_by).distinct()
-                    .select(*partition_by,
-                            *[F.col(c).cast("string") for c in partition_by])
-                    .collect())
-            if not rows:            # empty batch against an existing
-                return              # table: nothing to merge or publish
-            affected = [tuple(r)[:n] for r in rows]
-            affected_dirs = {_partition_dir(spark, partition_by, tuple(r)[n:])
-                             for r in rows}
-            merged = merge_upsert(
-                target_all.filter(_affected_pred(partition_by, affected)),
-                updates, keys, order_col=order_col, delete_flag=delete_flag)
-        # cluster rows by the partition key before the partitioned
-        # write: one file per partition instead of (shuffle-partitions
-        # × partitions) tiny files — the small-file explosion is a real
-        # cost locally and a catastrophic one on a 100 TB object store.
-        # The job reads the pinned CURRENT version directory
-        # and writes the NEXT — no self-overwrite, no materialization
-        # barrier needed.
-        out = merged.repartition(*[F.col(c) for c in partition_by])
-        out.write.mode("overwrite").partitionBy(*partition_by).parquet(vdir)
-        if cur is not None:
-            # carry untouched partitions into the new version by
-            # hardlink: same inodes, zero data movement. "Touched" is
-            # whatever directories the write itself produced, plus the
-            # affected ones it did not (the deletes emptied them: they
-            # must stay gone, not resurrect via hardlink)
-            written = set(table_io.leaf_partition_dirs(vdir))
-            for rel in table_io.leaf_partition_dirs(cur):
-                if rel not in written and rel not in affected_dirs:
-                    table_io.link_tree(os.path.join(cur, rel),
-                                       os.path.join(vdir, rel))
-        if delete_flag is not None:
-            _ensure_readable(spark, vdir, merged)
-        table_io.publish_version(target_path, vdir)
-        return
-
-    merged = _live(updates, delete_flag)
-    if cur is not None:
-        try:
-            target = spark.read.parquet(cur)   # version-pinned (see above)
-        except AnalysisException:  # missing/empty target dir ONLY
-            target = None
-        if target is not None:
-            merged = merge_upsert(target, updates, keys,
-                                  order_col=order_col,
-                                  delete_flag=delete_flag)
-    # size-conditional output exchange before the unpartitioned write
-    # (guide §6, VERDICT r12 ask #5) — see _sized_for_write
-    _sized_for_write(merged).write.mode("overwrite").parquet(vdir)
-    table_io.publish_version(target_path, vdir)
-
-
-def _partition_dir(spark, partition_by: Sequence[str],
-                   strs: tuple) -> str:
-    """Relative leaf dir a partitioned write gives the value tuple
-    whose string forms are ``strs`` (Spark's own escaping; a null or
-    empty value is ``__HIVE_DEFAULT_PARTITION__``)."""
-    import os
-    utils = (spark._jvm.org.apache.spark.sql.catalyst.catalog
-             .ExternalCatalogUtils)
-    return os.path.join(*[utils.getPartitionPathString(c, v)
-                          for c, v in zip(partition_by, strs)])
-
-
-def _affected_pred(partition_by: Sequence[str],
-                   affected: list[tuple]) -> Column:
-    """Filter predicate selecting the given partition-value tuples.
-    eqNullSafe: a null partition value must still select its
-    (``__HIVE_DEFAULT_PARTITION__``) slice. Shared by the selective
-    upsert and selective delete so the subtlety lives once."""
-    pred = None
-    for vals in affected:
-        clause = F.lit(True)
-        for c, v in zip(partition_by, vals):
-            clause = clause & F.col(c).eqNullSafe(F.lit(v))
-        pred = clause if pred is None else (pred | clause)
-    return pred
+    path, cur = _resolve(target_path)
+    target = _read_pinned(updates.sparkSession, cur)
+    affected_dirs: set[str] = set()
+    if partition_by and target is not None:
+        # (name, type) pairs, not names: carried partitions keep
+        # their files, so a type change (int -> long) would publish
+        # a version whose files mix schemas; partition columns live
+        # in dir names and read back as one type
+        def cols(df):
+            return sorted((f.name, f.dataType.simpleString())
+                          for f in df.schema.fields
+                          if f.name not in (*partition_by, delete_flag))
+        if cols(target) != cols(updates):
+            raise ValueError(
+                f"upsert into {path}: the batch's columns "
+                f"{cols(updates)} differ from the table's "
+                f"{cols(target)}")
+        affected, affected_dirs, n = _affected(updates, partition_by)
+        if not n:
+            return
+        target = target.filter(_affected_pred(partition_by, affected))
+    merged = (_live(updates, delete_flag) if target is None else
+              merge_upsert(target, updates, keys, order_col=order_col,
+                           delete_flag=delete_flag))
+    _rewrite(path, cur, merged, partition_by, affected_dirs)
 
 
 def write_delete_parquet(target_path: str, delete_keys: DataFrame,
@@ -319,36 +230,14 @@ def write_delete_parquet(target_path: str, delete_keys: DataFrame,
 
     With ``partition_by``, the rewrite is **partition-selective** even
     though delete keys carry no partition column: one semi-join pass
-    finds the partitions that actually contain hits (a tiny distinct —
-    bounded by the partition count), only those partitions are
-    anti-join-rewritten, untouched partitions carry over as hardlinks.
-    At 100 TB deleting a handful of documents rewrites a handful of
-    partitions, not the table. Emptied partitions simply vanish from
-    the new version.
+    finds the partitions that contain hits, only those are
+    anti-join-rewritten (through ``_rewrite``, like the upsert), and
+    untouched ones carry over as hardlinks. Emptied partitions vanish.
     """
-    import os
-
-    from . import table_io
-
-    spark = delete_keys.sparkSession
-    target_path = target_path.rstrip("/")
-    # migrate/repair BEFORE resolving the version, same order as
-    # write_upsert_parquet: resolving a legacy plain dir first would
-    # pin `cur` to the pre-migration path, so realpath-relative
-    # affected-dir exclusion breaks ('../t/y=2020' instead of
-    # 'y=2020') and an emptied partition hardlinks back; and a table
-    # in the interrupted-migration crash window (cleanup_stale
-    # repairs it) would read as "no table" and silently skip the
-    # delete
-    table_io.ensure_versioned(target_path)
-    table_io.cleanup_stale(target_path)
-    cur = table_io.current_version(target_path)
-    if cur is None:
+    path, cur = _resolve(target_path)
+    target = _read_pinned(delete_keys.sparkSession, cur)
+    if target is None:
         return 0                     # nothing on disk: nothing to delete
-    try:
-        target = spark.read.parquet(cur)        # version-pinned
-    except AnalysisException:
-        return 0
     # NULL-SAFE key match (<=>): a NULL tombstone key targets
     # NULL-keyed rows — a removal tool must be able to reach e.g.
     # quarantined malformed records, which plain '=' would silently
@@ -358,94 +247,162 @@ def write_delete_parquet(target_path: str, delete_keys: DataFrame,
     # on their own; a bulk purge (millions of keys) correctly falls
     # back to a shuffle join instead of OOMing executors.
     kdf = delete_keys.select(*keys).distinct().alias("s")
-    # the source file is captured AT THE SCAN as a real column:
-    # input_file_name() evaluated after the join exchange would return
-    # '' — the value must travel with the row
-    t = target.withColumn("__f", F.input_file_name()).alias("t")
-    on = None
-    for k in keys:
-        c = F.col(f"t.`{k}`").eqNullSafe(F.col(f"s.`{k}`"))
-        on = c if on is None else (on & c)
-    hits = t.join(kdf, on, "left_semi")
-
-    if partition_by:
-        # ONE action finds the affected partition VALUES (for the
-        # pruned rewrite filter), the delete count, and — straight from
-        # Spark itself via input_file_name — the affected partition
-        # DIRECTORIES for the hardlink exclusion. Reconstructing dir
-        # names from the values is NOT safe: Spark's partition-path
-        # rendering differs from Python str() (1e-8 → 'w=1.0E-8',
-        # fractional timestamps, …), and a mismatch would hardlink an
-        # emptied partition back in — a delete that reports success
-        # while the data survives.
-        # collect_set over the PARENT DIRECTORY of each source file,
-        # not the files themselves: a bulk purge can touch thousands
-        # of files per partition, and a per-file set would scale the
-        # driver payload with file count — the dirname set is bounded
-        # by the affected-partition count (one leaf dir per value
-        # tuple), which is what the hardlink exclusion actually needs
-        per_part = (hits.groupBy(*partition_by)
-                    .agg(F.count(F.lit(1)).alias("__n"),
-                         F.collect_set(
-                             F.regexp_extract("__f", r"^(.*)/[^/]+$", 1))
-                         .alias("__dirs"))
-                    .collect())
-        if not per_part:
-            return 0
-        affected = [tuple(r)[:len(partition_by)] for r in per_part]
-        n_deleted = sum(r["__n"] for r in per_part)
-        cur_real = os.path.realpath(cur)
-        affected_dirs = {
-            os.path.relpath(_uri_to_path(d), cur_real)
-            for r in per_part for d in r["__dirs"]}
-        vdir = table_io.next_version_dir(target_path)
-        survivors = (target.filter(_affected_pred(partition_by, affected))
-                     .alias("t").join(kdf, on, "left_anti")
-                     .repartition(*[F.col(c) for c in partition_by]))
-        survivors.write.mode("overwrite") \
-            .partitionBy(*partition_by).parquet(vdir)
-        written = set(table_io.leaf_partition_dirs(vdir))
-        for rel in table_io.leaf_partition_dirs(cur):
-            # carry over only partitions NOT selected for rewrite: an
-            # affected partition the survivors write emptied wrote no
-            # dir and must stay gone, not resurrect via hardlink
-            if rel not in written and rel not in affected_dirs:
-                table_io.link_tree(os.path.join(cur, rel),
-                                   os.path.join(vdir, rel))
-        _ensure_readable(spark, vdir, target)
-        table_io.publish_version(target_path, vdir)
-        return n_deleted
-
-    n_deleted = hits.count()
-    if n_deleted == 0:
+    on = reduce(Column.__and__, [
+        F.col(f"t.`{k}`").eqNullSafe(F.col(f"s.`{k}`")) for k in keys])
+    partition_by = list(partition_by or [])
+    affected, affected_dirs, n_deleted = _affected(
+        target.alias("t").join(kdf, on, "left_semi"), partition_by)
+    if not n_deleted:
         return 0
-    vdir = table_io.next_version_dir(target_path)
-    # size-conditional output exchange before the unpartitioned write
-    # — same file-sizing rationale as write_upsert_parquet (guide §6)
-    _sized_for_write(target.alias("t").join(kdf, on, "left_anti")) \
-        .write.mode("overwrite").parquet(vdir)
-    table_io.publish_version(target_path, vdir)
+    if partition_by:
+        target = target.filter(_affected_pred(partition_by, affected))
+    _rewrite(path, cur, target.alias("t").join(kdf, on, "left_anti"),
+             partition_by, affected_dirs)
     return n_deleted
 
 
-def _uri_to_path(f: str) -> str:
-    """``input_file_name()`` returns a (possibly percent-encoded) URI;
-    recover the local filesystem path."""
-    from urllib.parse import unquote, urlparse
-    if "://" in f or f.startswith("file:"):
-        return unquote(urlparse(f).path)
-    return f
+def _resolve(target_path: str) -> tuple[str, str | None]:
+    """The table's path without a trailing slash, and its published
+    version dir (None when there is none).
+
+    Migrates and repairs BEFORE resolving: resolving a legacy plain
+    dir first would pin the version to the pre-migration path, and a
+    table in the interrupted-migration crash window (``cleanup_stale``
+    repairs it) would read as "no table" — an upsert would publish the
+    batch alone and a delete would silently skip."""
+    path = target_path.rstrip("/")
+    table_io.ensure_versioned(path)
+    table_io.cleanup_stale(path)
+    return path, table_io.current_version(path)
 
 
-def _ensure_readable(spark, vdir: str, target: DataFrame) -> None:
-    """A partitioned write whose every partition emptied produces a
-    directory with no parquet files — unreadable (schema cannot be
-    inferred) for every subsequent reader. Publish a schema-bearing
-    empty table instead, as the unpartitioned write path does
-    naturally."""
-    import glob as _glob
-    import os
-    if not _glob.glob(os.path.join(vdir, "**", "*.parquet"),
-                      recursive=True):
-        spark.createDataFrame([], target.schema) \
+def _read_pinned(spark, cur: str | None) -> DataFrame | None:
+    """The version ``cur`` as a DataFrame, or None when there is no
+    table. Pinned: reading ``cur``, not the symlink, keeps the file
+    list valid while a publish lands. Only an AnalysisException (a
+    missing or empty dir) reads as "no table"; any other error
+    propagates, or a transient read failure would publish a table
+    missing all prior rows."""
+    if cur is None:
+        return None
+    try:
+        return spark.read.parquet(cur)
+    except AnalysisException:
+        return None
+
+
+def _affected(df: DataFrame, partition_by: Sequence[str]
+              ) -> tuple[list[tuple], set[str], int]:
+    """One collect over ``df``: its distinct partition-value tuples,
+    the leaf dir a partitioned write renders for each (Spark's own
+    cast in the session time zone, then ``_partition_dirs``), and its
+    row count. With no ``partition_by`` it is just the count."""
+    n = len(partition_by)
+    rows = (df.groupBy(*partition_by)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .select(*partition_by,
+                    *[F.col(c).cast("string") for c in partition_by],
+                    "__n")
+            .collect())
+    return ([tuple(r)[:n] for r in rows],
+            set(_partition_dirs(df.sparkSession, partition_by,
+                                [tuple(r)[n:2 * n] for r in rows])),
+            sum(r["__n"] for r in rows))
+
+
+def _rewrite(path: str, cur: str | None, rows: DataFrame,
+             partition_by: Sequence[str] | None,
+             affected_dirs: set[str]) -> None:
+    """Stage ``rows`` as the next version of ``path`` and publish it.
+
+    Partitioned: fresh files for the partitions ``rows`` holds, and
+    every other leaf dir of ``cur`` carried over by hardlink (same
+    inodes, no data moved) except the ``affected_dirs``, which the
+    write rewrote or left empty: an emptied partition must stay gone,
+    not resurrect. A version with no data file left is written as a
+    schema-bearing empty table, since no reader can infer a schema from
+    a bare directory. Unpartitioned: one ``_sized_for_write`` write.
+
+    Carry-over compares dir names, so ``_check_layout`` first refuses
+    a ``cur`` whose dirs another tool named otherwise ('y=07' where
+    Spark writes 'y=7' would be carried beside the new partition)."""
+    if partition_by and cur is not None:
+        _check_layout(path, cur, rows, partition_by)
+    vdir = table_io.next_version_dir(path)
+    if not partition_by:
+        # size-conditional output exchange before the unpartitioned
+        # write (guide §6, VERDICT r12 ask #5) — see _sized_for_write
+        _sized_for_write(rows).write.mode("overwrite").parquet(vdir)
+        table_io.publish_version(path, vdir)
+        return
+    # cluster by the partition key: one file per partition instead of
+    # (shuffle-partitions × partitions) tiny files, a catastrophic cost
+    # on a 100 TB object store. The job reads the pinned current
+    # version and writes the next: no self-overwrite, no barrier.
+    rows.repartition(*[F.col(c) for c in partition_by]) \
+        .write.mode("overwrite").partitionBy(*partition_by).parquet(vdir)
+    written = set(table_io.leaf_partition_dirs(vdir))
+    carried = [rel for rel in (table_io.leaf_partition_dirs(cur)
+                               if cur is not None else [])
+               if rel not in written and rel not in affected_dirs]
+    for rel in carried:
+        table_io.link_tree(os.path.join(cur, rel), os.path.join(vdir, rel))
+    if not written and not carried:
+        rows.sparkSession.createDataFrame([], rows.schema) \
             .write.mode("overwrite").parquet(vdir)
+    table_io.publish_version(path, vdir)
+
+
+def _check_layout(path: str, cur: str, rows: DataFrame,
+                  partition_by: Sequence[str]) -> None:
+    """Raise ValueError naming ``path`` unless every leaf dir of the
+    version ``cur`` is the dir rendered for its own value: the dir's
+    unescaped values cast to the column types of ``rows`` and rendered
+    back. The cast runs on an Arrow-backed local relation: no job."""
+    spark = rows.sparkSession
+    utils = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+             .ExternalCatalogUtils)
+    null_dir = utils.DEFAULT_PARTITION_NAME()
+    dirs = table_io.leaf_partition_dirs(cur)
+    parts = [dict(c.split("=", 1) for c in rel.split(os.sep)) for rel in dirs]
+    local = spark.createDataFrame(pa.table({f"_{i}": pa.array(
+        [None if p.get(c, null_dir) == null_dir
+         else utils.unescapePathName(p[c]) for p in parts], pa.string())
+        for i, c in enumerate(partition_by)}))
+    types = {f.name: f.dataType for f in rows.schema.fields}
+    rendered = local.select(*[F.col(f"_{i}").try_cast(types[c])
+                              .cast("string")
+                              for i, c in enumerate(partition_by)]).collect()
+    bad = [rel for rel, want in zip(dirs, _partition_dirs(
+        spark, partition_by, [tuple(r) for r in rendered])) if rel != want]
+    if bad:
+        raise ValueError(
+            f"table at {path}: partition dirs {bad} are not the ones a "
+            f"write partitioned by {list(partition_by)} renders for their "
+            "values; a rewrite would carry them beside the rewritten "
+            "partitions and duplicate rows")
+
+
+def _partition_dirs(spark, partition_by: Sequence[str],
+                    strs: list[tuple]) -> list[str]:
+    """Relative leaf dir a partitioned write gives each value tuple
+    whose string forms are in ``strs`` (Spark's own escaping; a null
+    or empty value is ``__HIVE_DEFAULT_PARTITION__``). The JVM class
+    is resolved once: each lookup is several py4j round trips."""
+    utils = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+             .ExternalCatalogUtils)
+    return [os.path.join("", *[utils.getPartitionPathString(c, v)
+                               for c, v in zip(partition_by, t)])
+            for t in strs]
+
+
+def _affected_pred(partition_by: Sequence[str],
+                   affected: list[tuple]) -> Column:
+    """Filter predicate selecting the given partition-value tuples.
+    eqNullSafe: a null partition value must still select its
+    (``__HIVE_DEFAULT_PARTITION__``) slice. Shared by the selective
+    upsert and selective delete so the subtlety lives once."""
+    return reduce(Column.__or__, [
+        reduce(Column.__and__, [F.col(c).eqNullSafe(F.lit(v))
+                                for c, v in zip(partition_by, vals)])
+        for vals in affected])

@@ -396,7 +396,11 @@ def test_corrupt_feed_is_rejected_and_retried(spark, tmp_path):
     sidecar, or another tool landed it), is reported rejected and gets
     no audit row, so the high-water mark does not pass it: the run
     loads the good feed, and once the file is fixed the next run loads
-    the rejected one."""
+    the rejected one. A fresh feed that parses to nothing against a
+    loaded warehouse (an empty batch) is rejected the same way, and
+    nothing is published."""
+    from nvd2mysqlloader_spark.operators import table_io
+
     landing = tmp_path / "landing"
     shutil.copytree(DATA, landing)
     feed = landing / "nvdcve-1.1-modified.json"
@@ -423,6 +427,24 @@ def test_corrupt_feed_is_rejected_and_retried(spark, tmp_path):
         assert "CVE-2024-9999" in nvd
         assert nvd["CVE-2024-0002"] == 5.0   # the modified feed's update
         assert run_ingest(spark, str(landing), wh)["feeds"] == 0
+
+    def state():
+        return ([table_io.versions(f"{wh}/{t}") for t in ("nvd", "nvd_json")],
+                spark.read.parquet(f"{wh}/update_history").count())
+    before = state()
+    feed.write_text('{"CVE_Items": [')
+    meta = landing / "nvdcve-1.1-modified.meta"
+    meta.write_text(meta.read_text().replace("2024-07-01T", "2024-07-02T"))
+    stats = run_ingest(spark, str(landing), wh)
+    assert stats["rejected"] == ["nvdcve-1.1-modified"]
+    assert stats["feeds"] == 0 and stats["cves"] == 0
+    assert state() == before
+    feed.write_text(good)
+    stats = run_ingest(spark, str(landing), wh)
+    assert stats["feeds"] == 1 and stats["rejected"] == []
+    marks = {r.lastModifiedDate for r in
+             spark.read.parquet(f"{wh}/update_history").collect()}
+    assert "2024-07-02T03:00:00-04:00" in marks
 
 
 def test_legacy_bronze_without_feed_year_fails_loudly(spark, tmp_path):

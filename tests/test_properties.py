@@ -93,35 +93,51 @@ def test_scrub_pii_unit(spark):
     assert out["d"] == "<EMAIL> and <IP> and <PHONE>"
 
 
-@given(batches=st.lists(
-    st.lists(st.tuples(st.integers(0, 6),        # key
-                       st.integers(0, 99)),      # payload
-             min_size=1, max_size=8),
+@given(batches=st.lists(st.one_of(
+    st.tuples(st.just("upsert"),
+              st.lists(st.tuples(st.integers(0, 6),      # key
+                                 st.integers(0, 99)),    # payload
+                       min_size=1, max_size=8)),
+    st.tuples(st.just("delete"),
+              st.lists(st.integers(0, 6), min_size=1, max_size=4))),
     min_size=1, max_size=4))
 @SLOW
 def test_versioned_upsert_matches_dict_model(spark, tmp_path_factory,
                                              batches):
-    """Model-based: any sequence of partitioned versioned upserts ==
-    a Python dict applying last-writer-wins per batch then keyed
-    replacement across batches. The partition column derives from the
-    key (the operator's contract: keys cannot migrate partitions).
-    Exercises publish/prune/hardlink across arbitrary batch shapes."""
-    from nvd2mysqlloader_spark.operators.upsert import write_upsert_parquet
+    """Model-based: any sequence of partitioned versioned upserts and
+    deletes == a Python dict applying last-writer-wins per batch then
+    keyed replacement, or keyed removal, across batches. The partition
+    column derives from the key (the operator's contract: keys cannot
+    migrate partitions). Exercises publish/prune/hardlink and emptied
+    partitions across arbitrary batch shapes."""
+    import os
+
+    from nvd2mysqlloader_spark.operators.upsert import (
+        write_delete_parquet, write_upsert_parquet)
 
     path = str(tmp_path_factory.mktemp("prop") / "t")
     model: dict[int, int] = {}
-    for batch in batches:
-        rows = [(k, 2019 + k % 3, x) for k, x in batch]
-        df = spark.createDataFrame(rows, ["k", "year", "x"])
-        deduped = last_writer_wins(df, ["k"], ["x"])   # desc on payload
-        write_upsert_parquet(path, deduped, ["k"], partition_by=["year"])
-        # model: within-batch max payload wins, then keyed replace
-        best: dict[int, int] = {}
-        for k, x in batch:
-            best[k] = max(best.get(k, -1), x)
-        model.update(best)
-        got = {r.k: (r.year, r.x)
-               for r in spark.read.parquet(path).collect()}
+    for op, batch in batches:
+        if op == "delete":
+            n = write_delete_parquet(
+                path, spark.createDataFrame([(k,) for k in batch], "k long"),
+                ["k"], partition_by=["year"])
+            assert n == len(set(batch) & model.keys())
+            for k in batch:
+                model.pop(k, None)
+        else:
+            rows = [(k, 2019 + k % 3, x) for k, x in batch]
+            df = spark.createDataFrame(rows, ["k", "year", "x"])
+            deduped = last_writer_wins(df, ["k"], ["x"])   # desc on payload
+            write_upsert_parquet(path, deduped, ["k"], partition_by=["year"])
+            # model: within-batch max payload wins, then keyed replace
+            best: dict[int, int] = {}
+            for k, x in batch:
+                best[k] = max(best.get(k, -1), x)
+            model.update(best)
+        got = ({r.k: (r.year, r.x)
+                for r in spark.read.parquet(path).collect()}
+               if os.path.exists(path) else {})
         assert got == {k: (2019 + k % 3, x) for k, x in model.items()}
 
 

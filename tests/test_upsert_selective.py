@@ -643,22 +643,82 @@ def test_delete_rows_legacy_plain_directory(spark, tmp_path):
     assert {r.k for r in spark.read.parquet(path).collect()} == {2}
 
 
-def test_delete_partition_dir_rendering_not_reconstructed(spark, tmp_path):
-    """Review r5 #1 (confirmed repro): Spark renders a double partition
-    value 1e-8 as dir 'w=1.0E-8' while str() gives '1e-08' — affected
-    dirs must come from Spark itself (input_file_name), or the emptied
-    partition hardlinks back and the delete silently fails."""
+def _delete_rows(spark, path, rows, schema, keys):
+    """Delete ``rows`` (tuples of ``schema``) through
+    ``write_delete_parquet``, returning the count it reports."""
     from nvd2mysqlloader_spark.operators.upsert import write_delete_parquet
+    return write_delete_parquet(
+        path, spark.createDataFrame(rows, schema).select("k"), ["k"],
+        partition_by=keys)
+
+
+def _delete_flagged(spark, path, rows, schema, keys):
+    """Delete ``rows`` through the upsert's delete arm (every row
+    flagged), returning the number of rows sent."""
+    batch = spark.createDataFrame(rows, schema).withColumn("d", F.lit(True))
+    write_upsert_parquet(path, batch, ["k"], partition_by=keys,
+                         delete_flag="d")
+    return len(rows)
+
+
+@pytest.mark.parametrize("delete", [_delete_rows, _delete_flagged],
+                         ids=["write_delete_parquet", "delete_flag"])
+@pytest.mark.parametrize("value,kept,dtype,leaf", [
+    (1e-8, 0.5, "double", "w=1.0E-8"),
+    ("a:b", "c", "string", "w=a%3Ab"),
+    (None, "c", "string", "w=__HIVE_DEFAULT_PARTITION__"),
+], ids=["double", "escaped", "null"])
+def test_delete_partition_dir_rendering_not_reconstructed(
+        spark, tmp_path, delete, value, kept, dtype, leaf):
+    """Spark renders a partition value its own way (double 1e-8 as dir
+    'w=1.0E-8' while str() gives '1e-08'; 'a:b' escaped to 'w=a%3Ab';
+    null as the default partition). Both delete entry points must find
+    the dir the write rendered, or the emptied partition hardlinks
+    back and the delete silently fails."""
+    from nvd2mysqlloader_spark.operators import table_io
 
     path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, 1e-8, "a"), (2, 1e-8, "b"), (3, 0.5, "c")], ["k", "w", "v"])
-    write_upsert_parquet(path, df, ["k"], partition_by=["w"])
-    n = write_delete_parquet(
-        path, spark.createDataFrame([(1,), (2,)], ["k"]), ["k"],
-        partition_by=["w"])
+    schema = f"k long, w {dtype}, v string"
+    write_upsert_parquet(path, spark.createDataFrame(
+        [(1, value, "a"), (2, value, "b"), (3, kept, "c")], schema),
+        ["k"], partition_by=["w"])
+    assert os.path.isdir(os.path.join(table_io.current_version(path), leaf))
+    n = delete(spark, path, [(1, value, "a"), (2, value, "b")], schema,
+               ["w"])
     assert n == 2
     assert {r.k for r in spark.read.parquet(path).collect()} == {3}
+    assert not os.path.exists(
+        os.path.join(table_io.current_version(path), leaf))
+
+
+@pytest.mark.parametrize("write", [
+    lambda spark, path: write_upsert_parquet(
+        path, spark.createDataFrame([(1, "z", 7)], "k long, v string, y int"),
+        ["k"], partition_by=["y"]),
+    lambda spark, path: _delete_rows(spark, path, [(1,)], "k long", ["y"]),
+], ids=["write_upsert_parquet", "write_delete_parquet"])
+def test_foreign_partition_dir_names_are_refused(spark, tmp_path, write):
+    """A table another tool wrote with dir 'y=07' (read back as 7)
+    beside 'y=8': the rewrite would write 'y=7' and carry 'y=07'
+    beside it, duplicating its rows. Both writers refuse it with a
+    ValueError naming the path, before staging a version."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nvd2mysqlloader_spark.operators import table_io
+
+    path = str(tmp_path / "foreign")
+    for leaf, ks in (("y=07", [1, 2]), ("y=8", [3])):
+        os.makedirs(f"{path}/{leaf}")
+        pq.write_table(pa.table({"k": ks, "v": ["x"] * len(ks)}),
+                       f"{path}/{leaf}/part-0.parquet")
+    with pytest.raises(ValueError, match=re.escape(path)):
+        write(spark, path)
+    assert [n for n, _ in table_io.versions(path)] == [0]
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) \
+        == [1, 2, 3]
 
 
 def test_delete_everything_partitioned_table_stays_readable(spark, tmp_path):
