@@ -171,9 +171,7 @@ def compact_into(spark: SparkSession, src: str, dst: str,
     directory ``src`` into the fresh directory ``dst`` (not-worth-it
     partitions hardlinked) and return its stats; writes nothing and
     returns ``skipped`` when no rewrite is worth it and not ``force``.
-    Publishing ``dst`` is the caller's — a versioned table that owns
-    several such directories (operators/dedup.py's signature table)
-    compacts them into its own staged version."""
+    Publishing ``dst`` is the caller's."""
     from . import table_io
 
     # leaf partition dirs handle any partitioning depth (year=/month=…)

@@ -18,6 +18,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -436,14 +437,26 @@ def minhash_near_dups_exact(shingled: DataFrame, id_col: str = "doc_id",
 #   that would multiply signature bytes by ``bands``); the estimate
 #   join fetches only the candidate old-ids' buckets, O(collisions)
 #   of them.
+# * ``log/``    — (doc_id, sig) of the batches appended since the last
+#   fold, one file per append (``batch_id=B/`` dirs when keyed). An
+#   append writes only this file: writing its rows into every bucket
+#   dir they touch would land ~batch·bands tiny files per append.
+#   Probes derive the log's band rows with the writer's own
+#   expressions and read them beside the pruned bucket scans, so a
+#   doc is found the same whether it sits in the log or in the
+#   buckets; :func:`maintain_signature_table` moves the log's rows
+#   into both subtables before the log outgrows one dir's file or row
+#   limit.
 # * ``meta.json`` — (num_perm, bands, n_buckets, keyed, sig_fp).
 #   The probe derives EVERY geometry parameter from meta, so a
 #   probe/table drift (band hashes sliced at different widths would
 #   silently match nothing) is impossible by construction; appends
 #   that disagree with meta fail loudly.
-# * ``manifest.json`` — {sub: {leaf partition dir: {rows, files}}},
-#   the probe's dir discovery (no per-probe partition listing) and
-#   the maintenance policy's input.
+# * ``manifest.json`` — {sub: {leaf partition dir: {rows, files}}}
+#   for the two subtables and {log file: {rows}} for the log, the
+#   probe's dir discovery (no per-probe partition listing) and the
+#   maintenance policy's input. A version without ``log/`` (an
+#   earlier build's) reads as one with an empty log.
 #
 # Table state is ``operators/table_io``'s, nothing of its own: every
 # mutation — first write, append, keyed retry, compaction, rebucket —
@@ -461,14 +474,58 @@ def minhash_near_dups_exact(shingled: DataFrame, id_col: str = "doc_id",
 # ``batch_id`` keying (``keyed=True``): streaming gates append under
 # foreachBatch, which is AT-LEAST-ONCE — a retried batch must not
 # duplicate its signatures. Keyed writes add a leading ``batch_id``
-# partition and use dynamic partition OVERWRITE, so a retry replaces
-# exactly its own partitions; probes can exclude the in-flight batch
-# (``max_batch_id_exclusive``) at partition level, making the probe's
-# view of the corpus identical across retries.
+# partition, and a keyed append first drops every staged copy of its
+# batch (an earlier attempt's log file, or rows a fold or the first
+# write put into the buckets), so a retry replaces exactly its own
+# rows; probes can exclude the in-flight batch
+# (``max_batch_id_exclusive``) at partition level, in the buckets and
+# in the log alike, making the probe's view of the corpus identical
+# across retries.
 
 
 N_SIG_BUCKETS = 64
 _SUBTABLES = ("bands", "sigs")
+_BUCKET_COL = {"bands": "bucket", "sigs": "doc_bucket"}
+_LOG = "log"
+
+
+def _bucket(n_buckets: int) -> Column:
+    """``bucket`` of a band row — one expression for the writer, the
+    probe's touched-bucket list and its log rows, and the rewrites."""
+    return F.pmod(F.xxhash64("band_idx", "band_hash"),
+                  F.lit(n_buckets)).cast("int")
+
+
+def _doc_bucket(n_buckets: int) -> Column:
+    """``doc_bucket`` of a signature row."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
+def _band_rows(sigs: DataFrame, bands: int, n_buckets: int) -> DataFrame:
+    """(doc_id, band_idx, band_hash, sig_fp, bucket) band rows of
+    (doc_id, sig) signature rows, any other column (``batch_id``)
+    carried along: how the first write fills ``bands/``, how a probe
+    reads the log's band rows, and how maintenance and a rebucket move
+    the log into ``bands/``.
+
+    ``sig_fp`` is an 8-byte xxhash64 fingerprint of the FULL
+    signature stored on every band row, so the capped probe's star
+    collapse can admit one anchor per DISTINCT signature inside an
+    over-cap band-hash group without joining the sigs sidecar."""
+    rest = [c for c in sigs.columns if c not in ("doc_id", "sig")]
+    return (sigs.select("doc_id",
+                        _band_explode(bands).alias("band_idx", "band_hash"),
+                        F.xxhash64("sig").alias("sig_fp"), *rest)
+            .withColumn("bucket", _bucket(n_buckets)))
+
+
+def _log_rows(log: DataFrame, sub: str, bands: int,
+              n_buckets: int) -> DataFrame:
+    """The log's signature rows as subtable ``sub`` holds them, with
+    its bucket column (``_BUCKET_COL[sub]``)."""
+    if sub == "bands":
+        return _band_rows(log, bands, n_buckets)
+    return log.withColumn("doc_bucket", _doc_bucket(n_buckets))
 
 
 def _read_json(path: str) -> dict | None:
@@ -487,31 +544,66 @@ def _read_sig_meta(path: str) -> dict | None:
     return _read_json(path + "/meta.json")
 
 
+def _data_files(d: str) -> list[str]:
+    return sorted(f for f in os.listdir(d)
+                  if f.endswith(".parquet") and not f.startswith((".", "_")))
+
+
+def _footer_rows(f: str) -> int:
+    import pyarrow.parquet as pq
+    return pq.ParquetFile(f).metadata.num_rows
+
+
 def _dir_rows(d: str) -> dict:
     """{"rows", "files"} of one leaf partition dir from parquet
     footers — driver-side metadata reads, no Spark job. File counts
     feed the compaction policy (:func:`maintain_signature_table`);
     row counts feed the growth policy and observability."""
-    import pyarrow.parquet as pq
-    rows = files = 0
-    for f in sorted(os.listdir(d)):
-        if f.endswith(".parquet") and not f.startswith((".", "_")):
-            rows += pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
-            files += 1
-    return {"rows": rows, "files": files}
+    files = _data_files(d)
+    return {"rows": sum(_footer_rows(os.path.join(d, f)) for f in files),
+            "files": len(files)}
 
 
-def _scan_manifest(vdir: str, subs=_SUBTABLES) -> dict:
+def _log_manifest(vdir: str, known: dict) -> dict:
+    """{file: {rows}} of every data file under the version's ``log/``;
+    footers are read only for files not already in ``known``."""
+    root, out = os.path.join(vdir, _LOG), {}
+    for d, _dirs, _files in os.walk(root):
+        for f in _data_files(d):
+            rel = os.path.relpath(os.path.join(d, f), root)
+            out[rel] = known.get(rel) or {
+                "rows": _footer_rows(os.path.join(d, f))}
+    return out
+
+
+def _scan_manifest(vdir: str, appended: dict | None = None) -> dict:
     """Manifest of one staged version dir from the filesystem: leaf
     partition dir → {rows, files} per subtable (a leaf-dir walk plus
-    footer reads)."""
+    footer reads), and the log's files. ``appended`` holds the
+    previous manifest's entries of the subtables the mutation only
+    added files to: a dir whose file count is unchanged keeps its
+    entry, unread."""
     man = {}
-    for sub in subs:
-        root = os.path.join(vdir, sub)
-        man[sub] = ({d: _dir_rows(os.path.join(root, d))
-                     for d in table_io.leaf_partition_dirs(root)}
-                    if os.path.isdir(root) else {})
+    for sub in _SUBTABLES:
+        root, known = os.path.join(vdir, sub), (appended or {}).get(sub, {})
+        man[sub] = {}
+        for d in (table_io.leaf_partition_dirs(root)
+                  if os.path.isdir(root) else ()):
+            full, v = os.path.join(root, d), known.get(d)
+            man[sub][d] = (v if v and v["files"] == len(_data_files(full))
+                           else _dir_rows(full))
+    man[_LOG] = _log_manifest(vdir, {})
     return man
+
+
+def _scan(spark, cur: str, sub: str, rels: list[str]) -> DataFrame:
+    """Scan of ``rels`` — leaf dirs of a subtable, or log files — of
+    version ``cur``'s ``sub``. The paths come from the manifest, so
+    Spark lists none of the other dirs; basePath keeps the partition
+    columns."""
+    root = os.path.join(cur, sub)
+    return spark.read.option("basePath", root).parquet(
+        *[os.path.join(root, rel) for rel in sorted(rels)])
 
 
 def _published(path: str) -> tuple[str, dict, dict] | None:
@@ -534,7 +626,7 @@ def _published(path: str) -> tuple[str, dict, dict] | None:
            if os.path.exists(cur + "/manifest.dirty")
            else "holds a subtable as a symlink"
            if any(os.path.islink(os.path.join(cur, sub))
-                  for sub in _SUBTABLES)
+                  for sub in (*_SUBTABLES, _LOG))
            else "has manifest entries that are not {rows, files}"
            if not all(isinstance(v, dict) and {"rows", "files"} <= v.keys()
                       for sub in _SUBTABLES
@@ -545,7 +637,31 @@ def _published(path: str) -> tuple[str, dict, dict] | None:
             f"signature table at {path} {why}: an earlier layout, "
             "which is not read; rebuild the table with "
             "write_banded_signature_table")
-    return cur, meta, {sub: man.get(sub, {}) for sub in _SUBTABLES}
+    return cur, meta, {sub: man.get(sub, {}) for sub in (*_SUBTABLES, _LOG)}
+
+
+def signature_rows(spark, path: str) -> DataFrame | None:
+    """(doc_id, sig) of every document in the published
+    version of the signature table at ``path`` — its ``sigs``
+    subtable plus its log; None when the version holds no signature
+    file. The one reader of a table's signatures: nothing else should
+    read ``sigs/`` alone, which misses the documents still in the
+    log."""
+    state = _published(path.rstrip("/"))
+    if state is None:
+        return None
+    cur, _meta, man = state
+    return _union([_scan(spark, cur, sub, list(man[sub]))
+                   .select("doc_id", "sig")
+                   for sub in ("sigs", _LOG) if man[sub]])
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame | None:
+    """unionByName of ``dfs``; None for none."""
+    out = None
+    for df in dfs:
+        out = df if out is None else out.unionByName(df)
+    return out
 
 
 @contextlib.contextmanager
@@ -563,7 +679,8 @@ def _locked_current(path: str):
         yield state
 
 
-def _stage(path: str, cur: str | None, carry=_SUBTABLES) -> str:
+def _stage(path: str, cur: str | None,
+           carry=(*_SUBTABLES, _LOG)) -> str:
     """Create the next (unpublished) version dir of ``path`` and
     hardlink the ``carry`` subtables of ``cur`` into it — O(files)
     link calls, no data copied (files are immutable: every mutation
@@ -595,8 +712,14 @@ def write_banded_signature_table(shingled: DataFrame, path: str,
     """Append a batch's MinHash signatures to the band-partitioned
     table at ``path`` (creating it on first write). See the layout
     comment above; ``batch_id`` keys the write for foreachBatch
-    retry idempotence (dynamic partition overwrite of the batch's own
-    partitions).
+    retry idempotence (a retry replaces the batch's own rows).
+
+    The first write of a table fills both bucketed subtables. Every
+    later append writes only the batch's (doc_id, sig) rows into the
+    version's ``log/``: one file for a small batch
+    (``table_io.sized_for_write``), footer-counted into the manifest
+    without a Spark job, and read by probes beside the buckets until
+    :func:`maintain_signature_table` folds it in.
 
     Each call publishes ONE new version of the whole table (see the
     layout comment): concurrent appends — and an append racing
@@ -608,34 +731,14 @@ def write_banded_signature_table(shingled: DataFrame, path: str,
     a real catalog — flock does not span NFS/object stores."""
     path = path.rstrip("/")
     keyed = batch_id is not None
-    # sig_fp: an 8-byte xxhash64 fingerprint of the FULL signature
-    # stored on every band row, so the capped probe's star collapse
-    # can admit one anchor per DISTINCT signature inside an over-cap
-    # band-hash group without joining the sigs sidecar
     got = {"num_perm": num_perm, "bands": bands,
            "n_buckets": n_buckets, "keyed": keyed, "sig_fp": True}
-    # signatures computed ONCE for both writes (the sidecar and the
-    # band index derive from the same relation), before the lock
-    sigs = cut_lineage(
-        minhash_signatures(shingled, id_col, shingles_col, num_perm))
-
-    def _write(df: DataFrame, out: str, parts: list[str]) -> None:
-        # co-locate each partition dir's rows in ONE task before the
-        # partitionBy write: without this every task writes a file
-        # into every dir it touches (up to tasks x n_buckets tiny
-        # files per append — the small-files pathology
-        # operators/compaction.py exists to clean up); with it the
-        # append lands ~one file per touched dir
-        df = df.repartition(F.col(parts[-1]))
-        if keyed:
-            df = df.withColumn("batch_id",
-                               F.lit(batch_id).cast("long"))
-            w = (df.write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("batch_id", *parts))
-        else:
-            w = df.write.mode("append").partitionBy(*parts)
-        w.parquet(out)
+    sigs = minhash_signatures(shingled, id_col, shingles_col,
+                              num_perm).select(
+        F.col(id_col).alias("doc_id"), "sig")
+    if keyed:
+        sigs = sigs.withColumn("batch_id", F.lit(batch_id).cast("long"))
+    parts = ["batch_id"] if keyed else []
 
     with _locked_current(path) as state:
         cur, meta, man = state or (None, None, None)
@@ -645,47 +748,49 @@ def write_banded_signature_table(shingled: DataFrame, path: str,
                 f"{meta} but the write was called with {got}; a "
                 "mismatched append would make band hashes "
                 "unmatchable")
-        banded = sigs.select(
-            F.col(id_col).alias("doc_id"),
-            _band_explode(bands).alias("band_idx", "band_hash"),
-            F.xxhash64("sig").alias("sig_fp")).withColumn(
-            "bucket", F.pmod(F.xxhash64("band_idx", "band_hash"),
-                             F.lit(n_buckets)).cast("int"))
-        sidecar = sigs.select(
-            F.col(id_col).alias("doc_id"), "sig",
-            F.pmod(F.xxhash64(id_col), F.lit(n_buckets)).cast("int")
-            .alias("doc_bucket"))
-
         vdir = _stage(path, cur)
-        # sigs first, bands second. Every published version must hold
-        # bands ⊆ sigs: a band row with no sig silently drops from the
-        # sidecar join
-        _write(sidecar, vdir + "/sigs", ["doc_bucket"])
-        _write(banded, vdir + "/bands", ["bucket"])
-
-        if man is None:
-            # a new table's manifest is just this batch's dirs: a scan
-            # of the staged version, no Spark job
+        if cur is None:
+            # signatures computed ONCE for both writes (the sidecar
+            # and the band index derive from the same relation). Sigs
+            # first, bands second: every published version must hold
+            # bands ⊆ sigs — a band row with no sig silently drops
+            # from the sidecar join
+            sigs = cut_lineage(sigs)
+            for sub, df, col in (
+                    ("sigs", sigs.withColumn("doc_bucket",
+                                             _doc_bucket(n_buckets)),
+                     "doc_bucket"),
+                    ("bands", _band_rows(sigs, bands, n_buckets),
+                     "bucket")):
+                # co-locate each partition dir's rows in ONE task
+                # before the partitionBy write: without this every
+                # task writes a file into every dir it touches
+                (df.repartition(F.col(col)).write
+                 .partitionBy(*parts, col).parquet(f"{vdir}/{sub}"))
+            # a new table's manifest is just this batch's dirs: a
+            # scan of the staged version, no Spark job
             man = _scan_manifest(vdir)
         else:
-            # touched dirs only. ONE bounded job collects both
-            # subtables' touched bucket values (≤ batch·bands + batch
-            # ints, off the already-materialized sigs); the row
-            # recounts are driver-side parquet-footer reads of just
-            # those dirs in the staged version
-            touched = (banded.select(F.lit("bands").alias("t"),
-                                     F.col("bucket").alias("b"))
-                       .unionAll(sidecar.select(
-                           F.lit("sigs").alias("t"),
-                           F.col("doc_bucket").alias("b")))
-                       .distinct().collect())
-            pref = f"batch_id={batch_id}/" if keyed else ""
-            for r in touched:
-                col = "bucket" if r["t"] == "bands" else "doc_bucket"
-                rel = f"{pref}{col}={r['b']}"
-                d = os.path.join(vdir, r["t"], rel)
-                if os.path.isdir(d):
-                    man[r["t"]][rel] = _dir_rows(d)
+            if keyed:
+                # a retry replaces its batch: drop every staged copy
+                # of it first — an earlier attempt's log file, or its
+                # rows a fold or the first write put into the buckets
+                own = f"batch_id={batch_id}"
+                for sub in man:
+                    shutil.rmtree(os.path.join(vdir, sub, own),
+                                  ignore_errors=True)
+                    man[sub] = {rel: v for rel, v in man[sub].items()
+                                if rel.split("/")[0] != own}
+            (table_io.sized_for_write(sigs).write.mode("append")
+             .partitionBy(*parts).parquet(f"{vdir}/{_LOG}"))
+            man[_LOG] = _log_manifest(vdir, man[_LOG])
+            for rel in [r for r, v in man[_LOG].items() if not v["rows"]]:
+                # the file an empty batch writes holds nothing to log
+                d, f = os.path.split(os.path.join(vdir, _LOG, rel))
+                for name in (f, f".{f}.crc"):
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(d, name))
+                del man[_LOG][rel]
         _publish(path, vdir, got, man)
 
 
@@ -706,13 +811,20 @@ def incremental_minhash_candidates_banded(
     * the doc buckets of the surviving candidate old-ids (the
       signature fetch for the estimate) —
 
-    both partition-pruned scans; the corpus is never re-shingled,
-    re-hashed, or fully read. Geometry (num_perm, bands, n_buckets)
-    comes from the table's meta, so probe/table drift cannot happen.
+    both partition-pruned scans, each unioned with the version's log
+    (the batches appended since the last fold): the log's band rows
+    are derived with the writer's own band, fingerprint and bucket
+    expressions and filtered to the touched buckets, and its
+    signatures to the candidates' doc buckets. The corpus is never
+    re-shingled, re-hashed, or fully read; the log is read in full,
+    and maintenance keeps it under one bucket's worth of rows.
+    Geometry (num_perm, bands, n_buckets) comes from the table's
+    meta, so probe/table drift cannot happen.
     ``max_batch_id_exclusive`` restricts a keyed table to batches
-    strictly before it (partition-level), which makes a foreachBatch
-    retry's probe independent of whether the failed attempt already
-    appended this batch's own signatures.
+    strictly before it (partition-level, in the buckets and in the
+    log), which makes a foreachBatch retry's probe independent of
+    whether the failed attempt already appended this batch's own
+    signatures.
 
     ``max_candidates_per_new`` is the probe-side ADMISSION CAP
     (VERDICT r9 ask #1), the probe's analog of
@@ -776,7 +888,7 @@ def incremental_minhash_candidates_banded(
     because the signature relation is deterministic).
 
     Snapshot semantics: the probe resolves the table's current
-    version ONCE and reads meta, manifest and both scans from that
+    version ONCE and reads meta, manifest and every scan from that
     version dir, so a returned DataFrame is version-pinned: it stays
     consistent across a later publish for as long as that version is
     retained (``table_io.publish_version`` keeps the previous one)."""
@@ -809,12 +921,23 @@ def incremental_minhash_candidates_banded(
             T.StructField("old_id", idt),
             T.StructField("est_jaccard", T.DoubleType())]))
 
-    # a first write whose batch had zero signable docs publishes a
-    # table with meta but no data dirs — an empty corpus, not an
-    # error (the retry-idempotent gate depends on the probe
-    # tolerating it)
-    if not (man["bands"] and man["sigs"]):
-        return _empty()
+    def _live(sub: str, col: str | None = None,
+              want: set[int] = frozenset()) -> list[str]:
+        """The manifest's ``sub`` entries to read: those whose ``col``
+        partition value is in ``want`` (every entry when ``col`` is
+        None), without the batches at or past
+        ``max_batch_id_exclusive``."""
+        out = []
+        for rel in man[sub]:
+            parts = dict(c.split("=", 1) for c in rel.split("/") if "=" in c)
+            if col is not None and int(parts[col]) not in want:
+                continue
+            bid = parts.get("batch_id")
+            if (max_batch_id_exclusive is not None and bid is not None
+                    and int(bid) >= max_batch_id_exclusive):
+                continue
+            out.append(rel)
+        return out
 
     def _epoch(df: DataFrame) -> DataFrame:
         if max_batch_id_exclusive is not None:
@@ -827,30 +950,28 @@ def incremental_minhash_candidates_banded(
         """Scan of the version's ``sub`` restricted to ``bucket_vals``.
 
         The touched dirs are resolved DRIVER-side from the manifest
-        and passed as explicit paths (basePath keeps the partition
-        columns), so Spark never lists the other n_buckets−touched
-        dirs — the fixed per-probe listing cost that grows with
-        n_buckets (17.9 s at 5,120 dirs on local FS) drops to a dict
-        lookup. The partition IN-filter (and the epoch filter) stay
-        on the relation and keep the pinned plan shape: two
-        partition-pruned scans. None ⇒ no matching dirs (empty corpus
-        slice)."""
-        want = set(bucket_vals)
-        root = os.path.join(cur, sub)
-        sel = []
-        for rel in man[sub]:
-            parts = dict(p.split("=", 1) for p in rel.split("/"))
-            if int(parts[col]) not in want:
-                continue
-            bid = parts.get("batch_id")
-            if (max_batch_id_exclusive is not None and bid is not None
-                    and int(bid) >= max_batch_id_exclusive):
-                continue
-            sel.append(os.path.join(root, rel))
-        if not sel:
+        and passed as explicit paths (:func:`_scan`), so Spark never
+        lists the other n_buckets−touched dirs — the fixed
+        per-probe listing cost that grows with n_buckets (17.9 s at
+        5,120 dirs on local FS) drops to a dict lookup. The partition
+        IN-filter (and the epoch filter) stay on the relation and keep
+        the pinned plan shape: two partition-pruned scans. None ⇒ no
+        matching dirs (empty corpus slice)."""
+        rels = _live(sub, col, set(bucket_vals))
+        if not rels:
             return None
-        df = spark.read.option("basePath", root).parquet(*sorted(sel))
-        return _epoch(df).filter(F.col(col).isin(bucket_vals))
+        return _epoch(_scan(spark, cur, sub, rels)).filter(
+            F.col(col).isin(bucket_vals))
+
+    # the log: every batch appended since the last fold, read in full
+    log_rels = _live(_LOG)
+    log = _epoch(_scan(spark, cur, _LOG, log_rels)) if log_rels else None
+    # a first write whose batch had zero signable docs publishes a
+    # table with meta but no data dirs — an empty corpus, not an
+    # error (the retry-idempotent gate depends on the probe
+    # tolerating it)
+    if not (man["bands"] or log_rels):
+        return _empty()
 
     if new_sigs is None:
         # LAZY cut when the bucket collect below is the next action —
@@ -874,9 +995,7 @@ def incremental_minhash_candidates_banded(
         F.col(id_col).alias("new_id"),
         F.col("sig").alias("sig_new"),
         _band_explode(bands).alias("band_idx", "band_hash"))
-        .withColumn("bucket",
-                    F.pmod(F.xxhash64("band_idx", "band_hash"),
-                           F.lit(n_buckets)).cast("int")))
+        .withColumn("bucket", _bucket(n_buckets)))
     # the batch's touched band buckets — k-bounded collect (≤ n_buckets
     # ints) off the MATERIALIZED new side, then pushed as a literal
     # IN-list so the parquet source partition-prunes the corpus scan;
@@ -891,7 +1010,13 @@ def incremental_minhash_candidates_banded(
                           .collect()})
     if not buckets:              # batch had no signable docs
         return _empty()
-    corpus_bands = _pruned_scan("bands", "bucket", buckets)
+    band_cols = ["doc_id", "band_idx", "band_hash", "sig_fp"]
+    corpus_bands = _union([
+        df.select(*band_cols) for df in (
+            _pruned_scan("bands", "bucket", buckets),
+            None if log is None else _band_rows(log, bands, n_buckets)
+            .filter(F.col("bucket").isin(buckets)))
+        if df is not None])
     if corpus_bands is None:     # batch touches no existing dirs
         return _empty()
     if max_candidates_per_new is not None:
@@ -902,7 +1027,8 @@ def incremental_minhash_candidates_banded(
         # collapses to one row, while a member whose signature differs
         # from the crowd's keeps its own anchor (ADVICE r10 #2; the
         # residual is in the docstring). A group never straddles
-        # buckets (bucket = hash(band_idx, band_hash)), so the windows
+        # buckets (bucket = hash(band_idx, band_hash)), and the log's
+        # rows of the touched buckets are in the union, so the windows
         # over the PRUNED rows see exact group sizes; one extra
         # shuffle over pruned rows, capped mode only.
         from pyspark.sql import Window
@@ -950,11 +1076,15 @@ def incremental_minhash_candidates_banded(
     doc_buckets = sorted({r["b"] for r in doc_rows})
     if not doc_buckets:          # no collisions: empty probe result
         return _empty()
-    sidecar = _pruned_scan("sigs", "doc_bucket", doc_buckets)
+    sidecar = _union([
+        df.select(F.col("doc_id").alias("old_id"),
+                  F.col("sig").alias("sig_old")) for df in (
+            _pruned_scan("sigs", "doc_bucket", doc_buckets),
+            None if log is None else log.filter(
+                _doc_bucket(n_buckets).isin(doc_buckets)))
+        if df is not None])
     if sidecar is None:          # no sig dirs for the candidates
         return _empty()
-    sidecar = sidecar.select(F.col("doc_id").alias("old_id"),
-                             F.col("sig").alias("sig_old"))
     est = (F.size(F.filter(F.zip_with("sig_new", "sig_old",
                                       lambda x, y: x == y),
                            lambda v: v)).cast("double") / num_perm)
@@ -997,22 +1127,28 @@ def rebucket_signature_table(spark, path: str, n_buckets: int) -> dict:
     append geometry is frozen at first write (mismatches raise), so a
     live table grown 100× needs this migration. Shape:
 
-    * each subtable rewrites in ONE Spark job — read the current
-      version, recompute the bucket column from the SAME stored
-      columns the writer hashed (``xxhash64(band_idx, band_hash)`` /
-      ``xxhash64(doc_id)``, types round-trip through parquet so the
-      hashes are identical), ``partitionBy`` write into the staged
-      version dir. Cost is one pass over the signature state (k longs
-      per doc × bands) — never the corpus text. When the new geometry
-      is a MULTIPLE of the old (``n_new % n_old == 0`` — the
-      production growth shape: doubling as the corpus doubles), the
-      rewrite is a NARROW map with no shuffle at all: ``h mod n_new``
-      refines ``h mod n_old``, so every old bucket dir splits locally
-      into exactly ``n_new/n_old`` new dirs and each task touches only
-      its input dirs' images (plan pinned shuffle-free in
+    * each subtable rewrites in ONE Spark job (:func:`_write_sub`) —
+      read the current version's subtable, recompute the bucket
+      column from the SAME stored columns the writer hashed
+      (``xxhash64(band_idx, band_hash)`` / ``xxhash64(doc_id)``, types
+      round-trip through parquet so the hashes are identical),
+      ``partitionBy`` write into the staged version dir. Cost is one
+      pass over the signature state (k longs per doc × bands) — never
+      the corpus text. When the new geometry is a MULTIPLE of the old
+      (``n_new % n_old == 0`` — the production growth shape: doubling
+      as the corpus doubles), the rewrite of the stored rows is a
+      NARROW map with no shuffle at all: ``h mod n_new`` refines
+      ``h mod n_old``, so every old bucket dir splits locally into
+      exactly ``n_new/n_old`` new dirs and each task touches only its
+      input dirs' images (plan pinned shuffle-free in
       tests/test_dedup.py). Non-multiple geometries co-locate with a
       ``repartition`` on the new bucket first — full shuffle of the
       signature state, still one job;
+    * the log moves into the buckets in the same jobs, and the new
+      version's log is empty: its rows, derived with the writer's
+      expressions, are co-located by the new bucket (a shuffle of the
+      log's rows only), so a dir they fall in gains one file beside
+      the images of its old dir's files;
     * a prober resolves geometry, manifest, and data through the same
       version, so it sees the old geometry or the new, never a mix;
       appends wait on the writer lock and land in the migrated
@@ -1041,7 +1177,6 @@ def _rebucket(spark, path: str, cur: str, meta: dict, man: dict,
                 "bands_dirs": len(man["bands"]),
                 "sigs_dirs": len(man["sigs"]), "skipped": True}
     vdir = _stage(path, cur, carry=())
-    keyed = meta["keyed"]
     # multiple-of-old geometry: h mod n_new determines h mod n_old,
     # so each old dir's rows land in exactly n_new/n_old new dirs —
     # a narrow local split, no co-locating shuffle needed (each task
@@ -1049,28 +1184,88 @@ def _rebucket(spark, path: str, cur: str, meta: dict, man: dict,
     # path at 100 TB state scale: doubling is a map job over the
     # signature state, not a full reshuffle of it.
     narrow = n_buckets % old_n == 0
-
-    def _rewrite(sub: str, part_col: str, bucket_expr) -> None:
-        if not man[sub]:
-            return
-        df = (spark.read.parquet(cur + "/" + sub)
-              .withColumn(part_col,
-                          F.pmod(bucket_expr,
-                                 F.lit(n_buckets)).cast("int")))
-        if not narrow:
-            df = df.repartition(F.col(part_col))
-        (df.write.partitionBy(*(["batch_id", part_col] if keyed
-                                else [part_col]))
-         .mode("overwrite").parquet(vdir + "/" + sub))
-
-    _rewrite("bands", "bucket", F.xxhash64("band_idx", "band_hash"))
-    _rewrite("sigs", "doc_bucket", F.xxhash64("doc_id"))
+    for sub in _SUBTABLES:
+        _write_sub(spark, cur, vdir, meta, man, sub, n_buckets,
+                   base=True, shuffle=not narrow)
     man = _scan_manifest(vdir)
     _publish(path, vdir, dict(meta, n_buckets=n_buckets), man)
     return {"n_buckets_old": old_n, "n_buckets_new": n_buckets,
             "narrow": narrow,
             "bands_dirs": len(man["bands"]),
             "sigs_dirs": len(man["sigs"])}
+
+
+def _write_sub(spark, cur: str, vdir: str, meta: dict, man: dict,
+               sub: str, n_buckets: int, base: bool, shuffle: bool,
+               target_bytes: int | None = None) -> None:
+    """Write version ``cur``'s log into the staged ``vdir``'s subtable
+    ``sub`` at ``n_buckets``, in one Spark job. The log's rows are
+    derived with the writer's expressions (:func:`_log_rows`) and
+    co-located by bucket, so they add at most one file to a dir.
+
+    With ``base`` the subtable's own rows go along, into a fresh dir
+    (a rebucket or a compaction): their bucket column is recomputed
+    from the SAME stored columns the writer hashed (types round-trip
+    through parquet, so the hashes are identical), and ``shuffle``
+    co-locates them too — one file per dir, split past
+    ``target_bytes`` at the subtable's current bytes per row; without
+    it each task writes its own rows' dirs. Without ``base`` the log's
+    rows are appended to the dirs :func:`_stage` carried in."""
+    col = _BUCKET_COL[sub]
+    log = (_log_rows(_scan(spark, cur, _LOG, list(man[_LOG])), sub,
+                     meta["bands"], n_buckets) if man[_LOG] else None)
+    rows = None
+    if base and man[sub]:
+        rows = _scan(spark, cur, sub, list(man[sub])).withColumn(
+            col, (_bucket if sub == "bands" else _doc_bucket)(n_buckets))
+    if log is not None and not shuffle:
+        log = log.repartition(F.col(col))
+    df = _union([d for d in (rows, log) if d is not None])
+    if df is None:
+        return
+    if shuffle:
+        df = df.repartition(F.col(col))
+    w = df.write
+    if target_bytes and rows is not None:
+        root = os.path.join(cur, sub)
+        size = sum(os.path.getsize(os.path.join(root, rel, f))
+                   for rel in man[sub]
+                   for f in _data_files(os.path.join(root, rel)))
+        n_rows = sum(v["rows"] for v in man[sub].values())
+        w = w.option("maxRecordsPerFile",
+                     max(1, target_bytes * n_rows // max(size, 1)))
+    (w.partitionBy(*(["batch_id"] if meta["keyed"] else []), col)
+     .mode("overwrite" if base else "append").parquet(f"{vdir}/{sub}"))
+
+
+def _overfull(spark, cur: str, meta: dict, man: dict,
+              max_files: int) -> list[str]:
+    """The subtables of version ``cur`` with a dir that holds more than
+    ``max_files`` files, counting for each dir the log files with rows
+    for it — the files the dir would hold had every append written its
+    rows into the buckets. No Spark job while no dir's file count plus
+    the whole log's can pass ``max_files``; past that, one job over
+    the log finds the dirs each log file's rows fall in."""
+    files = {(sub, rel): v["files"]
+             for sub in _SUBTABLES for rel, v in man[sub].items()}
+    if max(files.values(), default=0) + len(man[_LOG]) <= max_files:
+        return []
+    if man[_LOG]:
+        log = _scan(spark, cur, _LOG, list(man[_LOG])).withColumn(
+            "_f", F.input_file_name())
+        pre = ([F.lit("batch_id="), F.col("batch_id"), F.lit("/")]
+               if meta["keyed"] else [])
+        touched = _union([
+            _log_rows(log, sub, meta["bands"], meta["n_buckets"]).select(
+                F.lit(sub).alias("sub"), "_f",
+                F.concat(*pre, F.lit(f"{col}="), F.col(col)).alias("rel"))
+            for sub, col in _BUCKET_COL.items()])
+        for r in touched.distinct().groupBy("sub", "rel").count().collect():
+            files[r["sub"], r["rel"]] = (files.get((r["sub"], r["rel"]), 0)
+                                         + r["count"])
+    return [sub for sub in _SUBTABLES
+            if any(n > max_files for (s, _rel), n in files.items()
+                   if s == sub)]
 
 
 def maintain_signature_table(spark, path: str,
@@ -1080,11 +1275,14 @@ def maintain_signature_table(spark, path: str,
                              * 1024) -> dict:
     """Manifest-driven maintenance policy for the banded signature
     table — the executable form of the n_buckets ∝ corpus sizing rule
-    (PLANS.md §Round-9/-10). PLANNING IS ZERO SPARK JOBS: every
-    decision reads the driver-side manifest (dir → rows/files), never
-    the data.
+    (PLANS.md §Round-9/-10). Planning reads the driver-side manifest
+    (dir → rows/files, log file → rows), never the data, but for one
+    bounded job over the log when the small-files count needs it. The
+    log's rows count as the band rows they stand for (rows ×
+    ``bands``).
 
-    Two triggers, applied in order:
+    Three triggers; growth first, and the other two only when the
+    table does not grow:
 
     * **growth**: when the band index averages more than
       ``target_rows_per_bucket`` rows per bucket, double n_buckets
@@ -1093,58 +1291,71 @@ def maintain_signature_table(spark, path: str,
       split path). Constant rows-per-bucket is what keeps the pruned
       probe's scanned bytes flat as the corpus grows — touched dirs ≤
       batch·bands regardless of n_buckets, rows/dir held ≈ constant
-      by this policy.
-    * **small files**: when any subtable dir accretes more than
-      ``max_files_per_dir`` files (micro-append accretion — ~one
-      file per touched dir per append), compact that subtable with
-      ``operators.compaction.compact_into`` (per-dir layout
-      preserved, probe-invariant — pinned by the
-      ``signature_table_maintenance`` verdict query). Skipped when a
-      rebucket already ran: the rebucket rewrite IS a compaction (one
-      file set per fresh dir).
+      by this policy. The rebucket moves the log into the buckets too.
+    * **small files**: compact a subtable — rewrite it with the log's
+      rows, one file per dir, split past ``compact_target_bytes`` —
+      when any of its dirs holds more than ``max_files_per_dir``
+      files, counting the log files with rows for that dir
+      (:func:`_overfull`): the count a layout that appended into the
+      buckets would have, so compaction comes no more often than it
+      would there.
+    * **fold**: append the log's rows to the dirs they fall in, one
+      file per dir at most, when the log holds more than
+      ``max_files_per_dir`` files or more than
+      ``target_rows_per_bucket`` band rows: every probe reads the
+      whole log, so it is held to one dir's file and row limits. The
+      write is O(log), not O(table). A compaction folds the log as
+      well, appending it to the subtable it does not rewrite.
+
+    Probe-invariant — pinned by the ``signature_table_maintenance``
+    verdict query.
 
     Either action publishes ONE version of the whole table, under the
     same writer lock appends take, so an append arriving mid-pass
     waits and lands in the maintained version instead of being
-    dropped by it. Returns {rebucketed, n_buckets, compacted,
-    bands_rows, rows_per_bucket} — callers log it; a no-op pass costs
-    only the lock and the manifest read."""
-    from .compaction import compact_into
-
+    dropped by it. Returns {rebucketed, n_buckets, compacted (the
+    subtables rewritten), folded (the log files moved into the
+    buckets), bands_rows, rows_per_bucket} — callers log it; a no-op
+    pass costs only the lock and the manifest read."""
     path = path.rstrip("/")
     with _locked_current(path) as state:
         if state is None:
             raise ValueError(f"no signature table at {path}")
         cur, meta, man = state
-        bands_rows = sum(v["rows"] for v in man["bands"].values())
+        log_rows = meta["bands"] * sum(v["rows"]
+                                       for v in man[_LOG].values())
+        bands_rows = log_rows + sum(v["rows"]
+                                    for v in man["bands"].values())
         n = meta["n_buckets"]
         rpb = bands_rows / max(n, 1)
         target_n = n
         while bands_rows / max(target_n, 1) > target_rows_per_bucket:
             target_n *= 2
-        compacted = []
+        compacted, fold = [], target_n != n
         if target_n != n:
             stats = _rebucket(spark, path, cur, meta, man, target_n)
             assert stats["narrow"], stats     # power-of-two multiple
         else:
-            compacted = [sub for sub in _SUBTABLES
-                         if any(v["files"] > max_files_per_dir
-                                for v in man[sub].values())]
-        if compacted:
+            compacted = _overfull(spark, cur, meta, man, max_files_per_dir)
+            fold = bool(man[_LOG]) and bool(
+                compacted or len(man[_LOG]) > max_files_per_dir
+                or log_rows > target_rows_per_bucket)
+        if compacted or (fold and target_n == n):
             vdir = _stage(path, cur, carry=[s for s in _SUBTABLES
                                             if s not in compacted])
-            for sub in compacted:
-                compact_into(spark, cur + "/" + sub,
-                             vdir + "/" + sub,
-                             target_bytes=compact_target_bytes,
-                             force=True)
-            # dir set and per-dir rows are compaction-invariant, but
-            # file counts changed — rescan the compacted subtables
-            man = dict(man, **_scan_manifest(vdir, compacted))
-            _publish(path, vdir, meta, man)
+            for sub in _SUBTABLES:
+                if sub in compacted or fold:
+                    _write_sub(spark, cur, vdir, meta, man, sub, n,
+                               base=sub in compacted, shuffle=True,
+                               target_bytes=compact_target_bytes)
+            # a subtable the fold only appended to keeps the entries of
+            # the dirs it did not reach
+            _publish(path, vdir, meta, _scan_manifest(
+                vdir, {s: man[s] for s in _SUBTABLES if s not in compacted}))
     return {"rebucketed": target_n != n, "n_buckets": target_n,
-            "compacted": compacted, "bands_rows": bands_rows,
-            "rows_per_bucket": round(rpb, 1)}
+            "compacted": compacted,
+            "folded": len(man[_LOG]) if fold else 0,
+            "bands_rows": bands_rows, "rows_per_bucket": round(rpb, 1)}
 
 
 def remove_duplicated_spans(docs: DataFrame, text_col: str = "text",

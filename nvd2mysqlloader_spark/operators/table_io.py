@@ -266,6 +266,41 @@ def vacuum(path: str, keep: int = 1) -> list[int]:
     return [n for n, _d in drop]
 
 
+def sized_for_write(df):
+    """File-sizing shim before an unpartitioned version write (guide
+    §6), shared by the upsert's rewrite and the signature table's log
+    append: the output otherwise lands one file per shuffle
+    partition — tiny files at bench scale, and at 100 TB a per-version
+    file count fixed by the shuffle-partition config instead of data
+    size. Outputs estimated at no more than HALF one advisory
+    partition ``coalesce(1)`` — the single file a rebalance would
+    produce at that size, without the exchange the r12 rebalance
+    charged to every bench-scale version write (VERDICT r12 ask #5);
+    larger ones take the AQE ``REBALANCE`` hint (splits sized to
+    advisoryPartitionSizeInBytes) so file count tracks bytes at every
+    scale. The estimate is catalyst's optimized-plan sizeInBytes —
+    driver-side, no job. It is not a bound: an under-estimate (an
+    overrated filter, a column wider than its type's default size)
+    can still send more than one advisory partition through the one
+    coalesced task; the factor-of-two margin absorbs moderate errors,
+    and an over-estimate (or unknown stats) errs toward the
+    rebalance."""
+    spark = df.sparkSession
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes())
+        advisory = int(
+            spark._jvm.org.apache.spark.network.util.JavaUtils
+            .byteStringAsBytes(spark.conf.get(
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+                "64m")))
+    except Exception:          # stats/conf unavailable: scale-correct
+        return df.hint("rebalance")
+    if 2 * est <= advisory:
+        return df.coalesce(1)
+    return df.hint("rebalance")
+
+
 def link_tree(src: str, dst: str) -> None:
     """Mirror ``src`` into ``dst`` with hardlinks (no data copied)."""
     for root, _dirs, files in os.walk(src):

@@ -107,40 +107,6 @@ def _live(df: DataFrame, delete_flag: str | None) -> DataFrame:
             .drop(delete_flag))
 
 
-def _sized_for_write(df: DataFrame) -> DataFrame:
-    """File-sizing shim before an unpartitioned version write (guide
-    §6): the merge output otherwise lands one file per shuffle
-    partition — tiny files at bench scale, and at 100 TB a per-version
-    file count fixed by the shuffle-partition config instead of data
-    size. Outputs estimated at no more than HALF one advisory
-    partition ``coalesce(1)`` — the single file a rebalance would
-    produce at that size, without the exchange the r12 rebalance
-    charged to every bench-scale version write (VERDICT r12 ask #5);
-    larger ones take the AQE ``REBALANCE`` hint (splits sized to
-    advisoryPartitionSizeInBytes) so file count tracks bytes at every
-    scale. The estimate is catalyst's optimized-plan sizeInBytes —
-    driver-side, no job. It is not a bound: an under-estimate (an
-    overrated filter, a column wider than its type's default size)
-    can still send more than one advisory partition through the one
-    coalesced task; the factor-of-two margin absorbs moderate errors,
-    and an over-estimate (or unknown stats) errs toward the
-    rebalance."""
-    spark = df.sparkSession
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-        advisory = int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils
-            .byteStringAsBytes(spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                "64m")))
-    except Exception:          # stats/conf unavailable: scale-correct
-        return df.hint("rebalance")
-    if 2 * est <= advisory:
-        return df.coalesce(1)
-    return df.hint("rebalance")
-
-
 def write_upsert_parquet(target_path: str, updates: DataFrame,
                          keys: Sequence[str],
                          partition_by: Sequence[str] | None = None,
@@ -321,7 +287,7 @@ def _rewrite(path: str, cur: str | None, rows: DataFrame,
     write rewrote or left empty: an emptied partition must stay gone,
     not resurrect. A version with no data file left is written as a
     schema-bearing empty table, since no reader can infer a schema from
-    a bare directory. Unpartitioned: one ``_sized_for_write`` write.
+    a bare directory. Unpartitioned: one ``table_io.sized_for_write`` write.
 
     Carry-over compares dir names, so ``_check_layout`` first refuses
     a ``cur`` whose dirs another tool named otherwise ('y=07' where
@@ -331,8 +297,10 @@ def _rewrite(path: str, cur: str | None, rows: DataFrame,
     vdir = table_io.next_version_dir(path)
     if not partition_by:
         # size-conditional output exchange before the unpartitioned
-        # write (guide §6, VERDICT r12 ask #5) — see _sized_for_write
-        _sized_for_write(rows).write.mode("overwrite").parquet(vdir)
+        # write (guide §6, VERDICT r12 ask #5) — see
+        # table_io.sized_for_write
+        (table_io.sized_for_write(rows).write.mode("overwrite")
+         .parquet(vdir))
         table_io.publish_version(path, vdir)
         return
     # cluster by the partition key: one file per partition instead of

@@ -143,7 +143,7 @@ def stream_minhash_dedup_gate(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
-    from ..operators.dedup import minhash_near_dups
+    from ..operators.dedup import minhash_near_dups, signature_rows
     from .sketch_queries import _shingled
 
     root = tempfile.mkdtemp(prefix="stream_gate_")
@@ -210,10 +210,11 @@ def stream_minhash_dedup_gate(spark: SparkSession,
         n_signable = shingled_all.agg(
             F.sum(F.when(F.size("s") > 0, 1).otherwise(0))
             .cast("long").alias("n_signable"))
-        # same _SUCCESS-only guard as the pair table: an all-unsignable
-        # corpus appends zero signature rows per batch
-        if list_data_files(sig_tbl + "/sigs"):
-            n_sigs = (spark.read.parquet(sig_tbl + "/sigs")
+        # an all-unsignable corpus leaves no signature file (the
+        # table's one signature reader says None)
+        sig_rows = signature_rows(spark, sig_tbl)
+        if sig_rows is not None:
+            n_sigs = (sig_rows
                       .agg(F.count(F.lit(1)).alias("n_sigs"),
                            F.count_distinct("doc_id")
                            .alias("n_sig_docs")))

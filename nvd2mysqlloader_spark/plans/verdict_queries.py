@@ -975,7 +975,7 @@ def signature_table_maintenance(spark: SparkSession,
     from ..operators.dedup import (_read_sig_meta, collect_band_keys,
                                    incremental_minhash_candidates_banded,
                                    maintain_signature_table,
-                                   minhash_signatures,
+                                   minhash_signatures, signature_rows,
                                    write_banded_signature_table)
     from .sketch_queries import _shingled
 
@@ -998,9 +998,10 @@ def signature_table_maintenance(spark: SparkSession,
     docs_count_side = (load_table(spark, sf_dir, "documents")
                        .filter(corpus_side))
     # 4 micro-appends: the accretion shape a streaming gate
-    # produces (each append lands ~one file per touched dir);
-    # hash-sliced so every slice is nonempty (corpus ids are all
-    # even — a modular split would leave half the slices empty).
+    # produces (the first write fills the buckets, each later append
+    # lands one log file that every probe reads); hash-sliced so
+    # every slice is nonempty (corpus ids are all even — a modular
+    # split would leave half the slices empty).
     # The micro-appended PRISTINE state is a session-scoped
     # artifact (built once); compaction MUTATES, so each call
     # takes a cheap private copy and maintains THAT — the wall
@@ -1013,12 +1014,11 @@ def signature_table_maintenance(spark: SparkSession,
 
     def _build(p: str) -> None:
         # slice hash SALTED with a literal so it is uncorrelated
-        # with doc_bucket = xxhash64(doc_id) % 16 — the unsalted
-        # slice (h % 4) is DETERMINED by the bucket (h % 16), so
-        # every sigs dir would receive exactly one append and
-        # never accrete; real streaming-gate batches are
-        # uncorrelated with doc buckets, and both subtables must
-        # present the accretion shape the policy exists to fix
+        # with doc_bucket = xxhash64(doc_id) % 16, as real
+        # streaming-gate batches are — the unsalted slice (h % 4)
+        # is DETERMINED by the bucket (h % 16), so the first write
+        # would fill only a quarter of the doc buckets and each log
+        # file would hold another quarter's docs
         for k in range(4):
             write_banded_signature_table(
                 corpus.filter(
@@ -1064,12 +1064,18 @@ def signature_table_maintenance(spark: SparkSession,
     _t0 = _time.perf_counter()
     before = probe()
     _t_probe = _time.perf_counter() - _t0
-    files_before = (len(list_data_files(f"{path}/bands"))
-                    + len(list_data_files(f"{path}/sigs")))
-    # policy pass 1 — small files: 4 micro-appends left ~4 files
-    # per dir, over max_files_per_dir=2, so the policy must
-    # CHOOSE compaction of both subtables (and must NOT rebucket:
-    # the growth target is loose)
+    def n_files() -> int:
+        # the band index's files plus the signature reader's (the
+        # sigs subtable and the log)
+        return (len(list_data_files(f"{path}/bands"))
+                + len(signature_rows(spark, path).inputFiles()))
+
+    files_before = n_files()
+    # policy pass 1 — small files: the first write left one file per
+    # dir and the 3 appends 3 log files with rows for every dir, so a
+    # dir counts 4 files, over max_files_per_dir=2: the policy must
+    # CHOOSE to compact both subtables, folding the log in (and must
+    # NOT rebucket: the growth target is loose)
     _t0 = _time.perf_counter()
     s1 = maintain_signature_table(spark, path,
                                   target_rows_per_bucket=10 ** 9,
@@ -1078,8 +1084,7 @@ def signature_table_maintenance(spark: SparkSession,
     policy_compacted = (not s1["rebucketed"]
                         and sorted(s1["compacted"])
                         == ["bands", "sigs"])
-    files_after = (len(list_data_files(f"{path}/bands"))
-                   + len(list_data_files(f"{path}/sigs")))
+    files_after = n_files()
     after = probe()
     # policy pass 2 — healthy table: loose thresholds, full no-op
     s2 = maintain_signature_table(spark, path,

@@ -373,7 +373,7 @@ def test_banded_keyed_retry_idempotent_and_epoch_probe(
     retried batch's probe is independent of whether the failed
     attempt already appended this batch's signatures."""
     from nvd2mysqlloader_spark.operators.dedup import (
-        incremental_minhash_candidates_banded,
+        incremental_minhash_candidates_banded, signature_rows,
         write_banded_signature_table)
     path = str(tmp_path / "keyed")
     batches = [shingled.filter(F.col("doc_id") % 3 == b)
@@ -385,14 +385,14 @@ def test_banded_keyed_retry_idempotent_and_epoch_probe(
                               incremental_minhash_candidates_banded(
                                   spark, path, batches[2],
                                   max_batch_id_exclusive=2).collect()))
-    sig_before = sorted(map(tuple, spark.read.parquet(
-        path + "/sigs").select("doc_id").collect()))
+    sig_before = sorted(r.doc_id for r in
+                        signature_rows(spark, path).collect())
 
     # retry batch 1 (its signatures are already in the table)
     write_banded_signature_table(batches[1], path, batch_id=1)
 
-    sig_after = sorted(map(tuple, spark.read.parquet(
-        path + "/sigs").select("doc_id").collect()))
+    sig_after = sorted(r.doc_id for r in
+                       signature_rows(spark, path).collect())
     assert sig_after == sig_before
     probe_after = sorted(map(tuple,
                              incremental_minhash_candidates_banded(
@@ -1259,8 +1259,8 @@ def test_crashed_append_leaves_table_unchanged(spark, tmp_path,
     import pytest as _pytest
 
     from nvd2mysqlloader_spark.operators import table_io
-    from nvd2mysqlloader_spark.operators.dedup import \
-        write_banded_signature_table
+    from nvd2mysqlloader_spark.operators.dedup import (
+        signature_rows, write_banded_signature_table)
 
     def mk(i, text):
         return _sh3(spark.createDataFrame([(i, text)],
@@ -1287,8 +1287,7 @@ def test_crashed_append_leaves_table_unchanged(spark, tmp_path,
 
     write_banded_signature_table(mk(200, _TARGET), path, n_buckets=16)
     assert _probe_hits(spark, path, 901, _TARGET) == {200}
-    ids = sorted(r.doc_id for r in spark.read.parquet(path + "/sigs")
-                 .select("doc_id").collect())
+    ids = sorted(r.doc_id for r in signature_rows(spark, path).collect())
     assert ids == [0, 1, 2, 3, 200]
 
 
@@ -1550,7 +1549,8 @@ def test_concurrent_appends_serialize(spark, tmp_path):
     cur = table_io.current_version(path)
     assert cur.endswith(f".__v{1 + len(texts)}")   # one version each
     man = _published(path)[2]
-    assert sum(v["rows"] for v in man["sigs"].values()) == 1 + len(texts)
+    assert sum(v["rows"] for sub in ("sigs", "log")
+               for v in man[sub].values()) == 1 + len(texts)
     # the maintained manifest equals a filesystem scan exactly
     assert man == _scan_manifest(cur)
     # every racer's doc is probe-visible
@@ -1575,8 +1575,8 @@ def test_append_during_maintenance_is_kept(spark, tmp_path, monkeypatch,
 
     from nvd2mysqlloader_spark.operators import table_io
     from nvd2mysqlloader_spark.operators.dedup import (
-        maintain_signature_table, rebucket_signature_table,
-        write_banded_signature_table)
+        _published, maintain_signature_table, rebucket_signature_table,
+        signature_rows, write_banded_signature_table)
 
     path = str(tmp_path / "maint_race")
     for k in range(2):              # two files per touched dir
@@ -1629,10 +1629,15 @@ def test_append_during_maintenance_is_kept(spark, tmp_path, monkeypatch,
     appender["thread"].join(300)
     monkeypatch.undo()
     assert not errs, errs
-    for sub in ("bands", "sigs"):
-        ids = {r.doc_id for r in spark.read.parquet(f"{path}/{sub}")
-               .select("doc_id").distinct().collect()}
-        assert ids == {0, 1, 2, 3, 500}, (sub, ids)
+    # the maintenance folded the earlier log into both subtables,
+    # and the late append is the published version's whole log
+    man = _published(path)[2]
+    assert sum(v["rows"] for v in man["log"].values()) == 1
+    bands = {r.doc_id for r in spark.read.parquet(f"{path}/bands")
+             .select("doc_id").distinct().collect()}
+    assert bands == {0, 1, 2, 3}, bands
+    ids = sorted(r.doc_id for r in signature_rows(spark, path).collect())
+    assert ids == [0, 1, 2, 3, 500], ids
     assert _probe_hits(spark, path, 900, late) == {500}
 
 
@@ -1781,3 +1786,296 @@ def test_probe_rejects_band_keys_of_another_band_count(spark, shingled,
     want = _probe()
     assert want, "fixture produced no collisions — vacuous"
     assert _probe(new_band_keys=keys) == want
+
+
+# ---------------------------------------------------------------------------
+# The append log: an append to an existing table writes only its
+# batch's (doc_id, sig) rows, as one file under the version's log/;
+# probes derive the log's band rows, and maintenance folds it in.
+
+
+_BOILER = ("lorem template header footer nav subscribe privacy terms "
+           "contact about careers press blog help status")
+
+
+def _docs(spark, rows):
+    return _sh3(spark.createDataFrame(rows, "doc_id long, text string"))
+
+
+def _log_rows(path):
+    from nvd2mysqlloader_spark.operators.dedup import _published
+    return sum(v["rows"] for v in _published(path)[2]["log"].values())
+
+
+def test_near_dup_in_the_log_is_found_capped_and_uncapped(spark,
+                                                          tmp_path):
+    """A near-dup that lives only in the log is found, capped and
+    uncapped; and a boilerplate group split between the buckets (3
+    docs) and the log (3 docs) is one group of 6 for the admission
+    cap of 4: the star collapse runs over the union, so it admits
+    only the group's min-id anchor (each half alone is under the
+    cap and would pass all its members)."""
+    from nvd2mysqlloader_spark.operators.dedup import (
+        _published, incremental_minhash_candidates_banded)
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table as write
+
+    path = str(tmp_path / "logged")
+    write(_docs(spark, _BATCH1 + [(300 + i, _BOILER) for i in range(3)]),
+          path, n_buckets=16)
+    write(_docs(spark, [(100, _TARGET)]
+                + [(303 + i, _BOILER) for i in range(3)]),
+          path, n_buckets=16)
+    man = _published(path)[2]
+    assert _log_rows(path) == 4
+    assert sum(v["rows"] for v in man["sigs"].values()) == 7
+    probe = _docs(spark, [(900, _TARGET), (901, _BOILER)])
+
+    def hits(**kw):
+        return sorted((r.new_id, r.old_id) for r in
+                      incremental_minhash_candidates_banded(
+                          spark, path, probe, **kw).collect()
+                      if r.est_jaccard == 1.0)
+
+    assert hits() == [(900, 100)] + [(901, 300 + i) for i in range(6)]
+    assert hits(max_candidates_per_new=4) == [(900, 100), (901, 300)]
+
+
+def _data_file_links(vdir):
+    """{relpath: (inode, link count)} of every data file of a version."""
+    out = {}
+    for d, _dirs, files in os.walk(vdir):
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                st = os.stat(os.path.join(d, f))
+                out[os.path.relpath(os.path.join(d, f), vdir)] = (
+                    st.st_ino, st.st_nlink)
+    return out
+
+
+def test_small_append_writes_one_data_file(spark, tmp_path):
+    """A small append adds exactly one data file to the table, under
+    ``log/``; every bucket file of the new version is the previous
+    version's inode, with the same link count (the new version links
+    it in as the oldest retained version lets it go)."""
+    from nvd2mysqlloader_spark.operators import table_io
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table as write
+
+    path = str(tmp_path / "one_file")
+    write(_docs(spark, _BATCH1), path, n_buckets=16)
+    write(_docs(spark, [(100, _TARGET)]), path, n_buckets=16)
+    before = _data_file_links(table_io.current_version(path))
+    write(_docs(spark, [(101, _TARGET + " again")]), path, n_buckets=16)
+    after = _data_file_links(table_io.current_version(path))
+    new = set(after) - set(before)
+    assert len(new) == 1 and new.pop().startswith("log/"), new
+    assert set(before) <= set(after)
+    for rel, (ino, nlink) in before.items():
+        assert after[rel][0] == ino, rel
+        if not rel.startswith("log/"):
+            assert after[rel][1] == nlink, rel
+
+
+def test_keyed_log_retry_keeps_one_copy(spark, tmp_path):
+    """A keyed retry replaces its batch wherever it sits — the log, or
+    the buckets after a fold — so each retry leaves one copy of its
+    rows; a probe with ``max_batch_id_exclusive`` does not see the
+    in-flight batch's log."""
+    from nvd2mysqlloader_spark.operators.dedup import (
+        incremental_minhash_candidates_banded, maintain_signature_table,
+        signature_rows)
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table as write
+
+    text = {i: f"keyed doc {i} " + " ".join(f"w{i}x{j}" for j in range(8))
+            for i in range(9)}
+
+    def batch(b):
+        return _docs(spark, [(i, text[i]) for i in text if i % 3 == b])
+
+    def ids():
+        return sorted(r.doc_id for r in signature_rows(spark, path).collect())
+
+    path = str(tmp_path / "keyed_log")
+    for b in range(3):
+        write(batch(b), path, batch_id=b)
+    assert _log_rows(path) == 6
+    write(batch(2), path, batch_id=2)                 # retry in the log
+    assert ids() == list(range(9))
+    assert _log_rows(path) == 6
+
+    own = _docs(spark, [(900 + i, text[i]) for i in (2, 5, 8)])
+
+    def probe(**kw):
+        return sorted((r.new_id, r.old_id) for r in
+                      incremental_minhash_candidates_banded(
+                          spark, path, own, **kw).collect())
+    assert probe() == [(902, 2), (905, 5), (908, 8)]
+    assert probe(max_batch_id_exclusive=2) == []
+
+    maintain_signature_table(spark, path, max_files_per_dir=1)
+    assert _log_rows(path) == 0
+    write(batch(1), path, batch_id=1)                 # retry after a fold
+    write(batch(0), path, batch_id=0)                 # ... of the first write
+    assert ids() == list(range(9))
+    assert _log_rows(path) == 6
+    assert probe(max_batch_id_exclusive=2) == []
+
+
+def test_probe_identical_across_fold_and_rebucket(spark, shingled,
+                                                  tmp_path):
+    """The probe returns the same multiset, capped and uncapped, from
+    a table whose appends sit in the log, after maintenance folds the
+    log in, and after a rebucket that follows more appends — and the
+    same as a table holding all the docs from one first write."""
+    from nvd2mysqlloader_spark.operators.dedup import (
+        _published, incremental_minhash_candidates_banded,
+        maintain_signature_table, rebucket_signature_table,
+        write_banded_signature_table)
+
+    old = shingled.filter(F.col("doc_id") % 5 != 0)
+    new = shingled.filter(F.col("doc_id") % 5 == 0)
+    part = F.pmod(F.xxhash64("doc_id", F.lit(3)), F.lit(6))
+    path, bulk = str(tmp_path / "folded"), str(tmp_path / "bulk")
+    write_banded_signature_table(old, bulk, n_buckets=8)
+    for k in range(3):
+        write_banded_signature_table(old.filter(part == k), path,
+                                     n_buckets=8)
+
+    def probes(p):
+        return [sorted(map(tuple, incremental_minhash_candidates_banded(
+            spark, p, new, **kw).collect()))
+            for kw in ({}, {"max_candidates_per_new": 2})]
+
+    # the bulk table holds all of ``old``; the logged one first a half
+    want = probes(bulk)
+    assert want[0], "fixture produced no collisions — vacuous"
+    for k in range(3, 6):
+        write_banded_signature_table(old.filter(part == k), path,
+                                     n_buckets=8)
+    assert _log_rows(path) > 0
+    assert probes(path) == want
+    stats = maintain_signature_table(spark, path, max_files_per_dir=1)
+    assert stats["compacted"] == ["bands", "sigs"]
+    assert _log_rows(path) == 0
+    assert probes(path) == want
+    extra = new.filter(F.col("doc_id") % 2 == 0)
+    for p in (path, bulk):
+        write_banded_signature_table(extra, p, n_buckets=8)
+    want = probes(bulk)
+    assert _log_rows(path) > 0
+    assert probes(path) == want
+    rebucket_signature_table(spark, path, 16)
+    assert _log_rows(path) == 0
+    # each new dir holds its old dir's one file's image, and at most
+    # one file of the log's rows
+    man = _published(path)[2]
+    assert max(v["files"] for sub in ("bands", "sigs")
+               for v in man[sub].values()) <= 2
+    assert probes(path) == want
+
+
+def test_compaction_counts_the_log_files_per_dir(spark, tmp_path):
+    """A subtable is compacted when one of its dirs holds more than
+    ``max_files_per_dir`` files counting the log files with rows for
+    that dir — not every log file: two one-doc appends whose docs
+    fall in different doc buckets put 2 files' worth in each of their
+    sigs dirs, under a limit of 2, while their band rows share bucket
+    dirs (3 files' worth). Only ``bands`` is rewritten; the log is
+    appended to ``sigs``, one file per dir it reaches."""
+    from nvd2mysqlloader_spark.operators import table_io
+    from nvd2mysqlloader_spark.operators.dedup import (
+        _published, _scan_manifest, maintain_signature_table)
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table as write
+
+    path = str(tmp_path / "per_dir")
+    write(_docs(spark, _BATCH1), path, n_buckets=8)
+    man = _published(path)[2]
+    assert {v["files"] for sub in ("bands", "sigs")
+            for v in man[sub].values()} == {1}
+    # two new ids in distinct doc buckets that already hold a file
+    held = {int(rel.split("=")[1]) for rel in man["sigs"]}
+    by_bucket = {}
+    for r in spark.range(100, 200).select(
+            "id", F.pmod(F.xxhash64("id"), F.lit(8)).alias("b")).collect():
+        if r.b in held:
+            by_bucket.setdefault(r.b, r.id)
+    assert len(by_bucket) >= 2, by_bucket
+    a, b = sorted(by_bucket.values())[:2]
+    texts = {i: " ".join(f"doc{i}word{j}" for j in range(10)) for i in (a, b)}
+    for i, text in texts.items():
+        write(_docs(spark, [(i, text)]), path, n_buckets=8)
+
+    def maintain(limit):
+        return maintain_signature_table(spark, path,
+                                        target_rows_per_bucket=10 ** 9,
+                                        max_files_per_dir=limit)
+
+    s = maintain(3)
+    assert (s["compacted"], s["folded"]) == ([], 0)
+    assert len(_published(path)[2]["log"]) == 2
+    s = maintain(2)
+    assert (s["compacted"], s["folded"]) == (["bands"], 2), s
+    man = _published(path)[2]
+    assert man["log"] == {}
+    assert {v["files"] for v in man["bands"].values()} == {1}
+    assert sorted(v["files"] for v in man["sigs"].values()) == (
+        [1] * (len(man["sigs"]) - 2) + [2, 2])
+    assert man == _scan_manifest(table_io.current_version(path))
+    for i, text in texts.items():
+        assert _probe_hits(spark, path, 900, text) == {i}
+
+
+def test_fold_triggers_at_thresholds(spark, tmp_path):
+    """Maintenance folds the log in — appends its rows to the dirs
+    they fall in, rewriting no subtable — when the log holds more than
+    ``max_files_per_dir`` files or more than ``target_rows_per_bucket``
+    band rows (rows × bands), and not at either threshold. A keyed
+    table's batches fall in dirs of their own, so no dir is over the
+    file limit while the log is. ``bands_rows`` counts the log's rows
+    as the band rows they stand for, and the probe does not change."""
+    from nvd2mysqlloader_spark.operators import table_io
+    from nvd2mysqlloader_spark.operators.dedup import (
+        _published, _scan_manifest, maintain_signature_table)
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table as write
+
+    path = str(tmp_path / "triggers")
+    text = {i: f"{_TARGET} {i}" for i in range(100, 105)}
+    write(_docs(spark, _BATCH1), path, n_buckets=8, batch_id=0)
+    for b, i in enumerate((100, 101, 102), start=1):
+        write(_docs(spark, [(i, text[i])]), path, n_buckets=8, batch_id=b)
+    assert len(_published(path)[2]["log"]) == 3
+    want = {i: _probe_hits(spark, path, 900, t) for i, t in text.items()}
+
+    def maintain(**kw):
+        return maintain_signature_table(spark, path, **{
+            "target_rows_per_bucket": 10 ** 9, **kw})
+
+    def folded():
+        man = _published(path)[2]
+        assert man["log"] == {}
+        assert man == _scan_manifest(table_io.current_version(path))
+        assert {i: _probe_hits(spark, path, 900, t)
+                for i, t in text.items()} == want
+
+    s = maintain(max_files_per_dir=3)
+    assert (s["compacted"], s["folded"]) == ([], 0)
+    assert s["bands_rows"] == 7 * 16
+    s = maintain(max_files_per_dir=2)
+    assert (s["compacted"], s["folded"], s["rebucketed"]) == ([], 3, False)
+    assert s["bands_rows"] == 7 * 16
+    folded()
+
+    for b, i in ((4, 103), (5, 104)):
+        write(_docs(spark, [(i, text[i])]), path, n_buckets=8, batch_id=b)
+    want = {i: _probe_hits(spark, path, 900, t) for i, t in text.items()}
+    # 2 log rows stand for 32 band rows; 9 docs' 144 band rows over 8
+    # buckets stay under either target, so the growth trigger rests
+    s = maintain(max_files_per_dir=64, target_rows_per_bucket=32)
+    assert (s["compacted"], s["folded"]) == ([], 0)
+    s = maintain(max_files_per_dir=64, target_rows_per_bucket=31)
+    assert (s["compacted"], s["folded"], s["rebucketed"]) == ([], 2, False)
+    folded()

@@ -613,6 +613,7 @@ def test_stream_gate_batch_retry_idempotent(spark, tmp_path):
     signature table — as a clean run (r8 verdict ask #3). Drives
     dedup_gate_batch directly: clean run of batches 0..2 vs a run
     that re-invokes batch 1 mid-stream and batch 2 at the end."""
+    from nvd2mysqlloader_spark.operators.dedup import signature_rows
     from nvd2mysqlloader_spark.plans.streamgate_queries import \
         dedup_gate_batch
     from nvd2mysqlloader_spark.sources.tpch import load_table
@@ -628,8 +629,8 @@ def test_stream_gate_batch_retry_idempotent(spark, tmp_path):
         pairs = sorted(map(tuple, spark.read.parquet(pair)
                            .select("lo", "hi", "est_jaccard")
                            .collect()))
-        sigs = sorted(map(tuple, spark.read.parquet(f"{sig}/sigs")
-                          .select("doc_id").collect()))
+        sigs = sorted((r.doc_id,) for r in
+                      signature_rows(spark, sig).collect())
         return pairs, sigs
 
     clean_pairs, clean_sigs = run(str(tmp_path / "clean"), [0, 1, 2])

@@ -777,27 +777,28 @@ def test_delete_legacy_partitioned_emptied_partition_stays_gone(
 
 
 def test_sized_for_write_picks_exchange_by_estimated_bytes(spark):
-    """r13 file-sizing shim (_sized_for_write, VERDICT r12 ask #5):
+    """r13 file-sizing shim (table_io.sized_for_write, VERDICT r12 ask #5):
     an output whose catalyst estimate fits in ONE advisory partition
     coalesces to a single task (no exchange) — the r12 rebalance
     charged one exchange per bench-scale version write for the same
     single output file; an output estimated past the advisory size
     keeps the scale-correct AQE REBALANCE. Branch choice is pinned
     via the advisory conf (the only input besides the estimate)."""
-    from nvd2mysqlloader_spark.operators.upsert import _sized_for_write
+    from nvd2mysqlloader_spark.operators.table_io import \
+        sized_for_write
 
     df = spark.range(1000).selectExpr("id", "id * 2 as v")
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     prev = spark.conf.get(key, None)
     try:
         spark.conf.set(key, "64m")
-        small = _sized_for_write(df)._jdf.queryExecution() \
+        small = sized_for_write(df)._jdf.queryExecution() \
             .explainString(spark._jvm.org.apache.spark.sql.execution
                            .ExplainMode.fromString("extended"))
         assert "Repartition 1" in small or "Coalesce 1" in small, small
         assert "rebalance" not in small.lower(), small
         spark.conf.set(key, "1b")
-        big = _sized_for_write(df)._jdf.queryExecution() \
+        big = sized_for_write(df)._jdf.queryExecution() \
             .explainString(spark._jvm.org.apache.spark.sql.execution
                            .ExplainMode.fromString("extended"))
         assert "REBALANCE" in big or "RebalancePartitions" in big, big
@@ -814,7 +815,8 @@ def test_sized_for_write_rebalances_between_half_and_full_advisory(
     advisory size (the estimate is not a bound): an output estimated
     between half and the whole advisory partition takes the
     rebalance, and one at no more than half still coalesces."""
-    from nvd2mysqlloader_spark.operators.upsert import _sized_for_write
+    from nvd2mysqlloader_spark.operators.table_io import \
+        sized_for_write
 
     df = spark.range(1000).selectExpr("id", "id * 2 as v")
     est = int(df._jdf.queryExecution().optimizedPlan().stats()
@@ -825,11 +827,11 @@ def test_sized_for_write_rebalances_between_half_and_full_advisory(
     prev = spark.conf.get(key, None)
     try:
         spark.conf.set(key, f"{est * 3 // 2}b")
-        plan = _sized_for_write(df)._jdf.queryExecution() \
+        plan = sized_for_write(df)._jdf.queryExecution() \
             .explainString(mode)
         assert "REBALANCE" in plan or "RebalancePartitions" in plan, plan
         spark.conf.set(key, f"{est * 2}b")
-        plan = _sized_for_write(df)._jdf.queryExecution() \
+        plan = sized_for_write(df)._jdf.queryExecution() \
             .explainString(mode)
         assert "rebalance" not in plan.lower(), plan
     finally:
