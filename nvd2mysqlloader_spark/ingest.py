@@ -109,8 +109,8 @@ def _footer_rows(path: str) -> int:
     """Rows of the table's published version, summed from its parquet
     footers on the driver (no Spark job); 0 when unpublished."""
     cur = table_io.current_version(path)
-    return sum(pq.read_metadata(f).num_rows
-               for f, _size in (list_data_files(cur) if cur else []))
+    return table_io.footer_rows(
+        f for f, _size in (list_data_files(cur) if cur else []))
 
 
 def run_ingest(spark: SparkSession, landing: str, warehouse: str,
@@ -129,11 +129,11 @@ def run_ingest(spark: SparkSession, landing: str, warehouse: str,
     published silver version's footer row count, which equals
     ``count(distinct cve_id)`` because the merge keeps one row per key.
 
-    ``maintain=True`` runs the table-maintenance pass after the load:
-    small-file compaction of both warehouse tables (each incremental
-    batch adds a file per touched partition; compaction is a no-op
-    until `plan_compaction` says the rewrite pays — the OPTIMIZE-after-
-    ingest pattern every streaming/micro-batch warehouse needs).
+    ``maintain=True`` runs ``compact_parquet`` on both warehouse
+    tables after the load (the OPTIMIZE-after-ingest pattern). The
+    upsert rewrites each partition it touches into one file, so a
+    table ingest wrote skips until `plan_compaction` says a rewrite
+    pays, e.g. after another writer appended small files to it.
 
     ``include_children_cpes=True`` opts into depth-2 CPE extraction
     (operators.flatten.cpe_uris): vulnerable CPEs nested under AND
@@ -361,7 +361,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--landing", required=True, help="dir of feed .json + .meta files")
     ap.add_argument("--warehouse", required=True, help="output parquet warehouse dir")
     ap.add_argument("--maintain", action="store_true",
-                    help="run small-file compaction after the load")
+                    help="compact both warehouse tables after the load "
+                         "where plan_compaction says it pays")
     ap.add_argument("--children-cpes", action="store_true",
                     help="extract depth-2 children CPEs the reference "
                          "drops (match-and-exceed; default is parity)")

@@ -8,11 +8,14 @@ memory for file listings). The reference has no notion of this — its
 "storage" is MySQL — so this is engine-side operational surface, the
 parquet analog of OPTIMIZE/rewrite_data_files.
 
-Spark-first shape: one distributed read → ``repartition(n)`` sized so
-output files land near ``target_bytes`` → atomic publish of a fresh
-version directory (``operators.table_io``). The rewrite is a single
-narrow+shuffle job regardless of input file count; partitioned tables
-compact per partition directory so partition pruning is untouched.
+Spark-first shape: one distributed read → a shuffle that sizes the
+output files near ``target_bytes`` → atomic publish of a fresh
+version directory (``operators.table_io``). The rewrite is one write
+job whatever the input file count, and for a partitioned table
+whatever the number or naming of its partition dirs: the small-file
+dirs are read with their partition columns as strings and rewritten
+under their own names, the rest are hardlinked, so partition pruning
+is untouched.
 """
 
 from __future__ import annotations
@@ -21,6 +24,9 @@ import math
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
+
+from . import table_io
 
 
 def list_data_files(path: str) -> list[tuple[str, int]]:
@@ -56,70 +62,9 @@ def plan_compaction(path: str, target_bytes: int = 128 * 1024 * 1024,
     }
 
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _value_round_trips(v: str) -> bool:
-    """True iff a ``col=v`` dir value survives Spark partition type
-    inference and a ``partitionBy`` rewrite byte-identically.
-
-    Canonical integers round-trip (inference reads them as int/long
-    and the writer renders the same digits). Anything inference could
-    coerce — zero-padded or ``-0`` integers (``month=07`` reads as 7,
-    re-renders ``month=7``), float/decimal-looking values
-    (``x=1.50`` → ``x=1.5``), date/timestamp-looking values, the Hive
-    null sentinel — may re-render differently (or merge with a
-    colliding canonical dir), so the one-job fast path must not touch
-    them: the per-dir rewrite loop never re-renders dir names.
-    """
-    if v == _HIVE_NULL:
-        return False
-    # dir names hold the HIVE-ESCAPED form: '%' marks an escape
-    # (lang=a%3Ab stores column value 'a:b'), so any '%' value would
-    # be compared raw against the unescaped column (filter matches
-    # nothing → the dir silently drops from the rewrite) and
-    # re-rendered on write. Empty values re-render as the null
-    # sentinel. Both must take the per-dir loop.
-    if v == "" or "%" in v:
-        return False
-    try:
-        return str(int(v)) == v
-    except ValueError:
-        pass
-    try:
-        float(v)
-        return False
-    except ValueError:
-        pass
-    # date/timestamp inference canonicalizes e.g. 2021-1-1 -> 2021-01-01
-    head = v.split(" ", 1)[0].split("T", 1)[0]
-    parts = head.split("-")
-    if 2 <= len(parts) <= 3 and all(p.isdigit() for p in parts if p):
-        return False
-    return True
-
-
-def _rewrite_into(spark: SparkSession, src: str, dst: str,
-                  n_target: int, sort_by: list[str] | None) -> None:
-    df = spark.read.parquet(src)
-    if sort_by:
-        # repartitionByRange, not hash: range partitioning gives each
-        # output file a DISJOINT sort-key interval, so file-level
-        # min/max stats actually prune (hash would spread every key
-        # range across all files and skip nothing), and a heavy-hitter
-        # sort value is bounded by its range slice instead of hashing
-        # its entire volume into one oversized file
-        df = df.repartitionByRange(n_target, *sort_by) \
-               .sortWithinPartitions(*sort_by)
-    else:
-        df = df.repartition(n_target)
-    df.write.mode("overwrite").parquet(dst)
-
-
 def compact_parquet(spark: SparkSession, path: str,
                     target_bytes: int = 128 * 1024 * 1024,
-                    sort_by: list[str] | None = None,
-                    force: bool = False) -> dict:
+                    sort_by: list[str] | None = None) -> dict:
     """Rewrite ``path`` into ~``target_bytes`` files; atomic publish.
 
     Uses the versioned layout of ``operators.table_io``: the compacted
@@ -127,10 +72,9 @@ def compact_parquet(spark: SparkSession, path: str,
     atomic pointer flip — readers see the old or the new file set,
     never a mix and never a missing table, and a crashed run leaves
     the current version untouched (its debris is cleaned on the next
-    attempt). Partitions whose ``plan_compaction`` says the rewrite is
-    not ``worth_it`` are carried into the new version as hardlinks
-    (no data read or written); an unpartitioned table that isn't
-    worth compacting is skipped entirely unless ``force``.
+    attempt). A table, or every partition dir of one, whose
+    ``plan_compaction`` says the rewrite is not ``worth_it`` is
+    skipped: nothing is read, written or published.
 
     ``sort_by``: optional columns to ``sortWithinPartitions`` during the
     rewrite — restores min/max-stat locality (the cheap cousin of the
@@ -138,138 +82,92 @@ def compact_parquet(spark: SparkSession, path: str,
     range predicates skip row groups again after many unordered
     appends.
 
-    Hive-partitioned tables (``col=val`` subdirectories) preserve the
-    layout — and partition pruning — either way: when EVERY partition
-    needs compaction and fits one target file (micro-append
-    accretion), all dirs rewrite in ONE Spark job (repartition by the
-    partition columns + partitionBy write — never one driver-side job
-    per directory, which is the real bottleneck on many-partition
-    tables); otherwise each partition rewrites independently (at
-    scale: trivially parallel and restartable per partition) and
-    not-worth-it partitions carry over as hardlinks.
+    Hive-partitioned tables (``col=val`` leaf dirs, any depth) rewrite
+    every worth-it dir in ONE write job whatever their number or
+    naming (see :func:`_rewrite_partitions`); the other leaf dirs are
+    carried into the new version as hardlinks (``table_io.carry_over``),
+    so partition pruning and every dir name are untouched.
     """
-    from . import table_io
-
     path = path.rstrip("/")
     table_io.ensure_versioned(path)
     table_io.cleanup_stale(path)
     cur = table_io.current_version(path)
     if cur is None:
         raise ValueError(f"no table at {path}")
-    vdir = table_io.next_version_dir(path)
-    stats = compact_into(spark, cur, vdir, target_bytes, sort_by, force)
-    if not stats.get("skipped"):
-        table_io.publish_version(path, vdir)
-    return stats
-
-
-def compact_into(spark: SparkSession, src: str, dst: str,
-                 target_bytes: int = 128 * 1024 * 1024,
-                 sort_by: list[str] | None = None,
-                 force: bool = False) -> dict:
-    """The rewrite behind :func:`compact_parquet`: compact the table
-    directory ``src`` into the fresh directory ``dst`` (not-worth-it
-    partitions hardlinked) and return its stats; writes nothing and
-    returns ``skipped`` when no rewrite is worth it and not ``force``.
-    Publishing ``dst`` is the caller's."""
-    from . import table_io
-
-    # leaf partition dirs handle any partitioning depth (year=/month=…)
-    part_dirs = table_io.leaf_partition_dirs(src)
+    part_dirs = table_io.leaf_partition_dirs(cur)
+    plans = {d: plan_compaction(os.path.join(cur, d), target_bytes)
+             for d in part_dirs or ["."]}
+    stats = {"before_files": sum(p["n_files"] for p in plans.values())}
     if part_dirs:
-        plans = {d: plan_compaction(os.path.join(src, d), target_bytes)
-                 for d in part_dirs}
-        if not force and not any(p["worth_it"] for p in plans.values()):
-            total = sum(p["total_bytes"] for p in plans.values())
-            n = sum(p["n_files"] for p in plans.values())
-            return {"before_files": n, "after_files": n, "bytes": total,
-                    "partitions": len(part_dirs), "skipped": True}
-        # ONE-JOB fast path: when every partition that NEEDS
-        # compaction fits a single target file (the micro-append
-        # accretion shape — thousands of dirs, each a pile of tiny
-        # files), a per-dir rewrite loop launches one driver-side
-        # Spark job PER DIRECTORY (a 10k-partition table = 10k
-        # sequential jobs, the real bottleneck at scale: measured
-        # 128 jobs / ~45 s for a 64-dir x 2-subtable signature table
-        # locally). Instead read the worth-it dirs once, co-locate
-        # each dir's rows in one task (repartition by the partition
-        # columns), and write them all in a single partitionBy job —
-        # one shuffle, one job, one file per dir; healthy dirs carry
-        # over as hardlinks as in the per-dir path. Taken only when
-        # every dir value round-trips through partition inference
-        # (see _value_round_trips) — and, when a partition FILTER is
-        # needed, only for single-level layouts; anything else falls
-        # back to the per-dir loop.
-        worth = [d for d in part_dirs
-                 if plans[d]["worth_it"] or force]
-        small = [d for d in worth
-                 if plans[d]["total_bytes"] <= target_bytes]
-        part_cols = [c.split("=", 1)[0]
-                     for c in part_dirs[0].split(os.sep)]
-        vals = [d.split("=", 1)[1] for d in small]
-        # EVERY dir value in EVERY level must round-trip through
-        # partition inference — not just the filtered ones: a single
-        # non-canonical value (month=07) either vanishes under the
-        # cast('string') filter (inference reads 7, "7" ∉ {"07"} —
-        # silent data loss) or is re-rendered/merged by the
-        # partitionBy writer. Non-round-tripping layouts take the
-        # per-dir loop, which never re-renders dir names.
-        safe = all(_value_round_trips(c.split("=", 1)[1])
-                   for d in part_dirs for c in d.split(os.sep))
-        filter_ok = (len(small) == len(part_dirs)
-                     or len(part_cols) == 1)
-        if worth and small == worth and safe and filter_ok:
-            from pyspark.sql import functions as F
-            df = spark.read.parquet(src)
-            if len(small) < len(part_dirs):
-                df = df.filter(
-                    F.col(part_cols[0]).cast("string").isin(vals))
-            df = df.repartition(*[F.col(c) for c in part_cols])
-            if sort_by:
-                # partition cols FIRST: the partitionBy writer
-                # requires ordering on them and would otherwise
-                # insert its own sort, voiding sort_by's within-file
-                # min/max locality
-                df = df.sortWithinPartitions(*part_cols, *sort_by)
-            df.write.partitionBy(*part_cols).mode("overwrite") \
-                .parquet(dst)
-            small_set = set(small)
-            for d in part_dirs:
-                if d not in small_set:
-                    table_io.link_tree(os.path.join(src, d),
-                                       os.path.join(dst, d))
-            before = sum(p["n_files"] for p in plans.values())
-            after = total = 0
-            for d in table_io.leaf_partition_dirs(dst):
-                p_after = plan_compaction(os.path.join(dst, d),
-                                          target_bytes)
-                after += p_after["n_files"]
-                total += p_after["total_bytes"]
-            return {"before_files": before, "after_files": after,
-                    "bytes": total, "partitions": len(part_dirs)}
-        before = after = total = 0
-        for d in part_dirs:
-            plan = plans[d]
-            before += plan["n_files"]
-            if plan["worth_it"] or force:
-                _rewrite_into(spark, os.path.join(src, d),
-                              os.path.join(dst, d),
-                              plan["n_target"], sort_by)
-            else:
-                table_io.link_tree(os.path.join(src, d),
-                                   os.path.join(dst, d))
-            p_after = plan_compaction(os.path.join(dst, d), target_bytes)
-            after += p_after["n_files"]
-            total += p_after["total_bytes"]
-        return {"before_files": before, "after_files": after,
-                "bytes": total, "partitions": len(part_dirs)}
+        stats["partitions"] = len(part_dirs)
+    worth = {d: p for d, p in plans.items() if p["worth_it"]}
+    if not worth:
+        return {**stats, "after_files": stats["before_files"],
+                "bytes": sum(p["total_bytes"] for p in plans.values()),
+                "skipped": True}
+    vdir = table_io.next_version_dir(path)
+    if part_dirs:
+        _rewrite_partitions(spark, cur, vdir, worth, target_bytes, sort_by)
+    else:
+        df = spark.read.parquet(cur)
+        n_target = plans["."]["n_target"]
+        if sort_by:
+            # repartitionByRange, not hash: range partitioning gives
+            # each output file a DISJOINT sort-key interval, so
+            # file-level min/max stats actually prune (hash would
+            # spread every key range across all files and skip
+            # nothing), and a heavy-hitter sort value is bounded by its
+            # range slice instead of hashing its entire volume into one
+            # oversized file
+            df = df.repartitionByRange(n_target, *sort_by) \
+                   .sortWithinPartitions(*sort_by)
+        else:
+            df = df.repartition(n_target)
+        df.write.mode("overwrite").parquet(vdir)
+    after = list_data_files(vdir)
+    table_io.publish_version(path, vdir)
+    return {**stats, "after_files": len(after),
+            "bytes": sum(s for _, s in after)}
 
-    plan = plan_compaction(src, target_bytes)
-    if not plan["worth_it"] and not force:
-        return {"before_files": plan["n_files"],
-                "after_files": plan["n_files"],
-                "bytes": plan["total_bytes"], "skipped": True}
-    _rewrite_into(spark, src, dst, plan["n_target"], sort_by)
-    after = plan_compaction(dst, target_bytes)
-    return {"before_files": plan["n_files"], "after_files": after["n_files"],
-            "bytes": after["total_bytes"]}
+
+def _rewrite_partitions(spark: SparkSession, cur: str, vdir: str,
+                        worth: dict[str, dict], target_bytes: int,
+                        sort_by: list[str] | None) -> None:
+    """Write the ``worth`` leaf dirs of the version ``cur`` (dir →
+    ``plan_compaction``) into the staged ``vdir`` in one job and carry
+    every other leaf dir in.
+
+    The dirs are read by explicit path under ``basePath``, with the
+    data columns of one file's footer and every partition column typed
+    STRING: Spark then infers no partition type, so no dir value is
+    parsed (``month=07`` stays "07" beside a "7", ``a%3Ab`` unescapes
+    to "a:b", the Hive null dir reads null) and the ``partitionBy``
+    write renders each dir's own name back. Each dir's rows are
+    co-located in one task, so a dir comes back as one file, or — past
+    ``target_bytes`` — as ``maxRecordsPerFile`` splits sized from the
+    dirs' bytes per row (footer row counts, no job). With ``sort_by``
+    the splits hold disjoint sort-key ranges. Past Spark's
+    ``parallelPartitionDiscovery.threshold`` paths the read lists them
+    in one more job; the count never grows per dir."""
+    part_cols = [c.split("=", 1)[0] for c in next(iter(worth)).split(os.sep)]
+    files = [f for d in worth
+             for f, _ in list_data_files(os.path.join(cur, d))]
+    data = spark.read.parquet(files[0]).schema
+    schema = T.StructType(
+        [f for f in data.fields if f.name not in part_cols]
+        + [T.StructField(c, T.StringType()) for c in part_cols])
+    df = (spark.read.schema(schema).option("basePath", cur)
+          .parquet(*[os.path.join(cur, d) for d in worth])
+          .repartition(*part_cols))
+    if sort_by:
+        # partition cols FIRST: the partitionBy writer requires
+        # ordering on them and would otherwise insert its own sort,
+        # voiding sort_by's within-file min/max locality
+        df = df.sortWithinPartitions(*part_cols, *sort_by)
+    w = df.write
+    sizes = [p["total_bytes"] for p in worth.values()]
+    if max(sizes) > target_bytes:
+        w = w.option("maxRecordsPerFile", max(
+            1, target_bytes * table_io.footer_rows(files) // sum(sizes)))
+    w.partitionBy(*part_cols).mode("overwrite").parquet(vdir)
+    table_io.carry_over(cur, vdir, set(worth))

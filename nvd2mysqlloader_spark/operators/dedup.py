@@ -549,18 +549,13 @@ def _data_files(d: str) -> list[str]:
                   if f.endswith(".parquet") and not f.startswith((".", "_")))
 
 
-def _footer_rows(f: str) -> int:
-    import pyarrow.parquet as pq
-    return pq.ParquetFile(f).metadata.num_rows
-
-
 def _dir_rows(d: str) -> dict:
     """{"rows", "files"} of one leaf partition dir from parquet
     footers — driver-side metadata reads, no Spark job. File counts
     feed the compaction policy (:func:`maintain_signature_table`);
     row counts feed the growth policy and observability."""
     files = _data_files(d)
-    return {"rows": sum(_footer_rows(os.path.join(d, f)) for f in files),
+    return {"rows": table_io.footer_rows(os.path.join(d, f) for f in files),
             "files": len(files)}
 
 
@@ -572,7 +567,7 @@ def _log_manifest(vdir: str, known: dict) -> dict:
         for f in _data_files(d):
             rel = os.path.relpath(os.path.join(d, f), root)
             out[rel] = known.get(rel) or {
-                "rows": _footer_rows(os.path.join(d, f))}
+                "rows": table_io.footer_rows([os.path.join(d, f)])}
     return out
 
 

@@ -419,8 +419,7 @@ def _adc_gather(luts: np.ndarray, g_ids: np.ndarray, codes: np.ndarray,
     lut_c[:, jj, codes] broadcasts the (n, m) code matrix against the
     chunk's (c, m, ksub) LUTs into a (c, n, m) gather summed over
     subspaces; queries are chunked so the gather stays under the byte
-    budget. Yields local-top candidate frames. Shared by the flat-PQ
-    and IVF-PQ scans so the budget discipline cannot drift."""
+    budget. Yields local-top candidate frames."""
     n, m = codes.shape
     jj = np.arange(m)
     k_eff = min(fetch_k, n)
@@ -483,8 +482,8 @@ def _pq_adc_rescore(corpus: DataFrame, encoded: DataFrame,
     # is broadcast (nq · fetch_k rows), so an uncapped linear default
     # would trade the recall cliff for a driver-OOM cliff at 10^8+
     # vectors. Past ~40k vectors the default stops growing and recall
-    # becomes an explicit choice: raise fetch_k, use finer codes
-    # (m/ksub), or the composed IVF-PQ index. The count() here is one
+    # becomes an explicit choice: raise fetch_k or use finer codes
+    # (m/ksub). The count() here is one
     # extra metadata-cheap job, default path only. The denominator is
     # the relation the ADC actually SCANS (``scan_count_df``, i.e. the
     # persisted codes table in the from-index path — which can be
@@ -650,8 +649,8 @@ def _read_centroids(spark, cdir: str) -> "np.ndarray | None":
 
 
 def _write_centroids(spark, cdir: str, cents: np.ndarray) -> None:
-    """Persist the coarse centroid matrix (one tiny single-file table
-    — shared by the IVF and IVF-PQ builders)."""
+    """Persist write_ivf_index's coarse centroid matrix (one tiny
+    single-file table)."""
     spark.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
         "list_id int, centroid array<double>"
@@ -659,8 +658,7 @@ def _write_centroids(spark, cdir: str, cents: np.ndarray) -> None:
 
 
 def _write_books(spark, bdir: str, books: list[np.ndarray]) -> None:
-    """Persist PQ codebooks (m·ksub rows — shared by the flat-PQ and
-    IVF-PQ builders)."""
+    """Persist PQ codebooks (m·ksub rows)."""
     spark.createDataFrame(
         [(j, c, [float(x) for x in books[j][c]])
          for j in range(len(books)) for c in range(books[0].shape[0])],
@@ -836,166 +834,6 @@ def pq_topk_from_index(corpus: DataFrame, index_path: str,
                            id_col, emb_col, query_id_col, exclude_self,
                            max_queries, gather_bytes,
                            scan_count_df=encoded)
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ — the composed billion-scale ANN structure (coarse inverted
-# lists + product-quantized RESIDUALS): the coarse centroid absorbs
-# the vector's position so the PQ codebooks only need to cover the
-# residual neighborhood (tighter cells than flat PQ at the same m),
-# and a probe touches nprobe/nlist of the codes — a partition-pruned
-# scan of m-byte codes, the FAISS IVFPQ layout re-expressed as
-# parquet tables.
-
-
-def write_ivfpq_index(corpus: DataFrame, path: str,
-                      id_col: str = "vec_id", emb_col: str = "embedding",
-                      nlist: int = 16, m: int = 8, ksub: int = 16,
-                      train_n: int = 100_000) -> None:
-    """Build or extend a persisted IVF-PQ index at ``path``.
-
-    Layout: ``{path}/centroids`` (coarse, as write_ivf_index),
-    ``{path}/codebooks`` (trained on RESIDUALS x̂ − c_list of a
-    bounded sample), ``{path}/codes`` (id, code) PARTITIONED BY
-    list_id — probes prune to nprobe lists and read m small ints per
-    vector. Appends reuse the persisted centroids AND codebooks
-    (mismatched nlist/m/ksub refused), so incremental batches encode
-    consistently forever."""
-    spark = corpus.sparkSession
-    cdir, bdir = f"{path}/centroids", f"{path}/codebooks"
-    codir = f"{path}/codes"
-    existing = _read_centroids(spark, cdir)
-    if existing is not None and nlist != existing.shape[0]:
-        raise ValueError(
-            f"write_ivfpq_index: index at {path} has "
-            f"nlist={existing.shape[0]}, call asked nlist={nlist}")
-    if existing is None:
-        cents = np.asarray(_centroids_from_corpus(
-            corpus, emb_col, id_col, nlist), dtype=np.float64)
-        cents /= np.clip(np.linalg.norm(cents, axis=1, keepdims=True),
-                         1e-12, None)
-        _write_centroids(spark, cdir, cents)
-    else:
-        cents = existing
-
-    books = _read_books(spark, bdir)
-    if books is not None and (len(books) != m
-                              or books[0].shape[0] != ksub):
-        raise ValueError(
-            f"write_ivfpq_index: index at {path} has m={len(books)}, "
-            f"ksub={books[0].shape[0]}; call asked m={m}, ksub={ksub}")
-    if books is None:
-        sample = pq_training_sample(corpus, emb_col, id_col, train_n)
-        assign = np.argmax(sample @ cents.T, axis=1)
-        books = pq_train(sample - cents[assign], m, ksub)
-        _write_books(spark, bdir, books)
-
-    splits = _book_splits(books)
-
-    @F.pandas_udf("struct<list_id: int, code: array<int>>")
-    def encode(embs: pd.Series) -> pd.DataFrame:
-        x = np.stack(embs.to_numpy()).astype(np.float64)
-        x /= np.clip(np.linalg.norm(x, axis=1, keepdims=True),
-                     1e-12, None)
-        lists = np.argmax(x @ cents.T, axis=1)
-        resid = x - cents[lists]
-        subs = np.split(resid, splits, axis=1)
-        codes = np.stack([
-            ((s[:, None, :] - b[None, :, :]) ** 2).sum(axis=2)
-            .argmin(axis=1)
-            for s, b in zip(subs, books)], axis=1)
-        return pd.DataFrame({
-            "list_id": lists.astype("int32"),
-            "code": [row.astype("int32").tolist() for row in codes]})
-
-    (corpus.select(id_col, encode(emb_col).alias("e"))
-     .select(id_col, F.col("e.list_id").alias("list_id"),
-             F.col("e.code").alias("code"))
-     .repartition("list_id")
-     .write.mode("append").partitionBy("list_id").parquet(codir))
-
-
-def ivfpq_topk(corpus: DataFrame, index_path: str, queries: DataFrame,
-               k: int = 10, id_col: str = "vec_id",
-               emb_col: str = "embedding",
-               query_id_col: str = "query_id",
-               nprobe: int = 4, fetch_k: int | None = None,
-               exclude_self: bool = True,
-               max_queries: int = 65_536,
-               gather_bytes: int = 256 << 20) -> DataFrame:
-    """IVF-PQ probe: queries assign to their ``nprobe`` nearest coarse
-    lists, the pruned codes scan is ADC-scored against PER-(query,
-    list) residual LUTs (the query's residual differs per probed
-    list), local top ``fetch_k`` per partition, global rank, exact
-    rescore against the corpus. The query side is bounded by
-    ``max_queries`` and the per-task gather by ``gather_bytes``,
-    through the same shared helpers pq_topk uses — the disciplines
-    cannot drift apart."""
-    spark = corpus.sparkSession
-    cents = _read_centroids(spark, f"{index_path}/centroids")
-    books = _read_books(spark, f"{index_path}/codebooks")
-    if cents is None or books is None:
-        raise ValueError(f"ivfpq_topk: no index at {index_path}")
-    m = len(books)
-    # like flat PQ's fetch_k, the candidate budget scales as a
-    # FRACTION — here of the SCANNED codes, estimated as
-    # n·nprobe/nlist (uniform-list approximation; skewed argmax
-    # assignments make this an estimate, and the cap below bounds the
-    # error's blast radius). A fixed 50 was 40% of the scanned
-    # sf0.01 codes (recall 0.46) but 10% at sf0.1 (recall 0.24 —
-    # measured); half the scanned codes rescored holds recall at
-    # 0.5-0.58 across both scales (residual-quantized ADC ranks are
-    # noisier than flat PQ's, hence the larger fraction). Scanned
-    # volume is sublinear in n only when nlist grows with the corpus
-    # (production IVF sizing, nlist ~ sqrt(n)); with a FIXED nlist it
-    # is linear, so the same 4096 cap as flat PQ bounds the broadcast
-    # candidate relation — past that, recall is an explicit knob.
-    # denominator = the persisted codes relation (what the probe
-    # actually scans), NOT ``corpus`` — the rescore relation can be a
-    # filtered subset and must not shrink the budget (same contract
-    # as pq_topk_from_index).
-    if fetch_k is None:
-        n_indexed = spark.read.parquet(f"{index_path}/codes").count()
-        scanned = n_indexed * nprobe // cents.shape[0]
-        fetch_k = max(4 * k, 50, min(4096, -(-scanned // 2)))
-    splits = _book_splits(books)
-
-    q_ids, q_mat = _collect_query_batch(queries, query_id_col, emb_col,
-                                        max_queries, "ivfpq_topk")
-    probe_lists = np.argsort(-(q_mat @ cents.T), axis=1)[:, :nprobe]
-    # LUTs per (query, probed list): residual q − c_list vs codebooks
-    luts: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for li in np.unique(probe_lists):
-        qi = np.nonzero((probe_lists == li).any(axis=1))[0]
-        resid = q_mat[qi] - cents[li]
-        r_subs = np.split(resid, splits, axis=1)
-        lut = np.stack([
-            np.stack([((r_subs[j][t] - books[j]) ** 2).sum(axis=1)
-                      for j in range(m)])
-            for t in range(len(qi))])                # (nq_l, m, ksub)
-        luts[int(li)] = (q_ids[qi], lut)
-
-    probed = sorted(int(x) for x in np.unique(probe_lists))
-    codes_df = (spark.read.parquet(f"{index_path}/codes")
-                .filter(F.col("list_id").isin(probed)))
-
-    def scan(batches):
-        for b in batches:
-            if len(b) == 0:
-                continue
-            for li, grp in b.groupby("list_id"):
-                ent = luts.get(int(li))
-                if ent is None:
-                    continue
-                gq_ids, lut = ent
-                codes = np.stack(grp["code"].to_numpy())     # (n, m)
-                ids = grp[id_col].to_numpy()
-                yield from _adc_gather(lut, gq_ids, codes, ids,
-                                       fetch_k, gather_bytes)
-
-    cand = codes_df.mapInPandas(scan, _ADC_SCHEMA)
-    return _rank_and_rescore(cand, corpus, queries, k, fetch_k,
-                             id_col, emb_col, query_id_col, exclude_self)
 
 
 _PAIR_SCHEMA = T.StructType([T.StructField("id_a", T.LongType()),

@@ -301,14 +301,50 @@ def sized_for_write(df):
     return df.hint("rebalance")
 
 
+# Spark's commit markers: a later write into the staged copy rewrites
+# them in place at the same name, so a hardlinked marker would change
+# the version it was linked from
+_MARKERS = frozenset({"_SUCCESS", "._SUCCESS.crc"})
+
+
 def link_tree(src: str, dst: str) -> None:
-    """Mirror ``src`` into ``dst`` with hardlinks (no data copied)."""
+    """Mirror ``src`` into ``dst`` with hardlinks (no data copied),
+    leaving out Spark's commit markers."""
     for root, _dirs, files in os.walk(src):
         rel = os.path.relpath(root, src)
         out = os.path.join(dst, rel) if rel != "." else dst
         os.makedirs(out, exist_ok=True)
         for f in files:
-            os.link(os.path.join(root, f), os.path.join(out, f))
+            if f not in _MARKERS:
+                os.link(os.path.join(root, f), os.path.join(out, f))
+
+
+def carry_over(cur: str | None, vdir: str, rewritten: set[str]) -> list[str]:
+    """Hardlink into the staged ``vdir`` every leaf partition dir of the
+    version ``cur`` not in ``rewritten`` — the dirs whose rows the
+    write into ``vdir`` replaced, so one it left empty stays gone —
+    and return the leaf dirs ``vdir`` then holds. The one place that
+    decides which dirs a new version shares with its parent. Raises
+    ValueError when the write landed in a dir of ``cur`` that is not
+    ``rewritten``: carrying it would set the old files beside the new."""
+    written = set(leaf_partition_dirs(vdir))
+    old = leaf_partition_dirs(cur) if cur is not None else []
+    clash = sorted(written.intersection(old) - rewritten)
+    if clash:
+        raise ValueError(
+            f"write into {vdir} landed in partition dirs {clash} of {cur} "
+            "that it was not to rewrite")
+    carried = [rel for rel in old if rel not in rewritten]
+    for rel in carried:
+        link_tree(os.path.join(cur, rel), os.path.join(vdir, rel))
+    return sorted(written.union(carried))
+
+
+def footer_rows(files) -> int:
+    """Rows in the parquet ``files``, summed from their footers on the
+    driver (no Spark job)."""
+    import pyarrow.parquet as pq
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def leaf_partition_dirs(root: str) -> list[str]:

@@ -282,12 +282,13 @@ def _rewrite(path: str, cur: str | None, rows: DataFrame,
     """Stage ``rows`` as the next version of ``path`` and publish it.
 
     Partitioned: fresh files for the partitions ``rows`` holds, and
-    every other leaf dir of ``cur`` carried over by hardlink (same
-    inodes, no data moved) except the ``affected_dirs``, which the
-    write rewrote or left empty: an emptied partition must stay gone,
-    not resurrect. A version with no data file left is written as a
-    schema-bearing empty table, since no reader can infer a schema from
-    a bare directory. Unpartitioned: one ``table_io.sized_for_write`` write.
+    every other leaf dir of ``cur`` carried over by hardlink
+    (``table_io.carry_over``: same inodes, no data moved) except the
+    ``affected_dirs``, which the write rewrote or left empty: an
+    emptied partition must stay gone, not resurrect. A version with no
+    data file left is written as a schema-bearing empty table, since no
+    reader can infer a schema from a bare directory. Unpartitioned: one
+    ``table_io.sized_for_write`` write.
 
     Carry-over compares dir names, so ``_check_layout`` first refuses
     a ``cur`` whose dirs another tool named otherwise ('y=07' where
@@ -309,13 +310,7 @@ def _rewrite(path: str, cur: str | None, rows: DataFrame,
     # version and writes the next: no self-overwrite, no barrier.
     rows.repartition(*[F.col(c) for c in partition_by]) \
         .write.mode("overwrite").partitionBy(*partition_by).parquet(vdir)
-    written = set(table_io.leaf_partition_dirs(vdir))
-    carried = [rel for rel in (table_io.leaf_partition_dirs(cur)
-                               if cur is not None else [])
-               if rel not in written and rel not in affected_dirs]
-    for rel in carried:
-        table_io.link_tree(os.path.join(cur, rel), os.path.join(vdir, rel))
-    if not written and not carried:
+    if not table_io.carry_over(cur, vdir, affected_dirs):
         rows.sparkSession.createDataFrame([], rows.schema) \
             .write.mode("overwrite").parquet(vdir)
     table_io.publish_version(path, vdir)

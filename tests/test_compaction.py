@@ -78,10 +78,6 @@ def test_compaction_skipped_when_not_worth_it(spark, tmp_path):
     assert stats.get("skipped") is True
     assert stats["before_files"] == stats["after_files"]
     assert {p: os.path.getmtime(p) for p, _ in list_data_files(path)} == before
-    # force overrides the plan
-    forced = compact_parquet(spark, path, target_bytes=128 * 1024 * 1024,
-                             force=True)
-    assert "skipped" not in forced
 
 
 def test_compaction_recovers_from_stale_debris(spark, tmp_path):
@@ -177,11 +173,10 @@ def test_multilevel_partitioned_compaction(spark, tmp_path):
 
 
 def test_mixed_string_partitioned_compaction_falls_back(spark, tmp_path):
-    """The one-job fast path's partition FILTER is restricted to
-    int-valued single-level dirs (dir-name strings round-trip exactly
-    through an int cast); a mixed STRING-partitioned table must take
-    the per-dir loop and still compact correctly — healthy partition
-    hardlinked, fragmented partition rewritten, relation unchanged."""
+    """A mixed STRING-partitioned table takes the same one-job rewrite
+    as an int-partitioned one: healthy partition hardlinked,
+    fragmented partition rewritten, relation unchanged. (The name is
+    from when non-int tables fell back to a per-dir loop.)"""
     import glob
     import os
     path = str(tmp_path / "strmixed")
@@ -210,12 +205,10 @@ def test_mixed_string_partitioned_compaction_falls_back(spark, tmp_path):
 
 def test_leading_zero_int_partition_falls_back_no_data_loss(spark, tmp_path):
     """Zero-padded integer dir values (``month=07``, common in
-    externally-written Hive layouts) must NOT take the one-job fast
-    path: partition inference reads ``07`` as 7, so the fast path's
-    ``cast('string')`` filter would drop the partition entirely
-    (silent data loss) and the partitionBy writer would re-render the
-    dir as ``month=7``. The per-dir loop preserves rows AND the exact
-    dir names."""
+    externally-written Hive layouts): partition inference would read
+    ``07`` as 7 and a partitionBy write would re-render the dir as
+    ``month=7``. The rewrite reads partition values as strings, so it
+    keeps the rows AND the exact dir names."""
     import glob
     import os
     path = str(tmp_path / "zeropad")
@@ -245,8 +238,8 @@ def test_leading_zero_int_partition_falls_back_no_data_loss(spark, tmp_path):
 
 def test_colliding_noncanonical_dirs_preserved(spark, tmp_path):
     """``month=7`` and ``month=07`` in one table: inference maps both
-    to 7, so any whole-table rewrite would merge them. The round-trip
-    guard must force the per-dir loop, keeping both dirs distinct with
+    to 7, so a rewrite that inferred partition types would merge them.
+    Read as strings they stay two values: both dirs distinct with
     their own rows."""
     import glob
     import os
@@ -267,27 +260,11 @@ def test_colliding_noncanonical_dirs_preserved(spark, tmp_path):
     assert spark.read.parquet(f"{path}/month=7").count() == 100
 
 
-def test_value_round_trips_classifier():
-    from nvd2mysqlloader_spark.operators.compaction import \
-        _value_round_trips as rt
-    assert rt("7") and rt("-7") and rt("0") and rt("123456789012")
-    assert rt("aa") and rt("us-east") and rt("a1b2")
-    assert not rt("07") and not rt("-0") and not rt("007")
-    assert not rt("1.5") and not rt("1.50") and not rt("1e3")
-    assert not rt("nan") and not rt("Infinity")
-    assert not rt("a%3Ab") and not rt("") and not rt("50%")
-    assert not rt("2021-01-01") and not rt("2021-1-1")
-    assert not rt("2021-01-01 00:00:00") and not rt("2021-01")
-    assert not rt("__HIVE_DEFAULT_PARTITION__")
-
-
 def test_escaped_string_partition_falls_back_no_data_loss(spark,
                                                           tmp_path):
     """Hive-escaped partition values (dir lang=a%3Ab stores column
-    value 'a:b') must NOT take the one-job fast path: the partition
-    filter compares raw dir strings against unescaped column values
-    (matches nothing — silent loss) and the writer would re-escape.
-    The per-dir loop preserves rows and exact dir names."""
+    value 'a:b'): the string read unescapes the value and the writer
+    escapes it back, so rows and exact dir names are preserved."""
     import glob
     import os
     path = str(tmp_path / "escaped")
@@ -310,3 +287,121 @@ def test_escaped_string_partition_falls_back_no_data_loss(spark,
     assert post.count() == pre_rows
     assert post.agg(F.sum("id")).first()[0] == pre_sum
     assert post.filter(F.col("lang") == "a:b").count() == 10
+
+
+def _hand_layout(root, dirs, files_per_dir=6, rows_per_file=50):
+    """A table whose leaf dirs are named by hand, as an external writer
+    names them (Spark itself renders canonical names): ``files_per_dir``
+    pyarrow-written files of distinct ids per dir, so building it runs
+    no Spark job. Returns {dir: rows}."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    rows, nxt = {}, 0
+    for d in dirs:
+        os.makedirs(os.path.join(root, d))
+        n = files_per_dir if isinstance(files_per_dir, int) \
+            else files_per_dir[d]
+        for i in range(n):
+            pq.write_table(pa.table({"id": pa.array(
+                range(nxt, nxt + rows_per_file), pa.int64())}),
+                os.path.join(root, d, f"part-{i:05d}.parquet"))
+            nxt += rows_per_file
+        rows[d] = n * rows_per_file
+    return rows
+
+
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn()`` ran, counted from the status store after the
+    listener bus drains."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_partitioned_compaction_jobs_independent_of_layout(spark,
+                                                           tmp_path):
+    """Every partition layout compacts in the same number of Spark
+    jobs, none per dir: colliding zero-padded and Hive-null dirs, an
+    escaped string dir, a canonical int table, and a canonical table
+    with only half its dirs worth rewriting. Each keeps its exact dir
+    names and row counts."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from nvd2mysqlloader_spark.operators.table_io import \
+        leaf_partition_dirs
+    layouts = {
+        "padded": (["m=01", "m=1", "m=02", "m=__HIVE_DEFAULT_PARTITION__"],
+                   6),
+        "escaped": (["m=a%3Ab", "m=aa", "m=bb", "m=cc"], 6),
+        "canonical": (["m=1", "m=2", "m=3", "m=4"], 6),
+        "half": (["m=1", "m=2", "m=3", "m=4"],
+                 {"m=1": 6, "m=2": 6, "m=3": 1, "m=4": 1}),
+    }
+    jobs = {}
+    for name, (dirs, nfiles) in layouts.items():
+        path = str(tmp_path / name)
+        want = _hand_layout(path, dirs, nfiles)
+        stats = {}
+        jobs[name] = _jobs(spark, f"compact_{name}", lambda: stats.update(
+            compact_parquet(spark, path, target_bytes=1024 * 1024)))
+        assert stats["partitions"] == 4 and "skipped" not in stats
+        got = {d: sum(pq.read_metadata(f).num_rows
+                      for f, _ in list_data_files(os.path.join(path, d)))
+               for d in dirs}
+        assert got == want, name
+        assert leaf_partition_dirs(os.path.realpath(path)) == \
+            sorted(dirs), name
+        assert stats["after_files"] == 4, name
+    assert jobs["padded"] == jobs["escaped"] == jobs["canonical"] \
+        == jobs["half"], jobs
+    # the string read: the Hive null dir is a null value, "01" != "1"
+    post = spark.read.schema("id BIGINT, m STRING").parquet(
+        str(tmp_path / "padded"))
+    assert post.filter("m IS NULL").count() == 300
+    assert post.filter("m = '01'").count() == 300
+
+
+def test_oversized_partition_splits_into_sorted_ranges(spark, tmp_path):
+    """A fragmented dir of about 3x the target, compacted with
+    ``sort_by``, is split in the same single rewrite into files with
+    disjoint sort-key ranges, and is no longer worth compacting."""
+    import os
+
+    import pyarrow.parquet as pq
+    path = str(tmp_path / "big")
+    # ids interleaved across the files, so the rewrite must sort them;
+    # the hash payload keeps bytes per row alike before and after
+    for i in range(12):
+        (spark.range(0, 12_000).filter(F.col("id") % 12 == i)
+         .selectExpr("id", "sha2(CAST(id AS STRING), 256) AS payload",
+                     "CAST(0 AS INT) AS p")
+         .coalesce(1).write.mode("append").partitionBy("p").parquet(path))
+    leaf = os.path.join(path, "p=0")
+    total = sum(s for _, s in list_data_files(leaf))
+    target = total // 3
+    assert plan_compaction(leaf, target)["worth_it"]
+
+    n_jobs = _jobs(spark, "compact_split", lambda: compact_parquet(
+        spark, path, target_bytes=target, sort_by=["id"]))
+    files = list_data_files(os.path.join(path, "p=0"))
+    assert 2 <= len(files) <= 6, files
+    ranges = sorted((min(ids), max(ids)) for ids in (
+        pq.read_table(f, columns=["id"])["id"].to_pylist()
+        for f, _ in files))
+    assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
+    assert spark.read.parquet(path).count() == 12_000
+    assert not plan_compaction(os.path.join(path, "p=0"), target)["worth_it"]
+
+    canonical = str(tmp_path / "small")
+    _hand_layout(canonical, ["p=1", "p=2"])
+    assert n_jobs == _jobs(spark, "compact_small", lambda: compact_parquet(
+        spark, canonical, target_bytes=1024 * 1024, sort_by=["id"]))

@@ -621,50 +621,6 @@ def test_ivf_index_probe_plan_partition_prunes(spark, tmp_path):
     assert "dynamicpruning" in plan.lower(), plan[:2000]
 
 
-def test_ivfpq_index_recall_and_contract(spark, tmp_path):
-    """IVF-PQ composed index (coarse lists + product-quantized
-    residuals, the FAISS IVFPQ layout as parquet): 2-batch append
-    under persisted centroids+codebooks, deterministic probes, recall
-    beating chance at a 25% scan fraction over compressed codes, and
-    shape-mismatch refusals on append."""
-    from nvd2mysqlloader_spark.operators.similarity import (
-        ivfpq_topk, write_ivfpq_index)
-
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    path = str(tmp_path / "ivfpq")
-    write_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
-    write_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
-
-    queries = (emb.filter(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    got = ivfpq_topk(emb, path, queries, k=10)
-    rows = got.collect()
-    assert len(rows) == 50
-
-    exact = QUERIES["cosine_topk"].fn(spark, SF_ORACLE).collect()
-    truth, approx = {}, {}
-    for r in exact:
-        truth.setdefault(r.query_id, set()).add(r.neighbor_id)
-    for r in rows:
-        approx.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recalls = [len(truth[q] & approx.get(q, set())) / len(truth[q])
-               for q in truth]
-    avg = sum(recalls) / len(recalls)
-    # measured 0.40-0.42 on the synthetic corpus: the double
-    # approximation (25% coarse scan x residual codes) must still
-    # beat the 0.25 scan-fraction chance floor
-    assert avg >= 0.3, f"IVF-PQ recall {avg:.2f} ({recalls})"
-
-    again = sorted(map(tuple, ivfpq_topk(emb, path, queries,
-                                         k=10).collect()))
-    assert again == sorted(map(tuple, rows))
-
-    with pytest.raises(ValueError, match="nlist"):
-        write_ivfpq_index(emb, path, nlist=32)
-    with pytest.raises(ValueError, match="m="):
-        write_ivfpq_index(emb, path, m=4)
-
-
 def test_pq_index_probe_matches_direct(spark, tmp_path):
     """Persisted PQ index (VERDICT r5 #2): codebooks trained once,
     codes appended per batch with the PERSISTED codebooks, probe reads
@@ -1875,6 +1831,41 @@ def test_small_append_writes_one_data_file(spark, tmp_path):
         assert after[rel][0] == ino, rel
         if not rel.startswith("log/"):
             assert after[rel][1] == nlink, rel
+
+
+def test_append_leaves_previous_commit_markers_alone(spark, tmp_path):
+    """Spark's commit markers (``_SUCCESS``, ``._SUCCESS.crc``) are not
+    carried into a staged version: a later write would rewrite them in
+    place, so a shared marker would change the retained version. After
+    an append, every marker of the previous version keeps its inode
+    and mtime and is linked once."""
+    import os
+
+    from nvd2mysqlloader_spark.operators import table_io
+    from nvd2mysqlloader_spark.operators.dedup import \
+        write_banded_signature_table as write
+
+    path = str(tmp_path / "markers")
+    write(_docs(spark, _BATCH1), path, n_buckets=16)
+    write(_docs(spark, [(100, _TARGET)]), path, n_buckets=16)
+    prev = table_io.current_version(path)
+
+    def markers():
+        out = {}
+        for root, _dirs, files in os.walk(prev):
+            for f in files:
+                if f in ("_SUCCESS", "._SUCCESS.crc"):
+                    st = os.stat(os.path.join(root, f))
+                    out[os.path.relpath(os.path.join(root, f), prev)] = (
+                        st.st_ino, st.st_mtime_ns, st.st_nlink)
+        return out
+
+    before = markers()
+    assert "log/_SUCCESS" in before, before
+    assert all(nlink == 1 for _ino, _mt, nlink in before.values()), before
+    write(_docs(spark, [(101, _TARGET + " again")]), path, n_buckets=16)
+    assert table_io.current_version(path) != prev
+    assert markers() == before
 
 
 def test_keyed_log_retry_keeps_one_copy(spark, tmp_path):

@@ -142,9 +142,9 @@ def test_download_feed_recorded_responses(tmp_path):
 
 
 def test_ingest_maintain_compacts_accreted_files(spark, tmp_path):
-    """Many incremental batches accrete one file per touched partition;
-    the maintain pass compacts them (or no-ops when not worth it) and
-    preserves the tally."""
+    """Six incremental batches into one partition leave it one file
+    (the upsert rewrites each partition it touches), so the maintain
+    pass skips and the tally is preserved."""
     import glob
     import json
     import os
